@@ -135,10 +135,10 @@ object ConfigParser {
     case "delta" | "managed" | "table" =>
       ManagedTableDestination(req(n, "name"), loc(n),
         writeMode = parseTableWriteMode(first(n, "write_mode", "mode")
-          .getOrElse(fail(n, "managed-table destination requires write_mode"))),
+          .getOrElse(fail(n, "delta destination requires write_mode"))),
         storageConfig = stringMap(n, "storage_config", "storage_options"),
         partitionColumns = strArr(first(n, "partition_columns", "partition_cols")),
-        tableProperties = stringMap(n, "table_properties"),
+        tableProperties = deltaTableProperties(n),
         metadata = stringMap(n, "metadata", "custom_metadata"),
         schema = parseFields(n.get("schema")))
     case "iceberg" =>
@@ -248,6 +248,19 @@ object ConfigParser {
 
   private def strArr(n: Option[JsonNode]): Seq[String] =
     n.toSeq.flatMap(arrOf0).map(_.asText())
+
+  /** `table_properties` of a `type: delta` destination. Every such table is
+    * real Delta, so the old `format: delta_log` selector is accepted and
+    * dropped; any other `format` value names a table format that no longer
+    * exists and is refused.
+    */
+  private def deltaTableProperties(n: JsonNode): Map[String, String] = {
+    val props = stringMap(n, "table_properties")
+    props.get("format").filter(_ != "delta_log").foreach(f => fail(n,
+      s"table_properties.format '$f' is not supported: every `type: delta` table " +
+        "is a Delta table; drop the key (`delta_log` is accepted as a no-op)"))
+    props - "format"
+  }
 
   private def stringMap(n: JsonNode, names: String*): Map[String, String] =
     first(n, names: _*).map(stringMapOf).getOrElse(Map.empty)

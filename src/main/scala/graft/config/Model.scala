@@ -50,7 +50,7 @@ final case class DirSource(
     partitionColumns: Seq[(String, org.apache.spark.sql.types.DataType)] = Nil,
     storageConfig: Map[String, String] = Map.empty) extends Source
 
-/** Versioned managed-table source (`type: delta`) with time travel. */
+/** Delta table source (`type: delta`) with version/timestamp time travel. */
 final case class ManagedTableSource(
     name: String,
     location: Location,
@@ -151,7 +151,7 @@ final case class OrcDestFormat(options: Map[String, String] = Map.empty) extends
 /** Avro writer (beyond reference); `codec`: deflate / snappy / null. */
 final case class AvroDestFormat(codec: Option[String] = None) extends DestFormat
 
-/** Versioned managed-table destination (`type: delta`). */
+/** Delta table destination (`type: delta`), created if absent. */
 final case class ManagedTableDestination(
     name: String,
     location: Location,

@@ -50,7 +50,7 @@ object SchemaGen {
           "location" -> typed("string"),
           "partition_columns" -> arrayOf(typed("array", "[name, type] pair or {name, data_type}")),
           "storage_config" -> stringMapSchema)),
-      "delta" -> objSchema("Managed versioned table with time travel",
+      "delta" -> objSchema("Delta Lake table (`_delta_log`) with version/timestamp time travel",
         req = Seq("type", "name", "location"),
         props = Seq("name" -> typed("string"), "location" -> typed("string"),
           "version" -> typed("integer"), "timestamp" -> typed("string", "RFC3339"),
@@ -109,13 +109,14 @@ object SchemaGen {
           "partition_columns" -> arrayOf(typed("string")),
           "schema" -> arrayOf(ref("Field")),
           "storage_config" -> stringMapSchema)),
-      "delta" -> objSchema("Managed versioned table (append/upsert/replace)",
+      "delta" -> objSchema("Delta Lake table (append/upsert/replace; created if absent)",
         req = Seq("type", "name", "location", "write_mode"),
         props = Seq("name" -> typed("string"), "location" -> typed("string"),
           "write_mode" -> ref("TableWriteMode"),
           "partition_columns" -> arrayOf(typed("string")),
-          "table_properties" -> stringMapSchema,
-          "metadata" -> stringMapSchema,
+          "table_properties" -> stringMapOf(
+            "Delta table properties; `format: delta_log` is accepted as a no-op"),
+          "metadata" -> stringMapOf("Custom metadata, stored in the table configuration"),
           "schema" -> arrayOf(ref("Field")),
           "storage_config" -> stringMapSchema)),
       "odbc" -> objSchema("External database via JDBC",
@@ -199,11 +200,13 @@ object SchemaGen {
     n
   }
 
-  private val stringMapSchema: ObjectNode = {
-    val n = typed("object", "string -> string map")
+  private def stringMapOf(description: String): ObjectNode = {
+    val n = typed("object", description)
     n.set[ObjectNode]("additionalProperties", typed("string"))
     n
   }
+
+  private val stringMapSchema: ObjectNode = stringMapOf("string -> string map")
 
   private def objSchema(description: String, req: Seq[String],
       props: Seq[(String, ObjectNode)]): ObjectNode = {

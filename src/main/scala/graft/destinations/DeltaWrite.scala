@@ -31,8 +31,8 @@ import graft.sources.DeltaLog
   * `col=value/` directories like delta-spark's writer. Every 10th
   * append/overwrite also emits a parquet checkpoint + `_last_checkpoint`
   * so replay stays bounded; `history`/`compact`/`vacuum` cover
-  * maintenance, and `convertFromManaged` promotes a managed table in
-  * place.
+  * maintenance, and `convertFromManaged` migrates a table written in the
+  * retired `_log/` managed format in place.
   *
   * Scale: commits are driver-side file-manifest metadata, bounded by file
   * count; the data write is a normal distributed parquet write. `upsert`
@@ -612,6 +612,74 @@ object DeltaWrite {
     (df.select(cols: _*), partCols.map(c => DeltaLog.physicalFieldName(byName(c))))
   }
 
+  // ---------------------------------------------------- write-mode helpers
+
+  /** Cast input to the table schema (reference delta/src/lib.rs:331-362):
+    * matching columns cast to the declared type; absent nullable columns
+    * become nulls; absent non-nullable columns are an error; extras dropped.
+    */
+  def castToSchema(df: DataFrame, schema: StructType): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val cols = schema.fields.map { f =>
+      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      else if (f.nullable) lit(null).cast(f.dataType).as(f.name)
+      else throw new IllegalArgumentException(
+        s"Input is missing non-nullable column '${f.name}' required by table schema")
+    }
+    df.select(cols.toIndexedSeq: _*)
+  }
+
+  /** Merge-key equality (reference delta/src/lib.rs:249-286): null-safe for
+    * scalars; for list keys, order-insensitive set equality with explicit
+    * empty/null handling (array_except both ways).
+    */
+  def keyEquals(a: Column, b: Column, dt: org.apache.spark.sql.types.DataType): Column =
+    dt match {
+      case _: org.apache.spark.sql.types.ArrayType =>
+        import org.apache.spark.sql.functions.{array_except, size}
+        (a.isNull && b.isNull) ||
+          (a.isNotNull && b.isNotNull &&
+            size(array_except(a, b)) === 0 && size(array_except(b, a)) === 0)
+      case _ => a <=> b
+    }
+
+  /** Broadcast the key set when small enough for a map-side semi/anti join —
+    * the common case (incremental upserts are small vs the table).
+    *
+    * r18: decided from the OPTIMIZER'S size estimate, not a counting job —
+    * the old `limit(100001).count()` launched a Spark job (and recomputed
+    * the incoming frame, which may itself be expensive) on every
+    * upsert/delete just to pick a join strategy. A wrong estimate only
+    * changes the plan, never the result — the estimate is a fast path,
+    * not a correctness gate.
+    *
+    * r19 (r18 verdict/advice): the hint is added ONLY when the estimate
+    * cannot be a fan-out underestimate. Size-only estimation passes
+    * `Generate` (explode) through at the child's size and a join's output
+    * can dwarf its inputs, so a plan containing either can report 32 MB
+    * for a frame that is really unbounded — and an explicit `broadcast()`
+    * bypasses `autoBroadcastJoinThreshold` AND AQE's runtime size checks
+    * (driver OOM or the hard 8 GB broadcast cap at 100 TB). Filters,
+    * projections, aggregates and limits only ever shrink the TRUE size
+    * below their input's, and leaves without real statistics surface the
+    * conf default (huge), failing the threshold on their own. When the
+    * hint is withheld, AQE still promotes the runtime-small side to a
+    * broadcast join from actual shuffle sizes — we lose only the
+    * pre-runtime shortcut, never safety. DeltaWriteSpec pins that a
+    * Generate-bearing frame is never hinted.
+    */
+  private[destinations] def broadcastIfSmall(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan}
+    def estimateReliable(p: LogicalPlan): Boolean = p match {
+      case _: Generate | _: Join => false
+      case other => other.children.forall(estimateReliable)
+    }
+    val plan = df.queryExecution.optimizedPlan
+    if (plan.stats.sizeInBytes <= BigInt(32L << 20) && estimateReliable(plan))
+      org.apache.spark.sql.functions.broadcast(df)
+    else df
+  }
+
   // ------------------------------------------------------------- write API
 
   /** Create an empty Delta table at `tablePath` (version 0: protocol +
@@ -632,6 +700,9 @@ object DeltaWrite {
       properties: Map[String, String] = Map.empty,
       columnMapping: Boolean = false): Boolean = {
     if (DeltaLog.isDeltaTable(spark, tablePath)) return false
+    require(!fs(spark, new Path(tablePath)).exists(new Path(tablePath, "_log")),
+      DeltaLog.legacyManagedMessage(tablePath))
+    require(schema.nonEmpty, s"Creating a Delta table at $tablePath requires a declared schema")
     partitionBy.foreach(pc => require(schema.fieldNames.contains(pc),
       s"partition column $pc not in schema"))
     // a declared delta.columnMapping.mode=name property is the
@@ -889,7 +960,7 @@ object DeltaWrite {
       if (widened.nonEmpty || (meta0.isEmpty && identitySchema.isDefined))
         Some((schema, snap.partitionColumns))
       else meta0
-    val data = ManagedTable.castToSchema(enforceObligations(snap, dfWithIds), schema)
+    val data = castToSchema(enforceObligations(snap, dfWithIds), schema)
     val (phys, physParts) = toPhysical(data, schema, snap.partitionColumns, mode,
       fieldIds = icebergCompatOn(snap))
     val adds = writeDataFiles(spark, new Path(tablePath), phys, physParts)
@@ -947,7 +1018,7 @@ object DeltaWrite {
     // schema-replacing overwrite drops the old fields' metadata obligations
     // with the old schema; table-level CHECK constraints still apply
     val checked = enforceObligations(snap, dfWithIds, schemaObligations = !newSchema)
-    val data = if (newSchema) checked else ManagedTable.castToSchema(checked, snap.schema)
+    val data = if (newSchema) checked else castToSchema(checked, snap.schema)
     val (outSchema, meta, metaCfg) =
       if (!newSchema)
         (identitySchema.getOrElse(snap.schema),
@@ -983,9 +1054,9 @@ object DeltaWrite {
   }
 
   /** MERGE keyed on `keys`: existing rows whose key matches an incoming
-    * row are replaced, everything else is kept — [[ManagedTable.upsert]]
-    * semantics (reference delta/src/lib.rs:249-286) over the Delta
-    * protocol, with two-stage file pruning: add-action stats range-exclude
+    * row are replaced, everything else is kept (reference
+    * delta/src/lib.rs:249-286; key equality is [[keyEquals]]), with
+    * two-stage file pruning: add-action stats range-exclude
     * files driver-side (never read), then an exact `_metadata.file_path`
     * semi-join over the surviving candidates finds the files that really
     * hold matching keys. Only touched files are removed and rewritten; the
@@ -1001,7 +1072,7 @@ object DeltaWrite {
     val snap = ls.meta
     requireWritable(tablePath, snap, "upsert", removesData = true)
     keys.foreach(k => require(snap.schema.fieldNames.contains(k), s"upsert key $k not in table"))
-    val incoming = ManagedTable.castToSchema(enforceObligations(snap, df), snap.schema).cache()
+    val incoming = castToSchema(enforceObligations(snap, df), snap.schema).cache()
     try {
       val keyTypes = keys.map(k => k -> snap.schema(k).dataType).toMap
 
@@ -1024,14 +1095,14 @@ object DeltaWrite {
       }
 
       // stage 2: exact file-level hit detection over candidates only
-      val srcKeysB = ManagedTable.broadcastIfSmall(
+      val srcKeysB = broadcastIfSmall(
         incoming.select(keys.map(col): _*).distinct())
       val touched: Seq[DeltaLog.AddFile] =
         if (candidates.isEmpty) Nil
         else {
           val cand = DeltaLog.readFiles(spark, tablePath, snap, candidates, withFilePath = true)
           val cond = keys.map(k =>
-            ManagedTable.keyEquals(cand(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
+            keyEquals(cand(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
           val hit = cand.join(srcKeysB, cond, "left_semi")
             .select(col("_graft_file")).distinct()
             .collect().map(r => new Path(r.getString(0)).toString).toSet
@@ -1066,15 +1137,15 @@ object DeltaWrite {
             case None => incoming.withColumn(matId, lit(null).cast("long"))
             case Some(tdf) =>
               val condT = keys.map(k =>
-                ManagedTable.keyEquals(tdf(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
+                keyEquals(tdf(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
               // min() disambiguates duplicate-key pre-images deterministically
-              val oldIds = ManagedTable.broadcastIfSmall(
+              val oldIds = broadcastIfSmall(
                 tdf.join(srcKeysB, condT, "left_semi")
                   .groupBy(keys.map(col): _*)
                   .agg(org.apache.spark.sql.functions.min(col(matId)).as(matId))
                   .select(keys.map(k => col(k).as(s"_k_$k")) :+ col(matId): _*))
               val condI = keys.map(k =>
-                ManagedTable.keyEquals(incoming(k), oldIds(s"_k_$k"), keyTypes(k))).reduce(_ && _)
+                keyEquals(incoming(k), oldIds(s"_k_$k"), keyTypes(k))).reduce(_ && _)
               incoming.join(oldIds, condI, "left")
                 .drop(keys.map("_k_" + _): _*)
           }
@@ -1084,7 +1155,7 @@ object DeltaWrite {
         case None => incomingTracked
         case Some(touchedDf) =>
           val cond = keys.map(k =>
-            ManagedTable.keyEquals(touchedDf(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
+            keyEquals(touchedDf(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
           touchedDf.join(srcKeysB, cond, "left_anti")
             .select(outCols: _*)
             .unionByName(incomingTracked.select(outCols: _*))
@@ -1099,15 +1170,15 @@ object DeltaWrite {
           import org.apache.spark.sql.functions.lit
           val pre = touchedDfOpt.map { touchedDf =>
             val cond = keys.map(k =>
-              ManagedTable.keyEquals(touchedDf(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
+              keyEquals(touchedDf(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
             touchedDf.join(srcKeysB, cond, "left_semi").select(cols: _*)
           }
           val (post, ins) = pre match {
             case Some(p) =>
-              val oldKeys = ManagedTable.broadcastIfSmall(
+              val oldKeys = broadcastIfSmall(
                 p.select(keys.map(col): _*).distinct())
               val cond = keys.map(k =>
-                ManagedTable.keyEquals(incoming(k), oldKeys(k), keyTypes(k))).reduce(_ && _)
+                keyEquals(incoming(k), oldKeys(k), keyTypes(k))).reduce(_ && _)
               (Some(incoming.join(oldKeys, cond, "left_semi").select(cols: _*)),
                 incoming.join(oldKeys, cond, "left_anti").select(cols: _*))
             case None => (None, incoming.select(cols: _*))
@@ -1590,8 +1661,8 @@ object DeltaWrite {
   }
 
   /** Delete rows matching ALL `conditions` (empty ⇒ full overwrite), then
-    * write `df` — [[ManagedTable.replace]] semantics over the Delta
-    * protocol. Files are pruned before any read: partition-column
+    * write `df` (reference delta/src/lib.rs:203-231, :365-375). Files
+    * are pruned before any read: partition-column
     * conditions match against the log's `partitionValues` exactly, other
     * conditions range-check add-action stats; only files that can hold
     * matching rows are scanned, and of those only the ones that DO get
@@ -1606,7 +1677,7 @@ object DeltaWrite {
     val ls = DeltaLog.lazySnapshot(spark, tablePath)
     val snap = ls.meta
     requireWritable(tablePath, snap, "replace", removesData = true)
-    val incoming = ManagedTable.castToSchema(enforceObligations(snap, df), snap.schema)
+    val incoming = castToSchema(enforceObligations(snap, df), snap.schema)
     if (conditions.isEmpty) return overwrite(spark, tablePath, incoming)
     conditions.foreach(c => require(snap.schema.fieldNames.contains(c.column),
       s"replace column '${c.column}' not in table"))
@@ -1866,27 +1937,37 @@ object DeltaWrite {
     }
   }
 
-  /** CONVERT TO DELTA, metadata-only: turn an existing managed table into
-    * a real Delta table by emitting a version-0 `_delta_log` whose add
-    * actions reference the managed table's CURRENT data files in place —
-    * zero data bytes move. Partition values are recovered from the hive
-    * path segments. The managed log is renamed to `_log_converted`
-    * (frozen): after conversion the Delta log is the single source of
-    * truth, and a silent stale read through the old log would be worse
-    * than the managed history going cold. Returns the file count.
+  /** CONVERT TO DELTA, metadata-only: migrate a table written in the
+    * retired `_log/` managed format (`_log/v%08d.json` commits, each
+    * listing the table's full schema, partition columns and data files)
+    * by emitting a version-0 `_delta_log` whose add actions reference the
+    * NEWEST commit's data files in place — zero data bytes move. Partition
+    * values are recovered from the hive path segments. The old log is
+    * renamed to `_log_converted` (frozen): after conversion the Delta log
+    * is the single source of truth; the old versions are not carried over.
+    * Returns the file count.
     */
   def convertFromManaged(spark: SparkSession, loc: graft.config.Location): Int = {
+    import scala.jdk.CollectionConverters._
     val tablePath = loc.spark
     require(!DeltaLog.isDeltaTable(spark, tablePath),
       s"$tablePath is already a Delta table")
-    val all = ManagedTable.commits(spark, loc)
-    require(all.nonEmpty, s"no managed table at $tablePath")
-    val last = all.last
-    val schema = org.apache.spark.sql.types.DataType.fromJson(last.schemaJson)
-      .asInstanceOf[StructType]
     val table = new Path(tablePath)
     val f = fs(spark, table)
-    val adds = last.files.map { rel =>
+    val oldLog = new Path(table, "_log")
+    val newest =
+      if (!f.exists(oldLog)) None
+      else f.listStatus(oldLog).map(_.getPath)
+        .filter(_.getName.matches("v\\d{8}\\.json")).maxByOption(_.getName)
+    require(newest.nonEmpty, s"no managed table at $tablePath")
+    val last = {
+      val in = f.open(newest.get)
+      try mapper.readTree(in) finally in.close()
+    }
+    val schema = org.apache.spark.sql.types.DataType.fromJson(last.get("schema").asText())
+      .asInstanceOf[StructType]
+    val partitionColumns = last.get("partitionColumns").elements().asScala.map(_.asText()).toSeq
+    val adds = last.get("files").elements().asScala.map(_.asText()).toSeq.map { rel =>
       val st = f.getFileStatus(new Path(table, rel))
       val pv: Seq[(String, Option[String])] = rel.split('/').dropRight(1).toSeq
         .filter(_.contains('=')).map { seg =>
@@ -1897,9 +1978,9 @@ object DeltaWrite {
         }
       AddDescriptor(rel, pv, st.getLen, st.getModificationTime)
     }
-    commit(spark, table, 0L, "CONVERT", withMeta = Some((schema, last.partitionColumns)),
+    commit(spark, table, 0L, "CONVERT", withMeta = Some((schema, partitionColumns)),
       adds = adds, removes = Nil)
-    if (!f.rename(ManagedTable.logDir(table), new Path(table, "_log_converted")))
+    if (!f.rename(oldLog, new Path(table, "_log_converted")))
       throw new IllegalStateException(s"converted, but could not freeze the managed log at $table")
     adds.size
   }
@@ -3471,8 +3552,8 @@ object DeltaWrite {
 
   /** Write `df` as parquet under the table root (hive `col=value/` layout,
     * partition columns dropped from the file data per the Delta spec) and
-    * return the add-action descriptors. Same move-dont-copy publication as
-    * [[ManagedTable]]: temp-dir write, one rename per part file.
+    * return the add-action descriptors. Move-dont-copy publication:
+    * temp-dir write, one rename per part file.
     */
   private def writeDataFiles(
       spark: SparkSession,
@@ -4410,9 +4491,8 @@ object DeltaWrite {
     snap.version
   }
 
-  /** Atomic create-exclusive publication of a commit file — the same race
-    * discipline as [[ManagedTable]]'s writeCommit: hard-link creation on
-    * local filesystems (true O_EXCL), exists+rename with full byte
+  /** Atomic create-exclusive publication of a commit file: hard-link
+    * creation on local filesystems (true O_EXCL), exists+rename with full byte
     * read-back elsewhere so a lost race on object stores is a detected
     * IllegalStateException, never a silently dropped commit.
     */

@@ -11,29 +11,19 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 object Destinations {
 
   /** Destination preparation runs before any source/stage (reference
-    * core/src/lib.rs:82-91): managed tables are created if absent so stages
-    * can rely on their existence; other destinations need no preparation.
+    * core/src/lib.rs:82-91): Delta and Iceberg tables are created if absent
+    * so stages can rely on their existence; other destinations need no
+    * preparation.
     */
   def prepare(spark: SparkSession, dest: Destination): Unit = dest match {
     case d: ManagedTableDestination =>
       ObjectStores.configure(spark, d.location, d.storageConfig)
-      // real-Delta routing, symmetric with the source side: a target that
-      // already carries a `_delta_log` is written via the Delta protocol;
-      // `format: delta_log` in table properties creates a new real Delta
-      // table. Everything else stays on the managed-table log.
-      if (graft.sources.DeltaLog.isDeltaTable(spark, d.location.spark)) ()
-      else if (d.tableProperties.get("format").contains("delta_log")) {
-        require(d.schema.nonEmpty,
-          s"Creating a Delta table at ${d.location.spark} requires a declared schema")
-        // reference parity (delta/src/lib.rs:141-163): declared table
-        // properties reach the created table ('format' is our routing key,
-        // not a table property)
-        DeltaWrite.createIfAbsent(spark, d.location.spark,
-          graft.config.Types.toStruct(d.schema), d.partitionColumns,
-          properties = d.tableProperties - "format")
-      } else
-        ManagedTable.createIfAbsent(spark, d.location, d.schema, d.partitionColumns,
-          d.tableProperties ++ d.metadata)
+      // reference parity (delta/src/lib.rs:141-163): declared table
+      // properties and custom metadata reach the created table's
+      // configuration
+      DeltaWrite.createIfAbsent(spark, d.location.spark,
+        graft.config.Types.toStruct(d.schema), d.partitionColumns,
+        properties = d.tableProperties ++ d.metadata): Unit
     case d: InMemoryDestination =>
       require(!spark.catalog.tableExists(d.name),
         s"InMemory destination '${d.name}' already exists in the session")
@@ -58,23 +48,16 @@ object Destinations {
       writeFile(spark, d, df)
 
     case d: ManagedTableDestination =>
-      if (graft.sources.DeltaLog.isDeltaTable(spark, d.location.spark))
-        d.writeMode match {
-          case TableAppend => DeltaWrite.append(spark, d.location.spark, df)
-          case TableUpsert(keys) => DeltaWrite.upsert(spark, d.location.spark, df, keys)
-          case TableReplace(conds) => DeltaWrite.replace(spark, d.location.spark, df, conds)
-        }
-      else
-        d.writeMode match {
-          case TableAppend => ManagedTable.append(spark, d.location, df)
-          case TableUpsert(keys) => ManagedTable.upsert(spark, d.location, df, keys)
-          case TableReplace(conds) => ManagedTable.replace(spark, d.location, df, conds)
-        }
+      d.writeMode match {
+        case TableAppend => DeltaWrite.append(spark, d.location.spark, df)
+        case TableUpsert(keys) => DeltaWrite.upsert(spark, d.location.spark, df, keys)
+        case TableReplace(conds) => DeltaWrite.replace(spark, d.location.spark, df, conds)
+      }
 
     case d: IcebergDestination =>
       val data =
         if (d.schema.isEmpty) df
-        else ManagedTable.castToSchema(df, graft.config.Types.toStruct(d.schema))
+        else DeltaWrite.castToSchema(df, graft.config.Types.toStruct(d.schema))
       IcebergWrite.append(spark, d.location.spark, data): Unit
 
     case d: JdbcDestination => Jdbc.write(spark, d, df)

@@ -251,7 +251,7 @@ object Ann {
     * assignment precomputed as a `cell` column (`item_id`, `cv`, `cell`).
     *
     * Build ONCE with [[ivfBuild]], persist `assigned` (or write it out — the
-    * cell column is just data, e.g. a ManagedTable partition/column), then
+    * cell column is just data, e.g. a Delta table partition column), then
     * run [[ivfSearch]] per query batch. At 100 TB the index build is the
     * expensive amortized step; a search only scans ~nprobe/nlist of the
     * corpus.
@@ -340,7 +340,7 @@ object Ann {
       .select(col("query_id"), col("rank"), col("item_id"), round(col("cos"), 6).as("cos"))
   }
 
-  /** Persist a built IVF index under `root` as two managed tables —
+  /** Persist a built IVF index under `root` as two Delta tables —
     * `<root>/centroids` (cell, centroid) and `<root>/assigned`
     * (item_id, cv, cell) — so a pipeline builds once and searches across
     * jobs and sessions (corpora re-embed rarely; query batches arrive
@@ -353,37 +353,50 @@ object Ann {
     * corpus, not a full pass.
     */
   def ivfSave(index: IvfIndex, root: String): Unit = {
-    import graft.config.{Location, Types}
-    import graft.destinations.ManagedTable
     val spark = index.assigned.sparkSession
     import spark.implicits._
-    def save(df: DataFrame, loc: Location, partitionCols: Seq[String]): Unit = {
-      val fields = df.schema.fields.toIndexedSeq
-        .map(f => Types.FieldSpec(f.name, f.dataType, f.nullable))
-      ManagedTable.createIfAbsent(spark, loc, fields, partitionCols, Map.empty)
-      ManagedTable.replace(spark, loc, df, Seq.empty)
-    }
     val centDf = index.centroids.toIndexedSeq.zipWithIndex
       .map { case (c, i) => (i, c.toIndexedSeq) }
       .toDF("cell", "centroid")
-    save(centDf, Location(s"$root/centroids"), Nil)
-    save(index.assigned.select(col("item_id"), col("cv"), col("cell")),
-      Location(s"$root/assigned"), Seq("cell"))
+    saveTable(centDf, s"$root/centroids")
+    saveTable(index.assigned.select(col("item_id"), col("cv"), col("cell")),
+      s"$root/assigned", Seq("cell"))
+  }
+
+  /** Replace the contents of the Delta table at `path` with `df` (one
+    * full-overwrite commit), creating the table from `df`'s schema first if
+    * absent. Shared by the index savers. */
+  private def saveTable(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit = {
+    import graft.destinations.DeltaWrite
+    DeltaWrite.createIfAbsent(df.sparkSession, path, df.schema, partitionCols)
+    DeltaWrite.overwrite(df.sparkSession, path, df): Unit
   }
 
   /** Reload a persisted IVF index (latest snapshot). The centroid table is
     * cell-count-sized (collect is bounded); assignments stay a lazy
-    * DataFrame over the managed table's parquet, so [[ivfSearch]] plans
+    * DataFrame over the Delta table's parquet, so [[ivfSearch]] plans
     * cell-pruned scans against it directly.
     */
-  def ivfLoad(spark: org.apache.spark.sql.SparkSession, root: String): IvfIndex = {
-    import graft.config.Location
-    import graft.destinations.ManagedTable
-    val centroids = ManagedTable.read(spark, Location(s"$root/centroids"))
+  def ivfLoad(spark: org.apache.spark.sql.SparkSession, root: String): IvfIndex =
+    IvfIndex(loadCentroids(spark, s"$root/centroids"),
+      graft.sources.DeltaLog.read(spark, s"$root/assigned"))
+
+  /** The `(cell, centroid)` table of a saved index, in cell order. */
+  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
+      path: String): Array[Array[Double]] =
+    graft.sources.DeltaLog.read(spark, path)
       .orderBy(col("cell")).collect()
       .map(_.getSeq[Double](1).toArray)
-    IvfIndex(centroids, ManagedTable.read(spark, Location(s"$root/assigned")))
-  }
+
+  /** The `(b, j, centroid)` codebook table of a saved PQ index. */
+  private def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
+      path: String): Array[Array[Array[Double]]] =
+    graft.sources.DeltaLog.read(spark, path)
+      .orderBy(col("b"), col("j")).collect()
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map { case (_, rows) => rows.sortBy(_.getInt(1))
+        .map(_.getSeq[Double](2).toArray) }
+      .toArray
 
   /** One-shot IVF top-k: build + search. Prefer [[ivfBuild]] once +
     * [[ivfSearch]] per batch when querying repeatedly — this convenience
@@ -716,7 +729,7 @@ object Ann {
     }
   }
 
-  /** Persist a flat PQ index under `root` as two managed tables —
+  /** Persist a flat PQ index under `root` as two Delta tables —
     * `codebooks` (b, j, centroid) and `encoded` (item_id, code) — so a
     * corpus is encoded once and ADC-searched across jobs/sessions. Same
     * replace-snapshot semantics as [[ivfSave]]. (For the cell-partitioned
@@ -724,38 +737,21 @@ object Ann {
     * code, so there is no useful partitioning here.)
     */
   def pqSave(index: PqIndex, root: String): Unit = {
-    import graft.config.{Location, Types}
-    import graft.destinations.ManagedTable
     val spark = index.encoded.sparkSession
     import spark.implicits._
-    def save(df: DataFrame, loc: Location): Unit = {
-      val fields = df.schema.fields.toIndexedSeq
-        .map(f => Types.FieldSpec(f.name, f.dataType, f.nullable))
-      ManagedTable.createIfAbsent(spark, loc, fields, Nil, Map.empty)
-      ManagedTable.replace(spark, loc, df, Seq.empty)
-    }
     val bookDf = index.codebooks.toIndexedSeq.zipWithIndex
       .flatMap { case (book, b) => book.toIndexedSeq.zipWithIndex
         .map { case (c, j) => (b, j, c.toIndexedSeq) } }
       .toDF("b", "j", "centroid")
-    save(bookDf, Location(s"$root/codebooks"))
-    save(index.encoded.select(col("item_id"), col("code")),
-      Location(s"$root/encoded"))
+    saveTable(bookDf, s"$root/codebooks")
+    saveTable(index.encoded.select(col("item_id"), col("code")), s"$root/encoded")
   }
 
   /** Reload a persisted flat PQ index (latest snapshot): bounded collect
     * for the codebooks, lazy scan for the codes. */
-  def pqLoad(spark: org.apache.spark.sql.SparkSession, root: String): PqIndex = {
-    import graft.config.Location
-    import graft.destinations.ManagedTable
-    val bookRows = ManagedTable.read(spark, Location(s"$root/codebooks"))
-      .orderBy(col("b"), col("j")).collect()
-    val codebooks = bookRows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_.getInt(1))
-        .map(_.getSeq[Double](2).toArray) }
-      .toArray
-    PqIndex(codebooks, ManagedTable.read(spark, Location(s"$root/encoded")))
-  }
+  def pqLoad(spark: org.apache.spark.sql.SparkSession, root: String): PqIndex =
+    PqIndex(loadCodebooks(spark, s"$root/codebooks"),
+      graft.sources.DeltaLog.read(spark, s"$root/encoded"))
 
   // --------------------------------------------------------------------------
   // IVF-PQ (IVFADC, Jégou et al. 2011 §IV): the coarse quantizer routes each
@@ -837,22 +833,14 @@ object Ann {
       .select(col("query_id"), col("rank"), col("item_id"), round(col("ad2"), 6).as("ad2"))
   }
 
-  /** Persist an IVF-PQ index under `root` as three managed tables:
+  /** Persist an IVF-PQ index under `root` as three Delta tables:
     * `centroids` (cell, centroid), `codebooks` (b, j, centroid), and the
     * cell-partitioned `encoded` (item_id, code, partition cell) — so a
     * probe on the reloaded index prunes whole cell directories at the scan.
     * Same replace-snapshot semantics as [[ivfSave]]. */
   def ivfPqSave(index: IvfPqIndex, root: String): Unit = {
-    import graft.config.{Location, Types}
-    import graft.destinations.ManagedTable
     val spark = index.encoded.sparkSession
     import spark.implicits._
-    def save(df: DataFrame, loc: Location, partitionCols: Seq[String]): Unit = {
-      val fields = df.schema.fields.toIndexedSeq
-        .map(f => Types.FieldSpec(f.name, f.dataType, f.nullable))
-      ManagedTable.createIfAbsent(spark, loc, fields, partitionCols, Map.empty)
-      ManagedTable.replace(spark, loc, df, Seq.empty)
-    }
     val centDf = index.centroids.toIndexedSeq.zipWithIndex
       .map { case (c, i) => (i, c.toIndexedSeq) }
       .toDF("cell", "centroid")
@@ -860,28 +848,17 @@ object Ann {
       .flatMap { case (book, b) => book.toIndexedSeq.zipWithIndex
         .map { case (c, j) => (b, j, c.toIndexedSeq) } }
       .toDF("b", "j", "centroid")
-    save(centDf, Location(s"$root/centroids"), Nil)
-    save(bookDf, Location(s"$root/codebooks"), Nil)
-    save(index.encoded.select(col("item_id"), col("code"), col("cell")),
-      Location(s"$root/encoded"), Seq("cell"))
+    saveTable(centDf, s"$root/centroids")
+    saveTable(bookDf, s"$root/codebooks")
+    saveTable(index.encoded.select(col("item_id"), col("code"), col("cell")),
+      s"$root/encoded", Seq("cell"))
   }
 
   /** Reload a persisted IVF-PQ index (latest snapshot): bounded collects
     * for the centroid/codebook tables, lazy cell-pruned scans for the
     * encoded corpus. */
-  def ivfPqLoad(spark: org.apache.spark.sql.SparkSession, root: String): IvfPqIndex = {
-    import graft.config.Location
-    import graft.destinations.ManagedTable
-    val centroids = ManagedTable.read(spark, Location(s"$root/centroids"))
-      .orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
-    val bookRows = ManagedTable.read(spark, Location(s"$root/codebooks"))
-      .orderBy(col("b"), col("j")).collect()
-    val codebooks = bookRows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_.getInt(1))
-        .map(_.getSeq[Double](2).toArray) }
-      .toArray
-    IvfPqIndex(centroids, codebooks,
-      ManagedTable.read(spark, Location(s"$root/encoded")))
-  }
+  def ivfPqLoad(spark: org.apache.spark.sql.SparkSession, root: String): IvfPqIndex =
+    IvfPqIndex(loadCentroids(spark, s"$root/centroids"),
+      loadCodebooks(spark, s"$root/codebooks"),
+      graft.sources.DeltaLog.read(spark, s"$root/encoded"))
 }

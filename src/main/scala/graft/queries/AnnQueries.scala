@@ -156,7 +156,7 @@ private[graft] object AnnQueries {
     }),
 
 
-    // IVF index persisted to a managed table and RELOADED before searching —
+    // IVF index persisted to Delta tables and RELOADED before searching —
     // the cross-job production shape (build once, search from any session).
     // Exhaustive nprobe = nlist makes the reloaded search equal brute force,
     // so the round-trip is hash-checked exactly; the assignment table is

@@ -4,6 +4,7 @@ import graft.config._
 import graft.functions.Text
 import graft.ops.{Ann, Dedup, Multimodal}
 import graft.run.{CollectingTracker, Runner}
+import graft.sources.Sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -72,8 +73,9 @@ private[graft] object PipelineQueries {
     }),
 
 
-    // Managed-table destination: create+append then keyed upsert (engine
-    // write modes end-to-end), final table state checked against the oracle.
+    // `type: delta` destination: create+append then keyed upsert (engine
+    // write modes end-to-end), final table state read back through the
+    // `type: delta` source and checked against the oracle.
     "p04_pipeline_upsert" -> ((s, dir) => {
       val tbl = Location(tmp("graft-p04").resolve("tbl").toString)
       val schema = Seq(
@@ -92,11 +94,11 @@ private[graft] object PipelineQueries {
           "SELECT o_orderkey, o_custkey, o_totalprice * 2 AS o_totalprice FROM p4_orders WHERE o_orderkey % 2 = 0"))),
         destination = Some(ManagedTableDestination("p4_tbl", tbl,
           TableUpsert(Seq("o_orderkey")), schema = schema))))
-      graft.destinations.ManagedTable.read(s, tbl).orderBy(col("o_orderkey"))
+      Sources.load(s, ManagedTableSource("p4_tbl", tbl)).orderBy(col("o_orderkey"))
     }),
 
 
-    // Managed-table replace: predicate-scoped delete + insert on a
+    // `type: delta` replace: predicate-scoped delete + insert on a
     // hive-partitioned table.
     "p05_pipeline_replace" -> ((s, dir) => {
       val tbl = Location(tmp("graft-p05").resolve("tbl").toString)
@@ -119,7 +121,7 @@ private[graft] object PipelineQueries {
         destination = Some(ManagedTableDestination("p5_tbl", tbl,
           TableReplace(Seq(ReplaceCondition("o_orderstatus", "F"))),
           partitionColumns = Seq("o_orderstatus"), schema = schema))))
-      graft.destinations.ManagedTable.read(s, tbl).orderBy(col("o_orderkey"))
+      Sources.load(s, ManagedTableSource("p5_tbl", tbl)).orderBy(col("o_orderkey"))
     }),
 
 
@@ -277,7 +279,7 @@ private[graft] object PipelineQueries {
     }),
 
 
-    // REAL Delta protocol end-to-end: `format: delta_log` creates an actual
+    // REAL Delta protocol end-to-end: the first pipeline creates a
     // `_delta_log` table (hive-partitioned), the second pipeline MERGEs into
     // it through the Delta write path, and the result is read back through
     // the independent read bridge — engine-written log, engine-replayed log,
@@ -291,8 +293,7 @@ private[graft] object PipelineQueries {
         Types.FieldSpec("o_orderstatus", StringType))
       val src = FileSource("p14_orders", ParquetFormat(), Location(s"$dir/orders.parquet"))
       def dest(mode: TableWriteMode) = ManagedTableDestination("p14_tbl",
-        Location(tbl), mode, partitionColumns = Seq("o_orderstatus"),
-        tableProperties = Map("format" -> "delta_log"), schema = schema)
+        Location(tbl), mode, partitionColumns = Seq("o_orderstatus"), schema = schema)
       pipe(s, Aqueduct(
         sources = Seq(src),
         stages = Seq(Seq(Stage("p14_initial",

@@ -130,6 +130,20 @@ object DeltaLog {
     AddFile(p, pv, size, mt, stats, dv, bri, dcv)
   }
 
+  /** Fails unless `table` has a `_delta_log`. A location that holds only
+    * the retired `_log/` managed-table format gets a message naming its
+    * one-way migration instead of a bare "not a Delta table".
+    */
+  private def requireLog(fs: org.apache.hadoop.fs.FileSystem, table: Path): Unit =
+    if (!fs.exists(logDir(table)))
+      throw new IllegalArgumentException(
+        if (fs.exists(new Path(table, "_log"))) legacyManagedMessage(table.toString)
+        else s"not a Delta table (no _delta_log): $table")
+
+  private[graft] def legacyManagedMessage(tablePath: String): String =
+    s"$tablePath holds a legacy `_log/` managed table, which is no longer read " +
+      "or written; migrate it in place with DeltaWrite.convertFromManaged"
+
   /** True when `path` holds a real Delta table (a `_delta_log` dir). */
   def isDeltaTable(spark: SparkSession, path: String): Boolean = {
     val log = logDir(new Path(path))
@@ -323,7 +337,7 @@ object DeltaLog {
       spark: SparkSession, tablePath: String, ts: java.time.Instant): Long = {
     val table = new Path(tablePath)
     val fs = logDir(table).getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(logDir(table)), s"not a Delta table (no _delta_log): $tablePath")
+    requireLog(fs, table)
     val commits = fs.listStatus(logDir(table)).toSeq.flatMap { st =>
       st.getPath.getName match {
         case CommitRe(v) => Some((v.toLong, st))
@@ -343,7 +357,7 @@ object DeltaLog {
       timestampAsOf: Option[java.time.Instant]): LogState = {
     val table = new Path(tablePath)
     val fs = logDir(table).getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(logDir(table)), s"not a Delta table (no _delta_log): $tablePath")
+    requireLog(fs, table)
     val entries = fs.listStatus(logDir(table)).toSeq
     val commits = entries.flatMap { st =>
       st.getPath.getName match {

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.config._
-import graft.destinations.ManagedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -53,13 +52,7 @@ object Sources {
 
     case ManagedTableSource(_, location, version, timestamp, storage) =>
       ObjectStores.configure(spark, location, storage)
-      // a location with a _delta_log is a REAL Delta table — read it through
-      // the protocol bridge (snapshot + time travel); otherwise it is one of
-      // our own managed tables. `type: delta` configs written against the
-      // reference thus open actual Delta lakehouse inputs unchanged.
-      if (DeltaLog.isDeltaTable(spark, location.spark))
-        DeltaLog.read(spark, location.spark, version, timestamp)
-      else ManagedTable.read(spark, location, version, timestamp)
+      DeltaLog.read(spark, location.spark, version, timestamp)
 
     case IcebergSource(_, location, snapshotId, timestamp, ref, storage) =>
       ObjectStores.configure(spark, location, storage)

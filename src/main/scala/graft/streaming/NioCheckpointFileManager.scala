@@ -1,9 +1,10 @@
 package graft.streaming
 
-import java.io.{BufferedOutputStream, EOFException, InputStream}
+import java.io.{BufferedOutputStream, EOFException, IOException, InputStream}
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption, Path => NioPath}
+import java.nio.file.{FileVisitResult, Files, NoSuchFileException, Paths, SimpleFileVisitor, StandardCopyOption, StandardOpenOption, Path => NioPath}
+import java.nio.file.attribute.BasicFileAttributes
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FSDataInputStream, FSDataOutputStream, Path, PathFilter, PositionedReadable, Seekable}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
@@ -27,13 +28,15 @@ import scala.jdk.CollectionConverters._
   *     renames into place on close; cancel deletes the temp (the exact
   *     RenameBasedFSDataOutputStream contract, re-implemented here
   *     because Spark's helper trait is sealed);
-  *   - a close with `overwriteIfPossible = false` throws
-  *     `FileAlreadyExistsException` when the destination exists — the
-  *     signal HDFSMetadataLog uses to detect a lost commit race — with
-  *     the same exists-then-rename window Spark's FileSystem-based
-  *     manager has;
-  *   - `delete` ignores missing paths; `list` on a missing dir throws
-  *     `FileNotFoundException` like the Hadoop managers.
+  *   - a close with `overwriteIfPossible = false` publishes with a hard
+  *     link, which fails atomically with `FileAlreadyExistsException` when
+  *     the destination exists — the signal HDFSMetadataLog uses to detect
+  *     a lost commit race, as strict as FileContext's `Rename.NONE`;
+  *   - `delete` ignores missing paths, also entries that vanish while it
+  *     walks; `open` and `list` of a missing path throw
+  *     `java.io.FileNotFoundException` like the Hadoop managers — the
+  *     state store's snapshot probe catches exactly that type and falls
+  *     back to replaying deltas.
   *
   * NON-local checkpoint locations (object stores, HDFS) delegate every
   * call to Spark's default [[FileContextBasedCheckpointFileManager]]:
@@ -85,7 +88,9 @@ final class NioCheckpointFileManager(path: Path, conf: Configuration)
     delegate match {
       case Some(d) => d.open(p)
       case None =>
-        val ch = FileChannel.open(nio(p), StandardOpenOption.READ)
+        val ch =
+          try FileChannel.open(nio(p), StandardOpenOption.READ)
+          catch { case _: NoSuchFileException => throw new java.io.FileNotFoundException(p.toString) }
         new FSDataInputStream(new NioCheckpointFileManager.SeekableChannelStream(ch))
     }
 
@@ -125,13 +130,22 @@ final class NioCheckpointFileManager(path: Path, conf: Configuration)
     delegate match {
       case Some(d) => d.delete(p)
       case None =>
-        val np = nio(p)
-        if (Files.exists(np)) {
-          val walk = Files.walk(np)
-          try walk.sorted(java.util.Comparator.reverseOrder[NioPath]())
-            .forEach(f => Files.deleteIfExists(f): Unit)
-          finally walk.close()
-        }
+        // walkFileTree rather than Files.walk: an entry another thread
+        // removes mid-walk is already gone, so its NoSuchFileException is
+        // skipped instead of aborting the whole delete
+        Files.walkFileTree(nio(p), new SimpleFileVisitor[NioPath] {
+          override def visitFile(f: NioPath, a: BasicFileAttributes): FileVisitResult = {
+            Files.deleteIfExists(f)
+            FileVisitResult.CONTINUE
+          }
+          override def visitFileFailed(f: NioPath, e: IOException): FileVisitResult =
+            if (e.isInstanceOf[NoSuchFileException]) FileVisitResult.CONTINUE else throw e
+          override def postVisitDirectory(d: NioPath, e: IOException): FileVisitResult = {
+            if (e != null && !e.isInstanceOf[NoSuchFileException]) throw e
+            Files.deleteIfExists(d)
+            FileVisitResult.CONTINUE
+          }
+        }): Unit
     }
 
   override def isLocal: Boolean = delegate.forall(_.isLocal)
@@ -146,11 +160,11 @@ final class NioCheckpointFileManager(path: Path, conf: Configuration)
 }
 
 object NioCheckpointFileManager {
-  /** Temp-file stream that atomically renames into place on close and
-    * deletes the temp on cancel — RenameBasedFSDataOutputStream's
-    * contract (idempotent terminal states; POSIX rename overwrites, so
-    * the no-overwrite commit-race signal is carried by the pre-check,
-    * exactly like Spark's FileSystemBasedCheckpointFileManager).
+  /** Temp-file stream that atomically publishes on close and deletes the
+    * temp on cancel — RenameBasedFSDataOutputStream's contract (idempotent
+    * terminal states). POSIX rename overwrites, so the no-overwrite publish
+    * is a hard link instead: link creation fails atomically when the
+    * destination exists, and only one of two racing writers can win.
     */
   private final class RenameOnCloseStream(
       tmp: NioPath, dst: NioPath, hadoopDst: Path, overwriteIfPossible: Boolean,
@@ -161,12 +175,14 @@ object NioCheckpointFileManager {
       if (terminated) return
       terminated = true
       super.close()
-      if (!overwriteIfPossible && Files.exists(dst)) {
-        Files.deleteIfExists(tmp)
-        throw new FileAlreadyExistsException(
-          s"rename destination $hadoopDst already exists")
-      }
-      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE): Unit
+      if (overwriteIfPossible) Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE): Unit
+      else
+        try Files.createLink(dst, tmp): Unit
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            throw new FileAlreadyExistsException(
+              s"rename destination $hadoopDst already exists")
+        } finally Files.deleteIfExists(tmp): Unit
     }
     override def cancel(): Unit = synchronized {
       if (terminated) return

@@ -199,27 +199,6 @@ object Streams {
       }
   }
 
-  /** CDC-style streaming upsert: every micro-batch is merged into a managed
-    * table by key (`foreachBatch` → [[graft.destinations.ManagedTable.upsert]]).
-    * The table's file-pruned merge means each micro-batch rewrites only the
-    * files its keys touch — the standard "stream into a lakehouse table"
-    * shape. Exactly-once per key comes from upsert idempotence (replaying a
-    * batch re-merges the same rows), not sink transactions.
-    */
-  def upsertSink(
-      df: DataFrame,
-      table: graft.config.Location,
-      keys: Seq[String],
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.destinations.ManagedTable.upsert(batch.sparkSession, table, batch, keys): Unit
-      }
-      .start()
-
   /** EXACTLY-ONCE streaming upsert into a REAL Delta table — the standard
     * `foreachBatch` + `txnAppId` + MERGE recipe as one helper. Every
     * micro-batch MERGEs by key ([[graft.destinations.DeltaWrite.upsert]]),
@@ -368,8 +347,8 @@ object Streams {
     * [[graft.destinations.DeltaWrite.append]]): each micro-batch is one
     * protocol commit, so any Delta reader tails the stream's output and
     * the auto-checkpoint cadence keeps replay bounded as versions pile
-    * up. At-least-once per batch (a replayed batch re-appends); pair with
-    * the upsert sink's keyed merge when exactly-once per key matters.
+    * up. At-least-once per batch (a replayed batch re-appends); use
+    * [[deltaUpsertSink]] when exactly-once per key matters.
     */
   def deltaAppendSink(
       df: DataFrame,
@@ -495,7 +474,7 @@ object Streams {
     * then advances the offset. Delivery is at-least-once — the offset
     * write follows `fn` — and exactly-once when `fn` is idempotent (e.g.
     * an upsert keyed on the source keys, the CDC-apply shape). The offset
-    * lives in a one-row managed table under `offsetDir`, so consumers
+    * lives in a one-row Delta table at `offsetDir`, so consumers
     * survive restarts; each call is one bounded batch, the polling
     * complement to the push-based sinks above (downstream syncs typically
     * run on a schedule, not a resident stream). Returns the new offset
@@ -506,21 +485,19 @@ object Streams {
       sourceTable: String,
       offsetDir: String,
       initialVersion: Long = 0L)(fn: DataFrame => Unit): Long = {
-    import graft.config.{Location, Types}
-    import graft.destinations.ManagedTable
-    import org.apache.spark.sql.types.LongType
+    import graft.destinations.DeltaWrite
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import spark.implicits._
-    val loc = Location(offsetDir)
-    ManagedTable.createIfAbsent(spark, loc,
-      Seq(Types.FieldSpec("last_version", LongType, nullable = false)), Nil, Map.empty)
-    val last = ManagedTable.read(spark, loc).collect() match {
+    DeltaWrite.createIfAbsent(spark, offsetDir,
+      StructType(Seq(StructField("last_version", LongType, nullable = false))))
+    val last = graft.sources.DeltaLog.read(spark, offsetDir).collect() match {
       case rows if rows.isEmpty => initialVersion
       case rows => rows.map(_.getLong(0)).max
     }
     val latest = graft.sources.DeltaLog.lazySnapshot(spark, sourceTable).meta.version
     if (latest <= last) return last
     fn(graft.sources.DeltaLog.readCdf(spark, sourceTable, last, Some(latest)))
-    ManagedTable.replace(spark, loc, Seq(latest).toDF("last_version"), Seq.empty)
+    DeltaWrite.overwrite(spark, offsetDir, Seq(latest).toDF("last_version"))
     latest
   }
 

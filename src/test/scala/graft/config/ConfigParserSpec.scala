@@ -227,6 +227,26 @@ class ConfigParserSpec extends AnyFunSuite {
     assert(d.writeMode == JdbcCustom(Some("DELETE FROM t"), "INSERT INTO t VALUES (?)"))
   }
 
+  test("delta destination: `format: delta_log` is a stripped no-op, any other format is refused") {
+    def yaml(props: String) =
+      s"""sources: [{ type: in_memory, name: src }]
+        |stages: [[{ name: s, query: "SELECT 1 AS id" }]]
+        |destination:
+        |  type: delta
+        |  name: out
+        |  location: /tmp/out
+        |  write_mode: { operation: append }
+        |  table_properties: $props
+        |  metadata: { owner: etl }
+        |""".stripMargin
+    val d = ConfigParser.fromYaml(yaml("{ format: delta_log, delta.appendOnly: \"true\" }"))
+      .destination.get.asInstanceOf[ManagedTableDestination]
+    assert(d.tableProperties == Map("delta.appendOnly" -> "true"))
+    assert(d.metadata == Map("owner" -> "etl"))
+    val e = intercept[ConfigParser.ConfigError](ConfigParser.fromYaml(yaml("{ format: managed }")))
+    assert(e.getMessage.contains("table_properties.format 'managed'"), e.getMessage)
+  }
+
   test("location newtype: bare paths become absolute file URIs") {
     assert(Location("/tmp/a.csv").scheme == "file")
     assert(Location("s3a://bucket/key").scheme == "s3a")

@@ -306,7 +306,7 @@ class DeltaWriteSpec extends SparkSpec {
     val fields = Seq(
       Types.FieldSpec("id", LongType), Types.FieldSpec("v", StringType))
     val dest = ManagedTableDestination("dw_tbl", Location(table.toString), TableAppend,
-      schema = fields, tableProperties = Map("format" -> "delta_log"))
+      schema = fields)
     Destinations.prepare(spark, dest)
     assert(DeltaLog.isDeltaTable(spark, table.toString)) // created as REAL Delta
     Destinations.write(spark, dest, Seq((1L, "one")).toDF("id", "v"))
@@ -318,6 +318,45 @@ class DeltaWriteSpec extends SparkSpec {
     val back = DeltaLog.read(spark, table.toString).orderBy("id").collect()
     assert(back.map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((1L, "ONE"), (2L, "two")))
+  }
+
+  test("a `type: delta` destination stores table_properties and metadata in the table configuration") {
+    import spark.implicits._
+    val table = tmpDir("dw-dest-meta")
+    val dest = ManagedTableDestination("dw_meta", Location(table.toString), TableAppend,
+      schema = Seq(Types.FieldSpec("id", LongType)),
+      tableProperties = Map("delta.appendOnly" -> "false"),
+      metadata = Map("owner" -> "etl", "source" -> "orders"))
+    Destinations.prepare(spark, dest)
+    Destinations.write(spark, dest, Seq(1L).toDF("id"))
+    val props = DeltaWrite.describeDetail(spark, table.toString).head()
+      .getAs[scala.collection.Map[String, String]]("properties")
+    assert(props.get("owner").contains("etl") && props.get("source").contains("orders"), props)
+    assert(props.get("delta.appendOnly").contains("false"), props)
+  }
+
+  test("broadcastIfSmall hints only estimate-reliable plans (r19)") {
+    // small leaf-backed frame: estimate is real file/local bytes → hinted
+    val small = spark.range(100).toDF("id").select(col("id")).distinct()
+    assert(!(DeltaWrite.broadcastIfSmall(small) eq small),
+      "a provably small frame should carry the broadcast hint")
+    // a Generate (explode) fans out past what size-only estimation models:
+    // the estimate may be tiny while the true frame is unbounded — the
+    // explicit hint (which bypasses AQE's runtime size checks) must NOT
+    // be added, however small the estimate reads
+    val exploded = spark.range(100)
+      .select(explode(array_repeat(col("id"), 3)).as("id")).distinct()
+    assert(
+      exploded.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(32L << 20),
+      "precondition: the fan-out frame must look small to the estimator")
+    assert(DeltaWrite.broadcastIfSmall(exploded) eq exploded,
+      "a fan-out (Generate) frame must never be hint-broadcast")
+    // a join's output can dwarf its inputs: same rule
+    val other = spark.range(100).toDF("id2")
+    val joined = spark.range(100).toDF("id")
+      .join(other, col("id") === col("id2")).select(col("id")).distinct()
+    assert(DeltaWrite.broadcastIfSmall(joined) eq joined,
+      "a join-bearing frame must never be hint-broadcast")
   }
 
   test("add actions carry pruning stats; upsert/replace rewrite only the files that hold hits") {
@@ -1181,11 +1220,8 @@ class DeltaWriteSpec extends SparkSpec {
     import graft.config.{Location, Types}
     val root = tmpDir("dw-convert")
     val loc = Location(root.toString)
-    ManagedTable.createIfAbsent(spark, loc,
-      schema = Seq(Types.FieldSpec("id", LongType), Types.FieldSpec("part", StringType)),
-      partitionColumns = Seq("part"), properties = Map.empty)
-    ManagedTable.append(spark, loc,
-      Seq((1L, "a"), (2L, "b"), (3L, null)).toDF("id", "part"))
+    LegacyManagedTable.write(root,
+      Seq((1L, "a"), (2L, "b"), (3L, null)).toDF("id", "part"), partitionColumns = Seq("part"))
     val beforeFiles = java.nio.file.Files.walk(root).iterator().asScala
       .filter(p => java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
       .map(p => p -> java.nio.file.Files.getLastModifiedTime(p)).toMap

@@ -1,15 +1,20 @@
 package graft.destinations
 
 import graft.SparkSpec
-import graft.config.{Location, ReplaceCondition, Types}
+import graft.config._
+import graft.sources.{DeltaLog, Sources}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Golden semantics ported from the reference delta integration suite
-  * (aqueducts/delta/tests/integration.rs:36-349): create/append/read-back,
-  * keyed upsert (incl. null-safe and list-set-equality keys), predicate
-  * replace — plus our commit-log specifics: time travel and append without
-  * rewriting existing files.
+/** Golden semantics of the `type: delta` route, ported from the reference
+  * delta integration suite (aqueducts/delta/tests/integration.rs:36-349).
+  * A `ManagedTableDestination` is prepared (created if absent) and written
+  * through [[Destinations]]; a `ManagedTableSource` reads it back through
+  * [[Sources.load]]. Covered: create/append/read-back, keyed upsert (incl.
+  * null-safe and list-set-equality keys), predicate replace, time travel,
+  * append without rewriting existing files, and the maintenance ops these
+  * Delta tables get.
   */
 class ManagedTableSpec extends SparkSpec {
   import spark.implicits._
@@ -19,199 +24,188 @@ class ManagedTableSpec extends SparkSpec {
     Types.FieldSpec("name", StringType),
     Types.FieldSpec("value", DoubleType))
 
-  private def newTable(prefix: String): Location = {
-    val loc = Location(tmpDir(prefix).resolve("tbl").toString)
-    ManagedTable.createIfAbsent(spark, loc, schema, Nil, Map("owner" -> "test"))
-    loc
+  private def newTable(prefix: String, fields: Seq[Types.FieldSpec] = schema,
+      partitionColumns: Seq[String] = Nil): ManagedTableDestination = {
+    val d = ManagedTableDestination(prefix.replace('-', '_'),
+      Location(tmpDir(prefix).resolve("tbl").toString), TableAppend,
+      partitionColumns = partitionColumns, tableProperties = Map("owner" -> "test"),
+      schema = fields)
+    Destinations.prepare(spark, d)
+    d
   }
 
-  test("broadcastIfSmall hints only estimate-reliable plans (r19)") {
-    // small leaf-backed frame: estimate is real file/local bytes → hinted
-    val small = spark.range(100).toDF("id").select(col("id")).distinct()
-    assert(!(ManagedTable.broadcastIfSmall(small) eq small),
-      "a provably small frame should carry the broadcast hint")
-    // a Generate (explode) fans out past what size-only estimation models:
-    // the estimate may be tiny while the true frame is unbounded — the
-    // explicit hint (which bypasses AQE's runtime size checks) must NOT
-    // be added, however small the estimate reads
-    val exploded = spark.range(100)
-      .select(explode(array_repeat(col("id"), 3)).as("id")).distinct()
-    assert(
-      exploded.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(32L << 20),
-      "precondition: the fan-out frame must look small to the estimator")
-    assert(ManagedTable.broadcastIfSmall(exploded) eq exploded,
-      "a fan-out (Generate) frame must never be hint-broadcast")
-    // a join's output can dwarf its inputs: same rule
-    val other = spark.range(100).toDF("id2")
-    val joined = spark.range(100).toDF("id")
-      .join(other, col("id") === col("id2")).select(col("id")).distinct()
-    assert(ManagedTable.broadcastIfSmall(joined) eq joined,
-      "a join-bearing frame must never be hint-broadcast")
-  }
+  private def append(d: ManagedTableDestination, df: DataFrame): Unit =
+    Destinations.write(spark, d, df)
+
+  private def upsert(d: ManagedTableDestination, df: DataFrame, keys: String*): Unit =
+    Destinations.write(spark, d.copy(writeMode = TableUpsert(keys)), df)
+
+  private def replace(d: ManagedTableDestination, df: DataFrame, conds: ReplaceCondition*): Unit =
+    Destinations.write(spark, d.copy(writeMode = TableReplace(conds)), df)
+
+  private def read(d: ManagedTableDestination, version: Option[Long] = None,
+      timestamp: Option[java.time.Instant] = None): DataFrame =
+    Sources.load(spark, ManagedTableSource(d.name, d.location, version, timestamp))
+
+  private def path(d: ManagedTableDestination): String = d.location.spark
+
+  /** Live data files of the latest (or given) version, table-relative. */
+  private def files(d: ManagedTableDestination, version: Option[Long] = None): Set[String] =
+    DeltaLog.snapshot(spark, path(d), versionAsOf = version).files.map(_.path).toSet
 
   test("create is idempotent; empty table reads back with declared schema") {
-    val loc = newTable("mt-create")
-    ManagedTable.createIfAbsent(spark, loc, schema, Nil, Map.empty) // second call: no-op
-    val df = ManagedTable.read(spark, loc)
+    val d = newTable("mt-create")
+    Destinations.prepare(spark, d) // second call: no-op
+    val df = read(d)
     assert(df.count() == 0)
     assert(df.schema.fieldNames.toSeq == Seq("id", "name", "value"))
-    assert(ManagedTable.commits(spark, loc).map(_.version) == Seq(0L))
+    val snap = DeltaLog.snapshot(spark, path(d))
+    assert(snap.version == 0L)
+    assert(snap.configuration.get("owner").contains("test"))
   }
 
   test("append casts to schema, adds files without rewriting existing ones") {
-    val loc = newTable("mt-append")
+    val d = newTable("mt-append")
     // ints + missing nullable column: cast/cast-null semantics (delta lib.rs:331-362)
-    ManagedTable.append(spark, loc, Seq((1, "a"), (2, "b")).toDF("id", "name"))
-    val v1Files = ManagedTable.commits(spark, loc).last.files.toSet
-    ManagedTable.append(spark, loc, Seq((3, "c", 3.5)).toDF("id", "name", "value"))
-    val v2Files = ManagedTable.commits(spark, loc).last.files.toSet
-    assert(v1Files.subsetOf(v2Files), "append must not rewrite existing data files")
-    val rows = ManagedTable.read(spark, loc).orderBy("id").collect()
+    append(d, Seq((1, "a"), (2, "b")).toDF("id", "name"))
+    val v1Files = files(d)
+    append(d, Seq((3, "c", 3.5)).toDF("id", "name", "value"))
+    assert(v1Files.subsetOf(files(d)), "append must not rewrite existing data files")
+    val rows = read(d).orderBy("id").collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     assert(rows(0).isNullAt(2) && rows(2).getDouble(2) == 3.5)
   }
 
   test("concurrent appends: losers rebase and retry, no rows or files lost") {
-    val loc = newTable("mt-race")
+    val d = newTable("mt-race")
     val writers = 6
     implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.global
     val futures = (1 to writers).map { w =>
       scala.concurrent.Future {
-        ManagedTable.append(spark, loc,
-          Seq((w.toLong, s"writer$w", w * 1.0)).toDF("id", "name", "value"))
+        append(d, Seq((w.toLong, s"writer$w", w * 1.0)).toDF("id", "name", "value"))
       }
     }
     import scala.concurrent.duration._
     scala.concurrent.Await.result(scala.concurrent.Future.sequence(futures), 120.seconds)
     // every writer committed exactly one version beyond the create
-    assert(ManagedTable.commits(spark, loc).map(_.version) == (0L to writers.toLong))
-    val ids = ManagedTable.read(spark, loc).select("id").collect().map(_.getLong(0)).sorted
+    assert(DeltaLog.snapshot(spark, path(d)).version == writers.toLong)
+    val ids = read(d).select("id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq == (1L to writers.toLong)) // no lost appends, no duplicates
-    // the final manifest carries every earlier version's files
-    val commits = ManagedTable.commits(spark, loc)
-    assert(commits.init.forall(c => c.files.toSet.subsetOf(commits.last.files.toSet)))
+    // the final version carries every earlier version's files
+    val last = files(d)
+    assert((1L until writers.toLong).forall(v => files(d, Some(v)).subsetOf(last)))
   }
 
   test("append fails when a non-nullable column is missing") {
-    val loc = newTable("mt-nonnull")
+    val d = newTable("mt-nonnull")
     assertThrows[IllegalArgumentException](
-      ManagedTable.append(spark, loc, Seq(("x", 1.0)).toDF("name", "value")))
+      append(d, Seq(("x", 1.0)).toDF("name", "value")))
   }
 
   test("upsert: matched keys updated, unmatched inserted (delta integration.rs:189-272)") {
-    val loc = newTable("mt-upsert")
-    ManagedTable.append(spark, loc,
-      Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).toDF("id", "name", "value"))
-    ManagedTable.upsert(spark, loc,
-      Seq((2L, "b2", 20.0), (4L, "d", 4.0)).toDF("id", "name", "value"), Seq("id"))
-    val rows = ManagedTable.read(spark, loc).orderBy("id").collect()
+    val d = newTable("mt-upsert")
+    append(d, Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).toDF("id", "name", "value"))
+    upsert(d, Seq((2L, "b2", 20.0), (4L, "d", 4.0)).toDF("id", "name", "value"), "id")
+    val rows = read(d).orderBy("id").collect()
     assert(rows.map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq ==
       Seq((1L, "a", 1.0), (2L, "b2", 20.0), (3L, "c", 3.0), (4L, "d", 4.0)))
   }
 
   test("upsert key equality is null-safe (<=> semantics, delta lib.rs:279-284)") {
-    val loc = Location(tmpDir("mt-nullkey").resolve("tbl").toString)
-    ManagedTable.createIfAbsent(spark, loc, Seq(
-      Types.FieldSpec("k", StringType), Types.FieldSpec("v", LongType)), Nil, Map.empty)
-    ManagedTable.append(spark, loc,
-      Seq((Some("a"), 1L), (None, 2L)).toDF("k", "v"))
+    val d = newTable("mt-nullkey",
+      Seq(Types.FieldSpec("k", StringType), Types.FieldSpec("v", LongType)))
+    append(d, Seq((Some("a"), 1L), (None, 2L)).toDF("k", "v"))
     // a null key must MATCH the existing null-key row, not duplicate it
-    ManagedTable.upsert(spark, loc, Seq((Option.empty[String], 20L)).toDF("k", "v"), Seq("k"))
-    val rows = ManagedTable.read(spark, loc).orderBy(col("v")).collect()
+    upsert(d, Seq((Option.empty[String], 20L)).toDF("k", "v"), "k")
+    val rows = read(d).orderBy(col("v")).collect()
     assert(rows.length == 2)
     assert(rows.find(_.isNullAt(0)).get.getLong(1) == 20L)
   }
 
   test("upsert list keys: order-insensitive set equality incl. empty/null (delta lib.rs:266-278)") {
-    val loc = Location(tmpDir("mt-listkey").resolve("tbl").toString)
-    ManagedTable.createIfAbsent(spark, loc, Seq(
-      Types.FieldSpec("tags", ArrayType(StringType)), Types.FieldSpec("v", LongType)), Nil, Map.empty)
-    ManagedTable.append(spark, loc, Seq(
+    val d = newTable("mt-listkey",
+      Seq(Types.FieldSpec("tags", ArrayType(StringType)), Types.FieldSpec("v", LongType)))
+    append(d, Seq(
       (Seq("x", "y"), 1L),
       (Seq.empty[String], 2L),
       (null.asInstanceOf[Seq[String]], 3L)).toDF("tags", "v"))
     // ["y","x"] is the same set as ["x","y"]; [] matches []; null matches null
-    ManagedTable.upsert(spark, loc, Seq(
+    upsert(d, Seq(
       (Seq("y", "x"), 10L),
       (Seq.empty[String], 20L),
-      (null.asInstanceOf[Seq[String]], 30L)).toDF("tags", "v"), Seq("tags"))
-    val rows = ManagedTable.read(spark, loc).orderBy(col("v")).collect()
+      (null.asInstanceOf[Seq[String]], 30L)).toDF("tags", "v"), "tags")
+    val rows = read(d).orderBy(col("v")).collect()
     assert(rows.map(_.getLong(1)).toSeq == Seq(10L, 20L, 30L))
   }
 
   test("upsert rewrites only touched files (file-level pruning)") {
-    val loc = newTable("mt-prune")
+    val d = newTable("mt-prune")
     // two appends → disjoint file sets
-    ManagedTable.append(spark, loc, Seq((1L, "a", 1.0)).toDF("id", "name", "value"))
-    val afterFirst = ManagedTable.commits(spark, loc).last.files.toSet
-    ManagedTable.append(spark, loc, Seq((2L, "b", 2.0)).toDF("id", "name", "value"))
-    val afterSecond = ManagedTable.commits(spark, loc).last.files.toSet
-    val secondOnly = afterSecond -- afterFirst
+    append(d, Seq((1L, "a", 1.0)).toDF("id", "name", "value"))
+    val afterFirst = files(d)
+    append(d, Seq((2L, "b", 2.0)).toDF("id", "name", "value"))
+    val secondOnly = files(d) -- afterFirst
     // upsert touching only id=2 must keep the id=1 file(s) byte-identical
-    ManagedTable.upsert(spark, loc, Seq((2L, "b2", 20.0)).toDF("id", "name", "value"), Seq("id"))
-    val finalFiles = ManagedTable.commits(spark, loc).last.files.toSet
+    upsert(d, Seq((2L, "b2", 20.0)).toDF("id", "name", "value"), "id")
+    val finalFiles = files(d)
     assert(afterFirst.subsetOf(finalFiles), "untouched files must survive the upsert")
     assert(secondOnly.intersect(finalFiles).isEmpty, "touched files must be replaced")
   }
 
   test("replace: predicate-scoped delete + insert (delta integration.rs:274-349)") {
-    val loc = Location(tmpDir("mt-replace").resolve("tbl").toString)
-    ManagedTable.createIfAbsent(spark, loc, Seq(
-      Types.FieldSpec("region", StringType), Types.FieldSpec("v", LongType)), Nil, Map.empty)
-    ManagedTable.append(spark, loc,
-      Seq(("eu", 1L), ("eu", 2L), ("us", 3L)).toDF("region", "v"))
-    ManagedTable.replace(spark, loc,
-      Seq(("eu", 10L)).toDF("region", "v"),
-      Seq(ReplaceCondition("region", "eu")))
-    val rows = ManagedTable.read(spark, loc).orderBy("v").collect()
+    val d = newTable("mt-replace",
+      Seq(Types.FieldSpec("region", StringType), Types.FieldSpec("v", LongType)))
+    append(d, Seq(("eu", 1L), ("eu", 2L), ("us", 3L)).toDF("region", "v"))
+    replace(d, Seq(("eu", 10L)).toDF("region", "v"), ReplaceCondition("region", "eu"))
+    val rows = read(d).orderBy("v").collect()
     assert(rows.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("us", 3L), ("eu", 10L)))
   }
 
   test("replace with empty predicate = full overwrite (delta lib.rs:365-375)") {
-    val loc = newTable("mt-overwrite")
-    ManagedTable.append(spark, loc, Seq((1L, "a", 1.0)).toDF("id", "name", "value"))
-    ManagedTable.replace(spark, loc, Seq((9L, "z", 9.0)).toDF("id", "name", "value"), Nil)
-    val rows = ManagedTable.read(spark, loc).collect()
+    val d = newTable("mt-overwrite")
+    append(d, Seq((1L, "a", 1.0)).toDF("id", "name", "value"))
+    replace(d, Seq((9L, "z", 9.0)).toDF("id", "name", "value"))
+    val rows = read(d).collect()
     assert(rows.length == 1 && rows.head.getLong(0) == 9L)
   }
 
   test("time travel: by version and by timestamp (delta lib.rs:45-74)") {
-    val loc = newTable("mt-travel")
-    ManagedTable.append(spark, loc, Seq((1L, "a", 1.0)).toDF("id", "name", "value"))
+    val d = newTable("mt-travel")
+    append(d, Seq((1L, "a", 1.0)).toDF("id", "name", "value"))
     val tsAfterV1 = java.time.Instant.now()
     Thread.sleep(20)
-    ManagedTable.append(spark, loc, Seq((2L, "b", 2.0)).toDF("id", "name", "value"))
-    assert(ManagedTable.read(spark, loc, version = Some(0)).count() == 0)
-    assert(ManagedTable.read(spark, loc, version = Some(1)).count() == 1)
-    assert(ManagedTable.read(spark, loc).count() == 2)
-    assert(ManagedTable.read(spark, loc, timestamp = Some(tsAfterV1)).count() == 1)
-    assertThrows[IllegalArgumentException](
-      ManagedTable.read(spark, loc, version = Some(99)))
+    append(d, Seq((2L, "b", 2.0)).toDF("id", "name", "value"))
+    assert(read(d, version = Some(0)).count() == 0)
+    assert(read(d, version = Some(1)).count() == 1)
+    assert(read(d).count() == 2)
+    assert(read(d, timestamp = Some(tsAfterV1)).count() == 1)
+    assertThrows[IllegalArgumentException](read(d, version = Some(99)))
   }
 
   test("history lists commits; vacuum prunes old versions and orphaned files") {
-    val loc = newTable("mt-vacuum")
-    ManagedTable.append(spark, loc, Seq((1L, "a", 1.0)).toDF("id", "name", "value"))
-    // upsert rewrites the only data file → v1's file becomes orphaned history
-    ManagedTable.upsert(spark, loc, Seq((1L, "a2", 2.0)).toDF("id", "name", "value"), Seq("id"))
-    val hist = ManagedTable.history(spark, loc).orderBy("version").collect()
-    assert(hist.map(_.getString(2)).toSeq == Seq("create", "append", "upsert"))
-    val removed = ManagedTable.vacuum(spark, loc, keepVersions = 1)
-    assert(removed == 1) // the rewritten v1 file
-    assert(ManagedTable.commits(spark, loc).map(_.version) == Seq(2L))
+    val d = newTable("mt-vacuum")
+    append(d, Seq((1L, "a", 1.0)).toDF("id", "name", "value"))
+    val v1Files = files(d)
+    // upsert rewrites the only data file → v1's file becomes tombstoned history
+    upsert(d, Seq((1L, "a2", 2.0)).toDF("id", "name", "value"), "id")
+    val hist = DeltaWrite.history(spark, path(d)).orderBy("version").collect()
+    assert(hist.map(_.getAs[String]("operation")).toSeq == Seq("CREATE TABLE", "WRITE", "MERGE"))
+    // inside the retention window nothing is deleted
+    assert(DeltaWrite.vacuum(spark, path(d)) == 0)
+    val removed = DeltaWrite.vacuum(spark, path(d), retainMs = 0L)
+    assert(removed == v1Files.size) // the rewritten v1 file
+    v1Files.foreach(f => assert(!java.nio.file.Files.exists(d.location.path.resolve(f))))
     // latest state still fully readable after vacuum
-    val rows = ManagedTable.read(spark, loc).collect()
+    val rows = read(d).collect()
     assert(rows.length == 1 && rows.head.getString(1) == "a2")
-    // time travel beyond the horizon is gone
-    assertThrows[IllegalArgumentException](ManagedTable.read(spark, loc, version = Some(1)))
   }
 
   test("vacuum sweeps unreferenced orphan data files past the grace window") {
-    val loc = newTable("mt-orphan")
-    ManagedTable.append(spark, loc, Seq((1L, "a", 1.0)).toDF("id", "name", "value"))
+    val d = newTable("mt-orphan")
+    append(d, Seq((1L, "a", 1.0)).toDF("id", "name", "value"))
     // simulate a crashed writer: a data file no commit references
-    val root = new org.apache.hadoop.fs.Path(loc.spark)
-    val orphan = new org.apache.hadoop.fs.Path(root, "data/part-orphan-crashed.parquet")
+    val root = new org.apache.hadoop.fs.Path(path(d))
+    val orphan = new org.apache.hadoop.fs.Path(root, "part-orphan-crashed.parquet")
     Seq((9L, "x", 9.0)).toDF("id", "name", "value").coalesce(1)
       .write.mode("overwrite").parquet(root.toString + "/_tmp-orphan")
     val f = orphan.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -220,46 +214,41 @@ class ManagedTableSpec extends SparkSpec {
     f.rename(part, orphan)
     f.delete(new org.apache.hadoop.fs.Path(root, "_tmp-orphan"), true)
     // inside the grace window: untouched (could be an in-flight writer)
-    assert(ManagedTable.vacuum(spark, loc, keepVersions = 10) == 0)
+    assert(DeltaWrite.vacuum(spark, path(d)) == 0)
     assert(f.exists(orphan))
     // past the grace window: swept, table contents unchanged
-    assert(ManagedTable.vacuum(spark, loc, keepVersions = 10, orphanGraceMs = 0L) == 1)
+    assert(DeltaWrite.vacuum(spark, path(d), retainMs = 0L) == 1)
     assert(!f.exists(orphan))
-    assert(ManagedTable.read(spark, loc).count() == 1)
+    assert(read(d).count() == 1)
   }
 
   test("compact bin-packs small files into one, same data, new version") {
-    val loc = newTable("mt-compact")
+    val d = newTable("mt-compact")
     // 4 appends, each repartitioned to 3 → 12 tiny files
     (1 to 4).foreach { i =>
-      ManagedTable.append(spark, loc,
-        (1 to 6).map(j => (i * 100L + j, s"r$i-$j", j.toDouble))
-          .toDF("id", "name", "value").repartition(3))
+      append(d, (1 to 6).map(j => (i * 100L + j, s"r$i-$j", j.toDouble))
+        .toDF("id", "name", "value").repartition(3))
     }
-    val before = ManagedTable.commits(spark, loc).last.files
-    assert(before.size == 12)
-    val expected = ManagedTable.read(spark, loc).orderBy("id").collect().toSeq
+    assert(files(d).size == 12)
+    val expected = read(d).orderBy("id").collect().toSeq
 
-    val v = ManagedTable.compact(spark, loc) // everything under 64 MB → one file
-    val after = ManagedTable.commits(spark, loc).last
-    assert(after.version == v && after.operation == "compact")
-    assert(after.files.size == 1, after.files)
-    assert(ManagedTable.read(spark, loc).orderBy("id").collect().toSeq == expected)
+    val v = DeltaWrite.compact(spark, path(d)) // everything under 64 MB → one file
+    assert(DeltaLog.snapshot(spark, path(d)).version == v)
+    assert(files(d).size == 1, files(d))
+    assert(read(d).orderBy("id").collect().toSeq == expected)
     // compaction again is a no-op (nothing left to pack)
-    assert(ManagedTable.compact(spark, loc) == v)
+    assert(DeltaWrite.compact(spark, path(d)) == v)
     // old small files remain referenced by history until vacuumed
-    assert(ManagedTable.read(spark, loc, version = Some(v - 1)).count() == 24)
+    assert(read(d, version = Some(v - 1)).count() == 24)
   }
 
   test("partitioned table: writes hive layout, reads partition column back") {
-    val loc = Location(tmpDir("mt-hive").resolve("tbl").toString)
-    ManagedTable.createIfAbsent(spark, loc, Seq(
-      Types.FieldSpec("id", LongType), Types.FieldSpec("year", IntegerType)),
-      partitionColumns = Seq("year"), Map.empty)
-    ManagedTable.append(spark, loc, Seq((1L, 2024), (2L, 2025)).toDF("id", "year"))
-    val files = ManagedTable.commits(spark, loc).last.files
-    assert(files.forall(f => f.contains("year=")))
-    val rows = ManagedTable.read(spark, loc).orderBy("id").collect()
+    val d = newTable("mt-hive",
+      Seq(Types.FieldSpec("id", LongType), Types.FieldSpec("year", IntegerType)),
+      partitionColumns = Seq("year"))
+    append(d, Seq((1L, 2024), (2L, 2025)).toDF("id", "year"))
+    assert(files(d).forall(f => f.contains("year=")))
+    val rows = read(d).orderBy("id").collect()
     assert(rows.map(_.getInt(1)).toSeq == Seq(2024, 2025))
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.functions.{JsonUdfs, Text}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class OpsSpec extends SparkSpec {
@@ -435,6 +436,29 @@ class OpsSpec extends SparkSpec {
     // re-save replaces the snapshot (idempotent), and the table time-travels
     Ann.ivfSave(index, root)
     assert(Ann.ivfLoad(spark, root).centroids.length == index.centroids.length)
+
+    // every index kind persists as Delta tables: a re-save is one
+    // full-overwrite commit per table, and the reload holds each item once
+    val pq = Ann.pqTrain(emb, "id", "v", m = 3, ksub = 4)
+    val ivfPq = Ann.ivfPqBuild(emb, "id", "v", nlist = 4, m = 3, ksub = 4)
+    val kinds: Seq[(String, String => Unit, String => DataFrame, Seq[String])] = Seq(
+      ("ivf", Ann.ivfSave(index, _), Ann.ivfLoad(spark, _).assigned,
+        Seq("centroids", "assigned")),
+      ("pq", Ann.pqSave(pq, _), Ann.pqLoad(spark, _).encoded, Seq("codebooks", "encoded")),
+      ("ivfpq", Ann.ivfPqSave(ivfPq, _), Ann.ivfPqLoad(spark, _).encoded,
+        Seq("centroids", "codebooks", "encoded")))
+    kinds.foreach { case (kind, save, load, tables) =>
+      val dir = tmpDir(s"$kind-persist-delta").toString
+      save(dir)
+      save(dir)
+      tables.foreach { t =>
+        val path = s"$dir/$t"
+        assert(graft.sources.DeltaLog.isDeltaTable(spark, path), path)
+        assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_log")), path)
+        assert(graft.sources.DeltaLog.snapshot(spark, path).version == 2L, path) // create + 2 saves
+      }
+      assert(load(dir).count() == rows.size, kind)
+    }
   }
 
   test("Ann: bruteTopK ranks self-match first with cosine 1.0") {

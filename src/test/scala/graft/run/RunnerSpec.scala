@@ -196,12 +196,12 @@ class RunnerSpec extends SparkSpec {
     val dir = tmpDir("runner-mtsrc")
     val tblLoc = Location(dir.resolve("tbl").toString)
     import org.apache.spark.sql.types._
-    graft.destinations.ManagedTable.createIfAbsent(spark, tblLoc,
-      Seq(graft.config.Types.FieldSpec("id", LongType), graft.config.Types.FieldSpec("v", StringType)),
-      Nil, Map.empty)
+    import graft.destinations.DeltaWrite
+    DeltaWrite.createIfAbsent(spark, tblLoc.spark,
+      StructType(Seq(StructField("id", LongType), StructField("v", StringType))))
     import spark.implicits._
-    graft.destinations.ManagedTable.append(spark, tblLoc, Seq((1L, "a")).toDF("id", "v"))
-    graft.destinations.ManagedTable.append(spark, tblLoc, Seq((2L, "b")).toDF("id", "v"))
+    DeltaWrite.append(spark, tblLoc.spark, Seq((1L, "a")).toDF("id", "v"))
+    DeltaWrite.append(spark, tblLoc.spark, Seq((2L, "b")).toDF("id", "v"))
     // latest
     val latest = Aqueduct(
       sources = Seq(ManagedTableSource("mt_latest", tblLoc)),
@@ -214,6 +214,41 @@ class RunnerSpec extends SparkSpec {
       stages = Seq(Seq(Stage("mt_n1", "SELECT count(*) AS n FROM mt_v1"))))
     Runner.run(spark, v1)
     assert(spark.table("mt_n1").head().getLong(0) == 1L)
+  }
+
+  test("a legacy `_log/` table is refused as source and destination, and left untouched") {
+    val dir = tmpDir("runner-legacy")
+    val tbl = dir.resolve("tbl")
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    graft.destinations.LegacyManagedTable.write(tbl, Seq((1L, "a")).toDF("id", "v"))
+    def snapshot(): Map[String, Seq[Byte]] = {
+      val walk = java.nio.file.Files.walk(tbl)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => tbl.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+    val before = snapshot()
+    val loc = Location(tbl.toString)
+    val asSource = Aqueduct(
+      sources = Seq(ManagedTableSource("legacy_src", loc)),
+      stages = Seq(Seq(Stage("legacy_n", "SELECT count(*) AS n FROM legacy_src"))))
+    val asDest = Aqueduct(
+      sources = Seq(InMemorySource("legacy_in")),
+      stages = Seq(Seq(Stage("legacy_out", "SELECT * FROM legacy_in"))),
+      destination = Some(ManagedTableDestination("legacy_dst", loc, TableAppend,
+        schema = Seq(graft.config.Types.FieldSpec("id", org.apache.spark.sql.types.LongType),
+          graft.config.Types.FieldSpec("v", org.apache.spark.sql.types.StringType)))))
+    Seq((2L, "b")).toDF("id", "v").createOrReplaceTempView("legacy_in")
+    try Seq(asSource, asDest).foreach { aq =>
+      val e = intercept[Exception](Runner.run(spark, aq, new CollectingTracker))
+      def chain(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+      assert(chain(e).exists(_.contains("convertFromManaged")), chain(e))
+      assert(!java.nio.file.Files.exists(tbl.resolve("_delta_log")))
+      assert(snapshot() == before, "the legacy table directory changed")
+    } finally spark.catalog.dropTempView("legacy_in")
   }
 
   test("explain_analyze emits an executed plan with metrics") {
@@ -325,7 +360,7 @@ class RunnerSpec extends SparkSpec {
       Map("local_path" -> base.toString, "run_id" -> "t1"),
       tracker)
     val tableLoc = Location(base.resolve("examples/output_delta_example/t1").toString)
-    val out = graft.destinations.ManagedTable.read(spark, tableLoc)
+    val out = graft.sources.DeltaLog.read(spark, tableLoc.spark)
     assert(out.count() > 0)
     assert(out.schema.fieldNames.toSeq ==
       Seq("date", "location_id", "min_temp_c", "min_humidity", "max_temp_c",
@@ -339,7 +374,7 @@ class RunnerSpec extends SparkSpec {
     Runner.runFile(spark,
       java.nio.file.Paths.get("/root/reference/examples/aqueduct_pipeline_example.yml"),
       Map("local_path" -> base.toString, "run_id" -> "t1"))
-    val again = graft.destinations.ManagedTable.read(spark, tableLoc)
+    val again = graft.sources.DeltaLog.read(spark, tableLoc.spark)
     assert(again.count() == out.count())
   }
 
@@ -377,8 +412,7 @@ class RunnerSpec extends SparkSpec {
 
     Runner.runFile(spark, java.nio.file.Paths.get("examples/managed_table_upsert.yml"),
       Map("sf_dir" -> sf, "table_dir" -> out.resolve("customers").toString), new CollectingTracker)
-    val tbl = graft.destinations.ManagedTable.read(
-      spark, Location(out.resolve("customers").toString))
+    val tbl = graft.sources.DeltaLog.read(spark, Location(out.resolve("customers").toString).spark)
     assert(tbl.count() > 0)
     assert(tbl.schema("balance").dataType == org.apache.spark.sql.types.DoubleType)
 

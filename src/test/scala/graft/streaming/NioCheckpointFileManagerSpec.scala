@@ -88,6 +88,59 @@ class NioCheckpointFileManagerSpec extends SparkSpec {
     m.delete(new Path(root.toString, "log")) // idempotent on missing
   }
 
+  test("open of a missing file throws java.io.FileNotFoundException") {
+    val root = tmpDir("nio-cfm")
+    intercept[java.io.FileNotFoundException](mgr(root).open(new Path(root.toString, "state/0/1.snapshot")))
+  }
+
+  test("racing no-overwrite publishes: exactly one writer wins each destination") {
+    val root = tmpDir("nio-cfm")
+    val m = mgr(root)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try (0 until 20).foreach { round =>
+      val dst = new Path(root.toString, s"commits/$round")
+      val streams = (0 until 8).map { w =>
+        val o = m.createAtomic(dst, overwriteIfPossible = false)
+        o.write(s"writer-$w".getBytes); o
+      }
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val results = streams.map { o =>
+        pool.submit(new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean = {
+            start.await()
+            try { o.close(); true } catch { case _: FileAlreadyExistsException => false }
+          }
+        })
+      }
+      start.countDown()
+      assert(results.count(_.get()) == 1, s"round $round")
+    } finally pool.shutdown()
+    // no loser left a temp file behind
+    assert(m.list(new Path(root.toString, "commits")).length == 20)
+  }
+
+  test("concurrent deletes of one tree all succeed (vanishing entries are ignored)") {
+    val root = tmpDir("nio-cfm")
+    val m = mgr(root)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try (0 until 10).foreach { round =>
+      val tree = new Path(root.toString, s"state-$round")
+      for (d <- 0 until 10; f <- 0 until 10) {
+        val o = m.createAtomic(new Path(tree, s"$d/$f.delta"), overwriteIfPossible = true)
+        o.write(Array[Byte](1)); o.close()
+      }
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val deletes = (0 until 4).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = { start.await(); m.delete(tree) }
+        })
+      }
+      start.countDown()
+      deletes.foreach(_.get()) // rethrows a delete's failure
+      assert(!m.exists(tree))
+    } finally pool.shutdown()
+  }
+
   test("streaming aggregation under the NIO manager equals the default manager") {
     import org.apache.spark.sql.functions._
     val src = tmpDir("nio-src")
@@ -117,5 +170,48 @@ class NioCheckpointFileManagerSpec extends SparkSpec {
       } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
     assert(run(useNio = true) === run(useNio = false))
+  }
+
+  test("stateful restart: mapGroupsWithState recovers its state from the checkpoint") {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[NioCheckpointFileManager].getName)
+    try {
+      val src = tmpDir("nio-restart-src")
+      val ck = tmpDir("nio-restart-ck")
+      def add(rows: (Long, Long)*): Unit =
+        rows.toDF("k", "v").coalesce(1).write.mode("append").parquet(src.toString)
+      // one run of the query from the shared checkpoint: a fresh query run
+      // gets fresh state-store providers, so it must load the state of the
+      // previous run from the checkpoint (snapshot probe, then delta replay)
+      def run(): Map[Long, Long] = {
+        val totals = spark.readStream.schema("k LONG, v LONG").parquet(src.toString)
+          .as[(Long, Long)]
+          .groupByKey(_._1)
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+            (k: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
+              val total = state.getOption.getOrElse(0L) + rows.map(_._2).sum
+              state.update(total)
+              (k, total)
+          }
+        val out = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+        val q = totals.writeStream
+          .outputMode(OutputMode.Update)
+          .option("checkpointLocation", ck.toString)
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[(Long, Long)], _: Long) =>
+            batch.collect().foreach { case (k, total) => out.put(k, total) }
+          }
+          .start()
+        try q.processAllAvailable() finally q.stop()
+        out.asScala.toMap
+      }
+      add(1L -> 10L, 2L -> 20L)
+      assert(run() == Map(1L -> 10L, 2L -> 20L))
+      add(1L -> 5L)
+      assert(run() == Map(1L -> 15L), "the restarted query lost key 1's running total")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

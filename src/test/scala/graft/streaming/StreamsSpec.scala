@@ -314,32 +314,31 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("foreachBatch upsert sink merges micro-batches into a managed table by key") {
-    import graft.config.{Location, Types}
-    import graft.destinations.ManagedTable
+    import graft.destinations.DeltaWrite
+    import graft.sources.DeltaLog
     import org.apache.spark.sql.types._
     implicit val sqlCtx = spark.sqlContext
     val root = tmpDir("stream-upsert")
-    val table = Location(root.resolve("tbl").toString)
-    ManagedTable.createIfAbsent(spark, table,
-      schema = Seq(Types.FieldSpec("user_id", LongType), Types.FieldSpec("total", DoubleType)),
-      partitionColumns = Nil, properties = Map.empty)
+    val table = root.resolve("tbl").toString
+    DeltaWrite.createIfAbsent(spark, table, StructType(Seq(
+      StructField("user_id", LongType), StructField("total", DoubleType))))
 
     val input = MemoryStream[(Long, Double)]
     val df = input.toDF().toDF("user_id", "total")
-    val q = Streams.upsertSink(df, table, keys = Seq("user_id"),
-      checkpointDir = root.resolve("ckpt").toString)
+    val q = Streams.deltaUpsertSink(df, table, keys = Seq("user_id"),
+      checkpointDir = root.resolve("ckpt").toString, txnAppId = "stream-upsert")
     input.addData((1L, 10.0), (2L, 20.0))
     q.processAllAvailable()
     input.addData((2L, 25.0), (3L, 30.0)) // 2 updated in place, 3 inserted
     q.processAllAvailable()
     q.stop()
 
-    val rows = ManagedTable.read(spark, table).orderBy("user_id")
+    val rows = DeltaLog.read(spark, table).orderBy("user_id")
       .collect().map(r => r.getLong(0) -> r.getDouble(1))
     assert(rows.toSeq == Seq(1L -> 10.0, 2L -> 25.0, 3L -> 30.0))
     // each micro-batch committed one table version on top of create
-    assert(ManagedTable.commits(spark, table).map(_.operation) ==
-      Seq("create", "upsert", "upsert"))
+    assert(DeltaWrite.history(spark, table).orderBy("version").collect()
+      .map(_.getAs[String]("operation")).toSeq == Seq("CREATE TABLE", "MERGE", "MERGE"))
   }
 
   test("deltaUpsertSink crash-replay: replayed batch is skipped — no dup/lost rows, no extra versions") {
