@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tooling (optimization rounds, guide §1): alternate two conf
   * sets over the same queries INSIDE ONE JVM and report per-query medians,
   * so JIT/GC/session noise that dominates short fresh-JVM subset benches
@@ -15,16 +13,14 @@ import org.apache.spark.sql.SparkSession
 object ABBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val pats = (if (args.length > 2) args(2) else args(1))
-      .split(',').map(_.trim).filter(_.nonEmpty).toSeq
     def confOf(env: String): Seq[(String, String)] =
       sys.env.getOrElse(env, "").split(',').map(_.trim).filter(_.contains("="))
         .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }.toSeq
     val confA = confOf("AB_CONF_A")
     val confB = confOf("AB_CONF_B")
     val iters = sys.env.getOrElse("AB_ITERS", "3").toInt
+    val selected = Measure.select(Some(if (args.length > 2) args(2) else args(1)))
     val spark = Sessions.local()
-    val selected = SparkEntry.queries.filter { case (n, _) => pats.exists(n.contains) }
 
     def withConf[A](cs: Seq[(String, String)])(body: => A): A = {
       val prev = cs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -32,21 +28,19 @@ object ABBench {
       try body finally prev.foreach { case (k, p) =>
         p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      spark.catalog.clearCache()
-      (System.nanoTime() - t0) / 1e9
+    def runOnce(name: String, fn: Measure.Query): Double = {
+      val t = Measure.timed(Measure.materialize(spark, sfDir, fn))
+      t.value.foreach(err => throw new IllegalStateException(s"$name failed: $err"))
+      t.wallSec
     }
     // warm-up under each conf so first-run codegen/scan costs hit neither side
-    selected.foreach { case (_, fn) =>
-      withConf(confA)(runOnce(fn)); withConf(confB)(runOnce(fn))
-    }
+    withConf(confA)(Measure.warmUp(spark, sfDir, selected))
+    withConf(confB)(Measure.warmUp(spark, sfDir, selected))
     val results = selected.map { case (name, fn) =>
       val as = Seq.newBuilder[Double]; val bs = Seq.newBuilder[Double]
       (1 to iters).foreach { _ =>
-        as += withConf(confA)(runOnce(fn))
-        bs += withConf(confB)(runOnce(fn))
+        as += withConf(confA)(runOnce(name, fn))
+        bs += withConf(confB)(runOnce(name, fn))
       }
       def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
       (name, med(as.result()), med(bs.result()))

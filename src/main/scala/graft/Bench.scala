@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-contract benchmark main: one JSON line with per-query wall times.
   *
   * Round-1 verdict fixes baked in:
@@ -107,22 +105,71 @@ object Bench {
   private[graft] val laterRounds =
     Seq(r3New, r4New, r5New, r6New, r8New, r9New, r10New, r11New, r13New,
       r14New, r15New, r16New, r17New, r18New)
-  private def newer(from: Int)(k: String): Boolean =
-    laterRounds.drop(from).exists(_(k))
+  // r8_subset_sec is the r8-era 134-query total: the round-9 streaming gates
+  // each pay multi-trigger micro-batch fixed costs, so THIS is the number to
+  // compare against BENCH_r08's 81.5s, not the grand total. r9_subset_sec is
+  // the round-9 143-query surface: compare it against bench_full @ 4f4c70d's
+  // 130.4s total (clean r9 run).
+  private val subsets: Seq[(String, String => Boolean)] =
+    ("r1_subset_sec" -> r1Names) +:
+      Seq("r2", "r3", "r4", "r5", "r6", "r8", "r9").zipWithIndex.map { case (r, i) =>
+        s"${r}_subset_sec" -> ((k: String) => !laterRounds.drop(i).exists(_(k)))
+      }
   // ------------------------------------------------------------------------
 
-  private def materialize(spark: SparkSession, sfDir: String,
-      name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[String] =
-    try {
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      // pair-mining queries persist signature frames (documented lifecycle:
-      // services clear between corpora); without this, cached blocks pile up
-      // across 60+ queries and later queries pay eviction/GC pressure that
-      // is not theirs — per-query attribution wants per-query isolation
-      spark.catalog.clearCache()
-      None
-    }
-    catch { case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}") }
+  /** One query's kept (per-pass minimum) wall seconds, the process-CPU
+    * seconds of the pass that set it, and the first pass's wall seconds. */
+  private[graft] final case class Timing(sec: Double, cpuSec: Double, firstSec: Double)
+
+  /** The run's load samples and pass totals, for the contamination verdict. */
+  private[graft] final case class Conditions(load1Initial: Double, load1Start: Double,
+      load1End: Double, rerunGain: Double, lastGain: Double, lastDeltaSec: Double,
+      passes: Int)
+
+  /** The stdout contract line and the `bench_full.json` body. `results`
+    * holds every selected query; a failed one keeps the 1e9-second sentinel
+    * and has its message in `errors`.
+    */
+  private[graft] def report(results: Seq[(String, Timing)], errors: Seq[(String, String)],
+      c: Conditions, sfDir: String): (String, String) = {
+    import Measure.{f3, jsonString => js}
+    val failed = errors.map(_._1).toSet
+    // flagged when the box was loaded at start, or the two cleanest passes
+    // still disagree by far more than the ~10% a quiet box shows (absolute
+    // floor keeps sub-second noise at toy scale factors from tripping).
+    // The rule itself and the round-8-era rule's verdict are BOTH emitted,
+    // so artifact consumers can tell a policy change from an environment
+    // change (ADVICE r9).
+    val contaminationRule =
+      "load1_start>2.0 || (last_gain>0.2 && last_delta_sec>10) [3rd pass on rerun_gain>0.2]"
+    val contaminated = c.load1Start > 2.0 || (c.lastGain > 0.2 && c.lastDeltaSec > 10.0)
+    val contaminatedR8Rule = c.load1Start > 2.0 || (c.lastGain > 0.15 && c.lastDeltaSec > 5.0)
+    val total = results.map(_._2.sec).sum
+    val subsetJson = subsets.map { case (key, in) =>
+      s""""$key":${f3(results.collect { case (k, t) if in(k) => t.sec }.sum)}"""
+    }.mkString(",")
+    val loadJson = s""""load1_initial":${f3(c.load1Initial)},"load1_start":${f3(c.load1Start)},"load1_end":${f3(c.load1End)},"rerun_gain":${f3(c.rerunGain)},"last_gain":${f3(c.lastGain)},"passes":${c.passes},"full_rerun":true,"contaminated":$contaminated,"contamination_rule":${js(contaminationRule)},"contaminated_r8_rule":$contaminatedR8Rule"""
+    val errJson = errors.map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
+    // the driver keeps only the ~2000-char TAIL of this process's output
+    // (which also swallows sbt's epilogue), and every BENCH_r*.json through
+    // r9 has parsed:null because the full per-query map pushed the line
+    // past that window and truncated its HEAD. The stdout line therefore
+    // carries only the 20 slowest queries (prefix keys, 3-decimal seconds
+    // — ~700 chars all in, parseable with room to spare); the complete
+    // per-query detail lives in bench_full.json, named by "queries_full".
+    val top = results.filterNot { case (k, _) => failed(k) }.sortBy(-_._2.sec).take(20)
+    val shown = top.map { case (k, t) => s"${js(k.takeWhile(_ != '_'))}:${f3(t.sec)}" }
+      .mkString("{", ",", "}")
+    // full per-query detail: kept wall, process-CPU seconds (wall >> cpu/32
+    // on an idle box; wall inflated with cpu flat = external load), and the
+    // first-pass wall
+    val full = results.map { case (k, t) =>
+      s"""${js(k)}:{"sec":${f3(t.sec)},"cpu_sec":${f3(t.cpuSec)},"first_sec":${f3(t.firstSec)}}"""
+    }.mkString("{", ",", "}")
+    val head = s""""metric":"total","value":${f3(total)},"unit":"sec""""
+    (s"""{$head,"n_queries":${results.size},$subsetJson,$loadJson,"queries":$shown,"queries_shown":${top.size},"queries_full":"bench_full.json","errors":$errJson,"sf":${js(sfDir)}}""",
+      s"""{$head,$subsetJson,$loadJson,"queries":$full,"errors":$errJson,"sf":${js(sfDir)}}""")
+  }
 
   /** 1-minute loadavg — external-load attribution for the round-wrap bench.
     * Sampled before the Spark session spins up (so it reflects co-located
@@ -131,12 +178,6 @@ object Bench {
   private def load1(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
     catch { case _: Throwable => -1.0 }
-
-  private def processCpuNanos(): Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
-    }
 
   def main(args: Array[String]): Unit = {
     // Three straight rounds started on a box with load1 > 2 and self-flagged
@@ -151,33 +192,24 @@ object Bench {
       Thread.sleep(5000)
     val loadStart = load1() // before the session exists: pure external load
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local()
-
     // attribution tooling (driver contract untouched when unset): run only
     // queries whose name contains one of the comma-separated substrings —
     // lets a regression be timed in isolation vs inside the full run
-    val subset = sys.env.get("SPARK_GRAFT_BENCH_SUBSET")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = subset match {
-      case Some(pats) => SparkEntry.queries.filter { case (n, _) => pats.exists(n.contains) }
-      case None => SparkEntry.queries
-    }
-
-    // untimed warm-up: JVM/codegen/parquet-footer costs land here, not on q01
-    selected.foreach { case (name, fn) => materialize(spark, sfDir, name, fn) }
+    val selected = Measure.select(sys.env.get("SPARK_GRAFT_BENCH_SUBSET"))
+    val spark = Sessions.local()
+    Measure.warmUp(spark, sfDir, selected)
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val c0 = processCpuNanos(); val t0 = System.nanoTime()
-      val err = materialize(spark, sfDir, name, fn)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = (processCpuNanos() - c0) / 1e9
-      err match {
-        case None => (wall, cpu)
-        case Some(msg) => errors += name -> msg; (1e9, cpu) // sentinel: failures must hurt the metric
-      }
+    def timedPass(name: String, fn: Measure.Query): (Double, Double) = {
+      val t = Measure.timed(Measure.materialize(spark, sfDir, fn))
+      t.value.foreach(msg => errors(name) = msg)
+      // sentinel: failures must hurt the metric
+      (if (t.value.isEmpty) t.wallSec else 1e9, t.cpuSec)
     }
-    val firstPass = selected.map { case (name, fn) => name -> timed(name, fn) }
+    val firstPass = selected.map { case (name, fn) =>
+      val (w, c) = timedPass(name, fn)
+      name -> Timing(w, c, w)
+    }
 
     // Min-of-two, UNCONDITIONALLY (round 9): earlier rounds re-timed only
     // the slowest 10 unless contamination fired, so each round's total
@@ -189,17 +221,19 @@ object Bench {
     // this: during the run load1 is dominated by our OWN 32 executor
     // threads, so only the pre-session sample and the rerun delta
     // distinguish external load.)
-    def retime(name: String, w1: Double, c1: Double): (Double, Double, Double) = {
-      val (w2, c2) = timed(name, SparkEntry.queries(name))
-      (math.min(w1, w2), if (w2 < w1) c2 else c1, w1)
-    }
-    val secondPass = firstPass.map { case (name, (w1, c1)) =>
-      if (errors.contains(name)) name -> (w1, c1, w1)
-      else name -> retime(name, w1, c1)
-    }
-    val firstTotal = firstPass.collect { case (n, (w, _)) if !errors.contains(n) => w }.sum
-    val fullRerun = true
-    val secondTotal = secondPass.collect { case (n, (w, _, _)) if !errors.contains(n) => w }.sum
+    def retime(prev: Seq[(String, Timing)]): Seq[(String, Timing)] =
+      selected.zip(prev).map { case ((name, fn), (_, t)) =>
+        if (errors.contains(name)) name -> t
+        else {
+          val (w, c) = timedPass(name, fn)
+          name -> (if (w < t.sec) Timing(w, c, t.firstSec) else t)
+        }
+      }
+    def okTotal(pass: Seq[(String, Timing)]): Double =
+      pass.collect { case (n, t) if !errors.contains(n) => t.sec }.sum
+    val secondPass = retime(firstPass)
+    val firstTotal = okTotal(firstPass)
+    val secondTotal = okTotal(secondPass)
     val rerunGain = if (firstTotal > 0) (firstTotal - secondTotal) / firstTotal else 0.0
     // Mitigate, don't just flag (r19; two straight rounds of driver PERF
     // data were discarded because a loaded FIRST pass tripped the
@@ -208,81 +242,22 @@ object Bench {
     // pass and keep the per-query min of all passes. The verdict then
     // compares the two CLEANEST passes (second vs third): one noisy first
     // pass can no longer invalidate the whole run, while genuine sustained
-    // load still trips the flag on the rerun delta. Additions-only: the
-    // timed region, warm-up, min-of-N policy and JSON fields all keep
-    // their meaning; `passes` records which policy ran.
+    // load still trips the flag on the rerun delta. `passes` records which
+    // policy ran.
     val needThird = rerunGain > 0.2 && firstTotal - secondTotal > 10.0
-    val results =
-      if (!needThird) secondPass
-      else secondPass.map { case (name, (w2, c2, w1)) =>
-        if (errors.contains(name)) name -> (w2, c2, w1)
-        else {
-          val (w3, c3) = timed(name, SparkEntry.queries(name))
-          name -> (math.min(w2, w3), if (w3 < w2) c3 else c2, w1)
-        }
-      }
-    val passes = if (needThird) 3 else 2
-    val loadEnd = load1()
-    val keptTotal = results.collect { case (n, (w, _, _)) if !errors.contains(n) => w }.sum
+    val results = if (needThird) retime(secondPass) else secondPass
+    val keptTotal = okTotal(results)
     // stability of the two cleanest passes: pass2-vs-kept when a third ran,
     // first-vs-kept otherwise (identical to the r9-r18 definition then)
     val lastBase = if (needThird) secondTotal else firstTotal
     val lastGain = if (lastBase > 0) (lastBase - keptTotal) / lastBase else 0.0
-    // flagged when the box was loaded at start, or the two cleanest passes
-    // still disagree by far more than the ~10% a quiet box shows (absolute
-    // floor keeps sub-second noise at toy scale factors from tripping).
-    // The rule itself and the round-8-era rule's verdict are BOTH emitted,
-    // so artifact consumers can tell a policy change from an environment
-    // change (ADVICE r9).
-    val contaminationRule =
-      "load1_start>2.0 || (last_gain>0.2 && last_delta_sec>10) [3rd pass on rerun_gain>0.2]"
-    val contaminated = loadStart > 2.0 || (lastGain > 0.2 && lastBase - keptTotal > 10.0)
-    val contaminatedR8Rule = loadStart > 2.0 || (lastGain > 0.15 && lastBase - keptTotal > 5.0)
-
-    def esc(s: String): String =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString }
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // the driver keeps only the ~2000-char TAIL of this process's output
-    // (which also swallows sbt's epilogue), and every BENCH_r*.json through
-    // r9 has parsed:null because the full per-query map pushed the line
-    // past that window and truncated its HEAD. The stdout line therefore
-    // carries only the 20 slowest queries (prefix keys, 3-decimal seconds
-    // — ~700 chars all in, parseable with room to spare); the complete
-    // per-query detail lives in bench_full.json, named by "queries_full".
-    val topQ = results.toSeq.filterNot { case (k, _) => errors.contains(k) }
-      .sortBy { case (_, (w, _, _)) => -w }.take(20)
-    val qs = topQ.map { case (k, (w, _, _)) => s""""${k.takeWhile(_ != '_')}":${f3(w)}""" }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
-    val total = results.map(_._2._1).sum
-    val r1Subset = results.collect { case (k, (v, _, _)) if r1Names(k) => v }.sum
-    val r2Subset = results.collect { case (k, (v, _, _)) if !newer(0)(k) => v }.sum
-    val r3Subset = results.collect { case (k, (v, _, _)) if !newer(1)(k) => v }.sum
-    val r4Subset = results.collect { case (k, (v, _, _)) if !newer(2)(k) => v }.sum
-    val r5Subset = results.collect { case (k, (v, _, _)) if !newer(3)(k) => v }.sum
-    val r6Subset = results.collect { case (k, (v, _, _)) if !newer(4)(k) => v }.sum
-    // the r8-era 134-query total: the round-9 streaming gates each pay
-    // multi-trigger micro-batch fixed costs, so THIS is the number to
-    // compare against BENCH_r08's 81.5s, not the new grand total
-    val r8Subset = results.collect { case (k, (v, _, _)) if !newer(5)(k) => v }.sum
-    // the round-9 143-query surface: compare THIS against bench_full @
-    // 4f4c70d's 130.4s total (clean r9 run) — the grand total now includes
-    // the r10 gates
-    val r9Subset = results.collect { case (k, (v, _, _)) if !newer(6)(k) => v }.sum
-    val subsets = s""""r1_subset_sec":${f3(r1Subset)},"r2_subset_sec":${f3(r2Subset)},"r3_subset_sec":${f3(r3Subset)},"r4_subset_sec":${f3(r4Subset)},"r5_subset_sec":${f3(r5Subset)},"r6_subset_sec":${f3(r6Subset)},"r8_subset_sec":${f3(r8Subset)},"r9_subset_sec":${f3(r9Subset)}"""
-    val loadJson = s""""load1_initial":${f3(loadInitial)},"load1_start":${f3(loadStart)},"load1_end":${f3(loadEnd)},"rerun_gain":${f3(rerunGain)},"last_gain":${f3(lastGain)},"passes":$passes,"full_rerun":$fullRerun,"contaminated":$contaminated,"contamination_rule":"${esc(contaminationRule)}","contaminated_r8_rule":$contaminatedR8Rule"""
-    try {
-      // full per-query detail: kept wall, process-CPU seconds (wall >> cpu/32
-      // on an idle box; wall inflated with cpu flat = external load), and
-      // the first-pass wall for the re-timed slowest queries
-      val full = results.map { case (k, (w, c, w1)) =>
-        s""""$k":{"sec":${f3(w)},"cpu_sec":${f3(c)},"first_sec":${f3(w1)}}"""
-      }.mkString("{", ",", "}")
-      val fw = new java.io.FileWriter("bench_full.json")
-      fw.write(s"""{"metric":"total","value":${f3(total)},"unit":"sec",$subsets,$loadJson,"queries":$full,"errors":$errJson,"sf":"$sfDir"}""")
-      fw.write("\n")
-      fw.close()
-    } catch { case _: java.io.IOException => () } // best-effort side artifact
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},$subsets,$loadJson,"queries":$qs,"queries_shown":${topQ.size},"queries_full":"bench_full.json","errors":$errJson,"sf":"$sfDir"}""")
+    val (line, full) = report(results, errors.toSeq,
+      Conditions(loadInitial, loadStart, load1(), rerunGain, lastGain, lastBase - keptTotal,
+        if (needThird) 3 else 2),
+      sfDir)
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_full.json"), full + "\n")
+    catch { case _: java.io.IOException => () } // best-effort side artifact
+    println(line)
     spark.stop()
   }
 }

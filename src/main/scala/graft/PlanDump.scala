@@ -10,24 +10,18 @@ package graft
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val pats = (if (args.length > 2) args(2) else args(1))
-      .split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val selected = Measure.select(Some(if (args.length > 2) args(2) else args(1)))
     val spark = Sessions.local()
-    SparkEntry.queries
-      .filter { case (n, _) => pats.exists(n.contains) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          println(s"=== BEGIN $name ===")
-          println(plan)
-          println(s"=== END $name ===")
-        } catch {
-          case e: Throwable => println(s"=== FAILED $name: $e ===")
-        }
-        spark.catalog.clearCache()
-      }
+    selected.foreach { case (name, fn) =>
+      Measure.attempt(spark) {
+        val plan = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        println(s"=== BEGIN $name ===")
+        println(plan)
+        println(s"=== END $name ===")
+        None
+      }.foreach(err => println(s"=== FAILED $name: $err ==="))
+    }
     spark.stop()
   }
 }

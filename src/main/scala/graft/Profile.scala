@@ -21,8 +21,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val pats = (if (args.length > 2) args(2) else args(1))
-      .split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val selected = Measure.select(Some(if (args.length > 2) args(2) else args(1)))
     val spark = Sessions.local()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     val order = java.util.Collections.synchronizedList(new java.util.ArrayList[Int]())
@@ -45,12 +44,7 @@ object Profile {
     def codegenN(): Long =
       org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME.getCount
-    val selected = SparkEntry.queries.filter { case (n, _) => pats.exists(n.contains) }
-    selected.foreach { case (name, fn) =>  // untimed warm-up, like Bench
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => println(s"[profile] warmup $name failed: $e") }
-      spark.catalog.clearCache()
-    }
+    Measure.warmUp(spark, sfDir, selected)
     selected.foreach { case (name, fn) =>
       jobs.clear(); order.clear()
       val cg0 = codegenN()
@@ -96,13 +90,11 @@ object Profile {
         }
       })
       sampler.setDaemon(true); sampler.start()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => println(s"[profile] $name failed: $e") }
-      val wall = (System.nanoTime() - t0) / 1e9
+      val t = Measure.timed(Measure.materialize(spark, sfDir, fn))
+      val wall = t.wallSec
       sampling = false
       val cgn = codegenN() - cg0
-      spark.catalog.clearCache()
+      t.value.foreach(err => println(s"[profile] $name failed: $err"))
       import scala.jdk.CollectionConverters._
       val rows = order.asScala.toSeq.flatMap(id => Option(jobs.get(id)))
       val jobSum = rows.collect { case r if r.finished > 0 => (r.finished - r.submitted) / 1e3 }.sum

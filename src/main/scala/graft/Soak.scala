@@ -108,6 +108,11 @@ object Soak {
     val sf01 = sys.env.getOrElse("SPARK_GRAFT_SF01_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
     val artifact = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "SOAK_r10.json")
+    // comma-separated name-substring subset for isolated reproduction
+    // (e.g. SPARK_GRAFT_SOAK_SUBSET=q97,q98) — full list when unset
+    val subset = sys.env.get("SPARK_GRAFT_SOAK_SUBSET")
+    val queries = SparkEntry.queries
+    val selected = Measure.select(subset, soakQueries.map(n => n -> queries(n)))
     val spark = Sessions.local()
     // tight-memory envelope knob (what a memory-constrained deployment
     // sets): AQE shuffles start 4× finer than the parallelism and
@@ -128,61 +133,39 @@ object Soak {
     buildSf1(spark, sf01, out)
     val buildSec = (System.nanoTime() - t0) / 1e9
 
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Boolean, String)]
-    // comma-separated name-substring subset for isolated reproduction
-    // (e.g. SPARK_GRAFT_SOAK_SUBSET=q97,q98) — full list when unset
-    val subset = sys.env.get("SPARK_GRAFT_SOAK_SUBSET")
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-    val selected = subset match {
-      case Some(pats) => soakQueries.filter(n => pats.exists(n.contains))
-      case None => soakQueries
+    val results = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Option[String])]
+    // times `body` and records its problem, if any (a throw is one)
+    def record(name: String)(body: => Option[String]): Unit = {
+      val t = Measure.timed(Measure.attempt(spark)(body))
+      results += name -> (t.wallSec, t.value)
+      println(f"[soak] $name%-28s ${t.wallSec}%8.2fs plan_ok=${t.value.isEmpty} ${t.value.getOrElse("")}")
     }
-    selected.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val q0 = System.nanoTime()
-      val outcome =
-        try {
-          val df = fn(spark, out)
-          // execute THIS QueryExecution (a separate write/count would plan
-          // its own) so the adaptive plan we inspect is the runtime-final
-          // one — AQE's re-plan under the sf1 stats is exactly what's
-          // being pinned here
-          val qe = df.queryExecution
-          qe.toRdd.foreach(_ => ())
-          val plan = qe.executedPlan.toString
-          val ok = !plan.contains("CartesianProduct") &&
-            !plan.contains("BroadcastNestedLoopJoin") &&
-            (!plan.contains("AdaptiveSparkPlan") || plan.contains("isFinalPlan=true"))
-          spark.catalog.clearCache()
-          (ok, if (ok) "" else "plan flipped to product/BNL or did not finalize")
-        } catch {
-          case e: Throwable =>
-            (false, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}")
-        }
-      val sec = (System.nanoTime() - q0) / 1e9
-      results += name -> (sec, outcome._1, outcome._2)
-      println(f"[soak] $name%-28s ${sec}%8.2fs plan_ok=${outcome._1} ${outcome._2}")
+    selected.foreach { case (name, fn) =>
+      record(name) {
+        // execute THIS QueryExecution (a separate write/count would plan
+        // its own) so the adaptive plan we inspect is the runtime-final
+        // one — AQE's re-plan under the sf1 stats is exactly what's
+        // being pinned here
+        val qe = fn(spark, out).queryExecution
+        qe.toRdd.foreach(_ => ())
+        val plan = qe.executedPlan.toString
+        val ok = !plan.contains("CartesianProduct") &&
+          !plan.contains("BroadcastNestedLoopJoin") &&
+          (!plan.contains("AdaptiveSparkPlan") || plan.contains("isFinalPlan=true"))
+        if (ok) None else Some("plan flipped to product/BNL or did not finalize")
+      }
     }
 
     // -------- non-query soak scenarios (r14): multi-writer rebase under
     // real thread races, and clustered-compact + checksum-audit churn —
     // the writer-side invariants a maintenance daemon leans on at scale,
     // exercised against sf1 row volumes under the same heap cap.
-    def scenario(name: String)(run: () => Unit): Unit = {
-      val q0 = System.nanoTime()
-      val outcome =
-        try { run(); (true, "") }
-        catch { case e: Throwable =>
-          (false, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}") }
-      val sec = (System.nanoTime() - q0) / 1e9
-      results += name -> (sec, outcome._1, outcome._2)
-      println(f"[soak] $name%-28s ${sec}%8.2fs plan_ok=${outcome._1} ${outcome._2}")
-    }
+    def scenario(name: String)(run: => Unit): Unit = record(name) { run; None }
 
     if (subset.isDefined) {
       // isolated-reproduction mode: queries only
     } else {
-    scenario("soak_concurrent_writers") { () =>
+    scenario("soak_concurrent_writers") {
       import graft.destinations.DeltaWrite
       import graft.sources.DeltaLog
       val orders = spark.read.parquet(s"$out/orders.parquet")
@@ -210,7 +193,7 @@ object Soak {
       require(DeltaLog.verifyChecksum(spark, tbl, None), "checksum chain broke")
     }
 
-    scenario("soak_cluster_churn") { () =>
+    scenario("soak_cluster_churn") {
       import graft.destinations.DeltaWrite
       import graft.sources.DeltaLog
       val orders = spark.read.parquet(s"$out/orders.parquet")
@@ -232,19 +215,17 @@ object Soak {
     }
     }
 
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def esc(s: String): String =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString }
-    val qs = results.map { case (k, (sec, ok, err)) =>
-      s""""$k":{"sec":${f3(sec)},"plan_ok":$ok${if (err.nonEmpty) s""","err":"${esc(err)}"""" else ""}}"""
+    import Measure.{f3, jsonString => js}
+    val qs = results.map { case (k, (sec, err)) =>
+      s"""${js(k)}:{"sec":${f3(sec)},"plan_ok":${err.isEmpty}${err.fold("")(e => s""","err":${js(e)}""")}}"""
     }.mkString("{", ",", "}")
-    val allOk = results.values.forall(_._2)
+    val allOk = results.values.forall(_._2.isEmpty)
     // heap cap recorded so the artifact proves WHICH memory envelope the
     // run survived (round 10 runs the soak at a deliberately small heap to
     // back the "driver memory bounded" claims under pressure — in local
     // mode one -Xmx caps driver AND all 32 executor threads at once)
     val heapGb = Runtime.getRuntime.maxMemory / (1024.0 * 1024 * 1024)
-    val json = s"""{"sf":"1 (10x replicated ${sf01})","build_sec":${f3(buildSec)},"heap_gb":${f3(heapGb)},"driver_mem":"${esc(sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))}","cpus":${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")},"all_plans_ok":$allOk,"queries":$qs}"""
+    val json = s"""{"sf":${js(s"1 (10x replicated $sf01)")},"build_sec":${f3(buildSec)},"heap_gb":${f3(heapGb)},"driver_mem":${js(sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))},"cpus":${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")},"all_plans_ok":$allOk,"queries":$qs}"""
     val fw = new java.io.FileWriter(artifact)
     fw.write(json + "\n")
     fw.close()

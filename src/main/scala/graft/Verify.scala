@@ -1,22 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import Measure.{jsonString => jstr}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Dump each query's result to `outDir/<name>` parquet. Failures must be
     * LOUD: a thrown query writes an `_ERROR.json` marker in its output slot
     * (pyarrow/Spark ignore `_`-prefixed files, so a later successful
@@ -27,7 +15,7 @@ object Verify {
     */
   def dump(
       spark: SparkSession,
-      queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+      queries: Iterable[(String, Measure.Query)],
       sfDir: String,
       outDir: String): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
@@ -51,13 +39,9 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg (local iteration only; the driver passes two):
     // comma-separated query-name substrings to run a subset
-    val only: Option[Seq[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSeq) else None
+    val selected = Measure.select(args.lift(2))
     val spark = Sessions.local()
-    val errors = dump(
-      spark,
-      SparkEntry.queries.filter { case (name, _) => only.forall(_.exists(name.contains)) },
-      sfDir, outDir)
+    val errors = dump(spark, selected, sfDir, outDir)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -32,7 +32,7 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
   def submit(pipeline: Aqueduct, tracker: ProgressTracker = new LoggingTracker): Handle = {
     if (shutdown) throw new IllegalStateException("PipelineService is closed")
     val id = s"graft-${java.util.UUID.randomUUID()}"
-    val sub = Submission(id, pipeline, new PercentTracker(tracker, pipeline), Promise())
+    val sub = Submission(id, pipeline, tracker, Promise())
     if (!queue.offerLast(sub))
       throw new IllegalStateException(s"Pipeline queue full (max $maxQueue)")
     new Handle(id, sub.promise.future)

@@ -59,7 +59,7 @@ object Runner {
     graft.functions.JsonUdfs.registerOnce(spark)
     // ... and the SpaceSaving heavy-hitters aggregate
     graft.functions.HeavyHitters.registerOnce(spark)
-    validate(spark, pipeline)
+    val stageSql = validate(spark, pipeline)
     tracker.onProgress(ProgressEvent.Started)
 
     // Per-run executor, not a shared pool: Spark job-group / local properties
@@ -134,9 +134,7 @@ object Runner {
           tracker.onProgress(ProgressEvent.StageStarted(stage.name, gi))
           val s0 = System.nanoTime()
           try {
-            val sql = SqlRewrite.jsonOperators(stage.query)
-            SqlGuard.validate(spark, stage.name, sql)
-            val df = spark.sql(sql)
+            val df = spark.sql(stageSql(stage.name))
             val consumers = consumerCount(pipeline, stage, lastStage)
             if (consumers >= 2 || stage.explainAnalyze) {
               df.persist()
@@ -147,7 +145,6 @@ object Runner {
             df.createOrReplaceTempView(stage.name)
             results.put(stage.name, df)
           } catch {
-            case e: SqlGuard.SqlValidationError => throw e
             case e: Exception =>
               throw PipelineError(s"stage '${stage.name}' failed: ${e.getMessage}")
           }
@@ -194,8 +191,10 @@ object Runner {
 
   /** Load-time checks (reference templating.rs:286-330): every stage query
     * must parse as a pure SELECT; names must be unique.
+    * @return each stage's SQL with the JSON operators rewritten, by stage
+    *   name: the text that passed the check, for the run to execute
     */
-  def validate(spark: SparkSession, pipeline: Aqueduct): Unit = {
+  def validate(spark: SparkSession, pipeline: Aqueduct): Map[String, String] = {
     // an in_memory destination registers a view under ITS name at the end of
     // the run — a collision with a source/stage must fail at load time, not
     // after the whole pipeline has executed
@@ -204,10 +203,13 @@ object Runner {
       destViewName
     val dup = names.diff(names.distinct).distinct
     if (dup.nonEmpty) throw PipelineError(s"Duplicate source/stage names: ${dup.mkString(", ")}")
-    pipeline.stages.flatten.foreach(s =>
-      SqlGuard.validate(spark, s.name, SqlRewrite.jsonOperators(s.query)))
     if (pipeline.stages.flatten.isEmpty && pipeline.destination.nonEmpty)
       throw PipelineError("A destination requires at least one stage")
+    pipeline.stages.flatten.map { s =>
+      val sql = SqlRewrite.jsonOperators(s.query)
+      SqlGuard.validate(spark, s.name, sql)
+      s.name -> sql
+    }.toMap
   }
 
   // -------------------------------------------------------------- liveness

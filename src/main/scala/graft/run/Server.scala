@@ -286,7 +286,7 @@ final class Server(
       catch { case e: Exception => send(Protocol.ExecutionError(requestId, e.getMessage)); return }
 
     val handle =
-      try service.submit(pipeline, new WireTracker(requestId, pipeline, send))
+      try service.submit(pipeline, wireTracker(requestId, pipeline, send))
       catch { case e: IllegalStateException => send(Protocol.ExecutionError(requestId, e.getMessage)); return }
     handles.put(requestId, handle)
 
@@ -318,32 +318,23 @@ final class Server(
     }
   }
 
-  /** Tracker → wire messages. Mirrors the executor's percent accounting
-    * (total = sources + 2·stages + destination) so `progress_update.progress`
-    * is the same 0-100 scale the reference reports.
+  /** Tracker → wire messages. `progress_update.progress` is the
+    * [[PercentTracker]] step count, the same 0-100 scale the reference
+    * executor reports; `Completed` always sends 100.
     */
-  private final class WireTracker(
-      requestId: String, pipeline: graft.config.Aqueduct, send: AnyRef => Unit)
-    extends ProgressTracker {
-    private val total = math.max(1,
-      pipeline.sources.size + 2 * pipeline.stages.map(_.size).sum + pipeline.destination.size)
-    private val done = new java.util.concurrent.atomic.AtomicInteger(0)
-
-    override def onProgress(event: ProgressEvent): Unit = {
-      event match {
-        case _: ProgressEvent.SourceRegistered | _: ProgressEvent.StageStarted |
-             _: ProgressEvent.StageCompleted | _: ProgressEvent.DestinationCompleted =>
-          done.incrementAndGet()
-        case _ => ()
+  private def wireTracker(
+      requestId: String, pipeline: graft.config.Aqueduct, send: AnyRef => Unit): ProgressTracker = {
+    lazy val steps: PercentTracker = new PercentTracker(new ProgressTracker {
+      override def onProgress(event: ProgressEvent): Unit = {
+        val pct = event match {
+          case _: ProgressEvent.Completed => 100
+          case _ => steps.percent
+        }
+        send(Protocol.ProgressUpdate(requestId, pct, event.toString))
       }
-      val pct = event match {
-        case _: ProgressEvent.Completed => 100
-        case _ => math.min(100, done.get() * 100 / total)
-      }
-      send(Protocol.ProgressUpdate(requestId, pct, event.toString))
-    }
-
-    override def onOutput(stageName: String, outputType: OutputType, body: String): Unit =
-      Protocol.chunked(requestId, stageName, outputType.toString, body).foreach(send)
+      override def onOutput(stageName: String, outputType: OutputType, body: String): Unit =
+        Protocol.chunked(requestId, stageName, outputType.toString, body).foreach(send)
+    }, pipeline)
+    steps
   }
 }

@@ -80,6 +80,29 @@ class ServerSpec extends SparkSpec {
     } finally server.close()
   }
 
+  test("progress_update sequence: one step each of sources + 2·stages + destination, Completed at 100") {
+    val server = new Server(spark)
+    try {
+      val csv = writeFixtureCsv(tmpDir("srv-pct"))
+      val (sock, in, out) = connect(server.boundPort)
+      try {
+        val yaml = yamlOf(csv, "srvpct", "SELECT count(*) AS n FROM srvpct_src") +
+          """destination:
+            |  type: in_memory
+            |  name: srvpct_out
+            |""".stripMargin
+        sendLine(out, Protocol.write(Protocol.ExecutionRequest("req-pct", yaml)))
+        val msgs = drain(in, "req-pct")
+        assert(msgs.last == Protocol.ExecutionSucceeded("req-pct"), msgs.mkString("\n"))
+        val progress = msgs.collect { case Protocol.ProgressUpdate("req-pct", pct, ev) =>
+          (pct, ev.takeWhile(_ != '(')) }
+        // 1 source + 2·1 stage + 1 destination = 4 steps of 25
+        assert(progress == Seq(0 -> "Started", 25 -> "SourceRegistered", 50 -> "StageStarted",
+          75 -> "StageCompleted", 100 -> "DestinationCompleted", 100 -> "Completed"), progress)
+      } finally sock.close()
+    } finally server.close()
+  }
+
   test("queued request reports its position and can be cancelled over the wire") {
     spark.udf.register("graft_srv_sleep", (x: Long) => { Thread.sleep(8); x })
     val server = new Server(spark)
