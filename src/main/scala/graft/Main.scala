@@ -42,7 +42,6 @@ object Main {
         println(config.SchemaGen.schemaJson)
       case Right(cli) if cli.mode == "serve" =>
         val spark = Sessions.local()
-        functions.JsonUdfs.register(spark) // reference-named UDFs available in stage SQL
         val server = new Server(spark, cli.port, cli.apiKey)
         System.err.println(s"[graft] executor listening on port ${server.boundPort}" +
           cli.apiKey.map(_ => " (API key required)").getOrElse(""))
@@ -52,7 +51,6 @@ object Main {
       case Right(cli) =>
         val spark = Sessions.local()
         try {
-          functions.JsonUdfs.register(spark)
           val path = java.nio.file.Paths.get(cli.file)
           if (cli.validateOnly) {
             // parse config + templating + stage-SQL validation, no execution

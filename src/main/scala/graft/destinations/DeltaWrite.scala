@@ -4491,11 +4491,6 @@ object DeltaWrite {
     snap.version
   }
 
-  /** Atomic create-exclusive publication of a commit file: hard-link
-    * creation on local filesystems (true O_EXCL), exists+rename with full byte
-    * read-back elsewhere so a lost race on object stores is a detected
-    * IllegalStateException, never a silently dropped commit.
-    */
   /** Test seam: deterministic race injection. When set, runs ONCE (self-
     * clearing, so the injected winner's own commits don't recurse) right
     * before the atomic claim — the injected action commits the contended
@@ -4503,6 +4498,11 @@ object DeltaWrite {
     */
   private[destinations] var racePublishHook: Option[(Path, Long) => Unit] = None
 
+  /** Create-exclusive publication of a commit file through
+    * [[LocalIo.publishExclusive]]: a lost race is a
+    * [[Concurrency.ConcurrentCommitException]], never a silently dropped
+    * commit.
+    */
   private def publishCommit(
       spark: SparkSession, table: Path, version: Long, content: String): Unit = {
     racePublishHook.foreach { h =>
@@ -4511,30 +4511,7 @@ object DeltaWrite {
     }
     val f = fs(spark, table)
     f.mkdirs(logDir(table))
-    val target = commitPath(table, version)
-    val bytes = content.getBytes("UTF-8")
-    val tmp = new Path(logDir(table), s".tmp-${java.util.UUID.randomUUID()}")
-    val out = LocalIo.create(f, tmp, false)
-    try out.write(bytes) finally out.close()
-    val won =
-      if (f.getUri.getScheme == "file") {
-        val tmpNio = java.nio.file.Paths.get(tmp.toUri.getPath)
-        val targetNio = java.nio.file.Paths.get(target.toUri.getPath)
-        try { java.nio.file.Files.createLink(targetNio, tmpNio); true }
-        catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      } else {
-        val renamed = !f.exists(target) && f.rename(tmp, target)
-        renamed && {
-          val observed =
-            try {
-              val in = f.open(target)
-              try java.util.Arrays.equals(in.readAllBytes(), bytes)
-              finally in.close()
-            } catch { case _: Exception => false }
-          observed
-        }
-      }
-    f.delete(tmp, false)
+    val won = LocalIo.publishExclusive(f, commitPath(table, version), content.getBytes("UTF-8"))
     if (!won)
       throw new Concurrency.ConcurrentCommitException(
         s"Concurrent Delta commit detected for version $version at $table")

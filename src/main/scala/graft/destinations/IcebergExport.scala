@@ -249,6 +249,47 @@ object IcebergExport {
       |  ]}}]}
       |]}""".stripMargin)
 
+  /** Write snapshot `snapshotId`'s manifest list under `metaDir`; `fill`
+    * appends its records. Returns the list's path. */
+  private[destinations] def writeManifestList(
+      fs: org.apache.hadoop.fs.FileSystem, metaDir: Path, formatVersion: Int,
+      snapshotId: Long, sequence: Long)(
+      fill: DataFileWriter[GenericRecord] => Unit): Path = {
+    val listPath = new Path(metaDir,
+      s"snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro")
+    val lw = new DataFileWriter[GenericRecord](
+      new GenericDatumWriter[GenericRecord](manifestFileSchema))
+    lw.setMeta("format-version", formatVersion.toString)
+    lw.setMeta("snapshot-id", snapshotId.toString)
+    lw.setMeta("sequence-number", sequence.toString)
+    lw.create(manifestFileSchema, LocalIo.create(fs, listPath, true))
+    try fill(lw) finally lw.close()
+    listPath
+  }
+
+  /** The manifest-list record of a manifest that snapshot `snapshotId`
+    * adds at `sequence`: `files` ADDED entries holding `rows` rows
+    * (`content` 0 data, 1 deletes). */
+  private[destinations] def addedManifest(
+      path: Path, length: Long, specId: Int, content: Int, sequence: Long,
+      snapshotId: Long, files: Int, rows: Long): GenericData.Record = {
+    val m = new GenericData.Record(manifestFileSchema)
+    m.put("manifest_path", path.toString)
+    m.put("manifest_length", length)
+    m.put("partition_spec_id", specId)
+    m.put("content", content)
+    m.put("sequence_number", sequence)
+    m.put("min_sequence_number", sequence)
+    m.put("added_snapshot_id", snapshotId)
+    m.put("added_files_count", files)
+    m.put("existing_files_count", 0)
+    m.put("deleted_files_count", 0)
+    m.put("added_rows_count", rows)
+    m.put("existing_rows_count", 0L)
+    m.put("deleted_rows_count", 0L)
+    m
+  }
+
   /** The manifest-list `partitions` field-summary array (spec-field
     * order): (contains_null, lower, upper) with single-value-serialized
     * bounds — None bounds mean "no information" (readers must keep). */
@@ -465,103 +506,49 @@ object IcebergExport {
       f.put("field-id", fid)
     }
 
-    // ---- one manifest listing every live file as ADDED under this snapshot
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getLeastSignificantBits)
-    val prior = readCurrentMetadata(fs, metaDir)
-    val version = prior.map(_._1).getOrElse(0) + 1
-    val sequence = version.toLong
-    val nowMs = System.currentTimeMillis()
+    // the prior state is resolved once and the new version published
+    // exclusively: an export that overlaps another one loses with
+    // ConcurrentCommitException (IcebergWrite.commit)
+    IcebergWrite.commit(fs, metaDir) { (current, prior) =>
+      // ---- one manifest listing every live file as ADDED under this snapshot
+      val snapshotId = math.abs(java.util.UUID.randomUUID().getLeastSignificantBits)
+      val version = current + 1
+      val sequence = version.toLong
+      val nowMs = System.currentTimeMillis()
 
-    val partAvro = specFields.map { case (c, dt, fid) =>
-      val (t, conv) = partitionAvro(dt)
-      (c, t, fid, conv)
-    }
-    val entrySchema = manifestEntrySchema(partAvro.map(p => (p._1, p._2, p._3)))
-    val dataFileSchema = entrySchema.getField("data_file").schema()
-    val partSchema = dataFileSchema.getField("partition").schema()
-
-    var rows = 0L
-    val manifestName = s"${java.util.UUID.randomUUID()}-m0.avro"
-    val manifestPath = new Path(metaDir, manifestName)
-    val mw = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](entrySchema))
-    mw.setMeta("format-version", "2")
-    mw.setMeta("content", "data")
-    mw.setMeta("schema", schemaNode.toString)
-    mw.setMeta("partition-spec", specNode.get("fields").toString)
-    mw.setMeta("partition-spec-id", "0")
-    mw.create(entrySchema, LocalIo.create(fs, manifestPath, true))
-    try {
-      snap.files.sortBy(_.path).foreach { a =>
-        val rc = a.stats.flatMap(s =>
-          Option(mapper.readTree(s).get("numRecords")).map(_.asLong()))
-          .getOrElse {
-            // stats-less add (foreign writers often omit stats): one
-            // driver-side footer read — bounded by the stats-less count,
-            // and exact (the footer's record count is authoritative)
-            val f = new Path(qualifiedTable, DeltaLog.decodePath(a.path))
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                f, spark.sessionState.newHadoopConf()))
-            try r.getRecordCount finally r.close()
-          }
-        rows += rc
-        val part = new GenericData.Record(partSchema)
-        partAvro.foreach { case (c, _, _, conv) =>
-          val raw = a.partitionValues.get(snap.physicalName(c))
-            .orElse(a.partitionValues.get(c)).filter(_ != null)
-          part.put(c, raw.map(conv).orNull)
-        }
-        val df = new GenericData.Record(dataFileSchema)
-        df.put("content", 0)
-        df.put("file_path",
-          new Path(qualifiedTable, DeltaLog.decodePath(a.path)).toString)
-        df.put("file_format", "PARQUET")
-        df.put("partition", part)
-        df.put("record_count", rc)
-        df.put("file_size_in_bytes", a.size)
-        a.stats.foreach { sj =>
-          val (lo, hi, nc) = statsBounds(sj, snap, fieldIdOf)
-          putBounds(df, dataFileSchema, lo, hi, nc)
-        }
-        val e = new GenericData.Record(entrySchema)
-        e.put("status", 1) // ADDED under this snapshot
-        e.put("snapshot_id", snapshotId)
-        e.put("sequence_number", sequence)
-        e.put("file_sequence_number", sequence)
-        e.put("data_file", df)
-        mw.append(e)
+      val partAvro = specFields.map { case (c, dt, fid) =>
+        val (t, conv) = partitionAvro(dt)
+        (c, t, fid, conv)
       }
-    } finally mw.close()
-    val manifestLen = fs.getFileStatus(manifestPath).getLen
+      val entrySchema = manifestEntrySchema(partAvro.map(p => (p._1, p._2, p._3)))
+      val dataFileSchema = entrySchema.getField("data_file").schema()
+      val partSchema = dataFileSchema.getField("partition").schema()
 
-    // ---- deletion vectors → Iceberg v2 position-delete files (spec
-    // §delete-files): each DV's masked rows become (file_path, pos) rows in
-    // a delete parquet scoped to the data file's partition — METADATA-ONLY
-    // DV export, no data rewrite at any table size (the rewrite UniForm
-    // exists to avoid). Driver memory is bounded per file by one DV's
-    // cardinality (the same bitmap any reader of that file decodes).
-    val dvFiles = snap.files.filter(_.deletionVector.isDefined).sortBy(_.path)
-    var deleteRows = 0L
-    val deleteManifestInfo: Option[(Path, Long)] = if (dvFiles.isEmpty) None else {
-      val dmName = s"${java.util.UUID.randomUUID()}-m1.avro"
-      val dmPath = new Path(metaDir, dmName)
-      val dw = new DataFileWriter[GenericRecord](
-        new GenericDatumWriter[GenericRecord](entrySchema))
-      dw.setMeta("format-version", "2")
-      dw.setMeta("content", "deletes")
-      dw.setMeta("schema", schemaNode.toString)
-      dw.setMeta("partition-spec", specNode.get("fields").toString)
-      dw.setMeta("partition-spec-id", "0")
-      dw.create(entrySchema, LocalIo.create(fs, dmPath, true))
+      var rows = 0L
+      val manifestName = s"${java.util.UUID.randomUUID()}-m0.avro"
+      val manifestPath = new Path(metaDir, manifestName)
+      val mw = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](entrySchema))
+      mw.setMeta("format-version", "2")
+      mw.setMeta("content", "data")
+      mw.setMeta("schema", schemaNode.toString)
+      mw.setMeta("partition-spec", specNode.get("fields").toString)
+      mw.setMeta("partition-spec-id", "0")
+      mw.create(entrySchema, LocalIo.create(fs, manifestPath, true))
       try {
-        dvFiles.foreach { a =>
-          val d = graft.sources.DeletionVectors.parse(a.deletionVector.get)
-          val positions = graft.sources.DeletionVectors
-            .readBitmap(spark, tablePath, d).toLongArray.sorted
-          val dataPath = new Path(qualifiedTable, DeltaLog.decodePath(a.path)).toString
-          val (delPath, delLen) =
-            writePositionDelete(spark, fs, metaDir, dataPath, positions)
-          deleteRows += positions.length
+        snap.files.sortBy(_.path).foreach { a =>
+          val rc = a.stats.flatMap(s =>
+            Option(mapper.readTree(s).get("numRecords")).map(_.asLong()))
+            .getOrElse {
+              // stats-less add (foreign writers often omit stats): one
+              // driver-side footer read — bounded by the stats-less count,
+              // and exact (the footer's record count is authoritative)
+              val f = new Path(qualifiedTable, DeltaLog.decodePath(a.path))
+              val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+                org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                  f, spark.sessionState.newHadoopConf()))
+              try r.getRecordCount finally r.close()
+            }
+          rows += rc
           val part = new GenericData.Record(partSchema)
           partAvro.foreach { case (c, _, _, conv) =>
             val raw = a.partitionValues.get(snap.physicalName(c))
@@ -569,133 +556,152 @@ object IcebergExport {
             part.put(c, raw.map(conv).orNull)
           }
           val df = new GenericData.Record(dataFileSchema)
-          df.put("content", 1) // POSITION_DELETES
-          df.put("file_path", delPath.toString)
+          df.put("content", 0)
+          df.put("file_path",
+            new Path(qualifiedTable, DeltaLog.decodePath(a.path)).toString)
           df.put("file_format", "PARQUET")
           df.put("partition", part)
-          df.put("record_count", positions.length.toLong)
-          df.put("file_size_in_bytes", delLen)
+          df.put("record_count", rc)
+          df.put("file_size_in_bytes", a.size)
+          a.stats.foreach { sj =>
+            val (lo, hi, nc) = statsBounds(sj, snap, fieldIdOf)
+            putBounds(df, dataFileSchema, lo, hi, nc)
+          }
           val e = new GenericData.Record(entrySchema)
-          e.put("status", 1)
+          e.put("status", 1) // ADDED under this snapshot
           e.put("snapshot_id", snapshotId)
           e.put("sequence_number", sequence)
           e.put("file_sequence_number", sequence)
           e.put("data_file", df)
-          dw.append(e)
+          mw.append(e)
         }
-      } finally dw.close()
-      Some((dmPath, fs.getFileStatus(dmPath).getLen))
-    }
+      } finally mw.close()
+      val manifestLen = fs.getFileStatus(manifestPath).getLen
 
-    // ---- manifest list
-    val listName = s"snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro"
-    val listPath = new Path(metaDir, listName)
-    val lw = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](manifestFileSchema))
-    lw.setMeta("format-version", "2")
-    lw.setMeta("snapshot-id", snapshotId.toString)
-    lw.setMeta("sequence-number", sequence.toString)
-    lw.create(manifestFileSchema, LocalIo.create(fs, listPath, true))
-    try {
-      val m = new GenericData.Record(manifestFileSchema)
-      m.put("manifest_path", manifestPath.toString)
-      m.put("manifest_length", manifestLen)
-      m.put("partition_spec_id", 0)
-      m.put("content", 0)
-      m.put("sequence_number", sequence)
-      m.put("min_sequence_number", sequence)
-      m.put("added_snapshot_id", snapshotId)
-      m.put("added_files_count", snap.files.size)
-      m.put("existing_files_count", 0)
-      m.put("deleted_files_count", 0)
-      m.put("added_rows_count", rows)
-      m.put("existing_rows_count", 0L)
-      m.put("deleted_rows_count", 0L)
-      lw.append(m)
-      deleteManifestInfo.foreach { case (dmPath, dmLen) =>
-        val dm = new GenericData.Record(manifestFileSchema)
-        dm.put("manifest_path", dmPath.toString)
-        dm.put("manifest_length", dmLen)
-        dm.put("partition_spec_id", 0)
-        dm.put("content", 1) // DELETES manifest
-        dm.put("sequence_number", sequence)
-        dm.put("min_sequence_number", sequence)
-        dm.put("added_snapshot_id", snapshotId)
-        dm.put("added_files_count", dvFiles.size)
-        dm.put("existing_files_count", 0)
-        dm.put("deleted_files_count", 0)
-        dm.put("added_rows_count", deleteRows)
-        dm.put("existing_rows_count", 0L)
-        dm.put("deleted_rows_count", 0L)
-        lw.append(dm)
+      // ---- deletion vectors → Iceberg v2 position-delete files (spec
+      // §delete-files): each DV's masked rows become (file_path, pos) rows in
+      // a delete parquet scoped to the data file's partition — METADATA-ONLY
+      // DV export, no data rewrite at any table size (the rewrite UniForm
+      // exists to avoid). Driver memory is bounded per file by one DV's
+      // cardinality (the same bitmap any reader of that file decodes).
+      val dvFiles = snap.files.filter(_.deletionVector.isDefined).sortBy(_.path)
+      var deleteRows = 0L
+      val deleteManifestInfo: Option[(Path, Long)] = if (dvFiles.isEmpty) None else {
+        val dmName = s"${java.util.UUID.randomUUID()}-m1.avro"
+        val dmPath = new Path(metaDir, dmName)
+        val dw = new DataFileWriter[GenericRecord](
+          new GenericDatumWriter[GenericRecord](entrySchema))
+        dw.setMeta("format-version", "2")
+        dw.setMeta("content", "deletes")
+        dw.setMeta("schema", schemaNode.toString)
+        dw.setMeta("partition-spec", specNode.get("fields").toString)
+        dw.setMeta("partition-spec-id", "0")
+        dw.create(entrySchema, LocalIo.create(fs, dmPath, true))
+        try {
+          dvFiles.foreach { a =>
+            val d = graft.sources.DeletionVectors.parse(a.deletionVector.get)
+            val positions = graft.sources.DeletionVectors
+              .readBitmap(spark, tablePath, d).toLongArray.sorted
+            val dataPath = new Path(qualifiedTable, DeltaLog.decodePath(a.path)).toString
+            val (delPath, delLen) =
+              writePositionDelete(spark, fs, metaDir, dataPath, positions)
+            deleteRows += positions.length
+            val part = new GenericData.Record(partSchema)
+            partAvro.foreach { case (c, _, _, conv) =>
+              val raw = a.partitionValues.get(snap.physicalName(c))
+                .orElse(a.partitionValues.get(c)).filter(_ != null)
+              part.put(c, raw.map(conv).orNull)
+            }
+            val df = new GenericData.Record(dataFileSchema)
+            df.put("content", 1) // POSITION_DELETES
+            df.put("file_path", delPath.toString)
+            df.put("file_format", "PARQUET")
+            df.put("partition", part)
+            df.put("record_count", positions.length.toLong)
+            df.put("file_size_in_bytes", delLen)
+            val e = new GenericData.Record(entrySchema)
+            e.put("status", 1)
+            e.put("snapshot_id", snapshotId)
+            e.put("sequence_number", sequence)
+            e.put("file_sequence_number", sequence)
+            e.put("data_file", df)
+            dw.append(e)
+          }
+        } finally dw.close()
+        Some((dmPath, fs.getFileStatus(dmPath).getLen))
       }
-    } finally lw.close()
 
-    // ---- table metadata
-    val md = mapper.createObjectNode()
-    md.put("format-version", 2)
-    md.put("table-uuid", DeltaLog.tableId(snap)
-      .getOrElse(java.util.UUID.randomUUID().toString))
-    md.put("location", qualifiedTable.toString)
-    md.put("last-sequence-number", sequence)
-    md.put("last-updated-ms", nowMs)
-    md.put("last-column-id", (fieldIdOf.values ++ Seq(ids.max)).max)
-    md.put("current-schema-id", 0)
-    md.putArray("schemas").add(schemaNode)
-    md.put("default-spec-id", 0)
-    md.putArray("partition-specs").add(specNode)
-    md.put("last-partition-id", specFields.lastOption.map(_._3).getOrElse(999))
-    md.put("default-sort-order-id", 0)
-    val so = md.putArray("sort-orders").addObject()
-    so.put("order-id", 0)
-    so.putArray("fields")
-    val props = md.putObject("properties")
-    props.put("schema.name-mapping.default", nameMapping.toString)
-    props.put("write.format.default", "parquet")
-    md.put("current-snapshot-id", snapshotId)
-    val snapNode = mapper.createObjectNode()
-    snapNode.put("snapshot-id", snapshotId)
-    prior.flatMap(p => Option(p._2.get("current-snapshot-id")))
-      .foreach(p => snapNode.put("parent-snapshot-id", p.asLong()): Unit)
-    snapNode.put("timestamp-ms", nowMs)
-    snapNode.put("sequence-number", sequence)
-    snapNode.put("manifest-list", listPath.toString)
-    snapNode.put("schema-id", 0)
-    val summary = snapNode.putObject("summary")
-    summary.put("operation", "overwrite")
-    summary.put("added-data-files", snap.files.size.toString)
-    summary.put("added-records", rows.toString)
-    summary.put("total-data-files", snap.files.size.toString)
-    summary.put("total-records", rows.toString)
-    if (dvFiles.nonEmpty) {
-      summary.put("added-delete-files", dvFiles.size.toString)
-      summary.put("total-delete-files", dvFiles.size.toString)
-      summary.put("added-position-deletes", deleteRows.toString)
-      summary.put("total-position-deletes", deleteRows.toString)
+      // ---- manifest list
+      val listPath = writeManifestList(fs, metaDir, 2, snapshotId, sequence) { lw =>
+        lw.append(addedManifest(manifestPath, manifestLen, 0, 0, sequence,
+          snapshotId, snap.files.size, rows))
+        deleteManifestInfo.foreach { case (dmPath, dmLen) =>
+          lw.append(addedManifest(dmPath, dmLen, 0, 1, sequence, snapshotId,
+            dvFiles.size, deleteRows))
+        }
+      }
+
+      // ---- table metadata
+      val md = mapper.createObjectNode()
+      md.put("format-version", 2)
+      md.put("table-uuid", DeltaLog.tableId(snap)
+        .getOrElse(java.util.UUID.randomUUID().toString))
+      md.put("location", qualifiedTable.toString)
+      md.put("last-sequence-number", sequence)
+      md.put("last-updated-ms", nowMs)
+      md.put("last-column-id", (fieldIdOf.values ++ Seq(ids.max)).max)
+      md.put("current-schema-id", 0)
+      md.putArray("schemas").add(schemaNode)
+      md.put("default-spec-id", 0)
+      md.putArray("partition-specs").add(specNode)
+      md.put("last-partition-id", specFields.lastOption.map(_._3).getOrElse(999))
+      md.put("default-sort-order-id", 0)
+      val so = md.putArray("sort-orders").addObject()
+      so.put("order-id", 0)
+      so.putArray("fields")
+      val props = md.putObject("properties")
+      props.put("schema.name-mapping.default", nameMapping.toString)
+      props.put("write.format.default", "parquet")
+      md.put("current-snapshot-id", snapshotId)
+      val snapNode = mapper.createObjectNode()
+      snapNode.put("snapshot-id", snapshotId)
+      prior.flatMap(p => Option(p.get("current-snapshot-id")))
+        .foreach(p => snapNode.put("parent-snapshot-id", p.asLong()): Unit)
+      snapNode.put("timestamp-ms", nowMs)
+      snapNode.put("sequence-number", sequence)
+      snapNode.put("manifest-list", listPath.toString)
+      snapNode.put("schema-id", 0)
+      val summary = snapNode.putObject("summary")
+      summary.put("operation", "overwrite")
+      summary.put("added-data-files", snap.files.size.toString)
+      summary.put("added-records", rows.toString)
+      summary.put("total-data-files", snap.files.size.toString)
+      summary.put("total-records", rows.toString)
+      if (dvFiles.nonEmpty) {
+        summary.put("added-delete-files", dvFiles.size.toString)
+        summary.put("total-delete-files", dvFiles.size.toString)
+        summary.put("added-position-deletes", deleteRows.toString)
+        summary.put("total-position-deletes", deleteRows.toString)
+      }
+      val snapshots = md.putArray("snapshots")
+      prior.foreach(p => Option(p.get("snapshots")).foreach {
+        case arr: com.fasterxml.jackson.databind.node.ArrayNode =>
+          arr.elements().asScala.foreach(snapshots.add)
+        case _ => ()
+      })
+      snapshots.add(snapNode)
+      val slog = md.putArray("snapshot-log")
+      prior.foreach(p => Option(p.get("snapshot-log")).foreach {
+        case arr: com.fasterxml.jackson.databind.node.ArrayNode =>
+          arr.elements().asScala.foreach(slog.add)
+        case _ => ()
+      })
+      val sl = slog.addObject()
+      sl.put("timestamp-ms", nowMs)
+      sl.put("snapshot-id", snapshotId)
+      md.putArray("metadata-log")
+      Right((md, version))
     }
-    val snapshots = md.putArray("snapshots")
-    prior.foreach(p => Option(p._2.get("snapshots")).foreach {
-      case arr: com.fasterxml.jackson.databind.node.ArrayNode =>
-        arr.elements().asScala.foreach(snapshots.add)
-      case _ => ()
-    })
-    snapshots.add(snapNode)
-    val slog = md.putArray("snapshot-log")
-    prior.foreach(p => Option(p._2.get("snapshot-log")).foreach {
-      case arr: com.fasterxml.jackson.databind.node.ArrayNode =>
-        arr.elements().asScala.foreach(slog.add)
-      case _ => ()
-    })
-    val sl = slog.addObject()
-    sl.put("timestamp-ms", nowMs)
-    sl.put("snapshot-id", snapshotId)
-    md.putArray("metadata-log")
-
-    val mdPath = new Path(metaDir, s"v$version.metadata.json")
-    val out = LocalIo.create(fs, mdPath, true)
-    try out.write(md.toString.getBytes("UTF-8")) finally out.close()
-    val hint = LocalIo.create(fs, new Path(metaDir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
-    version
   }
 
   /** One Iceberg position-delete parquet for `dataFilePath`'s masked rows
@@ -727,18 +733,6 @@ object IcebergExport {
     require(fs.rename(part, target), s"rename $part -> $target failed")
     fs.delete(tmp, true)
     (target, fs.getFileStatus(target).getLen)
-  }
-
-  private def readCurrentMetadata(
-      fs: org.apache.hadoop.fs.FileSystem,
-      metaDir: Path): Option[(Int, ObjectNode)] = {
-    val hintPath = new Path(metaDir, "version-hint.text")
-    if (!fs.exists(hintPath)) return None
-    val in = fs.open(hintPath)
-    val v = (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toInt
-    val mdIn = fs.open(new Path(metaDir, s"v$v.metadata.json"))
-    val node = try mapper.readTree(mdIn).asInstanceOf[ObjectNode] finally mdIn.close()
-    Some((v, node))
   }
 
   // ------------------------------------------------------ validation read

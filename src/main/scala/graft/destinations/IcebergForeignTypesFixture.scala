@@ -196,7 +196,6 @@ object IcebergForeignTypesFixture {
          |  {"timestamp-ms":1700000000000,"snapshot-id":1},
          |  {"timestamp-ms":1700000100000,"snapshot-id":2}],
          |"metadata-log":[]}""".stripMargin
-    val out = LocalIo.create(fs, new Path(metaDir, "v1.metadata.json"), true)
-    try out.write(md.getBytes("UTF-8")) finally out.close()
+    IcebergWrite.publishMetadata(fs, metaDir, 1, md, hint = false)
   }
 }

@@ -199,8 +199,7 @@ object IcebergV1Fixture {
       snapNodes.result().foreach(snaps.add)
       val slog = md.putArray("snapshot-log")
       logNodes.result().foreach(slog.add)
-      val out = LocalIo.create(fs, new Path(metaDir, s"v${i + 1}.metadata.json"), true)
-      try out.write(md.toString.getBytes("UTF-8")) finally out.close()
+      IcebergWrite.publishMetadata(fs, metaDir, i + 1, md.toString, hint = false)
     }
     snapIds.result()
   }

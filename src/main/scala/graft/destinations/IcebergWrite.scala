@@ -110,48 +110,49 @@ object IcebergWrite {
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     val qualified = fs.makeQualified(table)
     val metaDir = new Path(qualified, "metadata")
-    require(!fs.exists(new Path(metaDir, "version-hint.text")),
-      s"Iceberg table already exists at $tablePath")
-    fs.mkdirs(metaDir)
+    commit(fs, metaDir) { (_, current) =>
+      require(current.isEmpty, s"Iceberg table already exists at $tablePath")
+      fs.mkdirs(metaDir)
 
-    val ids = new IcebergExport.IdGen(0)
-    val schemaNode = IcebergExport.icebergType(schema, ids).asInstanceOf[ObjectNode]
-    schemaNode.put("schema-id", 0)
-    val fieldIdOf: Map[String, Int] = schemaNode.get("fields").elements().asScala
-      .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
+      val ids = new IcebergExport.IdGen(0)
+      val schemaNode = IcebergExport.icebergType(schema, ids).asInstanceOf[ObjectNode]
+      schemaNode.put("schema-id", 0)
+      val fieldIdOf: Map[String, Int] = schemaNode.get("fields").elements().asScala
+        .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
 
-    val md = mapper.createObjectNode()
-    md.put("format-version", formatVersion)
-    if (formatVersion == 3) md.put("next-row-id", 0L): Unit
-    md.put("table-uuid", java.util.UUID.randomUUID().toString)
-    md.put("location", qualified.toString)
-    md.put("last-sequence-number", 0L)
-    md.put("last-updated-ms", System.currentTimeMillis())
-    md.put("last-column-id", (fieldIdOf.values ++ Seq(ids.max)).max)
-    md.put("current-schema-id", 0)
-    md.putArray("schemas").add(schemaNode)
-    md.put("default-spec-id", 0)
-    val specNode = mapper.createObjectNode()
-    specNode.put("spec-id", 0)
-    val sf = specNode.putArray("fields")
-    partFields.zipWithIndex.foreach { case ((t, c), i) =>
-      val f = sf.addObject()
-      f.put("name", graft.sources.IcebergTransforms.fieldName(t, c))
-      f.put("transform", graft.sources.IcebergTransforms.render(t))
-      f.put("source-id", fieldIdOf(c))
-      f.put("field-id", 1000 + i)
+      val md = mapper.createObjectNode()
+      md.put("format-version", formatVersion)
+      if (formatVersion == 3) md.put("next-row-id", 0L): Unit
+      md.put("table-uuid", java.util.UUID.randomUUID().toString)
+      md.put("location", qualified.toString)
+      md.put("last-sequence-number", 0L)
+      md.put("last-updated-ms", System.currentTimeMillis())
+      md.put("last-column-id", (fieldIdOf.values ++ Seq(ids.max)).max)
+      md.put("current-schema-id", 0)
+      md.putArray("schemas").add(schemaNode)
+      md.put("default-spec-id", 0)
+      val specNode = mapper.createObjectNode()
+      specNode.put("spec-id", 0)
+      val sf = specNode.putArray("fields")
+      partFields.zipWithIndex.foreach { case ((t, c), i) =>
+        val f = sf.addObject()
+        f.put("name", graft.sources.IcebergTransforms.fieldName(t, c))
+        f.put("transform", graft.sources.IcebergTransforms.render(t))
+        f.put("source-id", fieldIdOf(c))
+        f.put("field-id", 1000 + i)
+      }
+      md.putArray("partition-specs").add(specNode)
+      md.put("last-partition-id", if (partFields.isEmpty) 999 else 999 + partFields.size)
+      md.put("default-sort-order-id", 0)
+      val so = md.putArray("sort-orders").addObject()
+      so.put("order-id", 0)
+      so.putArray("fields")
+      md.putObject("properties").put("write.format.default", "parquet")
+      md.putArray("snapshots")
+      md.putArray("snapshot-log")
+      md.putArray("metadata-log")
+      Right((md, ()))
     }
-    md.putArray("partition-specs").add(specNode)
-    md.put("last-partition-id", if (partFields.isEmpty) 999 else 999 + partFields.size)
-    md.put("default-sort-order-id", 0)
-    val so = md.putArray("sort-orders").addObject()
-    so.put("order-id", 0)
-    so.putArray("fields")
-    md.putObject("properties").put("write.format.default", "parquet")
-    md.putArray("snapshots")
-    md.putArray("snapshot-log")
-    md.putArray("metadata-log")
-    writeMetadata(fs, metaDir, 1, md)
   }
 
   /** True when an Iceberg table (version-hint or any `v<N>.metadata.json`)
@@ -613,453 +614,402 @@ object IcebergWrite {
       s"$tablePath is Delta-backed (UniForm export): an Iceberg-side append " +
         "would desync the logs — write through Delta and re-export instead")
     val metaDir = new Path(qualified, "metadata")
-    val md = IcebergRead.currentMetadata(fs, metaDir)
-    // v2 AND v3 (r18): a v3 commit additionally assigns row-lineage ids
-    // (entry first_row_id from the metadata's next-row-id; snapshot
-    // first-row-id/added-rows) and spells format-version 3 in manifests
-    val fv = md.get("format-version").asInt()
-    require(fv == 2 || fv == 3, s"format-version $fv not supported")
+    update(fs, metaDir) { md =>
+      // v2 AND v3 (r18): a v3 commit additionally assigns row-lineage ids
+      // (entry first_row_id from the metadata's next-row-id; snapshot
+      // first-row-id/added-rows) and spells format-version 3 in manifests
+      val fv = md.get("format-version").asInt()
+      require(fv == 2 || fv == 3, s"format-version $fv not supported")
 
-    // ---- schema + spec from the CURRENT metadata
-    val csid = md.get("current-schema-id").asInt()
-    val schemaNode = md.get("schemas").elements().asScala
-      .find(s => Option(s.get("schema-id")).exists(_.asInt() == csid))
-      .getOrElse(throw new IllegalArgumentException(s"schema $csid missing"))
-    val logical = IcebergRead.parseType(schemaNode).asInstanceOf[StructType]
-    IcebergRead.refuseDivergentWrite(logical, "commitDataSnapshot")
-    val idToName = logical.fields.map(f => IcebergRead.fieldId(f) -> f.name).toMap
-    val specId = md.get("default-spec-id").asInt()
-    val specNode = md.get("partition-specs").elements().asScala
-      .find(_.get("spec-id").asInt() == specId)
-      .getOrElse(throw new IllegalArgumentException(s"spec $specId missing"))
-    // (spec field name, transform, source column, clean source type, field id)
-    val specFields: Seq[(String, graft.sources.IcebergTransforms.Transform,
-        String, DataType, Int)] =
-      specNode.get("fields").elements().asScala.map { f =>
-        val t = graft.sources.IcebergTransforms.parse(f.get("transform").asText())
-        val src = idToName(f.get("source-id").asLong())
-        val srcType = IcebergRead.clean(
-          logical.fields.find(_.name == src).get.dataType)
-        (f.get("name").asText(), t, src, srcType,
-          Option(f.get("field-id")).map(_.asInt()).getOrElse(1000))
-      }.toSeq
+      // ---- schema + spec from the CURRENT metadata
+      val csid = md.get("current-schema-id").asInt()
+      val schemaNode = md.get("schemas").elements().asScala
+        .find(s => Option(s.get("schema-id")).exists(_.asInt() == csid))
+        .getOrElse(throw new IllegalArgumentException(s"schema $csid missing"))
+      val logical = IcebergRead.parseType(schemaNode).asInstanceOf[StructType]
+      IcebergRead.refuseDivergentWrite(logical, "commitDataSnapshot")
+      val idToName = logical.fields.map(f => IcebergRead.fieldId(f) -> f.name).toMap
+      val specId = md.get("default-spec-id").asInt()
+      val specNode = md.get("partition-specs").elements().asScala
+        .find(_.get("spec-id").asInt() == specId)
+        .getOrElse(throw new IllegalArgumentException(s"spec $specId missing"))
+      // (spec field name, transform, source column, clean source type, field id)
+      val specFields: Seq[(String, graft.sources.IcebergTransforms.Transform,
+          String, DataType, Int)] =
+        specNode.get("fields").elements().asScala.map { f =>
+          val t = graft.sources.IcebergTransforms.parse(f.get("transform").asText())
+          val src = idToName(f.get("source-id").asLong())
+          val srcType = IcebergRead.clean(
+            logical.fields.find(_.name == src).get.dataType)
+          (f.get("name").asText(), t, src, srcType,
+            Option(f.get("field-id")).map(_.asInt()).getOrElse(1000))
+        }.toSeq
 
-    // ---- data write: cast to the table schema with field ids stamped at
-    // every struct level (Spark's writer emits them natively); identity
-    // partitions use partitionBy (Hive layout — Iceberg readers constant-
-    // fill identity source columns from the manifest partition tuple)
-    def stamp(dt: DataType): DataType = dt match {
-      case st: StructType => StructType(st.fields.map { f =>
-        f.copy(dataType = stamp(f.dataType),
-          metadata = new MetadataBuilder().withMetadata(f.metadata)
-            .putLong("parquet.field.id", IcebergRead.fieldId(f)).build())
-      })
-      case ArrayType(et, n) => ArrayType(stamp(et), n)
-      case MapType(k, v, n) => MapType(stamp(k), stamp(v), n)
-      case other => other
-    }
-    val stamped = stamp(logical).asInstanceOf[StructType]
-    val present = df.columns.toSet
-    require(!materializeLineage || fv == 3,
-      "lineage materialization is a format-version 3 contract")
-    // v3 rewrite: the reserved lineage columns ride into the parquet with
-    // their spec field ids, invisible to the logical schema
-    val lineageOut: Seq[Column] =
-      if (!materializeLineage) Nil
-      else Seq(
-        col("`_row_id`").as("_row_id", new MetadataBuilder()
-          .putLong("parquet.field.id", IcebergRead.RowIdFieldId).build()),
-        col("`_last_updated_sequence_number`")
-          .as("_last_updated_sequence_number", new MetadataBuilder()
-            .putLong("parquet.field.id", IcebergRead.LastUpdatedFieldId).build()))
-    val out = df.select(stamped.fields.toIndexedSeq.map { f =>
-      val c =
-        if (present(f.name)) col(s"`${f.name.replace("`", "``")}`")
-        else org.apache.spark.sql.functions.lit(null) // evolved column absent from this batch
-      c.cast(f.dataType).as(f.name, f.metadata)
-    } ++ lineageOut: _*)
-    // derive the partition TUPLE columns (codegen'd transform of the
-    // source column): identity reuses the source name, so hive layout
-    // drops it from the file (readers re-inject from the manifest tuple);
-    // a non-identity derived column is an EXTRA name partitionBy drops,
-    // and the source column stays in the file — required, since a
-    // transform value cannot reconstruct the source
-    val withParts = specFields.foldLeft(out) { case (d, (name, t, src, srcType, _)) =>
-      d.withColumn(name, graft.sources.IcebergTransforms.column(
-        t, col(s"`${src.replace("`", "``")}`"), srcType))
-    }
-    // the PARENT state this commit builds on: the branch head for a
-    // branch commit (falling back to the current state when the branch
-    // does not exist yet), the current snapshot otherwise
-    val baseSnapshotId: Option[Long] = toBranch.filter(_ != "main") match {
-      case Some(b) =>
-        refSnapshotId(md, b).orElse(
-          Option(md.get("current-snapshot-id")).filterNot(_.isNull)
-            .map(_.asLong()).filter(_ >= 0L))
-      case None =>
-        Option(md.get("current-snapshot-id")).filterNot(_.isNull)
-          .map(_.asLong()).filter(_ >= 0L)
-    }
-    val tmp = new Path(qualified, s"_tmp-append-${java.util.UUID.randomUUID()}")
-    // Iceberg REQUIRES timestamps as int64 micros (spec "Parquet" map);
-    // Spark's default INT96 is non-conformant for foreign readers AND
-    // poisons footer stats (deprecated INT96 stats decode as garbage)
-    val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try {
-      val writer = withParts.write.mode("overwrite")
-      (if (specFields.nonEmpty) writer.partitionBy(specFields.map(_._1): _*) else writer)
-        .parquet(tmp.toString)
-    } finally
-      spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
-
-    // collect written part files (+ their hive partition values), move
-    // them under data/ with fresh unique names — renames run on a BOUNDED
-    // POOL (r17: thousands of object-store renames must not serialize
-    // through one thread), and per-file column stats come from ONE
-    // distributed columnar scan (r17, mirroring DeltaWrite.computeStats —
-    // r16 opened every parquet footer serially on the driver, O(#files)
-    // round-trips per commit)
-    val dataDir = new Path(qualified, "data")
-    fs.mkdirs(dataDir)
-    val staged = Seq.newBuilder[(Path, Seq[(String, Option[String])], Long)]
-    def walk(dir: Path, pv: Seq[(String, Option[String])]): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory && name.contains("=")) {
-          val Array(k, v) = name.split("=", 2)
-          val dec = java.net.URLDecoder.decode(v, "UTF-8")
-          walk(st.getPath, pv :+ (k -> (if (dec == "__HIVE_DEFAULT_PARTITION__") None
-                                        else Some(dec))))
-        } else if (name.startsWith("part-") && name.endsWith(".parquet")) {
-          staged += ((st.getPath, pv, st.getLen))
-        }
+      // ---- data write: cast to the table schema with field ids stamped at
+      // every struct level (Spark's writer emits them natively); identity
+      // partitions use partitionBy (Hive layout — Iceberg readers constant-
+      // fill identity source columns from the manifest partition tuple)
+      def stamp(dt: DataType): DataType = dt match {
+        case st: StructType => StructType(st.fields.map { f =>
+          f.copy(dataType = stamp(f.dataType),
+            metadata = new MetadataBuilder().withMetadata(f.metadata)
+              .putLong("parquet.field.id", IcebergRead.fieldId(f)).build())
+        })
+        case ArrayType(et, n) => ArrayType(stamp(et), n)
+        case MapType(k, v, n) => MapType(stamp(k), stamp(v), n)
+        case other => other
       }
-    walk(tmp, Nil)
-    val stagedFiles = staged.result()
-    val renamed: Seq[(Path, Seq[(String, Option[String])], Long)] =
-      if (stagedFiles.isEmpty) Nil
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, stagedFiles.size))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(stagedFiles.map { case (src, pv, len) =>
-            scala.concurrent.Future {
-              val target = new Path(dataDir, s"${java.util.UUID.randomUUID()}.parquet")
-              require(fs.rename(src, target), s"rename to $target failed")
-              (target, pv, len)
-            }
-          }),
-          scala.concurrent.duration.Duration.Inf)
-        finally pool.shutdown()
+      val stamped = stamp(logical).asInstanceOf[StructType]
+      val present = df.columns.toSet
+      require(!materializeLineage || fv == 3,
+        "lineage materialization is a format-version 3 contract")
+      // v3 rewrite: the reserved lineage columns ride into the parquet with
+      // their spec field ids, invisible to the logical schema
+      val lineageOut: Seq[Column] =
+        if (!materializeLineage) Nil
+        else Seq(
+          col("`_row_id`").as("_row_id", new MetadataBuilder()
+            .putLong("parquet.field.id", IcebergRead.RowIdFieldId).build()),
+          col("`_last_updated_sequence_number`")
+            .as("_last_updated_sequence_number", new MetadataBuilder()
+              .putLong("parquet.field.id", IcebergRead.LastUpdatedFieldId).build()))
+      val out = df.select(stamped.fields.toIndexedSeq.map { f =>
+        val c =
+          if (present(f.name)) col(s"`${f.name.replace("`", "``")}`")
+          else org.apache.spark.sql.functions.lit(null) // evolved column absent from this batch
+        c.cast(f.dataType).as(f.name, f.metadata)
+      } ++ lineageOut: _*)
+      // derive the partition TUPLE columns (codegen'd transform of the
+      // source column): identity reuses the source name, so hive layout
+      // drops it from the file (readers re-inject from the manifest tuple);
+      // a non-identity derived column is an EXTRA name partitionBy drops,
+      // and the source column stays in the file — required, since a
+      // transform value cannot reconstruct the source
+      val withParts = specFields.foldLeft(out) { case (d, (name, t, src, srcType, _)) =>
+        d.withColumn(name, graft.sources.IcebergTransforms.column(
+          t, col(s"`${src.replace("`", "``")}`"), srcType))
       }
-    fs.delete(tmp, true)
-    val identitySources: Set[String] = specFields.collect {
-      case (_, graft.sources.IcebergTransforms.Identity, src, _, _) => src }.toSet
-    // Stats dispatch by staged-file count (the DV read path's size-gate
-    // shape): a SMALL commit's footers read in driver-milliseconds, and
-    // launching a Spark job (scan + groupBy + collect) for 1-2 files is
-    // a fixed ~0.3-0.5s tax per commit — felt hardest by per-micro-batch
-    // streaming sinks. A LARGE commit (thousands of files at 100 TB
-    // appends) must NOT serialize thousands of footer round-trips through
-    // the driver — there the one distributed scan wins. Both paths are
-    // spec-pinned equal in IcebergWriteSpec, so this is pure dispatch.
-    // 64 (r18, was 17): with the footer reads issued from the SAME bounded
-    // pool the renames use, the driver-side cost of N footers is
-    // ceil(N/16) round-trip latencies, not N — so the fixed ~0.3-0.5s
-    // Spark-job tax of the distributed scan only pays for itself on
-    // commits large enough that shipping per-file work to executors wins
-    val statsScanMinFiles = spark.conf
-      .getOption("graft.iceberg.statsScanMinFiles").map(_.toInt).getOrElse(64)
-    val statsByPath: Map[String, (Long, Map[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)])] =
-      if (renamed.size < statsScanMinFiles) {
-        val statsLogical =
-          StructType(logical.fields.filterNot(f => identitySources(f.name)))
-        def footer(target: Path) = {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(target, conf))
-          val (rc, stats) =
-            try (r.getRecordCount, columnStats(r, statsLogical))
-            finally r.close()
-          target.toString -> ((rc, stats))
+      // the PARENT state this commit builds on: the branch head for a
+      // branch commit (falling back to the current state when the branch
+      // does not exist yet), the current snapshot otherwise
+      val baseSnapshotId: Option[Long] =
+        toBranch.filter(_ != "main").flatMap(refSnapshotId(md, _))
+          .orElse(currentSnapshotId(md))
+      val tmp = new Path(qualified, s"_tmp-append-${java.util.UUID.randomUUID()}")
+      // Iceberg REQUIRES timestamps as int64 micros (spec "Parquet" map);
+      // Spark's default INT96 is non-conformant for foreign readers AND
+      // poisons footer stats (deprecated INT96 stats decode as garbage)
+      val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      try {
+        val writer = withParts.write.mode("overwrite")
+        (if (specFields.nonEmpty) writer.partitionBy(specFields.map(_._1): _*) else writer)
+          .parquet(tmp.toString)
+      } finally
+        spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
+
+      // collect written part files (+ their hive partition values), move
+      // them under data/ with fresh unique names — renames run on a BOUNDED
+      // POOL (r17: thousands of object-store renames must not serialize
+      // through one thread), and per-file column stats come from ONE
+      // distributed columnar scan (r17, mirroring DeltaWrite.computeStats —
+      // r16 opened every parquet footer serially on the driver, O(#files)
+      // round-trips per commit)
+      val dataDir = new Path(qualified, "data")
+      fs.mkdirs(dataDir)
+      val staged = Seq.newBuilder[(Path, Seq[(String, Option[String])], Long)]
+      def walk(dir: Path, pv: Seq[(String, Option[String])]): Unit =
+        fs.listStatus(dir).foreach { st =>
+          val name = st.getPath.getName
+          if (st.isDirectory && name.contains("=")) {
+            val Array(k, v) = name.split("=", 2)
+            val dec = java.net.URLDecoder.decode(v, "UTF-8")
+            walk(st.getPath, pv :+ (k -> (if (dec == "__HIVE_DEFAULT_PARTITION__") None
+                                          else Some(dec))))
+          } else if (name.startsWith("part-") && name.endsWith(".parquet")) {
+            staged += ((st.getPath, pv, st.getLen))
+          }
         }
-        if (renamed.size <= 2) renamed.map(t => footer(t._1)).toMap
+      walk(tmp, Nil)
+      val stagedFiles = staged.result()
+      val renamed: Seq[(Path, Seq[(String, Option[String])], Long)] =
+        if (stagedFiles.isEmpty) Nil
         else {
           val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, renamed.size))
+            math.min(16, stagedFiles.size))
           implicit val ec: scala.concurrent.ExecutionContext =
             scala.concurrent.ExecutionContext.fromExecutor(pool)
           try scala.concurrent.Await.result(
-            scala.concurrent.Future.traverse(renamed) { case (target, _, _) =>
-              scala.concurrent.Future(footer(target))
-            },
-            scala.concurrent.duration.Duration.Inf).toMap
+            scala.concurrent.Future.sequence(stagedFiles.map { case (src, pv, len) =>
+              scala.concurrent.Future {
+                val target = new Path(dataDir, s"${java.util.UUID.randomUUID()}.parquet")
+                require(fs.rename(src, target), s"rename to $target failed")
+                (target, pv, len)
+              }
+            }),
+            scala.concurrent.duration.Duration.Inf)
           finally pool.shutdown()
         }
-      } else computeIcebergStats(
-        spark, renamed.map(_._1.toString), logical, identitySources)
-    val files: Seq[(Path, Seq[(String, Option[String])], Long, Long,
-        Map[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)])] =
-      renamed.map { case (target, pv, len) =>
-        statsByPath.get(target.toString) match {
-          case Some((rc, stats)) => (target, pv, rc, len, stats)
-          case None =>
-            // not seen by the scan: an EMPTY part file (a tiny batch
-            // repartitioned wider than its row count) — or, when the
-            // table has no stats-eligible column at all, the scan was
-            // skipped entirely. One footer read resolves the count; a
-            // non-empty miss with eligible columns fails loudly rather
-            // than committing a blind entry.
+      fs.delete(tmp, true)
+      val identitySources: Set[String] = specFields.collect {
+        case (_, graft.sources.IcebergTransforms.Identity, src, _, _) => src }.toSet
+      // Stats dispatch by staged-file count (the DV read path's size-gate
+      // shape): a SMALL commit's footers read in driver-milliseconds, and
+      // launching a Spark job (scan + groupBy + collect) for 1-2 files is
+      // a fixed ~0.3-0.5s tax per commit — felt hardest by per-micro-batch
+      // streaming sinks. A LARGE commit (thousands of files at 100 TB
+      // appends) must NOT serialize thousands of footer round-trips through
+      // the driver — there the one distributed scan wins. Both paths are
+      // spec-pinned equal in IcebergWriteSpec, so this is pure dispatch.
+      // 64 (r18, was 17): with the footer reads issued from the SAME bounded
+      // pool the renames use, the driver-side cost of N footers is
+      // ceil(N/16) round-trip latencies, not N — so the fixed ~0.3-0.5s
+      // Spark-job tax of the distributed scan only pays for itself on
+      // commits large enough that shipping per-file work to executors wins
+      val statsScanMinFiles = spark.conf
+        .getOption("graft.iceberg.statsScanMinFiles").map(_.toInt).getOrElse(64)
+      val statsByPath: Map[String, (Long, Map[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)])] =
+        if (renamed.size < statsScanMinFiles) {
+          val statsLogical =
+            StructType(logical.fields.filterNot(f => identitySources(f.name)))
+          def footer(target: Path) = {
             val r = org.apache.parquet.hadoop.ParquetFileReader.open(
               org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(target, conf))
-            val rc = try r.getRecordCount finally r.close()
-            require(rc == 0L || statsByPath.isEmpty,
-              s"stats scan missed non-empty new file $target ($rc rows)")
-            (target, pv, rc, len,
-              Map.empty[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)])
-        }
-      }
-    val rows = files.map(_._3).sum
-
-    // ---- new manifest (ADDED entries at the next sequence number)
-    val prevSeq = md.get("last-sequence-number").asLong()
-    val sequence = prevSeq + 1
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getLeastSignificantBits)
-    // avro type + hive-dir-string converter per spec field, typed by the
-    // TRANSFORM RESULT (int for year/month/hour/bucket, date for day, the
-    // source type for identity/truncate)
-    val partAvro: Seq[(String, String, Int, String => AnyRef)] =
-      specFields.map { case (name, t, _, srcType, fid) =>
-        val (at, conv) = IcebergExport.partitionAvro(
-          graft.sources.IcebergTransforms.resultSparkType(t, srcType))
-        (name, at, fid, conv)
-      }
-    val entrySchema = IcebergExport.manifestEntrySchema(
-      partAvro.map { case (c, t, fid, _) => (c, t, fid) }, v3 = fv == 3)
-    val dfSchema = entrySchema.getField("data_file").schema()
-    val partSchema = dfSchema.getField("partition").schema()
-    val manifestPath = new Path(metaDir, s"${java.util.UUID.randomUUID()}-m0.avro")
-    val mw = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](entrySchema))
-    mw.setMeta("format-version", fv.toString)
-    mw.setMeta("content", "data")
-    mw.setMeta("schema", schemaNode.toString)
-    mw.setMeta("partition-spec", specNode.get("fields").toString)
-    mw.setMeta("partition-spec-id", specId.toString)
-    mw.create(entrySchema, LocalIo.create(fs, manifestPath, true))
-    // v3 row lineage: each data file's first_row_id assigns sequentially
-    // from the metadata's next-row-id (rewrites materialize per-row ids
-    // into the files instead and consume none)
-    val firstRowIdBase: Long =
-      if (fv == 3) Option(md.get("next-row-id")).filterNot(_.isNull)
-        .map(_.asLong()).getOrElse(0L)
-      else 0L
-    var rowIdCursor = firstRowIdBase
-    try files.foreach { case (p, pv, rc, len, stats) =>
-      val part = new GenericData.Record(partSchema)
-      partAvro.foreach { case (c, _, _, conv) =>
-        val raw = pv.collectFirst { case (k, v) if k == c => v }.flatten
-        part.put(c, raw.map(conv).orNull)
-      }
-      val d = new GenericData.Record(dfSchema)
-      d.put("content", 0)
-      d.put("file_path", p.toString)
-      d.put("file_format", "PARQUET")
-      d.put("partition", part)
-      d.put("record_count", rc)
-      d.put("file_size_in_bytes", len)
-      if (fv == 3 && !materializeLineage) {
-        d.put("first_row_id", rowIdCursor)
-        rowIdCursor += rc
-      }
-      if (stats.nonEmpty) {
-        def kv(field: String, entries: Seq[(Int, AnyRef)]): Unit =
-          if (entries.nonEmpty) {
-            val arrSchema = dfSchema.getField(field).schema().getTypes.get(1)
-            val rec = arrSchema.getElementType
-            val arr = new GenericData.Array[GenericRecord](entries.size, arrSchema)
-            entries.foreach { case (fid, v) =>
-              val e = new GenericData.Record(rec)
-              e.put("key", fid)
-              e.put("value", v)
-              arr.add(e)
-            }
-            d.put(field, arr)
+            val (rc, stats) =
+              try (r.getRecordCount, columnStats(r, statsLogical))
+              finally r.close()
+            target.toString -> ((rc, stats))
           }
-        val fids = stats.keys.toSeq.sorted
-        kv("null_value_counts",
-          fids.map(fid => fid -> java.lang.Long.valueOf(stats(fid)._3)))
-        kv("lower_bounds", fids.flatMap(fid =>
-          stats(fid)._1.map(b => fid -> java.nio.ByteBuffer.wrap(b))))
-        kv("upper_bounds", fids.flatMap(fid =>
-          stats(fid)._2.map(b => fid -> java.nio.ByteBuffer.wrap(b))))
+          if (renamed.size <= 2) renamed.map(t => footer(t._1)).toMap
+          else {
+            val pool = java.util.concurrent.Executors.newFixedThreadPool(
+              math.min(16, renamed.size))
+            implicit val ec: scala.concurrent.ExecutionContext =
+              scala.concurrent.ExecutionContext.fromExecutor(pool)
+            try scala.concurrent.Await.result(
+              scala.concurrent.Future.traverse(renamed) { case (target, _, _) =>
+                scala.concurrent.Future(footer(target))
+              },
+              scala.concurrent.duration.Duration.Inf).toMap
+            finally pool.shutdown()
+          }
+        } else computeIcebergStats(
+          spark, renamed.map(_._1.toString), logical, identitySources)
+      val files: Seq[(Path, Seq[(String, Option[String])], Long, Long,
+          Map[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)])] =
+        renamed.map { case (target, pv, len) =>
+          statsByPath.get(target.toString) match {
+            case Some((rc, stats)) => (target, pv, rc, len, stats)
+            case None =>
+              // not seen by the scan: an EMPTY part file (a tiny batch
+              // repartitioned wider than its row count) — or, when the
+              // table has no stats-eligible column at all, the scan was
+              // skipped entirely. One footer read resolves the count; a
+              // non-empty miss with eligible columns fails loudly rather
+              // than committing a blind entry.
+              val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+                org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(target, conf))
+              val rc = try r.getRecordCount finally r.close()
+              require(rc == 0L || statsByPath.isEmpty,
+                s"stats scan missed non-empty new file $target ($rc rows)")
+              (target, pv, rc, len,
+                Map.empty[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)])
+          }
+        }
+      val rows = files.map(_._3).sum
+
+      // ---- new manifest (ADDED entries at the next sequence number)
+      val prevSeq = md.get("last-sequence-number").asLong()
+      val sequence = prevSeq + 1
+      val snapshotId = math.abs(java.util.UUID.randomUUID().getLeastSignificantBits)
+      // avro type + hive-dir-string converter per spec field, typed by the
+      // TRANSFORM RESULT (int for year/month/hour/bucket, date for day, the
+      // source type for identity/truncate)
+      val partAvro: Seq[(String, String, Int, String => AnyRef)] =
+        specFields.map { case (name, t, _, srcType, fid) =>
+          val (at, conv) = IcebergExport.partitionAvro(
+            graft.sources.IcebergTransforms.resultSparkType(t, srcType))
+          (name, at, fid, conv)
+        }
+      val entrySchema = IcebergExport.manifestEntrySchema(
+        partAvro.map { case (c, t, fid, _) => (c, t, fid) }, v3 = fv == 3)
+      val dfSchema = entrySchema.getField("data_file").schema()
+      val partSchema = dfSchema.getField("partition").schema()
+      val manifestPath = new Path(metaDir, s"${java.util.UUID.randomUUID()}-m0.avro")
+      val mw = new DataFileWriter[GenericRecord](
+        new GenericDatumWriter[GenericRecord](entrySchema))
+      mw.setMeta("format-version", fv.toString)
+      mw.setMeta("content", "data")
+      mw.setMeta("schema", schemaNode.toString)
+      mw.setMeta("partition-spec", specNode.get("fields").toString)
+      mw.setMeta("partition-spec-id", specId.toString)
+      mw.create(entrySchema, LocalIo.create(fs, manifestPath, true))
+      // v3 row lineage: each data file's first_row_id assigns sequentially
+      // from the metadata's next-row-id (rewrites materialize per-row ids
+      // into the files instead and consume none)
+      val firstRowIdBase: Long =
+        if (fv == 3) Option(md.get("next-row-id")).filterNot(_.isNull)
+          .map(_.asLong()).getOrElse(0L)
+        else 0L
+      var rowIdCursor = firstRowIdBase
+      try files.foreach { case (p, pv, rc, len, stats) =>
+        val part = new GenericData.Record(partSchema)
+        partAvro.foreach { case (c, _, _, conv) =>
+          val raw = pv.collectFirst { case (k, v) if k == c => v }.flatten
+          part.put(c, raw.map(conv).orNull)
+        }
+        val d = new GenericData.Record(dfSchema)
+        d.put("content", 0)
+        d.put("file_path", p.toString)
+        d.put("file_format", "PARQUET")
+        d.put("partition", part)
+        d.put("record_count", rc)
+        d.put("file_size_in_bytes", len)
+        if (fv == 3 && !materializeLineage) {
+          d.put("first_row_id", rowIdCursor)
+          rowIdCursor += rc
+        }
+        if (stats.nonEmpty) {
+          def kv(field: String, entries: Seq[(Int, AnyRef)]): Unit =
+            if (entries.nonEmpty) {
+              val arrSchema = dfSchema.getField(field).schema().getTypes.get(1)
+              val rec = arrSchema.getElementType
+              val arr = new GenericData.Array[GenericRecord](entries.size, arrSchema)
+              entries.foreach { case (fid, v) =>
+                val e = new GenericData.Record(rec)
+                e.put("key", fid)
+                e.put("value", v)
+                arr.add(e)
+              }
+              d.put(field, arr)
+            }
+          val fids = stats.keys.toSeq.sorted
+          kv("null_value_counts",
+            fids.map(fid => fid -> java.lang.Long.valueOf(stats(fid)._3)))
+          kv("lower_bounds", fids.flatMap(fid =>
+            stats(fid)._1.map(b => fid -> java.nio.ByteBuffer.wrap(b))))
+          kv("upper_bounds", fids.flatMap(fid =>
+            stats(fid)._2.map(b => fid -> java.nio.ByteBuffer.wrap(b))))
+        }
+        val e = new GenericData.Record(entrySchema)
+        e.put("status", 1)
+        e.put("snapshot_id", snapshotId)
+        e.put("sequence_number", sequence)
+        e.put("file_sequence_number", sequence)
+        e.put("data_file", d)
+        mw.append(e)
+      } finally mw.close()
+      val manifestLen = fs.getFileStatus(manifestPath).getLen
+
+      // single-snapshot MERGE: the equality-delete file + its manifest land
+      // at the SAME sequence as the data above (r17)
+      val delManifest: Option[(Path, Long, Long)] = eqDeletes.map { values =>
+        val (delPath, eqFields, delRows, delLen) =
+          writeEqDeleteFile(spark, fs, qualified, logical, values)
+        val (mp, ml) = writeEqDeleteManifest(
+          fs, metaDir, delPath, eqFields, delRows, delLen, sequence, snapshotId,
+          fv)
+        (mp, ml, delRows)
       }
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1)
-      e.put("snapshot_id", snapshotId)
-      e.put("sequence_number", sequence)
-      e.put("file_sequence_number", sequence)
-      e.put("data_file", d)
-      mw.append(e)
-    } finally mw.close()
-    val manifestLen = fs.getFileStatus(manifestPath).getLen
 
-    // single-snapshot MERGE: the equality-delete file + its manifest land
-    // at the SAME sequence as the data above (r17)
-    val delManifest: Option[(Path, Long, Long)] = eqDeletes.map { values =>
-      val (delPath, eqFields, delRows, delLen) =
-        writeEqDeleteFile(spark, fs, qualified, logical, values)
-      val (mp, ml) = writeEqDeleteManifest(
-        fs, metaDir, delPath, eqFields, delRows, delLen, sequence, snapshotId,
-        fv)
-      (mp, ml, delRows)
-    }
-
-    // ---- manifest list: prior manifests carried verbatim + the new one
-    val listPath = new Path(metaDir,
-      s"snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro")
-    val lw = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](IcebergExport.manifestFileSchema))
-    lw.setMeta("format-version", fv.toString)
-    lw.setMeta("snapshot-id", snapshotId.toString)
-    lw.setMeta("sequence-number", sequence.toString)
-    lw.create(IcebergExport.manifestFileSchema, LocalIo.create(fs, listPath, true))
-    var overwriteDropped = (0L, 0L) // (files, rows) replaced by the overwrite
-    try {
-      if (carryPrior) {
-        if (dropTouchedPartitions) {
-          // tuples the NEW files land in, in the pruning's normalized
-          // domain (unmodeled value types fall back to a tagged raw
-          // string — identical on both sides, never equal to a null)
-          val touched: Set[Seq[Option[Any]]] = files.map { case (_, pv, _, _, _) =>
+      // ---- manifest list: prior manifests carried verbatim + the new one
+      var overwriteDropped = (0L, 0L) // (files, rows) replaced by the overwrite
+      val listPath = IcebergExport.writeManifestList(
+          fs, metaDir, fv, snapshotId, sequence) { lw =>
+        if (carryPrior) {
+          // dynamic partition overwrite: tuples the NEW files land in, in
+          // the pruning's normalized domain (unmodeled value types fall
+          // back to a tagged raw string — identical on both sides, never
+          // equal to a null)
+          def normalized(v: AnyRef): Any =
+            graft.sources.IcebergTransforms.normalizeRaw(v)
+              .getOrElse("raw:" + String.valueOf(v))
+          lazy val touched: Set[Seq[Option[Any]]] = files.map { case (_, pv, _, _, _) =>
             partAvro.map { case (c, _, _, conv) =>
               pv.collectFirst { case (k, v) if k == c => v }.flatten
-                .map { s =>
-                  val typed = conv(s)
-                  graft.sources.IcebergTransforms.normalizeRaw(typed)
-                    .getOrElse("raw:" + String.valueOf(typed))
-                }
+                .map(s => normalized(conv(s)))
             }
           }.toSet
-          overwriteDropped = carryPriorManifestsDropping(
-            lw, md, conf, metaDir, specId, partAvro.map(_._1), touched,
-            snapshotId)
-        } else carryPriorManifests(lw, md, conf, baseSnapshotId)
-      }
-      val m = new GenericData.Record(IcebergExport.manifestFileSchema)
-      m.put("manifest_path", manifestPath.toString)
-      m.put("manifest_length", manifestLen)
-      m.put("partition_spec_id", specId)
-      m.put("content", 0)
-      m.put("sequence_number", sequence)
-      m.put("min_sequence_number", sequence)
-      m.put("added_snapshot_id", snapshotId)
-      m.put("added_files_count", files.size)
-      m.put("existing_files_count", 0)
-      m.put("deleted_files_count", 0)
-      m.put("added_rows_count", rows)
-      m.put("existing_rows_count", 0L)
-      m.put("deleted_rows_count", 0L)
-      // per-field partition summaries (contains_null + single-value-
-      // serialized bounds): what lets a reader SKIP this manifest without
-      // opening it when a predicate cannot overlap — plan cost at scale
-      // becomes proportional to surviving manifests
-      if (partAvro.nonEmpty) {
-        import graft.sources.IcebergTransforms
-        val sums = partAvro.map { case (c, _, _, conv) =>
-          val vals = files.map(
-            _._2.collectFirst { case (k, v) if k == c => v }.flatten)
-          val containsNull = vals.exists(_.isEmpty)
-          val normalized = vals.flatten.map(v =>
-            IcebergTransforms.normalizeRaw(conv(v)))
-          if (normalized.isEmpty || normalized.exists(_.isEmpty))
-            (containsNull, None, None)
-          else {
-            val vsn = normalized.flatten
-            val lo = vsn.reduceLeft((a, b) =>
-              if (IcebergTransforms.cmp(a, b) <= 0) a else b)
-            val hi = vsn.reduceLeft((a, b) =>
-              if (IcebergTransforms.cmp(a, b) >= 0) a else b)
-            (containsNull, Some(IcebergTransforms.boundBytes(lo)),
-              Some(IcebergTransforms.boundBytes(hi)))
+          def tupleOf(e: GenericRecord): Seq[Option[Any]] = {
+            val part = e.get("data_file").asInstanceOf[GenericRecord]
+              .get("partition").asInstanceOf[GenericRecord]
+            partAvro.map { case (n, _, _, _) => Option(part.get(n)).map(normalized) }
+          }
+          overwriteDropped = carryManifests(
+            lw, md, conf, metaDir, baseSnapshotId, snapshotId) { rec =>
+            // only DATA manifests holding touched entries rewrite; delete
+            // manifests carry verbatim. A tuple comparison across
+            // partition specs would be meaningless, so that refuses.
+            if (!dropTouchedPartitions || listContent(rec) != 0) None
+            else {
+              val manSpec = rec.get("partition_spec_id") match {
+                case i: java.lang.Integer => i.intValue()
+                case _ => specId
+              }
+              require(manSpec == specId || touched.isEmpty,
+                "replacePartitions across partition-spec evolution is not " +
+                  "supported — rewriteDataFiles (which re-tuples under the " +
+                  "current spec) first")
+              Some(e => touched.contains(tupleOf(e)))
+            }
           }
         }
-        m.put("partitions", IcebergExport.partitionsSummary(sums))
+        val m = IcebergExport.addedManifest(manifestPath, manifestLen, specId, 0,
+          sequence, snapshotId, files.size, rows)
+        // per-field partition summaries (contains_null + single-value-
+        // serialized bounds): what lets a reader SKIP this manifest without
+        // opening it when a predicate cannot overlap — plan cost at scale
+        // becomes proportional to surviving manifests
+        if (partAvro.nonEmpty) {
+          import graft.sources.IcebergTransforms
+          val sums = partAvro.map { case (c, _, _, conv) =>
+            val vals = files.map(
+              _._2.collectFirst { case (k, v) if k == c => v }.flatten)
+            val containsNull = vals.exists(_.isEmpty)
+            val normalized = vals.flatten.map(v =>
+              IcebergTransforms.normalizeRaw(conv(v)))
+            if (normalized.isEmpty || normalized.exists(_.isEmpty))
+              (containsNull, None, None)
+            else {
+              val vsn = normalized.flatten
+              val lo = vsn.reduceLeft((a, b) =>
+                if (IcebergTransforms.cmp(a, b) <= 0) a else b)
+              val hi = vsn.reduceLeft((a, b) =>
+                if (IcebergTransforms.cmp(a, b) >= 0) a else b)
+              (containsNull, Some(IcebergTransforms.boundBytes(lo)),
+                Some(IcebergTransforms.boundBytes(hi)))
+            }
+          }
+          m.put("partitions", IcebergExport.partitionsSummary(sums))
+        }
+        lw.append(m)
+        delManifest.foreach { case (mp, ml, delRows) =>
+          lw.append(IcebergExport.addedManifest(mp, ml, specId, 1, sequence,
+            snapshotId, 1, delRows))
+        }
       }
-      lw.append(m)
-      delManifest.foreach { case (mp, ml, delRows) =>
-        val dm = new GenericData.Record(IcebergExport.manifestFileSchema)
-        dm.put("manifest_path", mp.toString)
-        dm.put("manifest_length", ml)
-        dm.put("partition_spec_id", specId)
-        dm.put("content", 1) // DELETES manifest
-        dm.put("sequence_number", sequence)
-        dm.put("min_sequence_number", sequence)
-        dm.put("added_snapshot_id", snapshotId)
-        dm.put("added_files_count", 1)
-        dm.put("existing_files_count", 0)
-        dm.put("deleted_files_count", 0)
-        dm.put("added_rows_count", delRows)
-        dm.put("existing_rows_count", 0L)
-        dm.put("deleted_rows_count", 0L)
-        lw.append(dm)
-      }
-    } finally lw.close()
 
-    // ---- metadata: new snapshot appended, version bumped
-    val nowMs = System.currentTimeMillis()
-    md.put("last-sequence-number", sequence)
-    md.put("last-updated-ms", nowMs)
-    val snapNode = mapper.createObjectNode()
-    snapNode.put("snapshot-id", snapshotId)
-    baseSnapshotId
-      .foreach(p => snapNode.put("parent-snapshot-id", p): Unit)
-    snapNode.put("timestamp-ms", nowMs)
-    snapNode.put("sequence-number", sequence)
-    if (fv == 3) {
-      // row-lineage accounting: the snapshot claims [first-row-id,
+      // ---- metadata: new snapshot appended, version bumped
+      // row-lineage accounting (v3): the snapshot claims [first-row-id,
       // first-row-id + added-rows) of the table's id space; a
       // materializing rewrite preserves ids and claims none
-      snapNode.put("first-row-id", firstRowIdBase)
-      snapNode.put("added-rows",
-        if (materializeLineage) 0L else rowIdCursor - firstRowIdBase)
-      md.put("next-row-id", rowIdCursor): Unit
+      if (fv == 3) md.put("next-row-id", rowIdCursor): Unit
+      addSnapshot(md, snapshotId, baseSnapshotId, sequence, listPath, csid,
+        Seq("operation" -> operation,
+          "added-data-files" -> files.size.toString,
+          "added-records" -> rows.toString) ++
+          delManifest.toSeq.flatMap { case (_, _, delRows) =>
+            Seq("added-delete-files" -> "1",
+              "added-equality-deletes" -> delRows.toString) } ++
+          (if (dropTouchedPartitions)
+            Seq("deleted-data-files" -> overwriteDropped._1.toString,
+              "deleted-records" -> overwriteDropped._2.toString)
+          else Nil) ++ extraSummary,
+        lineage = Option.when(fv == 3)((firstRowIdBase,
+          if (materializeLineage) 0L else rowIdCursor - firstRowIdBase)),
+        branch = toBranch)
+      Right(snapshotId)
     }
-    snapNode.put("manifest-list", listPath.toString)
-    snapNode.put("schema-id", csid)
-    val summary = snapNode.putObject("summary")
-    summary.put("operation", operation)
-    summary.put("added-data-files", files.size.toString)
-    summary.put("added-records", rows.toString)
-    delManifest.foreach { case (_, _, delRows) =>
-      summary.put("added-delete-files", "1")
-      summary.put("added-equality-deletes", delRows.toString): Unit
-    }
-    if (dropTouchedPartitions) {
-      summary.put("deleted-data-files", overwriteDropped._1.toString)
-      summary.put("deleted-records", overwriteDropped._2.toString): Unit
-    }
-    extraSummary.foreach { case (k, v) => summary.put(k, v): Unit }
-    md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-      .add(snapNode)
-    toBranch.filter(_ != "main") match {
-      case Some(b) =>
-        // branch commit: ONLY the ref head moves — main (current-
-        // snapshot-id + snapshot-log) is untouched until fastForward
-        setRef(md, b, snapshotId, "branch")
-      case None =>
-        md.put("current-snapshot-id", snapshotId)
-        setRef(md, "main", snapshotId, "branch")
-        val sl = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-          .addObject()
-        sl.put("timestamp-ms", nowMs)
-        sl.put("snapshot-id", snapshotId): Unit
-    }
-
-    writeMetadata(fs, metaDir, currentMetadataVersion(fs, metaDir) + 1, md)
-    snapshotId
   }
 
   /** METADATA-ONLY DELETE via an Iceberg v2 EQUALITY delete file: every
@@ -1079,93 +1029,50 @@ object IcebergWrite {
       s"$tablePath is Delta-backed (UniForm export): an Iceberg-side delete " +
         "would desync the logs — write through Delta and re-export instead")
     val metaDir = new Path(qualified, "metadata")
-    val md = IcebergRead.currentMetadata(fs, metaDir)
-    val csid = md.get("current-schema-id").asInt()
-    val schemaNode = md.get("schemas").elements().asScala
-      .find(s => Option(s.get("schema-id")).exists(_.asInt() == csid))
-      .getOrElse(throw new IllegalArgumentException(s"schema $csid missing"))
-    val logical = IcebergRead.parseType(schemaNode).asInstanceOf[StructType]
+    update(fs, metaDir) { md =>
+      val csid = md.get("current-schema-id").asInt()
+      val schemaNode = md.get("schemas").elements().asScala
+        .find(s => Option(s.get("schema-id")).exists(_.asInt() == csid))
+        .getOrElse(throw new IllegalArgumentException(s"schema $csid missing"))
+      val logical = IcebergRead.parseType(schemaNode).asInstanceOf[StructType]
 
-    // v3: position deletes MUST be deletion vectors (the spec deprecates
-    // new position-delete files and this engine's v2 equality-delete
-    // shape would mix protocols) — resolve the matching rows to
-    // per-file positions and write ONE puffin of consolidated DVs. The
-    // divergent-type guard does NOT apply here: a DV delete writes no
-    // row data, so variant/ns columns in the schema are harmless.
-    val fv = md.get("format-version").asInt()
-    if (fv == 3)
-      return deleteWhereDv(spark, tablePath, qualified, metaDir, fs, md,
-        logical, values, csid)
-    require(fv == 2, s"format-version $fv not supported for deleteWhere")
-    IcebergRead.refuseDivergentWrite(logical, "deleteWhere")
+      // v3: position deletes MUST be deletion vectors (the spec deprecates
+      // new position-delete files and this engine's v2 equality-delete
+      // shape would mix protocols) — resolve the matching rows to
+      // per-file positions and write ONE puffin of consolidated DVs. The
+      // divergent-type guard does NOT apply here: a DV delete writes no
+      // row data, so variant/ns columns in the schema are harmless.
+      val fv = md.get("format-version").asInt()
+      if (fv == 3)
+        deleteWhereDv(spark, tablePath, qualified, metaDir, fs, md,
+          logical, values, csid)
+      else {
+        require(fv == 2, s"format-version $fv not supported for deleteWhere")
+        IcebergRead.refuseDivergentWrite(logical, "deleteWhere")
 
-    // delete file + manifest (content=1 in the list; data_file.content=2)
-    // with the equality ids; unpartitioned-scoped, so it applies table-wide
-    val prevSeq = md.get("last-sequence-number").asLong()
-    val sequence = prevSeq + 1
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getLeastSignificantBits)
-    val (delPath, eqFields, delRows, delLen) =
-      writeEqDeleteFile(spark, fs, qualified, logical, values)
-    val (manifestPath, manifestLen) = writeEqDeleteManifest(
-      fs, metaDir, delPath, eqFields, delRows, delLen, sequence, snapshotId)
+        // delete file + manifest (content=1 in the list; data_file.content=2)
+        // with the equality ids; unpartitioned-scoped, so it applies table-wide
+        val prevSeq = md.get("last-sequence-number").asLong()
+        val sequence = prevSeq + 1
+        val snapshotId = math.abs(java.util.UUID.randomUUID().getLeastSignificantBits)
+        val (delPath, eqFields, delRows, delLen) =
+          writeEqDeleteFile(spark, fs, qualified, logical, values)
+        val (manifestPath, manifestLen) = writeEqDeleteManifest(
+          fs, metaDir, delPath, eqFields, delRows, delLen, sequence, snapshotId)
 
-    val listPath = new Path(metaDir,
-      s"snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro")
-    val lw = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](IcebergExport.manifestFileSchema))
-    lw.setMeta("format-version", "2")
-    lw.setMeta("snapshot-id", snapshotId.toString)
-    lw.setMeta("sequence-number", sequence.toString)
-    lw.create(IcebergExport.manifestFileSchema, LocalIo.create(fs, listPath, true))
-    try {
-      carryPriorManifests(lw, md, conf)
-      val m = new GenericData.Record(IcebergExport.manifestFileSchema)
-      m.put("manifest_path", manifestPath.toString)
-      m.put("manifest_length", manifestLen)
-      m.put("partition_spec_id", md.get("default-spec-id").asInt())
-      m.put("content", 1) // DELETES manifest
-      m.put("sequence_number", sequence)
-      m.put("min_sequence_number", sequence)
-      m.put("added_snapshot_id", snapshotId)
-      m.put("added_files_count", 1)
-      m.put("existing_files_count", 0)
-      m.put("deleted_files_count", 0)
-      m.put("added_rows_count", delRows)
-      m.put("existing_rows_count", 0L)
-      m.put("deleted_rows_count", 0L)
-      lw.append(m)
-    } finally lw.close()
+        val listPath = IcebergExport.writeManifestList(
+            fs, metaDir, 2, snapshotId, sequence) { lw =>
+          carryManifests(lw, md, conf, metaDir, currentSnapshotId(md), snapshotId)(_ => None)
+          lw.append(IcebergExport.addedManifest(manifestPath, manifestLen,
+            md.get("default-spec-id").asInt(), 1, sequence, snapshotId, 1, delRows))
+        }
 
-    val nowMs = System.currentTimeMillis()
-    md.put("last-sequence-number", sequence)
-    md.put("last-updated-ms", nowMs)
-    val snapNode = mapper.createObjectNode()
-    snapNode.put("snapshot-id", snapshotId)
-    Option(md.get("current-snapshot-id")).filterNot(_.isNull)
-      .map(_.asLong()).filter(_ >= 0L)
-      .foreach(p => snapNode.put("parent-snapshot-id", p): Unit)
-    snapNode.put("timestamp-ms", nowMs)
-    snapNode.put("sequence-number", sequence)
-    snapNode.put("manifest-list", listPath.toString)
-    snapNode.put("schema-id", csid)
-    val summary = snapNode.putObject("summary")
-    summary.put("operation", "delete")
-    summary.put("added-delete-files", "1")
-    summary.put("added-equality-deletes", delRows.toString)
-    md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-      .add(snapNode)
-    md.put("current-snapshot-id", snapshotId)
-    setRef(md, "main", snapshotId, "branch")
-    val sl = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-      .addObject()
-    sl.put("timestamp-ms", nowMs)
-    sl.put("snapshot-id", snapshotId)
-
-    val hintPath = new Path(metaDir, "version-hint.text")
-    val in = fs.open(hintPath)
-    val v = (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toInt
-    writeMetadata(fs, metaDir, v + 1, md)
-    snapshotId
+        addSnapshot(md, snapshotId, currentSnapshotId(md), sequence, listPath, csid,
+          Seq("operation" -> "delete", "added-delete-files" -> "1",
+            "added-equality-deletes" -> delRows.toString))
+        Right(snapshotId)
+      }
+    }
   }
 
   /** DELETE-FILE COMPACTION (the maintenance complement of r17's
@@ -1188,7 +1095,6 @@ object IcebergWrite {
     * through [[deleteWhere]]'s DV path instead.
     */
   def rewriteDeleteFiles(spark: SparkSession, tablePath: String): Long = {
-    import org.apache.spark.sql.functions.broadcast
     val conf = spark.sessionState.newHadoopConf()
     val table = new Path(tablePath)
     val fs = table.getFileSystem(conf)
@@ -1197,13 +1103,26 @@ object IcebergWrite {
       s"$tablePath is Delta-backed (UniForm export): compact deletes " +
         "through Delta and re-export instead")
     val metaDir = new Path(qualified, "metadata")
-    val md = IcebergRead.currentMetadata(fs, metaDir)
+    update(fs, metaDir)(md =>
+      compactEqualityDeletes(spark, tablePath, conf, fs, qualified, metaDir, md))
+  }
+
+  /** [[rewriteDeleteFiles]] against the resolved metadata `md`; Left when
+    * there is nothing to compact. */
+  private def compactEqualityDeletes(
+      spark: SparkSession,
+      tablePath: String,
+      conf: org.apache.hadoop.conf.Configuration,
+      fs: org.apache.hadoop.fs.FileSystem,
+      qualified: Path,
+      metaDir: Path,
+      md: ObjectNode): Either[Long, Long] = {
+    import org.apache.spark.sql.functions.broadcast
     require(md.get("format-version").asInt() == 2,
       "rewriteDeleteFiles is the v2 maintenance op — a v3 table's " +
         "deletes consolidate as deletion vectors through deleteWhere")
-    val curSnapId = Option(md.get("current-snapshot-id")).filterNot(_.isNull)
-      .map(_.asLong()).filter(_ >= 0L)
-    if (curSnapId.isEmpty) return -1L
+    val curSnapId = currentSnapshotId(md)
+    if (curSnapId.isEmpty) return Left(-1L)
 
     // ---- live equality-delete entries + data file spellings
     val priorList = md.get("snapshots").elements().asScala
@@ -1240,7 +1159,7 @@ object IcebergWrite {
         }
     }
     val eqs = eqFiles.result()
-    if (eqs.isEmpty) return curSnapId.get
+    if (eqs.isEmpty) return Left(curSnapId.get)
     val dataRefs = dataRefByNorm.result()
 
     // ---- killed positions: raw rows (NO deletes planned) semi-joined
@@ -1341,66 +1260,27 @@ object IcebergWrite {
 
     // ---- manifest list: carry everything, re-emitting every live
     // equality entry as DELETED (replaced by the position file)
-    val listPath = new Path(metaDir,
-      s"snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro")
-    val lw = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](IcebergExport.manifestFileSchema))
-    lw.setMeta("format-version", "2")
-    lw.setMeta("snapshot-id", snapshotId.toString)
-    lw.setMeta("sequence-number", sequence.toString)
-    lw.create(IcebergExport.manifestFileSchema, LocalIo.create(fs, listPath, true))
-    try {
-      carryPriorManifestsDroppingDeletes(lw, md, conf, metaDir,
-        doomed = { e =>
+    val listPath = IcebergExport.writeManifestList(
+        fs, metaDir, 2, snapshotId, sequence) { lw =>
+      carryManifests(lw, md, conf, metaDir, curSnapId, snapshotId) { rec =>
+        if (listContent(rec) == 0) None
+        else Some { e =>
           val d = e.get("data_file").asInstanceOf[GenericRecord]
           IcebergRead.fieldOpt(d, "content")
             .map(_.asInstanceOf[Int]).getOrElse(0) == 2
-        },
-        newSnapshotId = snapshotId)
-      val m = new GenericData.Record(IcebergExport.manifestFileSchema)
-      m.put("manifest_path", manifestPath.toString)
-      m.put("manifest_length", manifestLen)
-      m.put("partition_spec_id", md.get("default-spec-id").asInt())
-      m.put("content", 1)
-      m.put("sequence_number", sequence)
-      m.put("min_sequence_number", sequence)
-      m.put("added_snapshot_id", snapshotId)
-      m.put("added_files_count", 1)
-      m.put("existing_files_count", 0)
-      m.put("deleted_files_count", 0)
-      m.put("added_rows_count", delRows)
-      m.put("existing_rows_count", 0L)
-      m.put("deleted_rows_count", 0L)
-      lw.append(m)
-    } finally lw.close()
+        }
+      }
+      lw.append(IcebergExport.addedManifest(manifestPath, manifestLen,
+        md.get("default-spec-id").asInt(), 1, sequence, snapshotId, 1, delRows))
+    }
 
     // ---- metadata
-    val nowMs = System.currentTimeMillis()
-    md.put("last-sequence-number", sequence)
-    md.put("last-updated-ms", nowMs)
-    val snapNode = mapper.createObjectNode()
-    snapNode.put("snapshot-id", snapshotId)
-    curSnapId.foreach(p => snapNode.put("parent-snapshot-id", p): Unit)
-    snapNode.put("timestamp-ms", nowMs)
-    snapNode.put("sequence-number", sequence)
-    snapNode.put("manifest-list", listPath.toString)
-    snapNode.put("schema-id", csid)
-    val summary = snapNode.putObject("summary")
-    summary.put("operation", "replace")
-    summary.put("added-delete-files", "1")
-    summary.put("added-position-deletes", delRows.toString)
-    summary.put("removed-delete-files", eqs.size.toString)
-    summary.put("removed-equality-deletes", eqs.size.toString)
-    md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-      .add(snapNode)
-    md.put("current-snapshot-id", snapshotId)
-    setRef(md, "main", snapshotId, "branch")
-    val sl = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-      .addObject()
-    sl.put("timestamp-ms", nowMs)
-    sl.put("snapshot-id", snapshotId)
-    writeMetadata(fs, metaDir, currentMetadataVersion(fs, metaDir) + 1, md)
-    snapshotId
+    addSnapshot(md, snapshotId, curSnapId, sequence, listPath, csid,
+      Seq("operation" -> "replace", "added-delete-files" -> "1",
+        "added-position-deletes" -> delRows.toString,
+        "removed-delete-files" -> eqs.size.toString,
+        "removed-equality-deletes" -> eqs.size.toString))
+    Right(snapshotId)
   }
 
   /** v3 DELETE via DELETION VECTORS (Table Spec v3, which deprecates new
@@ -1425,7 +1305,7 @@ object IcebergWrite {
       md: ObjectNode,
       logical: StructType,
       values: DataFrame,
-      csid: Int): Long = {
+      csid: Int): Either[Long, Long] = {
     import graft.sources.DeletionVectors
     val conf = spark.sessionState.newHadoopConf()
     // DV manifest entries here carry an EMPTY partition tuple, so every
@@ -1439,9 +1319,8 @@ object IcebergWrite {
     def norm(raw: String): String =
       new Path(raw).toUri.toString
         .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-    val curSnapId = Option(md.get("current-snapshot-id")).filterNot(_.isNull)
-      .map(_.asLong()).filter(_ >= 0L)
-    if (curSnapId.isEmpty) return -1L // empty table: nothing to delete
+    val curSnapId = currentSnapshotId(md)
+    if (curSnapId.isEmpty) return Left(-1L) // empty table: nothing to delete
 
     // ---- current live DV entries + data file spellings (driver scan,
     // bounded by manifest entry count — the same bound every read plans)
@@ -1519,7 +1398,7 @@ object IcebergWrite {
           val all = (prior ++ fresh).distinct.sorted
           (fileNorm, DeletionVectors.serialize(all), all.length.toLong, addedNew)
         }.collect().sortBy(_._1)
-    if (perFile.isEmpty) return curSnapId.get
+    if (perFile.isEmpty) return Left(curSnapId.get)
 
     // ---- one puffin container: header magic, per-file Delta-framed blob
     // (4B BE length | magic+bitmap | 4B BE CRC — the framing v3 adopted),
@@ -1616,17 +1495,11 @@ object IcebergWrite {
     // manifests whose live DV entries this commit supersedes
     val superseded: Set[String] = perFile.iterator.map(_._1)
       .filter(existingDvs.contains).toSet
-    val listPath = new Path(metaDir,
-      s"snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro")
-    val lw = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](IcebergExport.manifestFileSchema))
-    lw.setMeta("format-version", "3")
-    lw.setMeta("snapshot-id", snapshotId.toString)
-    lw.setMeta("sequence-number", sequence.toString)
-    lw.create(IcebergExport.manifestFileSchema, LocalIo.create(fs, listPath, true))
-    try {
-      carryPriorManifestsDroppingDeletes(lw, md, conf, metaDir,
-        doomed = { e =>
+    val listPath = IcebergExport.writeManifestList(
+        fs, metaDir, 3, snapshotId, sequence) { lw =>
+      carryManifests(lw, md, conf, metaDir, curSnapId, snapshotId) { rec =>
+        if (listContent(rec) == 0) None
+        else Some { e =>
           val d = e.get("data_file").asInstanceOf[GenericRecord]
           val dContent = IcebergRead.fieldOpt(d, "content")
             .map(_.asInstanceOf[Int]).getOrElse(0)
@@ -1634,198 +1507,24 @@ object IcebergWrite {
             d.get("file_format").toString.equalsIgnoreCase("PUFFIN") &&
             IcebergRead.fieldOpt(d, "referenced_data_file")
               .map(_.toString).exists(r => superseded(norm(r)))
-        },
-        newSnapshotId = snapshotId)
-      val m = new GenericData.Record(IcebergExport.manifestFileSchema)
-      m.put("manifest_path", manifestPath.toString)
-      m.put("manifest_length", manifestLen)
-      m.put("partition_spec_id", md.get("default-spec-id").asInt())
-      m.put("content", 1) // DELETES manifest
-      m.put("sequence_number", sequence)
-      m.put("min_sequence_number", sequence)
-      m.put("added_snapshot_id", snapshotId)
-      m.put("added_files_count", blobMeta.size)
-      m.put("existing_files_count", 0)
-      m.put("deleted_files_count", 0)
-      m.put("added_rows_count", totalCard)
-      m.put("existing_rows_count", 0L)
-      m.put("deleted_rows_count", 0L)
-      lw.append(m)
-    } finally lw.close()
+        }
+      }
+      lw.append(IcebergExport.addedManifest(manifestPath, manifestLen,
+        md.get("default-spec-id").asInt(), 1, sequence, snapshotId,
+        blobMeta.size, totalCard))
+    }
 
     // ---- metadata: new snapshot (v3 row-lineage fields: a delete adds
     // no rows, so first-row-id pins at the current next-row-id)
-    val nowMs = System.currentTimeMillis()
-    md.put("last-sequence-number", sequence)
-    md.put("last-updated-ms", nowMs)
-    val snapNode = mapper.createObjectNode()
-    snapNode.put("snapshot-id", snapshotId)
-    curSnapId.foreach(p => snapNode.put("parent-snapshot-id", p): Unit)
-    snapNode.put("timestamp-ms", nowMs)
-    snapNode.put("sequence-number", sequence)
-    Option(md.get("next-row-id")).filterNot(_.isNull).foreach { nri =>
-      snapNode.put("first-row-id", nri.asLong())
-      snapNode.put("added-rows", 0L): Unit
-    }
-    snapNode.put("manifest-list", listPath.toString)
-    snapNode.put("schema-id", csid)
-    val summary = snapNode.putObject("summary")
-    summary.put("operation", "delete")
-    summary.put("added-delete-files", blobMeta.size.toString)
-    summary.put("added-dvs", blobMeta.size.toString)
-    summary.put("removed-dvs", superseded.size.toString)
-    summary.put("added-position-deletes",
-      perFile.iterator.map(_._4).sum.toString)
-    md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-      .add(snapNode)
-    md.put("current-snapshot-id", snapshotId)
-    setRef(md, "main", snapshotId, "branch")
-    val sl = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-      .addObject()
-    sl.put("timestamp-ms", nowMs)
-    sl.put("snapshot-id", snapshotId)
-    writeMetadata(fs, metaDir, currentMetadataVersion(fs, metaDir) + 1, md)
-    snapshotId
-  }
-
-  /** Carry every prior manifest into `lw`, rewriting delete manifests
-    * whose live entries satisfy `doomed`: those entries re-emit as status
-    * DELETED under the new snapshot (a replacement supersedes them),
-    * survivors as EXISTING with original sequence. Data manifests and
-    * untouched delete manifests carry byte-identical. Used by the v3 DV
-    * consolidation (doomed = superseded PUFFIN DVs) and the equality-
-    * delete compaction (doomed = every live equality-delete entry).
-    */
-  private def carryPriorManifestsDroppingDeletes(
-      lw: DataFileWriter[GenericRecord],
-      md: ObjectNode,
-      conf: org.apache.hadoop.conf.Configuration,
-      metaDir: Path,
-      doomed: GenericRecord => Boolean,
-      newSnapshotId: Long): Unit = {
-    def copyListRec(rec: GenericRecord): GenericData.Record = {
-      val m = new GenericData.Record(IcebergExport.manifestFileSchema)
-      IcebergExport.manifestFileSchema.getFields.asScala.foreach { f =>
-        m.put(f.name(), rec.get(f.name()) match {
-          case s: org.apache.avro.util.Utf8 => s.toString
-          case other => other
-        })
-      }
-      m
-    }
-    val curSnapId = Option(md.get("current-snapshot-id")).filterNot(_.isNull)
-      .map(_.asLong()).filter(_ >= 0L)
-    curSnapId.foreach { id =>
-      val prior = md.get("snapshots").elements().asScala
-        .find(_.get("snapshot-id").asLong() == id).get
-      val priorList = new Path(prior.get("manifest-list").asText())
-      val rd = new DataFileReader[GenericRecord](
-        new FsInput(priorList, conf), new GenericDatumReader[GenericRecord]())
-      try rd.iterator().asScala.foreach { rec =>
-        val content = rec.get("content") match {
-          case i: java.lang.Integer => i.intValue()
-          case _ => 0
-        }
-        if (content == 0) lw.append(copyListRec(rec))
-        else {
-          val mPath = new Path(rec.get("manifest_path").toString)
-          val mrd = new DataFileReader[GenericRecord](
-            new FsInput(mPath, conf), new GenericDatumReader[GenericRecord]())
-          val (entrySchema, metas, entries) =
-            try {
-              val ms = Seq("format-version", "content", "schema",
-                "partition-spec", "partition-spec-id")
-                .flatMap(k => Option(mrd.getMetaString(k)).map(k -> _))
-              (mrd.getSchema, ms, mrd.iterator().asScala.toVector)
-            } finally mrd.close()
-          val live = entries.filter(e =>
-            e.get("status") match {
-              case i: java.lang.Integer => i != 2; case _ => true })
-          val (drop, keep) = live.partition(doomed)
-          if (drop.isEmpty) lw.append(copyListRec(rec))
-          else {
-            def rows(e: GenericRecord): Long =
-              e.get("data_file").asInstanceOf[GenericRecord]
-                .get("record_count") match {
-                case l: java.lang.Long => l.longValue(); case _ => 0L
-              }
-            val fsm = metaDir.getFileSystem(conf)
-            val newPath = new Path(metaDir,
-              s"${java.util.UUID.randomUUID()}-m1.avro")
-            val mw = new DataFileWriter[GenericRecord](
-              new GenericDatumWriter[GenericRecord](entrySchema))
-            metas.foreach { case (k, v) => mw.setMeta(k, v) }
-            mw.create(entrySchema, LocalIo.create(fsm, newPath, true))
-            val inheritedSeq = rec.get("sequence_number") match {
-              case l: java.lang.Long => l.longValue()
-              case i: java.lang.Integer => i.longValue()
-              case _ => 0L
-            }
-            val inheritedSnap = rec.get("added_snapshot_id") match {
-              case l: java.lang.Long => l.longValue()
-              case i: java.lang.Integer => i.longValue()
-              case _ => 0L
-            }
-            def hasF(n: String) = entrySchema.getField(n) != null
-            try {
-              keep.foreach { e =>
-                e.put("status", 0) // EXISTING
-                if (hasF("sequence_number") && e.get("sequence_number") == null)
-                  e.put("sequence_number", inheritedSeq)
-                if (hasF("file_sequence_number") &&
-                    e.get("file_sequence_number") == null)
-                  e.put("file_sequence_number", inheritedSeq)
-                if (hasF("snapshot_id") && e.get("snapshot_id") == null)
-                  e.put("snapshot_id", inheritedSnap)
-                mw.append(e)
-              }
-              drop.foreach { e =>
-                e.put("status", 2) // DELETED: replaced by the new DV
-                if (hasF("sequence_number") && e.get("sequence_number") == null)
-                  e.put("sequence_number", inheritedSeq)
-                if (hasF("file_sequence_number") &&
-                    e.get("file_sequence_number") == null)
-                  e.put("file_sequence_number", inheritedSeq)
-                if (hasF("snapshot_id")) e.put("snapshot_id", newSnapshotId)
-                mw.append(e)
-              }
-            } finally mw.close()
-            val m = copyListRec(rec)
-            m.put("manifest_path", newPath.toString)
-            m.put("manifest_length", fsm.getFileStatus(newPath).getLen)
-            m.put("added_snapshot_id", newSnapshotId)
-            m.put("added_files_count", 0)
-            m.put("existing_files_count", keep.size)
-            m.put("deleted_files_count", drop.size)
-            m.put("added_rows_count", 0L)
-            m.put("existing_rows_count", keep.map(rows).sum)
-            m.put("deleted_rows_count", drop.map(rows).sum)
-            lw.append(m)
-          }
-        }
-      } finally rd.close()
-    }
-  }
-
-  /** The current vN metadata version number — from `version-hint.text`
-    * when present, else the highest `v<N>.metadata.json` listed (foreign
-    * tables may lack the hint).
-    */
-  private def currentMetadataVersion(
-      fs: org.apache.hadoop.fs.FileSystem, metaDir: Path): Int = {
-    val hintPath = new Path(metaDir, "version-hint.text")
-    if (fs.exists(hintPath)) {
-      val in = fs.open(hintPath)
-      (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toInt
-    } else {
-      val re = "^v(\\d+)\\.metadata\\.json$".r
-      val versions = fs.listStatus(metaDir).toSeq.flatMap(_.getPath.getName match {
-        case re(v) => Some(v.toInt)
-        case _ => None
-      })
-      require(versions.nonEmpty, s"no Iceberg metadata under $metaDir")
-      versions.max
-    }
+    addSnapshot(md, snapshotId, curSnapId, sequence, listPath, csid,
+      Seq("operation" -> "delete",
+        "added-delete-files" -> blobMeta.size.toString,
+        "added-dvs" -> blobMeta.size.toString,
+        "removed-dvs" -> superseded.size.toString,
+        "added-position-deletes" -> perFile.iterator.map(_._4).sum.toString),
+      lineage = Option(md.get("next-row-id")).filterNot(_.isNull)
+        .map(nri => (nri.asLong(), 0L)))
+    Right(snapshotId)
   }
 
   /** EXPIRE SNAPSHOTS (Iceberg maintenance): drop snapshots with
@@ -1848,111 +1547,86 @@ object IcebergWrite {
         "mirrors _delta_log and is regenerated on every export — expire " +
         "history through Delta (vacuum / log retention) instead")
     val metaDir = new Path(qualified, "metadata")
-    val md = IcebergRead.currentMetadata(fs, metaDir)
-    val cur = Option(md.get("current-snapshot-id")).filterNot(_.isNull)
-      .map(_.asLong()).getOrElse(-1L)
-    val snaps = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-    // ref protection: every tag target and every BRANCH head plus its
-    // ancestor chain stays (a branch is living history; a tag pins one
-    // snapshot) — dropRef is the release valve
-    val parentOf: Map[Long, Option[Long]] =
-      snaps.elements().asScala.map(sn =>
-        sn.get("snapshot-id").asLong() ->
-          Option(sn.get("parent-snapshot-id")).filterNot(_.isNull)
-            .map(_.asLong())).toMap
-    val protectedIds: Set[Long] = {
-      val b = Set.newBuilder[Long]
-      Option(md.get("refs")).filterNot(_.isNull).foreach { refs =>
-        // main is NOT ref-protected: its history expires by age like any
-        // Iceberg table's (the head survives as `cur`) — only named
-        // branches and tags pin snapshots past retention
-        refs.fields().asScala.filterNot(_.getKey == "main").foreach { e =>
-          val id = e.getValue.get("snapshot-id").asLong()
-          if (e.getValue.get("type").asText() == "tag") b += id
-          else {
-            var c = Option(id)
-            while (c.isDefined) { b += c.get; c = parentOf.getOrElse(c.get, None) }
+    // the expired manifest lists are deleted only once the new metadata
+    // is published: a commit that loses the race leaves them referenced
+    val expiredLists = update(fs, metaDir) { md =>
+      val cur = Option(md.get("current-snapshot-id")).filterNot(_.isNull)
+        .map(_.asLong()).getOrElse(-1L)
+      val snaps = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
+      // ref protection: every tag target and every BRANCH head plus its
+      // ancestor chain stays (a branch is living history; a tag pins one
+      // snapshot) — dropRef is the release valve
+      val parentOf: Map[Long, Option[Long]] =
+        snaps.elements().asScala.map(sn =>
+          sn.get("snapshot-id").asLong() ->
+            Option(sn.get("parent-snapshot-id")).filterNot(_.isNull)
+              .map(_.asLong())).toMap
+      val protectedIds: Set[Long] = {
+        val b = Set.newBuilder[Long]
+        Option(md.get("refs")).filterNot(_.isNull).foreach { refs =>
+          // main is NOT ref-protected: its history expires by age like any
+          // Iceberg table's (the head survives as `cur`) — only named
+          // branches and tags pin snapshots past retention
+          refs.fields().asScala.filterNot(_.getKey == "main").foreach { e =>
+            val id = e.getValue.get("snapshot-id").asLong()
+            if (e.getValue.get("type").asText() == "tag") b += id
+            else {
+              var c = Option(id)
+              while (c.isDefined) { b += c.get; c = parentOf.getOrElse(c.get, None) }
+            }
           }
         }
+        b.result()
       }
-      b.result()
-    }
-    val keep = mapper.createArrayNode()
-    var expired = 0
-    snaps.elements().asScala.foreach { s =>
-      val id = s.get("snapshot-id").asLong()
-      if (id == cur || protectedIds(id) ||
-          s.get("timestamp-ms").asLong() >= olderThanMs)
-        keep.add(s): Unit
+      val (kept, gone) = snaps.elements().asScala.toSeq.partition { s =>
+        val id = s.get("snapshot-id").asLong()
+        id == cur || protectedIds(id) ||
+          s.get("timestamp-ms").asLong() >= olderThanMs
+      }
+      if (gone.isEmpty) Left(Nil)
       else {
-        expired += 1
-        fs.delete(new Path(s.get("manifest-list").asText()), false): Unit
+        val keep = mapper.createArrayNode()
+        kept.foreach(keep.add)
+        val keptIds = keep.elements().asScala.map(_.get("snapshot-id").asLong()).toSet
+        md.set[ObjectNode]("snapshots", keep)
+        val log = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
+        val keptLog = mapper.createArrayNode()
+        log.elements().asScala.foreach(e =>
+          if (keptIds(e.get("snapshot-id").asLong())) keptLog.add(e): Unit)
+        md.set[ObjectNode]("snapshot-log", keptLog)
+        md.put("last-updated-ms", System.currentTimeMillis())
+        Right(gone.map(_.get("manifest-list").asText()))
       }
     }
-    if (expired == 0) return 0
-    val keptIds = keep.elements().asScala.map(_.get("snapshot-id").asLong()).toSet
-    md.set[ObjectNode]("snapshots", keep)
-    val log = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-    val keptLog = mapper.createArrayNode()
-    log.elements().asScala.foreach(e =>
-      if (keptIds(e.get("snapshot-id").asLong())) keptLog.add(e): Unit)
-    md.set[ObjectNode]("snapshot-log", keptLog)
-    md.put("last-updated-ms", System.currentTimeMillis())
-    val hintPath = new Path(metaDir, "version-hint.text")
-    val in = fs.open(hintPath)
-    val v = (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toInt
-    writeMetadata(fs, metaDir, v + 1, md)
-    expired
+    expiredLists.foreach(p => fs.delete(new Path(p), false))
+    expiredLists.size
   }
 
-  /** Re-emit every manifest of the current snapshot into `lw` unchanged —
-    * snapshots are cumulative manifest lists in this writer.
+  /** Carry the manifests of snapshot `base` (none for an empty table)
+    * into the manifest list `lw` of snapshot `newSnapshotId` — snapshots
+    * are cumulative manifest lists in this writer. `rewrite` decides per
+    * list record: None carries it verbatim; Some(drop) reads the manifest
+    * and, when live entries match `drop`, writes it anew — survivors as
+    * status EXISTING, matches as DELETED under `newSnapshotId` (spec:
+    * files a snapshot removes appear DELETED with the REMOVING snapshot's
+    * id, so foreign incremental/changelog consumers see the removals) —
+    * while a manifest with no match carries verbatim. Both keep their
+    * ORIGINAL data sequence: foreign writers leave seq/snapshot NULL on
+    * ADDED entries (inherited from the list record, which the spec
+    * allows only for ADDED), and the rewritten list record names THIS
+    * snapshot, so the inherited values are materialized first. The
+    * record's `partitions` summaries stay: survivors are a subset, so the
+    * old bounds remain sound for manifest-level pruning. Returns the
+    * dropped (file count, rows).
     */
-  private def carryPriorManifests(
-      lw: DataFileWriter[GenericRecord],
-      md: ObjectNode,
-      conf: org.apache.hadoop.conf.Configuration,
-      baseSnapshotId: Option[Long] = None): Unit = {
-    val curSnapId = baseSnapshotId.orElse(
-      Option(md.get("current-snapshot-id")).filterNot(_.isNull)
-        .map(_.asLong()).filter(_ >= 0L))
-    curSnapId.foreach { id =>
-      val prior = md.get("snapshots").elements().asScala
-        .find(_.get("snapshot-id").asLong() == id).get
-      val priorList = new Path(prior.get("manifest-list").asText())
-      val rd = new DataFileReader[GenericRecord](
-        new FsInput(priorList, conf), new GenericDatumReader[GenericRecord]())
-      try rd.iterator().asScala.foreach { rec =>
-        val m = new GenericData.Record(IcebergExport.manifestFileSchema)
-        IcebergExport.manifestFileSchema.getFields.asScala.foreach { f =>
-          m.put(f.name(), rec.get(f.name()) match {
-            case s: org.apache.avro.util.Utf8 => s.toString
-            case other => other
-          })
-        }
-        lw.append(m)
-      } finally rd.close()
-    }
-  }
-
-  /** Selective carry for DYNAMIC PARTITION OVERWRITE: prior manifests
-    * stream into `lw`, but any DATA manifest holding entries whose
-    * partition tuple is in `touched` is REWRITTEN without them (survivors
-    * carry as status EXISTING with their original snapshot/sequence, so
-    * nothing about their read semantics moves); manifests with no touched
-    * entries — and all delete manifests — carry byte-identical. Refuses
-    * across partition-spec evolution: a tuple comparison between specs
-    * would be meaningless. Returns (dropped file count, dropped rows).
-    */
-  private def carryPriorManifestsDropping(
+  private def carryManifests(
       lw: DataFileWriter[GenericRecord],
       md: ObjectNode,
       conf: org.apache.hadoop.conf.Configuration,
       metaDir: Path,
-      currentSpecId: Int,
-      specFieldNames: Seq[String],
-      touched: Set[Seq[Option[Any]]],
-      newSnapshotId: Long): (Long, Long) = {
+      base: Option[Long],
+      newSnapshotId: Long)(
+      rewrite: GenericRecord => Option[GenericRecord => Boolean]): (Long, Long) = {
     var droppedFiles = 0L
     var droppedRows = 0L
     def copyListRec(rec: GenericRecord): GenericData.Record = {
@@ -1965,139 +1639,100 @@ object IcebergWrite {
       }
       m
     }
-    val curSnapId = Option(md.get("current-snapshot-id")).filterNot(_.isNull)
-      .map(_.asLong()).filter(_ >= 0L)
-    curSnapId.foreach { id =>
+    def asLong(v: AnyRef): Long = v match {
+      case l: java.lang.Long => l.longValue()
+      case i: java.lang.Integer => i.longValue()
+      case _ => 0L
+    }
+    base.foreach { id =>
       val prior = md.get("snapshots").elements().asScala
         .find(_.get("snapshot-id").asLong() == id).get
       val priorList = new Path(prior.get("manifest-list").asText())
       val rd = new DataFileReader[GenericRecord](
         new FsInput(priorList, conf), new GenericDatumReader[GenericRecord]())
       try rd.iterator().asScala.foreach { rec =>
-        val content = rec.get("content") match {
-          case i: java.lang.Integer => i.intValue()
-          case _ => 0
-        }
-        if (content != 0) lw.append(copyListRec(rec)) // delete manifest: verbatim
-        else {
-          val manSpec = rec.get("partition_spec_id") match {
-            case i: java.lang.Integer => i.intValue()
-            case _ => currentSpecId
-          }
-          require(manSpec == currentSpecId || touched.isEmpty,
-            "replacePartitions across partition-spec evolution is not " +
-              "supported — rewriteDataFiles (which re-tuples under the " +
-              "current spec) first")
-          val mPath = new Path(rec.get("manifest_path").toString)
-          val mrd = new DataFileReader[GenericRecord](
-            new FsInput(mPath, conf), new GenericDatumReader[GenericRecord]())
-          val (entrySchema, metas, entries) =
-            try {
-              val ms = Seq("format-version", "content", "schema",
-                "partition-spec", "partition-spec-id")
-                .flatMap(k => Option(mrd.getMetaString(k)).map(k -> _))
-              (mrd.getSchema, ms, mrd.iterator().asScala.toVector)
-            } finally mrd.close()
-          def tupleOf(e: GenericRecord): Seq[Option[Any]] = {
-            val d = e.get("data_file").asInstanceOf[GenericRecord]
-            val part = d.get("partition").asInstanceOf[GenericRecord]
-            specFieldNames.map { n =>
-              Option(part.get(n)).map { v =>
-                graft.sources.IcebergTransforms.normalizeRaw(v)
-                  .getOrElse("raw:" + String.valueOf(v))
-              }
-            }
-          }
-          val live = entries.filter(e =>
-            e.get("status") match { case i: java.lang.Integer => i != 2; case _ => true })
-          val (drop, keep) = live.partition(e => touched.contains(tupleOf(e)))
-          if (drop.isEmpty) lw.append(copyListRec(rec)) // untouched: verbatim
-          else {
-            def rows(e: GenericRecord): Long =
-              e.get("data_file").asInstanceOf[GenericRecord]
-                .get("record_count") match {
-                case l: java.lang.Long => l.longValue(); case _ => 0L
-              }
-            droppedFiles += drop.size
-            droppedRows += drop.map(rows).sum
-            // spec: files removed by a snapshot must appear with status
-            // DELETED and the REMOVING snapshot's id in that snapshot's
-            // manifests — so the rewritten manifest always materializes,
-            // carrying survivors as EXISTING and the replaced files as
-            // DELETED (foreign incremental/changelog consumers read the
-            // removals from it; omitting them would silently lose the
-            // delete half of the overwrite)
-            val fsm = metaDir.getFileSystem(conf)
-            val newPath = new Path(metaDir,
-              s"${java.util.UUID.randomUUID()}-m0.avro")
-            val mw = new DataFileWriter[GenericRecord](
-              new GenericDatumWriter[GenericRecord](entrySchema))
-            metas.foreach { case (k, v) => mw.setMeta(k, v) }
-            mw.create(entrySchema, LocalIo.create(fsm, newPath, true))
-            // foreign writers leave seq/snapshot NULL on ADDED entries
-            // (inherited from the list record); the spec allows that
-            // only for ADDED, and the rewritten list record's
-            // added_snapshot_id now points at THIS snapshot — so
-            // materialize the ORIGINAL inherited values before
-            // re-emitting as EXISTING/DELETED
-            val inheritedSeq = rec.get("sequence_number") match {
-              case l: java.lang.Long => l.longValue()
-              case i: java.lang.Integer => i.longValue()
-              case _ => 0L
-            }
-            val inheritedSnap = rec.get("added_snapshot_id") match {
-              case l: java.lang.Long => l.longValue()
-              case i: java.lang.Integer => i.longValue()
-              case _ => 0L
-            }
-            def hasF(n: String) = entrySchema.getField(n) != null
-            try {
-              keep.foreach { e =>
-                e.put("status", 0) // EXISTING: original snapshot/seq kept
+        rewrite(rec) match {
+          case None => lw.append(copyListRec(rec))
+          case Some(doomed) =>
+            val mPath = new Path(rec.get("manifest_path").toString)
+            val mrd = new DataFileReader[GenericRecord](
+              new FsInput(mPath, conf), new GenericDatumReader[GenericRecord]())
+            val (entrySchema, metas, entries) =
+              try {
+                val ms = Seq("format-version", "content", "schema",
+                  "partition-spec", "partition-spec-id")
+                  .flatMap(k => Option(mrd.getMetaString(k)).map(k -> _))
+                (mrd.getSchema, ms, mrd.iterator().asScala.toVector)
+              } finally mrd.close()
+            val live = entries.filter(e =>
+              e.get("status") match {
+                case i: java.lang.Integer => i != 2; case _ => true })
+            val (drop, keep) = live.partition(doomed)
+            if (drop.isEmpty) lw.append(copyListRec(rec))
+            else {
+              def rows(e: GenericRecord): Long =
+                e.get("data_file").asInstanceOf[GenericRecord]
+                  .get("record_count") match {
+                  case l: java.lang.Long => l.longValue(); case _ => 0L
+                }
+              droppedFiles += drop.size
+              droppedRows += drop.map(rows).sum
+              val fsm = metaDir.getFileSystem(conf)
+              val newPath = new Path(metaDir,
+                s"${java.util.UUID.randomUUID()}-m${listContent(rec)}.avro")
+              val mw = new DataFileWriter[GenericRecord](
+                new GenericDatumWriter[GenericRecord](entrySchema))
+              metas.foreach { case (k, v) => mw.setMeta(k, v) }
+              mw.create(entrySchema, LocalIo.create(fsm, newPath, true))
+              val inheritedSeq = asLong(rec.get("sequence_number"))
+              val inheritedSnap = asLong(rec.get("added_snapshot_id"))
+              def hasF(n: String) = entrySchema.getField(n) != null
+              def emit(e: GenericRecord, status: Int): Unit = {
+                e.put("status", status) // 0 EXISTING, 2 DELETED
                 if (hasF("sequence_number") && e.get("sequence_number") == null)
                   e.put("sequence_number", inheritedSeq)
                 if (hasF("file_sequence_number") &&
                     e.get("file_sequence_number") == null)
                   e.put("file_sequence_number", inheritedSeq)
-                if (hasF("snapshot_id") && e.get("snapshot_id") == null)
-                  e.put("snapshot_id", inheritedSnap)
+                if (hasF("snapshot_id")) {
+                  if (status == 2) e.put("snapshot_id", newSnapshotId)
+                  else if (e.get("snapshot_id") == null)
+                    e.put("snapshot_id", inheritedSnap)
+                }
                 mw.append(e)
               }
-              drop.foreach { e =>
-                e.put("status", 2) // DELETED by THIS snapshot
-                // data sequence stays the file's ORIGINAL (read semantics
-                // of the history don't move); snapshot_id becomes the
-                // snapshot performing the removal, per spec
-                if (hasF("sequence_number") && e.get("sequence_number") == null)
-                  e.put("sequence_number", inheritedSeq)
-                if (hasF("file_sequence_number") &&
-                    e.get("file_sequence_number") == null)
-                  e.put("file_sequence_number", inheritedSeq)
-                if (hasF("snapshot_id")) e.put("snapshot_id", newSnapshotId)
-                mw.append(e)
-              }
-            } finally mw.close()
-            val keptRows = keep.map(rows).sum
-            val m = copyListRec(rec)
-            m.put("manifest_path", newPath.toString)
-            m.put("manifest_length", fsm.getFileStatus(newPath).getLen)
-            m.put("added_snapshot_id", newSnapshotId)
-            m.put("added_files_count", 0)
-            m.put("existing_files_count", keep.size)
-            m.put("deleted_files_count", drop.size)
-            m.put("added_rows_count", 0L)
-            m.put("existing_rows_count", keptRows)
-            m.put("deleted_rows_count", drop.map(rows).sum)
-            // original `partitions` summaries stay on the copied record:
-            // survivors are a subset, so the old bounds remain SOUND
-            // (conservative) for manifest-level pruning
-            lw.append(m)
-          }
+              try {
+                keep.foreach(emit(_, 0))
+                drop.foreach(emit(_, 2))
+              } finally mw.close()
+              val m = copyListRec(rec)
+              m.put("manifest_path", newPath.toString)
+              m.put("manifest_length", fsm.getFileStatus(newPath).getLen)
+              m.put("added_snapshot_id", newSnapshotId)
+              m.put("added_files_count", 0)
+              m.put("existing_files_count", keep.size)
+              m.put("deleted_files_count", drop.size)
+              m.put("added_rows_count", 0L)
+              m.put("existing_rows_count", keep.map(rows).sum)
+              m.put("deleted_rows_count", drop.map(rows).sum)
+              lw.append(m)
+            }
         }
       } finally rd.close()
     }
     (droppedFiles, droppedRows)
   }
+
+  /** A manifest-list record's `content`: 0 data, 1 deletes. */
+  private def listContent(rec: GenericRecord): Int = rec.get("content") match {
+    case i: java.lang.Integer => i.intValue()
+    case _ => 0
+  }
+
+  /** The current snapshot id; None for a table with no snapshot yet. */
+  private def currentSnapshotId(md: ObjectNode): Option[Long] =
+    Option(md.get("current-snapshot-id")).filterNot(_.isNull)
+      .map(_.asLong()).filter(_ >= 0L)
 
   /** DYNAMIC PARTITION OVERWRITE (Iceberg's ReplacePartitions, the
     * nightly-recompute write shape): ONE `overwrite` snapshot atomically
@@ -2280,10 +1915,49 @@ object IcebergWrite {
     Option(md.get("refs")).filterNot(_.isNull)
       .flatMap(r => Option(r.get(name)).filterNot(_.isNull))
       .map(_.get("snapshot-id").asLong())
-      .orElse(if (name == "main")
-        Option(md.get("current-snapshot-id")).filterNot(_.isNull)
-          .map(_.asLong()).filter(_ >= 0L)
-      else None)
+      .orElse(if (name == "main") currentSnapshotId(md) else None)
+
+  /** Add snapshot `snapshotId` to `md` — built on `parent` at `sequence`,
+    * listing its manifests in `listPath`, `summary` led by the operation —
+    * and make it the head of `branch`: a named branch moves only its ref
+    * (main's current-snapshot-id and snapshot log stay until
+    * [[fastForward]]), main also becomes the current snapshot. `lineage`
+    * is a v3 snapshot's (first-row-id, added-rows).
+    */
+  private def addSnapshot(
+      md: ObjectNode, snapshotId: Long, parent: Option[Long], sequence: Long,
+      listPath: Path, schemaId: Int, summary: Seq[(String, String)],
+      lineage: Option[(Long, Long)] = None,
+      branch: Option[String] = None): Unit = {
+    val nowMs = System.currentTimeMillis()
+    md.put("last-sequence-number", sequence)
+    md.put("last-updated-ms", nowMs)
+    val snapNode = mapper.createObjectNode()
+    snapNode.put("snapshot-id", snapshotId)
+    parent.foreach(p => snapNode.put("parent-snapshot-id", p): Unit)
+    snapNode.put("timestamp-ms", nowMs)
+    snapNode.put("sequence-number", sequence)
+    lineage.foreach { case (firstRowId, addedRows) =>
+      snapNode.put("first-row-id", firstRowId)
+      snapNode.put("added-rows", addedRows): Unit
+    }
+    snapNode.put("manifest-list", listPath.toString)
+    snapNode.put("schema-id", schemaId)
+    val summaryNode = snapNode.putObject("summary")
+    summary.foreach { case (k, v) => summaryNode.put(k, v): Unit }
+    md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
+      .add(snapNode)
+    branch.filter(_ != "main") match {
+      case Some(b) => setRef(md, b, snapshotId, "branch")
+      case None =>
+        md.put("current-snapshot-id", snapshotId)
+        setRef(md, "main", snapshotId, "branch")
+        val sl = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode](
+          "snapshot-log").addObject()
+        sl.put("timestamp-ms", nowMs)
+        sl.put("snapshot-id", snapshotId): Unit
+    }
+  }
 
   private def setRef(
       md: ObjectNode, name: String, snapshotId: Long, tpe: String): Unit = {
@@ -2295,22 +1969,6 @@ object IcebergWrite {
     r.put("type", tpe): Unit
   }
 
-  private def withMetadataBump(
-      spark: SparkSession, tablePath: String)(
-      mutate: ObjectNode => Unit): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(conf)
-    val metaDir = new Path(fs.makeQualified(table), "metadata")
-    val md = IcebergRead.currentMetadata(fs, metaDir)
-    mutate(md)
-    md.put("last-updated-ms", System.currentTimeMillis())
-    val hintPath = new Path(metaDir, "version-hint.text")
-    val in = fs.open(hintPath)
-    val v = (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toInt
-    writeMetadata(fs, metaDir, v + 1, md)
-  }
-
   /** CREATE BRANCH (spec "refs"): a named head starting at `at` (default:
     * the current snapshot). Appends with `branch = Some(name)` advance
     * ONLY this head — main is untouched until [[fastForward]] publishes it
@@ -2318,7 +1976,7 @@ object IcebergWrite {
   def createBranch(
       spark: SparkSession, tablePath: String, name: String,
       at: Option[Long] = None): Unit =
-    withMetadataBump(spark, tablePath) { md =>
+    updateMetadata(spark, tablePath) { md =>
       require(name != "main", "main exists implicitly")
       require(refSnapshotId(md, name).isEmpty, s"ref $name already exists")
       val target = at.orElse(refSnapshotId(md, "main")).getOrElse(
@@ -2333,7 +1991,7 @@ object IcebergWrite {
   def createTag(
       spark: SparkSession, tablePath: String, name: String,
       at: Option[Long] = None): Unit =
-    withMetadataBump(spark, tablePath) { md =>
+    updateMetadata(spark, tablePath) { md =>
       require(name != "main", "main is a branch, not a tag")
       require(refSnapshotId(md, name).isEmpty, s"ref $name already exists")
       val target = at.orElse(refSnapshotId(md, "main")).getOrElse(
@@ -2344,7 +2002,7 @@ object IcebergWrite {
 
   /** DROP a branch or tag. Snapshots it protected become expirable. */
   def dropRef(spark: SparkSession, tablePath: String, name: String): Unit =
-    withMetadataBump(spark, tablePath) { md =>
+    updateMetadata(spark, tablePath) { md =>
       require(name != "main", "cannot drop main")
       val refs = Option(md.get("refs")).filterNot(_.isNull)
         .map(_.asInstanceOf[ObjectNode])
@@ -2362,7 +2020,7 @@ object IcebergWrite {
       spark: SparkSession, tablePath: String,
       to: String, from: String): Long = {
     var head = -1L
-    withMetadataBump(spark, tablePath) { md =>
+    updateMetadata(spark, tablePath) { md =>
       val fromId = refSnapshotId(md, from).getOrElse(
         throw new IllegalArgumentException(s"no ref $from"))
       val toId = refSnapshotId(md, to)
@@ -2403,7 +2061,7 @@ object IcebergWrite {
     * so `history` shows the abandoned lineage as non-ancestors). */
   def rollbackTo(
       spark: SparkSession, tablePath: String, snapshotId: Long): Unit =
-    withMetadataBump(spark, tablePath) { md =>
+    updateMetadata(spark, tablePath) { md =>
       requireSnapshot(md, snapshotId)
       md.put("current-snapshot-id", snapshotId)
       setRef(md, "main", snapshotId, "branch")
@@ -2440,62 +2098,57 @@ object IcebergWrite {
     require(!fs.exists(new Path(qualified, "_delta_log")),
       s"$tablePath is Delta-backed (UniForm export): its layout follows " +
         "the Delta table — repartition through Delta and re-export instead")
-    val metaDir = new Path(qualified, "metadata")
-    val md = IcebergRead.currentMetadata(fs, metaDir)
-    require(md.get("format-version").asInt() == 2, "format-version 2 required")
+    updateMetadata(spark, tablePath) { md =>
+      require(md.get("format-version").asInt() == 2, "format-version 2 required")
 
-    val csid = md.get("current-schema-id").asInt()
-    val schemaNode = md.get("schemas").elements().asScala
-      .find(s => Option(s.get("schema-id")).exists(_.asInt() == csid))
-      .getOrElse(throw new IllegalArgumentException(s"schema $csid missing"))
-    val logical = IcebergRead.parseType(schemaNode).asInstanceOf[StructType]
-    val fieldIdOf: Map[String, Long] =
-      logical.fields.map(f => f.name -> IcebergRead.fieldId(f)).toMap
+      val csid = md.get("current-schema-id").asInt()
+      val schemaNode = md.get("schemas").elements().asScala
+        .find(s => Option(s.get("schema-id")).exists(_.asInt() == csid))
+        .getOrElse(throw new IllegalArgumentException(s"schema $csid missing"))
+      val logical = IcebergRead.parseType(schemaNode).asInstanceOf[StructType]
+      val fieldIdOf: Map[String, Long] =
+        logical.fields.map(f => f.name -> IcebergRead.fieldId(f)).toMap
 
-    val partFields = partitionBy.map(parsePartitionField)
-    partFields.foreach { case (t, c) =>
-      require(fieldIdOf.contains(c), s"partition column $c not in schema")
-      graft.sources.IcebergTransforms.validate(t,
-        IcebergRead.clean(logical.fields.find(_.name == c).get.dataType), c)
-      val pname = graft.sources.IcebergTransforms.fieldName(t, c)
-      require(t == graft.sources.IcebergTransforms.Identity ||
-        !fieldIdOf.contains(pname),
-        s"derived partition field name $pname collides with a table column")
+      val partFields = partitionBy.map(parsePartitionField)
+      partFields.foreach { case (t, c) =>
+        require(fieldIdOf.contains(c), s"partition column $c not in schema")
+        graft.sources.IcebergTransforms.validate(t,
+          IcebergRead.clean(logical.fields.find(_.name == c).get.dataType), c)
+        val pname = graft.sources.IcebergTransforms.fieldName(t, c)
+        require(t == graft.sources.IcebergTransforms.Identity ||
+          !fieldIdOf.contains(pname),
+          s"derived partition field name $pname collides with a table column")
+      }
+
+      val specs = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode](
+        "partition-specs")
+      val newSpecId = specs.elements().asScala
+        .map(_.get("spec-id").asInt()).foldLeft(-1)(math.max) + 1
+      // (source-id, transform) -> existing field id, for cross-spec reuse
+      val priorIds: Map[(Long, String), Int] =
+        specs.elements().asScala.flatMap(_.get("fields").elements().asScala
+          .map(f => (f.get("source-id").asLong(),
+            f.get("transform").asText()) -> f.get("field-id").asInt())).toMap
+      var lastPartId = Option(md.get("last-partition-id"))
+        .filterNot(_.isNull).map(_.asInt()).getOrElse(999)
+      val specNode = mapper.createObjectNode()
+      specNode.put("spec-id", newSpecId)
+      val sf = specNode.putArray("fields")
+      partFields.foreach { case (t, c) =>
+        val transform = graft.sources.IcebergTransforms.render(t)
+        val fid = priorIds.getOrElse((fieldIdOf(c), transform),
+          { lastPartId += 1; lastPartId })
+        val f = sf.addObject()
+        f.put("name", graft.sources.IcebergTransforms.fieldName(t, c))
+        f.put("transform", transform)
+        f.put("source-id", fieldIdOf(c))
+        f.put("field-id", fid): Unit
+      }
+      specs.add(specNode)
+      md.put("default-spec-id", newSpecId)
+      md.put("last-partition-id", lastPartId)
+      newSpecId
     }
-
-    val specs = md.withArray[com.fasterxml.jackson.databind.node.ArrayNode](
-      "partition-specs")
-    val newSpecId = specs.elements().asScala
-      .map(_.get("spec-id").asInt()).foldLeft(-1)(math.max) + 1
-    // (source-id, transform) -> existing field id, for cross-spec reuse
-    val priorIds: Map[(Long, String), Int] =
-      specs.elements().asScala.flatMap(_.get("fields").elements().asScala
-        .map(f => (f.get("source-id").asLong(),
-          f.get("transform").asText()) -> f.get("field-id").asInt())).toMap
-    var lastPartId = Option(md.get("last-partition-id"))
-      .filterNot(_.isNull).map(_.asInt()).getOrElse(999)
-    val specNode = mapper.createObjectNode()
-    specNode.put("spec-id", newSpecId)
-    val sf = specNode.putArray("fields")
-    partFields.foreach { case (t, c) =>
-      val transform = graft.sources.IcebergTransforms.render(t)
-      val fid = priorIds.getOrElse((fieldIdOf(c), transform),
-        { lastPartId += 1; lastPartId })
-      val f = sf.addObject()
-      f.put("name", graft.sources.IcebergTransforms.fieldName(t, c))
-      f.put("transform", transform)
-      f.put("source-id", fieldIdOf(c))
-      f.put("field-id", fid): Unit
-    }
-    specs.add(specNode)
-    md.put("default-spec-id", newSpecId)
-    md.put("last-partition-id", lastPartId)
-    md.put("last-updated-ms", System.currentTimeMillis())
-    val hintPath = new Path(metaDir, "version-hint.text")
-    val in = fs.open(hintPath)
-    val v = (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toInt
-    writeMetadata(fs, metaDir, v + 1, md)
-    newSpecId
   }
 
   // ------------------------------------------------ schema evolution (DDL)
@@ -2516,25 +2169,20 @@ object IcebergWrite {
     require(!fs.exists(new Path(qualified, "_delta_log")),
       s"$tablePath is Delta-backed (UniForm export): evolve the schema " +
         "through Delta and re-export instead")
-    val metaDir = new Path(qualified, "metadata")
-    val md = IcebergRead.currentMetadata(fs, metaDir)
-    val csid = md.get("current-schema-id").asInt()
-    val cur = md.get("schemas").elements().asScala
-      .find(s => Option(s.get("schema-id")).exists(_.asInt() == csid))
-      .getOrElse(throw new IllegalArgumentException(s"schema $csid missing"))
-    val next = cur.deepCopy[ObjectNode]()
-    val newId = md.get("schemas").elements().asScala
-      .map(s => Option(s.get("schema-id")).map(_.asInt()).getOrElse(0)).max + 1
-    next.put("schema-id", newId)
-    evolve(md, next.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("fields"))
-    md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas").add(next)
-    md.put("current-schema-id", newId)
-    md.put("last-updated-ms", System.currentTimeMillis())
-    val hintPath = new Path(metaDir, "version-hint.text")
-    val in = fs.open(hintPath)
-    val v = (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toInt
-    writeMetadata(fs, metaDir, v + 1, md)
-    newId
+    updateMetadata(spark, tablePath) { md =>
+      val csid = md.get("current-schema-id").asInt()
+      val cur = md.get("schemas").elements().asScala
+        .find(s => Option(s.get("schema-id")).exists(_.asInt() == csid))
+        .getOrElse(throw new IllegalArgumentException(s"schema $csid missing"))
+      val next = cur.deepCopy[ObjectNode]()
+      val newId = md.get("schemas").elements().asScala
+        .map(s => Option(s.get("schema-id")).map(_.asInt()).getOrElse(0)).max + 1
+      next.put("schema-id", newId)
+      evolve(md, next.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("fields"))
+      md.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas").add(next)
+      md.put("current-schema-id", newId)
+      newId
+    }
   }
 
   /** ADD COLUMN: a new nullable field with a FRESH field id (continuing
@@ -2591,12 +2239,70 @@ object IcebergWrite {
       seq.filterNot(_ eq hit).foreach(fields.add)
     }
 
-  private def writeMetadata(
-      fs: org.apache.hadoop.fs.FileSystem, metaDir: Path,
-      version: Int, md: ObjectNode): Unit = {
-    val out = LocalIo.create(fs, new Path(metaDir, s"v$version.metadata.json"), true)
-    try out.write(md.toString.getBytes("UTF-8")) finally out.close()
-    val hint = LocalIo.create(fs, new Path(metaDir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+  // ---------------------------------------------------------------- commit
+
+  /** The one way a new table state is published. Resolves the table's
+    * current `(v, md)` once ([[IcebergRead.resolveMetadata]]; 0 and None
+    * before the first commit) and runs `body` against them: `body`
+    * returns `Right((metadata, result))` to publish that metadata as
+    * exactly `v+1` ([[publishMetadata]]), or `Left(result)` when it has
+    * nothing to commit. A writer that overlapped another commit loses
+    * the exclusive publish of `v+1` and gets
+    * [[Concurrency.ConcurrentCommitException]] — there is no rebase; the
+    * data files and manifests it already wrote stay unreferenced, for
+    * [[removeOrphanFiles]].
+    */
+  private[graft] def commit[A](fs: org.apache.hadoop.fs.FileSystem, metaDir: Path)(
+      body: (Int, Option[ObjectNode]) => Either[A, (ObjectNode, A)]): A = {
+    val current = IcebergRead.resolveMetadata(fs, metaDir)
+    val v = current.fold(0)(_._1)
+    body(v, current.map(_._2)) match {
+      case Left(result) => result
+      case Right((md, result)) =>
+        publishMetadata(fs, metaDir, v + 1, md.toString)
+        result
+    }
+  }
+
+  /** [[commit]] on an existing table: `body` edits `md` in place. */
+  private def update[A](fs: org.apache.hadoop.fs.FileSystem, metaDir: Path)(
+      body: ObjectNode => Either[A, A]): A =
+    commit(fs, metaDir) { (_, current) =>
+      require(current.nonEmpty, s"no Iceberg metadata under $metaDir")
+      body(current.get).map(current.get -> _)
+    }
+
+  /** A metadata-only [[update]] (refs, partition spec, schema): `edit`
+    * changes `md`, published with a fresh `last-updated-ms`. */
+  private def updateMetadata[A](spark: SparkSession, tablePath: String)(
+      edit: ObjectNode => A): A = {
+    val table = new Path(tablePath)
+    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
+    update(fs, new Path(fs.makeQualified(table), "metadata")) { md =>
+      val result = edit(md)
+      md.put("last-updated-ms", System.currentTimeMillis())
+      Right(result)
+    }
+  }
+
+  /** Publish `json` as `v<version>.metadata.json` — the only writer of
+    * that file — through [[LocalIo.publishExclusive]], then point
+    * `version-hint.text` at it (`hint = false` is for fixtures that model
+    * foreign tables without a hint). Throws
+    * [[Concurrency.ConcurrentCommitException]] when the version exists
+    * already: another writer committed it first.
+    */
+  private[graft] def publishMetadata(
+      fs: org.apache.hadoop.fs.FileSystem, metaDir: Path, version: Int,
+      json: String, hint: Boolean = true): Unit = {
+    val target = new Path(metaDir, s"v$version.metadata.json")
+    if (!LocalIo.publishExclusive(fs, target, json.getBytes("UTF-8")))
+      throw new Concurrency.ConcurrentCommitException(
+        s"Concurrent Iceberg commit detected for metadata version $version " +
+          s"at ${metaDir.getParent}")
+    if (hint) {
+      val out = LocalIo.create(fs, new Path(metaDir, "version-hint.text"), true)
+      try out.write(version.toString.getBytes("UTF-8")) finally out.close()
+    }
   }
 }

@@ -25,4 +25,39 @@ private[graft] object LocalIo {
       if (overwrite) Files.newOutputStream(p, O.CREATE, O.TRUNCATE_EXISTING, O.WRITE)
       else Files.newOutputStream(p, O.CREATE_NEW, O.WRITE)
     } else fs.create(path, overwrite)
+
+  /** Atomic create-exclusive publication of `bytes` at `target` — the
+    * commit primitive of both table formats (a Delta `_delta_log` commit
+    * file, an Iceberg `v<N>.metadata.json`): the bytes go to a temp file
+    * beside the target, then hard-link creation claims the target on
+    * local filesystems (true O_EXCL), exists+rename with full byte
+    * read-back elsewhere, so a lost race on object stores is detected,
+    * never a silently dropped commit. Returns false when another writer
+    * already holds `target`; the temp file is removed either way.
+    */
+  def publishExclusive(fs: FileSystem, target: Path, bytes: Array[Byte]): Boolean = {
+    val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID()}")
+    val out = create(fs, tmp, false)
+    try out.write(bytes) finally out.close()
+    val won =
+      if (fs.getUri.getScheme == "file") {
+        val tmpNio = java.nio.file.Paths.get(tmp.toUri.getPath)
+        val targetNio = java.nio.file.Paths.get(target.toUri.getPath)
+        try { java.nio.file.Files.createLink(targetNio, tmpNio); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      } else {
+        val renamed = !fs.exists(target) && fs.rename(tmp, target)
+        renamed && {
+          val observed =
+            try {
+              val in = fs.open(target)
+              try java.util.Arrays.equals(in.readAllBytes(), bytes)
+              finally in.close()
+            } catch { case _: Exception => false }
+          observed
+        }
+      }
+    fs.delete(tmp, false)
+    won
+  }
 }

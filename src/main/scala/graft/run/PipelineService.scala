@@ -9,7 +9,7 @@ import scala.concurrent.{Future, Promise}
   * pipeline running at a time (Semaphore(1),
   * aqueducts-executor/src/executor/manager.rs:13-27), queue-position
   * reporting, and cancellation (CancellationToken raced against the job,
-  * manager.rs:62-70 → here `sparkContext.cancelJobGroup`).
+  * manager.rs:62-70 → here `sparkContext.cancelJobGroupAndFutureJobs`).
   *
   * Transport-free by design: the WebSocket layer of the reference is
   * plumbing around exactly this contract; embed this service behind any
@@ -39,9 +39,12 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
   }
 
   /** Cancel a queued submission (removed, promise fails) or the running one
-    * (its cancelled flag is set AND its Spark job group is cancelled: the
-    * group kill aborts jobs already running, the flag stops the runner from
-    * submitting the remaining stages when the cancel lands between jobs).
+    * (its cancelled flag is set AND its Spark job group is cancelled with
+    * its future jobs: the group kill aborts jobs already running and every
+    * job the group starts later — a cancel that lands after the runner's
+    * last abort check but before the stage's job starts must not let that
+    * job run — and the flag stops steps that run no Spark job). Either way
+    * the handle fails with a CancellationException.
     */
   def cancel(id: String): Boolean = {
     val it = queue.iterator()
@@ -56,9 +59,34 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
     current match {
       case Some(s) if s.id == id =>
         s.cancelled.set(true)
-        spark.sparkContext.cancelJobGroup(s.id)
+        cancelledGroups.add(s.id)
+        killLateJobs()
+        // group ids are per-submission UUIDs: cancelling the group's future
+        // jobs never touches a later pipeline
+        spark.sparkContext.cancelJobGroupAndFutureJobs(s.id)
         true
       case _ => false
+    }
+  }
+
+  // Group ids of cancelled RUNNING submissions. `cancelJobGroupAndFutureJobs`
+  // makes Spark skip the group's later result jobs, but adaptive execution
+  // submits shuffle map stages through `submitMapStage`, which never checks
+  // the cancelled groups (Spark 4.1) — so a listener, added on the first
+  // such cancel, kills any job that starts in one of these groups.
+  private val cancelledGroups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private var lateJobKiller: Option[org.apache.spark.scheduler.SparkListener] = None
+
+  private def killLateJobs(): Unit = synchronized {
+    if (lateJobKiller.isEmpty) {
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .filter(cancelledGroups.contains)
+            .foreach(g => spark.sparkContext.cancelJob(e.jobId, s"pipeline $g cancelled"))
+      }
+      spark.sparkContext.addSparkListener(l)
+      lateJobKiller = Some(l)
     }
   }
 
@@ -86,9 +114,17 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
               shouldAbort = () => sub.cancelled.get)
             sub.promise.success(out)
           } catch {
-            case e: Throwable => sub.promise.tryFailure(e)
+            case e: Throwable =>
+              sub.promise.tryFailure(
+                if (!sub.cancelled.get || e.isInstanceOf[java.util.concurrent.CancellationException]) e
+                else {
+                  val c = new java.util.concurrent.CancellationException(s"cancelled: ${sub.id}")
+                  c.initCause(e)
+                  c
+                })
           } finally {
             spark.sparkContext.clearJobGroup()
+            cancelledGroups.remove(sub.id)
             current = None
           }
         }
@@ -104,6 +140,10 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
     */
   def close(): Unit = {
     shutdown = true
+    synchronized {
+      lateJobKiller.foreach(spark.sparkContext.removeSparkListener)
+      lateJobKiller = None
+    }
     var s = queue.pollFirst()
     while (s != null) {
       s.promise.tryFailure(

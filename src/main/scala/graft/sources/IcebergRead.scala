@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
   * layout — not just this repo's own exports. Covers:
   *
   *   - metadata resolution via `version-hint.text` or the highest
-  *     `v<N>.metadata.json`;
+  *     `v<N>.metadata.json`, stepping past a lagging hint;
   *   - snapshot selection: current, by `snapshot-id`, or by timestamp
   *     over the snapshot log (time travel);
   *   - the snapshot's own `schema-id` (schema evolution: each snapshot
@@ -409,26 +409,49 @@ object IcebergRead {
 
   // ------------------------------------------------------------- metadata
 
+  /** The table's current metadata version and its metadata — the one
+    * resolver every reader and writer uses. It starts at
+    * `version-hint.text` (an unreadable hint counts as absent) or, when
+    * there is none, at the highest `v<N>.metadata.json` listed (foreign
+    * tables may lack the hint), then steps forward while
+    * `v<N+1>.metadata.json` exists: a writer that crashed between
+    * publishing a version and rewriting the hint leaves the hint behind,
+    * and the step keeps such a table from wedging (Iceberg's
+    * `HadoopTableOperations` does the same). None when the table has no
+    * metadata yet.
+    */
+  private[graft] def resolveMetadata(
+      fs: org.apache.hadoop.fs.FileSystem, metaDir: Path): Option[(Int, ObjectNode)] = {
+    def versionFile(v: Int) = new Path(metaDir, s"v$v.metadata.json")
+    val hintPath = new Path(metaDir, "version-hint.text")
+    val hinted: Option[Int] =
+      if (!fs.exists(hintPath)) None
+      else scala.util.Try {
+        val in = fs.open(hintPath)
+        (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toInt
+      }.toOption
+    val start = hinted.orElse {
+      val re = "^v(\\d+)\\.metadata\\.json$".r
+      if (!fs.exists(metaDir)) None
+      else fs.listStatus(metaDir).toSeq.flatMap(_.getPath.getName match {
+        case re(v) => Some(v.toInt)
+        case _ => None
+      }).maxOption
+    }
+    start.map { first =>
+      var v = first
+      while (fs.exists(versionFile(v + 1))) v += 1
+      val in = fs.open(versionFile(v))
+      (v, try mapper.readTree(in).asInstanceOf[ObjectNode] finally in.close())
+    }
+  }
+
+  /** The current metadata of an existing table ([[resolveMetadata]]). */
   private[graft] def currentMetadata(
       fs: org.apache.hadoop.fs.FileSystem, metaDir: Path): ObjectNode = {
-    val hintPath = new Path(metaDir, "version-hint.text")
-    val mdPath =
-      if (fs.exists(hintPath)) {
-        val in = fs.open(hintPath)
-        val v = (try new String(in.readAllBytes(), "UTF-8") finally in.close()).trim.toInt
-        new Path(metaDir, s"v$v.metadata.json")
-      } else {
-        // foreign tables may lack the hint: highest v<N>.metadata.json
-        val re = "^v(\\d+)\\.metadata\\.json$".r
-        val versions = fs.listStatus(metaDir).toSeq.flatMap(_.getPath.getName match {
-          case re(v) => Some(v.toInt)
-          case _ => None
-        })
-        require(versions.nonEmpty, s"no Iceberg metadata under $metaDir")
-        new Path(metaDir, s"v${versions.max}.metadata.json")
-      }
-    val in = fs.open(mdPath)
-    try mapper.readTree(in).asInstanceOf[ObjectNode] finally in.close()
+    val current = resolveMetadata(fs, metaDir)
+    require(current.nonEmpty, s"no Iceberg metadata under $metaDir")
+    current.get._2
   }
 
   private[graft] def avroRecords(

@@ -841,4 +841,86 @@ class IcebergWriteSpec extends SparkSpec {
       IcebergRead.Options(snapshotId = Some(snaps.head)))
     assert(s0.count() == 4L)
   }
+
+  private def metaDirOf(t: String) = {
+    val fs = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    (fs, new org.apache.hadoop.fs.Path(
+      fs.makeQualified(new org.apache.hadoop.fs.Path(t)), "metadata"))
+  }
+
+  test("commit path: a hint left behind the newest version loses no append") {
+    import java.nio.file.{Files, Paths}
+    val t = tmpDir("icew-hint-lag").resolve("t").toString
+    IcebergWrite.create(spark, t, schema)
+    IcebergWrite.append(spark, t, rows((1, "a", "x")))
+    // a writer that crashed after publishing v<N> but before rewriting
+    // the hint leaves the hint at N-1
+    val hint = Paths.get(t, "metadata", "version-hint.text")
+    val newest = new String(Files.readAllBytes(hint), "UTF-8").trim.toInt
+    Files.write(hint, (newest - 1).toString.getBytes("UTF-8"))
+    IcebergWrite.append(spark, t, rows((2, "b", "y")))
+    assert(IcebergRead.read(spark, t).collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    assert(new String(Files.readAllBytes(hint), "UTF-8").trim.toInt == newest + 1)
+    assert(IcebergRead.snapshots(spark, t).count() == 2L)
+  }
+
+  test("commit path: a table without version-hint.text takes refs, expiry, schema and spec changes") {
+    import java.nio.file.{Files, Paths}
+    val t = tmpDir("icew-no-hint").resolve("t").toString
+    IcebergWrite.create(spark, t, schema)
+    val s1 = IcebergWrite.append(spark, t, rows((1, "a", "x")))
+    val s2 = IcebergWrite.append(spark, t, rows((2, "b", "y")))
+    IcebergWrite.append(spark, t, rows((3, "c", "x")))
+    val hint = Paths.get(t, "metadata", "version-hint.text")
+    def withoutHint[A](op: => A): A = { Files.deleteIfExists(hint); op }
+
+    withoutHint(IcebergWrite.createTag(spark, t, "first", Some(s1)))
+    assert(IcebergRead.read(spark, t, IcebergRead.Options(ref = Some("first")))
+      .collect().map(_.getLong(0)).toSet == Set(1L))
+
+    // s1 is tagged and s3 is current: only s2 expires
+    assert(withoutHint(IcebergWrite.expireSnapshots(spark, t,
+      System.currentTimeMillis() + 1)) == 1)
+    val left = IcebergRead.snapshots(spark, t).collect()
+      .map(_.getAs[Long]("snapshot_id")).toSet
+    assert(left.size == 2 && left.contains(s1) && !left.contains(s2))
+
+    withoutHint(IcebergWrite.addColumn(spark, t, "n", LongType))
+    assert(IcebergRead.read(spark, t).schema.fieldNames.toSeq == Seq("id", "v", "p", "n"))
+
+    val specId = withoutHint(IcebergWrite.updateSpec(spark, t, Seq("p")))
+    val (fs, metaDir) = metaDirOf(t)
+    assert(IcebergRead.currentMetadata(fs, metaDir).get("default-spec-id").asInt() == specId)
+    IcebergWrite.append(spark, t, rows((4, "d", "y")))
+    assert(IcebergRead.read(spark, t).collect().map(_.getLong(0)).toSet ==
+      Set(1L, 2L, 3L, 4L))
+  }
+
+  test("commit path: a commit built on stale metadata throws ConcurrentCommitException and keeps the winner") {
+    import java.nio.file.{Files, Paths}
+    val t = tmpDir("icew-stale").resolve("t").toString
+    IcebergWrite.create(spark, t, schema)
+    IcebergWrite.append(spark, t, rows((1, "a", "x")))
+    val (fs, metaDir) = metaDirOf(t)
+    var winner = 0L
+    intercept[Concurrency.ConcurrentCommitException] {
+      IcebergWrite.commit(fs, metaDir) { (_, current) =>
+        // another writer commits v+1 while this one builds on v
+        winner = IcebergWrite.append(spark, t, rows((2, "b", "y")))
+        val md = current.get
+        md.put("last-updated-ms", 0L)
+        Right((md, ()))
+      }
+    }
+    val (v, md) = IcebergRead.resolveMetadata(fs, metaDir).get
+    assert(md.get("current-snapshot-id").asLong() == winner)
+    assert(md.get("last-updated-ms").asLong() != 0L)
+    assert(IcebergRead.read(spark, t).collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    assert(new String(Files.readAllBytes(
+      Paths.get(t, "metadata", "version-hint.text")), "UTF-8").trim.toInt == v)
+    // the loser's temp file does not stay behind
+    assert(!Files.list(Paths.get(t, "metadata")).iterator().asScala
+      .exists(_.getFileName.toString.startsWith(".tmp-")))
+  }
 }

@@ -69,6 +69,45 @@ class PipelineServiceSpec extends SparkSpec {
     } finally svc.close()
   }
 
+  test("a cancel landing after the runner's abort check still stops the stage's job") {
+    spark.udf.register("graft_svc_sleep", (x: Long) => { Thread.sleep(5); x })
+    val svc = new PipelineService(spark)
+    // StageStarted fires after the group's abort check and before the
+    // stage submits its job: holding the stage there until cancel() has
+    // returned puts the cancel exactly in that window, every run
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val cancelled = new java.util.concurrent.CountDownLatch(1)
+    val tracker = new ProgressTracker {
+      override def onProgress(event: ProgressEvent): Unit = event match {
+        case _: ProgressEvent.StageStarted =>
+          started.countDown()
+          cancelled.await(30, java.util.concurrent.TimeUnit.SECONDS): Unit
+        case _ => ()
+      }
+      override def onOutput(stageName: String, outputType: OutputType, body: String): Unit = ()
+    }
+    try {
+      // the same ~7.5 s sleep-UDF scan as above, run by explain_analyze
+      // in the stage's own step
+      val slow = Aqueduct(
+        sources = Seq(FileSource("svc_li_late", ParquetFormat(),
+          Location("/root/testdata/sf0.001/lineitem.parquet"))),
+        stages = Seq(Seq(Stage("svc_late",
+          "SELECT sum(graft_svc_sleep(l_orderkey)) AS s FROM svc_li_late",
+          explainAnalyze = true))))
+      val h = svc.submit(slow, tracker)
+      assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(svc.cancel(h.id))
+      val t0 = System.nanoTime()
+      cancelled.countDown()
+      intercept[java.util.concurrent.CancellationException](
+        Await.result(h.result, 60.seconds))
+      val endedAfterMs = (System.nanoTime() - t0) / 1000000
+      assert(endedAfterMs < 4000,
+        s"the stage's job ran ${endedAfterMs}ms after the cancel — its group's future jobs were not cancelled")
+    } finally { cancelled.countDown(); svc.close() }
+  }
+
   test("close() promptly fails queued submissions instead of hanging callers") {
     val svc = new PipelineService(spark)
     val slow = pipelineOf("svc_close_slow",
