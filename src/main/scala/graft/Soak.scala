@@ -170,7 +170,7 @@ object Soak {
       import graft.sources.DeltaLog
       val orders = spark.read.parquet(s"$out/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val tbl = java.nio.file.Files.createTempDirectory("soak-cc").resolve("t").toString
+      val tbl = QueryHelpers.tmp("soak-cc").resolve("t").toString
       DeltaWrite.createIfAbsent(spark, tbl,
         orders.schema.asInstanceOf[org.apache.spark.sql.types.StructType])
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
@@ -198,7 +198,7 @@ object Soak {
       import graft.sources.DeltaLog
       val orders = spark.read.parquet(s"$out/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val tbl = java.nio.file.Files.createTempDirectory("soak-churn").resolve("t").toString
+      val tbl = QueryHelpers.tmp("soak-churn").resolve("t").toString
       DeltaWrite.createIfAbsent(spark, tbl,
         orders.schema.asInstanceOf[org.apache.spark.sql.types.StructType])
       (0 until 4).foreach { i =>

@@ -26,6 +26,28 @@ private[graft] object LocalIo {
       else Files.newOutputStream(p, O.CREATE_NEW, O.WRITE)
     } else fs.create(path, overwrite)
 
+  /** Deletes `root` and everything under it. An entry another thread
+    * removes mid-walk (or a `root` that is already gone) is skipped instead
+    * of aborting the delete; any other I/O failure is thrown. */
+  def deleteTree(root: java.nio.file.Path): Unit = {
+    import java.nio.file.{FileVisitResult, Files, NoSuchFileException, SimpleFileVisitor}
+    import java.nio.file.{Path => NioPath}
+    import java.nio.file.attribute.BasicFileAttributes
+    Files.walkFileTree(root, new SimpleFileVisitor[NioPath] {
+      override def visitFile(f: NioPath, a: BasicFileAttributes): FileVisitResult = {
+        Files.deleteIfExists(f)
+        FileVisitResult.CONTINUE
+      }
+      override def visitFileFailed(f: NioPath, e: java.io.IOException): FileVisitResult =
+        if (e.isInstanceOf[NoSuchFileException]) FileVisitResult.CONTINUE else throw e
+      override def postVisitDirectory(d: NioPath, e: java.io.IOException): FileVisitResult = {
+        if (e != null && !e.isInstanceOf[NoSuchFileException]) throw e
+        Files.deleteIfExists(d)
+        FileVisitResult.CONTINUE
+      }
+    }): Unit
+  }
+
   /** Atomic create-exclusive publication of `bytes` at `target` — the
     * commit primitive of both table formats (a Delta `_delta_log` commit
     * file, an Iceberg `v<N>.metadata.json`): the bytes go to a temp file

@@ -165,7 +165,7 @@ private[graft] object AnnQueries {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
       val index = Ann.ivfBuild(emb, "vec_id", "v", nlist = 16)
-      val root = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+      val root = tmp("graft-ivf").toString
       Ann.ivfSave(index, root)
       val loaded = Ann.ivfLoad(s, root)
       val q = emb.filter(col("vec_id") < 5)

@@ -38,11 +38,17 @@ private[graft] object QueryHelpers {
   def pipe(spark: SparkSession, aq: Aqueduct): DataFrame =
     Runner.run(spark, aq, new CollectingTracker).get
 
+  /** A fresh temp directory, deleted with everything under it when the JVM
+    * exits (`deleteOnExit` would only remove it if it were empty). */
   def tmp(prefix: String): java.nio.file.Path = {
     val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
+    tmpDirs.add(d)
     d
   }
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  sys.addShutdownHook(tmpDirs.forEach { d =>
+    try graft.destinations.LocalIo.deleteTree(d) catch { case _: java.io.IOException => () }
+  })
 
   // words of the lowercased text, identical construction on the oracle side
   def docWords(c: Column): Column = split(trim(lower(c)), "\\s+")

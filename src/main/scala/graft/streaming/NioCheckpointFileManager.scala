@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.io.{BufferedOutputStream, EOFException, IOException, InputStream}
+import java.io.{BufferedOutputStream, EOFException, InputStream}
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
-import java.nio.file.{FileVisitResult, Files, NoSuchFileException, Paths, SimpleFileVisitor, StandardCopyOption, StandardOpenOption, Path => NioPath}
-import java.nio.file.attribute.BasicFileAttributes
+import java.nio.file.{Files, NoSuchFileException, Paths, StandardCopyOption, StandardOpenOption, Path => NioPath}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FSDataInputStream, FSDataOutputStream, Path, PathFilter, PositionedReadable, Seekable}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
@@ -129,23 +128,7 @@ final class NioCheckpointFileManager(path: Path, conf: Configuration)
   override def delete(p: Path): Unit =
     delegate match {
       case Some(d) => d.delete(p)
-      case None =>
-        // walkFileTree rather than Files.walk: an entry another thread
-        // removes mid-walk is already gone, so its NoSuchFileException is
-        // skipped instead of aborting the whole delete
-        Files.walkFileTree(nio(p), new SimpleFileVisitor[NioPath] {
-          override def visitFile(f: NioPath, a: BasicFileAttributes): FileVisitResult = {
-            Files.deleteIfExists(f)
-            FileVisitResult.CONTINUE
-          }
-          override def visitFileFailed(f: NioPath, e: IOException): FileVisitResult =
-            if (e.isInstanceOf[NoSuchFileException]) FileVisitResult.CONTINUE else throw e
-          override def postVisitDirectory(d: NioPath, e: IOException): FileVisitResult = {
-            if (e != null && !e.isInstanceOf[NoSuchFileException]) throw e
-            Files.deleteIfExists(d)
-            FileVisitResult.CONTINUE
-          }
-        }): Unit
+      case None => graft.destinations.LocalIo.deleteTree(nio(p))
     }
 
   override def isLocal: Boolean = delegate.forall(_.isLocal)

@@ -11,11 +11,7 @@ trait SparkSpec extends AnyFunSuite {
     s
   }
 
-  def tmpDir(prefix: String): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
-    d
-  }
+  def tmpDir(prefix: String): java.nio.file.Path = QueryHelpers.tmp(prefix)
 
   /** The reference's canonical 5-row fixture dataset
     * (core/tests/common/mod.rs:40-225): {id, name, value, active}.

@@ -311,6 +311,40 @@ class RunnerSpec extends SparkSpec {
     assertThrows[Exception](Runner.run(spark, aq2))
   }
 
+  test("parquet sources register without running a Spark job") {
+    val dir = tmpDir("runner-nojob")
+    spark.range(0, 20, 1, 2).selectExpr("id", "id % 3 AS k")
+      .write.parquet(dir.resolve("a").toString)
+    spark.range(0, 20, 1, 1).selectExpr("id", "concat('v', id) AS v")
+      .write.parquet(dir.resolve("b").toString)
+    spark.range(0, 20, 1, 2).selectExpr("id", "CAST(id % 2 AS INT) AS part")
+      .write.partitionBy("part").parquet(dir.resolve("c").toString)
+    import scala.jdk.CollectionConverters._
+    val bFile = java.nio.file.Files.list(dir.resolve("b")).iterator().asScala
+      .find(_.getFileName.toString.startsWith("part-")).get
+    val aq = Aqueduct(
+      sources = Seq(
+        FileSource("nj_a", ParquetFormat(), Location(dir.resolve("a").toString)),
+        FileSource("nj_b", ParquetFormat(), Location(bFile.toString)),
+        DirSource("nj_c", ParquetFormat(), Location(dir.resolve("c").toString))),
+      stages = Seq(Seq(Stage("nj_joined",
+        "SELECT a.id, a.k, b.v, c.part FROM nj_a a JOIN nj_b b ON a.id = b.id " +
+          "JOIN nj_c c ON a.id = c.id"))))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Runner.run(spark, aq)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0)
+    assert(spark.table("nj_joined").schema.fieldNames.toSeq == Seq("id", "k", "v", "part"))
+  }
+
   test("duplicate stage names rejected") {
     val aq = Aqueduct(stages = Seq(
       Seq(Stage("dup", "SELECT 1")), Seq(Stage("dup", "SELECT 2"))))

@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Test access to the session's listener bus, which is `private[spark]`:
+  * blocks until every event posted so far has reached every listener. */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
