@@ -126,7 +126,11 @@ object Bench {
       load1End: Double, rerunGain: Double, lastGain: Double, lastDeltaSec: Double,
       passes: Int)
 
-  /** The stdout contract line and the `bench_full.json` body. `results`
+  /** Where the per-query detail goes: under the build directory, so a run
+    * from the checkout root leaves the tracked files alone. */
+  private[graft] val FullReport = java.nio.file.Paths.get("target", "bench_full.json")
+
+  /** The stdout contract line and the [[FullReport]] body. `results`
     * holds every selected query; a failed one keeps the 1e9-second sentinel
     * and has its message in `errors`.
     */
@@ -156,7 +160,8 @@ object Bench {
     // past that window and truncated its HEAD. The stdout line therefore
     // carries only the 20 slowest queries (prefix keys, 3-decimal seconds
     // — ~700 chars all in, parseable with room to spare); the complete
-    // per-query detail lives in bench_full.json, named by "queries_full".
+    // per-query detail lives in target/bench_full.json, named by
+    // "queries_full".
     val top = results.filterNot { case (k, _) => failed(k) }.sortBy(-_._2.sec).take(20)
     val shown = top.map { case (k, t) => s"${js(k.takeWhile(_ != '_'))}:${f3(t.sec)}" }
       .mkString("{", ",", "}")
@@ -167,7 +172,7 @@ object Bench {
       s"""${js(k)}:{"sec":${f3(t.sec)},"cpu_sec":${f3(t.cpuSec)},"first_sec":${f3(t.firstSec)}}"""
     }.mkString("{", ",", "}")
     val head = s""""metric":"total","value":${f3(total)},"unit":"sec""""
-    (s"""{$head,"n_queries":${results.size},$subsetJson,$loadJson,"queries":$shown,"queries_shown":${top.size},"queries_full":"bench_full.json","errors":$errJson,"sf":${js(sfDir)}}""",
+    (s"""{$head,"n_queries":${results.size},$subsetJson,$loadJson,"queries":$shown,"queries_shown":${top.size},"queries_full":${js(FullReport.toString)},"errors":$errJson,"sf":${js(sfDir)}}""",
       s"""{$head,$subsetJson,$loadJson,"queries":$full,"errors":$errJson,"sf":${js(sfDir)}}""")
   }
 
@@ -255,8 +260,10 @@ object Bench {
       Conditions(loadInitial, loadStart, load1(), rerunGain, lastGain, lastBase - keptTotal,
         if (needThird) 3 else 2),
       sfDir)
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_full.json"), full + "\n")
-    catch { case _: java.io.IOException => () } // best-effort side artifact
+    try {
+      java.nio.file.Files.createDirectories(FullReport.getParent)
+      java.nio.file.Files.writeString(FullReport, full + "\n")
+    } catch { case _: java.io.IOException => () } // best-effort side artifact
     println(line)
     spark.stop()
   }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * one you'd want on a real cluster too: AQE on (runtime re-plan, skew-join
   * handling, partition coalescing), shuffle partitions sized to parallelism
   * (overridden by AQE at scale), UTC session time, nanos-as-long so
-  * TIMESTAMP(NANOS) parquet is readable.
+  * TIMESTAMP(NANOS) parquet is readable, no per-session artifact class
+  * loaders.
   */
 object Sessions {
   def builder(master: String, cpus: Int): SparkSession.Builder =
@@ -28,6 +29,12 @@ object Sessions {
       // generated methods (multi-aggregate stages)
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
+      // Runner runs each pipeline on a clone of this session. With artifact
+      // isolation on (Spark 4.1's default) every clone is an artifact
+      // session of its own: executors build it a new class loader and
+      // whole-stage code compiles again in each clone. Nothing here adds
+      // artifacts, so all sessions share the default one.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

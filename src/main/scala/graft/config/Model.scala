@@ -204,19 +204,24 @@ final case class JdbcCustom(preInsert: Option[String], insert: String) extends J
   * all schemes (file, hdfs, s3a, gs, abfss, ...) natively downstream.
   */
 final case class Location(raw: String) {
-  val uri: java.net.URI = {
-    val u = java.net.URI.create(Location.escape(raw))
-    if (u.getScheme == null) java.nio.file.Paths.get(raw).toAbsolutePath.normalize().toUri
-    else u
-  }
+  private val bare = Location.SchemePrefix.findPrefixOf(raw).isEmpty
+  val uri: java.net.URI =
+    if (bare) java.nio.file.Paths.get(raw).toAbsolutePath.normalize().toUri
+    else java.net.URI.create(raw.replace(" ", "%20"))
   def scheme: String = uri.getScheme
-  /** The string handed to Spark readers/writers. */
-  def spark: String = uri.toString
+  /** The string handed to Spark readers/writers. A bare path's bracket and
+    * brace glob characters stay literal (`uri` must percent-encode them), so
+    * Spark expands the same glob the path names.
+    */
+  def spark: String =
+    if (bare) Location.GlobEscapes.foldLeft(uri.toString) { case (s, (e, c)) => s.replace(e, c) }
+    else uri.toString
   /** Local filesystem path; only valid for file: locations. */
   def path: java.nio.file.Path = java.nio.file.Paths.get(uri)
   def isLocal: Boolean = scheme == "file"
 }
 
 object Location {
-  private def escape(s: String): String = s.replace(" ", "%20")
+  private val SchemePrefix = "^[A-Za-z][A-Za-z0-9+.-]*:".r
+  private val GlobEscapes = Seq("%5B" -> "[", "%5D" -> "]", "%7B" -> "{", "%7D" -> "}")
 }

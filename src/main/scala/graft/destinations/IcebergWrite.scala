@@ -5,7 +5,7 @@ import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, regexp_replace}
 import org.apache.spark.sql.types._
 
@@ -491,6 +491,14 @@ object IcebergWrite {
     }
   }
 
+  /** `df` on a clone of `spark` that writes parquet timestamps as int64
+    * micros: the setting stays on the clone, so a concurrent parquet write
+    * on `spark` keeps the session's own timestamp type.
+    */
+  private def withMicrosTimestamps(spark: SparkSession, df: DataFrame): DataFrame =
+    GraftShims.ofRows(GraftShims.cloneSession(spark,
+      Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")), df)
+
   /** Write ONE equality-delete parquet under `data/` for `values`, whose
     * columns name the equality fields (resolved against `logical` for
     * types + field ids). int64-micros timestamps enforced. Returns
@@ -518,10 +526,7 @@ object IcebergWrite {
     // same int64-micros discipline as commitDataSnapshot: a timestamp
     // equality column written as Spark's default INT96 would make the
     // delete file undecodable for spec-conformant foreign readers
-    val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try out.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
+    withMicrosTimestamps(spark, out.coalesce(1)).write.mode("overwrite").parquet(tmp.toString)
     val part = fs.listStatus(tmp).map(_.getPath).find(p =>
       p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
       .getOrElse(throw new IllegalStateException(s"no parquet part under $tmp"))
@@ -699,14 +704,9 @@ object IcebergWrite {
       // Iceberg REQUIRES timestamps as int64 micros (spec "Parquet" map);
       // Spark's default INT96 is non-conformant for foreign readers AND
       // poisons footer stats (deprecated INT96 stats decode as garbage)
-      val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
-      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      try {
-        val writer = withParts.write.mode("overwrite")
-        (if (specFields.nonEmpty) writer.partitionBy(specFields.map(_._1): _*) else writer)
-          .parquet(tmp.toString)
-      } finally
-        spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
+      val writer = withMicrosTimestamps(spark, withParts).write.mode("overwrite")
+      (if (specFields.nonEmpty) writer.partitionBy(specFields.map(_._1): _*) else writer)
+        .parquet(tmp.toString)
 
       // collect written part files (+ their hive partition values), move
       // them under data/ with fresh unique names — renames run on a BOUNDED

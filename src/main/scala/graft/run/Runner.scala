@@ -3,8 +3,7 @@ package graft.run
 import graft.config._
 import graft.destinations.Destinations
 import graft.sources.Sources
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
@@ -19,6 +18,27 @@ import scala.concurrent.duration.Duration
   *
   * Execution model differences, deliberate and Spark-first:
   *
+  *   - '''A session per pipeline.''' The reference gives each run a fresh
+  *     SessionContext. Here each run works on a clone of the caller's
+  *     session (`GraftShims.cloneSession`): it starts with the caller's
+  *     confs, temp views (so `in_memory` sources resolve), functions and
+  *     extensions, and its own views and confs never reach the caller or a
+  *     concurrent pipeline. The clone shares the default artifact class
+  *     loader even when the caller has artifact isolation on, so its code
+  *     compiles once per JVM, not once per pipeline. The caller gets back
+  *     the final stage's frame re-bound to its own session, and with it the
+  *     final stage's view (no destination) or the `in_memory` destination's
+  *     view.
+  *   - '''Settings from input size.''' Once the sources are registered,
+  *     [[ExecutionPolicy]] sizes the planned input from the analyzed plans
+  *     and the Delta log, without a job. Inputs of at most the minimum
+  *     coalesced partition size per core (4 MiB on 4 cores) run with
+  *     adaptive execution off and one shuffle partition; the rest, and
+  *     inputs of unknown size, keep the session's settings. The settings
+  *     cover the work done inside `run`: stages, debug outputs and every
+  *     destination write but `in_memory`. What the caller gets back (the
+  *     returned frame, the final stage's view, the `in_memory`
+  *     destination) is planned and run later under the caller's settings.
   *   - '''No collect-to-driver.''' The reference materializes every stage
   *     into driver memory (`collect_partitioned` → MemTable,
   *     stages/mod.rs:150-167). Here a stage is a temp view over a Catalyst
@@ -29,8 +49,9 @@ import scala.concurrent.duration.Duration
   *     `explain_analyze`) is persisted and eagerly computed so concurrent
   *     consumers share one evaluation instead of recomputing the subtree.
   *   - '''TTL eviction''' (reference lib.rs:223-274): after each group, any
-  *     stage with no remaining consumer is dropped from the catalog and
-  *     unpersisted, bounding executor-memory footprint on long pipelines.
+  *     stage with no remaining consumer is unpersisted, bounding
+  *     executor-memory footprint on long pipelines (the cache manager is
+  *     shared with the caller; the views go with the clone).
   */
 object Runner {
 
@@ -56,11 +77,15 @@ object Runner {
       shouldAbort: () => Boolean = () => false): Option[DataFrame] = {
     val t0 = System.nanoTime()
     // stage SQL may use the reference's JSON pack (incl. ->/->> rewrites)
+    // and the SpaceSaving heavy-hitters aggregate: registered once on the
+    // caller, every clone inherits them
     graft.functions.JsonUdfs.registerOnce(spark)
-    // ... and the SpaceSaving heavy-hitters aggregate
     graft.functions.HeavyHitters.registerOnce(spark)
     val stageSql = validate(spark, pipeline)
     tracker.onProgress(ProgressEvent.Started)
+    // the pipeline's own session: its views and execution settings die with
+    // it and never reach the caller or a concurrent pipeline
+    val session = GraftShims.cloneSession(spark)
 
     // Per-run executor, not a shared pool: Spark job-group / local properties
     // are InheritableThreadLocals, so pooled threads keep whatever group was
@@ -77,27 +102,17 @@ object Runner {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
 
-    pipeline.destination.foreach(Destinations.prepare(spark, _))
+    pipeline.destination.foreach(Destinations.prepare(session, _))
 
-    // Unlike the reference, whose per-run SessionContext dies with a failed
-    // pipeline, our SparkSession is shared (service/embedding reuse) — so a
-    // failed run must clean up every view and cached frame it created.
+    // The cache manager is shared with the caller, so a failed run must
+    // unpersist every frame it cached; its views die with the clone.
     val persisted = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
     val results = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-    def cleanupOnFailure(): Unit = {
-      persisted.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-      results.keys.foreach(n => try spark.catalog.dropTempView(n) catch { case _: Throwable => () })
-      pipeline.sources.foreach {
-        case _: InMemorySource => () // caller-owned, never ours to drop
-        case src => try spark.catalog.dropTempView(src.name) catch { case _: Throwable => () }
-      }
-    }
 
     // Await ALL futures to settle (success or failure) before rethrowing the
-    // first failure: fail-fast Await.result would run cleanupOnFailure while
-    // sibling futures are still registering views / persisting frames, and
-    // whatever they register after the cleanup pass leaks in the shared
-    // session forever.
+    // first failure: fail-fast Await.result would unpersist while sibling
+    // futures are still persisting frames, and whatever they cache after
+    // the cleanup pass leaks in the shared cache manager forever.
     def awaitSettled(fs: Seq[Future[Unit]]): Unit = {
       val settled = Await.result(
         Future.traverse(fs)(f => f.transform(scala.util.Success(_))), Duration.Inf)
@@ -114,7 +129,7 @@ object Runner {
     abortCheck()
     awaitSettled(pipeline.sources.map { src =>
       Future {
-        try Sources.register(spark, src)
+        try Sources.register(session, src)
         catch {
           case e: Exception =>
             throw PipelineError(s"source '${src.name}' failed to register: ${e.getMessage}")
@@ -122,6 +137,9 @@ object Runner {
         tracker.onProgress(ProgressEvent.SourceRegistered(src.name))
       }
     })
+    ExecutionPolicy.confs(session, pipeline).foreach {
+      case (k, v) => session.conf.set(k, v)
+    }
 
     // -- stage groups
     val allStages = pipeline.stages.flatten
@@ -134,7 +152,7 @@ object Runner {
           tracker.onProgress(ProgressEvent.StageStarted(stage.name, gi))
           val s0 = System.nanoTime()
           try {
-            val df = spark.sql(stageSql(stage.name))
+            val df = session.sql(stageSql(stage.name))
             val consumers = consumerCount(pipeline, stage, lastStage)
             if (consumers >= 2 || stage.explainAnalyze) {
               df.persist()
@@ -153,37 +171,39 @@ object Runner {
         }
       })
 
-      // TTL eviction: drop every stage registered so far whose last consumer
-      // group is <= gi (never the final stage — it feeds the destination).
+      // TTL eviction: unpersist every stage so far whose last consumer group
+      // is <= gi (never the final stage — it feeds the destination).
       pipeline.stages.take(gi + 1).flatten.foreach { s =>
-        val isFinal = lastStage.exists(_.name == s.name)
-        if (!isFinal && results.contains(s.name) && lastConsumerGroup(pipeline, s.name) <= gi) {
-          spark.catalog.dropTempView(s.name)
+        if (!lastStage.exists(_.name == s.name) && lastConsumerGroup(pipeline, s.name) <= gi)
           persisted.remove(s.name).foreach(_.unpersist())
-          results.remove(s.name)
-        }
       }
     }
 
-    // -- destination
+    // -- destination; what the caller gets back is re-bound to its session
     abortCheck()
     val finalDf = lastStage.map(s => results(s.name))
-    (pipeline.destination, finalDf) match {
-      case (Some(dest), Some(df)) =>
-        Destinations.write(spark, dest, df)
+    val out = finalDf.map(GraftShims.ofRows(spark, _))
+    pipeline.destination match {
+      case Some(dest) => // validate: a destination comes with a stage
+        dest match {
+          case _: InMemoryDestination => Destinations.write(spark, dest, out.get)
+          case _ => Destinations.write(session, dest, finalDf.get)
+        }
         tracker.onProgress(ProgressEvent.DestinationCompleted(dest.name))
         // reference deregisters the last stage after the write (lib.rs:177-204)
-        lastStage.foreach { s =>
-          spark.catalog.dropTempView(s.name)
-          persisted.remove(s.name).foreach(_.unpersist())
-        }
-      case _ => () // no destination: last stage stays registered and queryable
+        lastStage.foreach(s => persisted.remove(s.name).foreach(_.unpersist()))
+      case None => // the last stage stays queryable on the caller
+        lastStage.zip(out).foreach { case (s, df) => df.createOrReplaceTempView(s.name) }
     }
 
     tracker.onProgress(ProgressEvent.Completed((System.nanoTime() - t0) / 1000000))
-    finalDf
+    out
 
-    } catch { case e: Throwable => cleanupOnFailure(); throw e }
+    } catch {
+      case e: Throwable =>
+        persisted.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
+        throw e
+    }
     } finally pool.shutdown()
   }
 

@@ -1240,6 +1240,16 @@ object DeltaLog {
     new LazySnapshot(spark, st, metaReplay(spark, tablePath, st))
   }
 
+  /** The latest snapshot's live data bytes, found without a Spark job: the
+    * version checksum's `tableSizeBytes` when the writer left one, else the
+    * sum over the driver replay of a small log; None when neither exists.
+    */
+  def liveBytes(spark: SparkSession, tablePath: String): Option[Long] = {
+    val st = resolveState(spark, tablePath, None, None)
+    readCrc(spark, tablePath, st.targetVersion).map(_.tableSizeBytes)
+      .orElse(driverReplay(spark, st).map(_.iterator.map(_.size).sum))
+  }
+
   // ------------------------------------------------- protocol capability gate
 
   /** Reader features this bridge actually implements. Anything else on a

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.internal.SQLConf
 
 /** Minimal bridge to `private[sql]` Column↔Expression conversion (the
   * supported classic-mode helpers are sql-package-private in Spark 4).
@@ -28,6 +29,48 @@ object GraftShims {
     val sc = new org.apache.spark.util.SerializableConfiguration(conf)
     () => sc.value
   }
+
+  /** A session on `spark`'s SparkContext and shared state (cache manager,
+    * external catalog) with `spark`'s extensions and a copy of its SQL
+    * confs, temp views and functions, with `confs` set on the copy only:
+    * confs and views set on either session never reach the other.
+    *
+    * The copy never has artifact isolation of its own unless `spark` holds
+    * session artifacts. A clone's artifact state is fixed from its confs
+    * when it is cloned, and a clone of a session with
+    * `spark.sql.artifact.isolation.enabled=true` (Spark 4.1's default) is
+    * an artifact session of its own: every executor builds it a fresh class
+    * loader, so its whole-stage code compiles again and its jobs run
+    * slower. Such a session is cloned through an intermediate clone with
+    * isolation off. Well under a millisecond for a session built with the
+    * setting off (as `graft.Sessions` does), a few with the intermediate.
+    */
+  def cloneSession(spark: SparkSession, confs: Map[String, String] = Map.empty): SparkSession = {
+    val caller = spark.asInstanceOf[classic.SparkSession]
+    val isolation = SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
+    // `sessionArtifactAdded` is protected in Scala, public in the bytecode
+    def hasArtifacts = {
+      val am = caller.artifactManager
+      am.getClass.getMethod("sessionArtifactAdded").invoke(am)
+        .asInstanceOf[java.util.concurrent.atomic.AtomicBoolean].get
+    }
+    val base =
+      if (caller.conf.get(isolation).toBoolean && !hasArtifacts) {
+        val shared = caller.cloneSession()
+        shared.conf.set(isolation, "false")
+        shared
+      } else caller
+    val clone = base.cloneSession()
+    confs.foreach { case (k, v) => clone.conf.set(k, v) }
+    clone
+  }
+
+  /** `df`'s analyzed plan as a frame of `spark`: planned and run under
+    * `spark`'s confs from then on (the `classic.Dataset.ofRows` the
+    * public API hides).
+    */
+  def ofRows(spark: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
 
   /** `spark.sql.files.maxPartitionBytes` as a Long (the typed SQLConf
     * accessor is sql-package-private).

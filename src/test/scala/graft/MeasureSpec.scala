@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 /** The measurement harness's contracts: which queries a name filter selects,
   * that materialization isolates queries from each other's cached frames,
-  * and the exact shape of `Bench`'s stdout line and `bench_full.json`.
+  * and the exact shape of `Bench`'s stdout line and `target/bench_full.json`.
   */
 class MeasureSpec extends SparkSpec {
   private val mapper = new ObjectMapper()
@@ -75,7 +75,7 @@ class MeasureSpec extends SparkSpec {
     assert(l.get("queries_shown").asInt == 20)
     assert(l.get("queries").fieldNames.asScala.toSeq == (23 to 4 by -1).map(i => f"z$i%02d"))
     assert(l.get("queries").get("z23").asDouble == 24.0)
-    assert(l.get("queries_full").asText == "bench_full.json")
+    assert(l.get("queries_full").asText == "target/bench_full.json")
     assert(f.get("queries").size == 25)
     val q = f.get("queries").get("z03_query")
     assert(q.fieldNames.asScala.toSeq == Seq("sec", "cpu_sec", "first_sec"))

@@ -923,4 +923,48 @@ class IcebergWriteSpec extends SparkSpec {
     assert(!Files.list(Paths.get(t, "metadata")).iterator().asScala
       .exists(_.getFileName.toString.startsWith(".tmp-")))
   }
+
+  test("an append's int64-micros timestamps stay on its write: a concurrent plain parquet write keeps INT96") {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val base = tmpDir("icew-ts-leak")
+    val t = base.resolve("t").toString
+    val tsSchema = StructType(Seq(StructField("id", LongType), StructField("ts", TimestampType)))
+    IcebergWrite.create(spark, t, tsSchema)
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    def frame(id: Long) =
+      spark.createDataFrame(java.util.List.of(Row(id, ts)), tsSchema)
+    /** The physical type of `ts` in each parquet file under `dir`. */
+    def tsTypes(dir: java.nio.file.Path): Set[PrimitiveTypeName] = {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), new org.apache.hadoop.conf.Configuration()))
+        try r.getFooter.getFileMetaData.getSchema.getFields.asScala.find(_.getName == "ts").get.asPrimitiveType
+          .getPrimitiveTypeName
+        finally r.close()
+      }.toSet
+      finally walk.close()
+    }
+    var plainWrites = 0
+    (1 to 20).foreach { i =>
+      val append = Future(IcebergWrite.append(spark, t, frame(i.toLong)))
+      // plain writes for as long as the append runs, at least one
+      var j = 0
+      while (j == 0 || !append.isCompleted) {
+        val plain = base.resolve(s"plain-$i-$j")
+        frame(0L).coalesce(1).write.parquet(plain.toString)
+        assert(tsTypes(plain) == Set(PrimitiveTypeName.INT96), s"append $i, plain write $j")
+        j += 1
+      }
+      plainWrites += j
+      Await.result(append, 1.minute)
+    }
+    assert(plainWrites >= 20)
+    assert(tsTypes(java.nio.file.Paths.get(t, "data")) == Set(PrimitiveTypeName.INT64))
+    assert(IcebergRead.read(spark, t).count() == 20L)
+  }
 }

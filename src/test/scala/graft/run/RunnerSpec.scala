@@ -473,4 +473,183 @@ class RunnerSpec extends SparkSpec {
     // 10 terms per language present in the corpus slice
     assert(terms.groupBy("lang").count().collect().forall(_.getLong(1) == 10L))
   }
+
+  /** Runs one pipeline twice on `caller`: the second run must compile no
+    * generated code and its tasks must run under the first run's class
+    * loaders. Returns those loaders.
+    */
+  private def assertCodegenReused(caller: org.apache.spark.sql.SparkSession, tag: String): Set[Int] = {
+    val dir = tmpDir(s"runner-codegen-$tag")
+    caller.range(0, 200, 1, 2).selectExpr("id", "id % 7 AS k")
+      .write.parquet(dir.resolve("in").toString)
+    val out = dir.resolve("out")
+    val aq = Aqueduct(
+      sources = Seq(FileSource("cg_src", ParquetFormat(), Location(dir.resolve("in").toString))),
+      stages = Seq(
+        Seq(Stage("cg_keys", "SELECT k, count(*) AS n, sum(id) AS s FROM cg_src GROUP BY k")),
+        Seq(Stage("cg_out", "SELECT c.id, c.k, g.n, g.s, graft_task_loader() AS loader " +
+          "FROM cg_src c JOIN cg_keys g ON c.k = g.k"))),
+      destination = Some(FileDestination("cg_out", Location(out.toString),
+        ParquetDestFormat(Map.empty), singleFile = false)))
+    def loaders(): Set[Int] =
+      spark.read.parquet(out.toString).select("loader").distinct().collect().map(_.getInt(0)).toSet
+    Runner.run(caller, aq, new CollectingTracker)
+    val firstLoaders = loaders()
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Runner.run(caller, aq, new CollectingTracker)
+    assert(org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount ==
+      compiles, "the second run compiled generated code again")
+    assert(loaders() == firstLoaders, "the second run's tasks ran under a new class loader")
+    firstLoaders
+  }
+
+  /** Registers, on `s`, a UDF giving the context class loader each task ran
+    * under (one value per row).
+    */
+  private def registerTaskLoader(s: org.apache.spark.sql.SparkSession): Unit =
+    s.udf.register("graft_task_loader", org.apache.spark.sql.functions.udf(() =>
+      System.identityHashCode(Thread.currentThread.getContextClassLoader)).asNondeterministic()): Unit
+
+  test("a repeated pipeline compiles no new code and gets no new executor class loader") {
+    registerTaskLoader(spark)
+    assertCodegenReused(spark, "sessions")
+  }
+
+  test("a caller session with artifact isolation on: its pipelines still share the default loader") {
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    // Spark's default, set before the session's first query fixes its
+    // artifact state
+    val caller = spark.newSession()
+    caller.conf.set(isolation, "true")
+    registerTaskLoader(caller)
+    val callerLoaders = caller.range(0, 4, 1, 2).selectExpr("graft_task_loader() AS l")
+      .collect().map(_.getInt(0)).toSet
+    val pipelineLoaders = assertCodegenReused(caller, "isolated")
+    assert(callerLoaders.intersect(pipelineLoaders).isEmpty,
+      "the caller is not isolated, so this case checks nothing")
+    assert(caller.conf.get(isolation) == "true")
+  }
+
+  test("concurrent pipelines: each plans under its own policy and the caller keeps its confs") {
+    import org.apache.spark.sql.types._
+    val dir = tmpDir("runner-iso")
+    spark.range(0, 50).selectExpr("id", "id % 5 AS k").write.parquet(dir.resolve("small").toString)
+    // an RDD-backed view: Spark cannot size it, so its pipeline takes the large side
+    spark.createDataFrame(
+      spark.sparkContext.parallelize((0L until 50L).map(i => Row(i, i % 5)), 2),
+      StructType(Seq(StructField("id", LongType), StructField("k", LongType))))
+      .createOrReplaceTempView("iso_rdd")
+    val small = Aqueduct(
+      sources = Seq(FileSource("iso_small_src", ParquetFormat(),
+        Location(dir.resolve("small").toString))),
+      stages = Seq(
+        Seq(Stage("iso_small_mid", "SELECT k, id FROM iso_small_src WHERE id > 0")),
+        Seq(Stage("iso_small_final",
+          "SELECT k, count(*) AS n FROM iso_small_mid GROUP BY k", explain = true))))
+    val large = Aqueduct(
+      sources = Seq(InMemorySource("iso_rdd")),
+      stages = Seq(
+        Seq(Stage("iso_large_mid", "SELECT k, id FROM iso_rdd WHERE id > 0")),
+        Seq(Stage("iso_large_final",
+          "SELECT k, sum(id) AS s FROM iso_large_mid GROUP BY k", explain = true))),
+      destination = Some(InMemoryDestination("iso_large_out")))
+    // both pipelines hold at their first stage until the other one is there
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    final class Gate extends ProgressTracker {
+      val inner = new CollectingTracker
+      override def onProgress(e: ProgressEvent): Unit = {
+        e match {
+          case ProgressEvent.StageStarted(_, 0) =>
+            barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          case _ => ()
+        }
+        inner.onProgress(e)
+      }
+      override def onOutput(stage: String, t: OutputType, body: String): Unit =
+        inner.onOutput(stage, t, body)
+      def explain: String = inner.outputs.find(_._2 == OutputType.Explain).get._3
+    }
+    val (gs, gl) = (new Gate, new Gate)
+    val confBefore = spark.conf.getAll
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val runs = Seq(Future(Runner.run(spark, small, gs)), Future(Runner.run(spark, large, gl)))
+    runs.foreach(Await.result(_, 2.minutes))
+    try {
+      assert(!gs.explain.contains("AdaptiveSparkPlan"), gs.explain)
+      assert(gl.explain.contains("AdaptiveSparkPlan"), gl.explain)
+      assert(spark.conf.getAll == confBefore)
+      Seq("iso_small_src", "iso_small_mid", "iso_large_mid", "iso_large_final")
+        .foreach(v => assert(!spark.catalog.tableExists(v), v))
+      assert(spark.table("iso_small_final").collect().map(_.getLong(1)).sorted.toSeq ==
+        Seq(9L, 10L, 10L, 10L, 10L))
+      assert(spark.table("iso_large_out").collect().map(_.getLong(1)).sum == (1L until 50L).sum)
+    } finally Seq("iso_rdd", "iso_small_final", "iso_large_out")
+      .foreach(spark.catalog.dropTempView)
+  }
+
+  test("execution policy: planned input bytes from the views and the Delta log, no job") {
+    import org.apache.spark.sql.GraftShims
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir("runner-policy")
+    spark.range(0, 100, 1, 2).selectExpr("id", "CAST(id AS STRING) AS v")
+      .write.parquet(dir.resolve("in").toString)
+    val fileBytes = java.nio.file.Files.list(dir.resolve("in")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(java.nio.file.Files.size(_)).sum
+    val tbl = Location(dir.resolve("tbl").toString)
+    val schema = Seq(Types.FieldSpec("id", org.apache.spark.sql.types.LongType),
+      Types.FieldSpec("v", org.apache.spark.sql.types.StringType))
+    graft.destinations.DeltaWrite.createIfAbsent(spark, tbl.spark, Types.toStruct(schema))
+    graft.destinations.DeltaWrite.append(spark, tbl.spark,
+      spark.read.parquet(dir.resolve("in").toString))
+    val tableBytes = graft.sources.DeltaLog.snapshot(spark, tbl.spark).files.map(_.size).sum
+    val src = FileSource("pol_src", ParquetFormat(), Location(dir.resolve("in").toString))
+    def bytes(dest: Option[Destination], sources: Seq[Source] = Seq(src)): Option[BigInt] = {
+      val session = GraftShims.cloneSession(spark)
+      sources.foreach(graft.sources.Sources.register(session, _))
+      val aq = Aqueduct(sources = sources, stages = Seq(Seq(Stage("s", "SELECT 1"))),
+        destination = dest)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val b = ExecutionPolicy.plannedInputBytes(session, aq)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        assert(jobs.get == 0)
+        b
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(bytes(None) == Some(BigInt(fileBytes)))
+    // an upsert reads the table; an append does not
+    assert(bytes(Some(ManagedTableDestination("d", tbl, TableUpsert(Seq("id")), schema = schema))) ==
+      Some(BigInt(fileBytes + tableBytes)))
+    assert(bytes(Some(ManagedTableDestination("d", tbl, TableAppend, schema = schema))) ==
+      Some(BigInt(fileBytes)))
+    // a view Spark cannot size makes the whole input unknown
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(1L)), 1),
+      org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField(
+        "id", org.apache.spark.sql.types.LongType)))).createOrReplaceTempView("pol_rdd")
+    try {
+      assert(bytes(None, Seq(src, InMemorySource("pol_rdd"))).isEmpty)
+      // the settings: the small side up to the minimum partition size per
+      // core, the session's own (none) above it or when the size is unknown
+      val small = Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "1")
+      val cores = spark.sparkContext.defaultParallelism
+      def confs(minPartition: Long, sources: Seq[Source] = Seq(src)): Map[String, String] = {
+        val session = GraftShims.cloneSession(spark,
+          Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> minPartition.toString))
+        sources.foreach(graft.sources.Sources.register(session, _))
+        ExecutionPolicy.confs(session, Aqueduct(sources = sources, stages = Seq(Seq(Stage("s", "SELECT 1")))))
+      }
+      assert(confs((fileBytes + cores - 1) / cores) == small)
+      assert(confs((fileBytes - 1) / cores) == Map.empty)
+      assert(confs(1L << 40, Seq(src, InMemorySource("pol_rdd"))) == Map.empty)
+    } finally spark.catalog.dropTempView("pol_rdd")
+  }
 }

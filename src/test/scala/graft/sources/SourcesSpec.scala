@@ -217,4 +217,21 @@ class SourcesSpec extends SparkSpec {
     val corruptLoc = Location(corrupt.toString)
     assert(assertLikeSpark(dir("corrupt", corruptLoc), corruptLoc, driverSide = false).isEmpty)
   }
+
+  test("a bare path with a bracket or brace glob reads the files it names") {
+    val d = tmpDir("src-brackets").resolve("t")
+    (0 to 2).foreach(i =>
+      writeOne(spark.range(i * 10L, i * 10L + 3).toDF("id"), d.resolve(s"part-$i.parquet")))
+    def ids(src: Source): Seq[Long] =
+      Sources.load(spark, src).collect().map(_.getLong(0)).sorted.toSeq
+    val brackets = Location(d.toString + "/part-[01].parquet")
+    assert(brackets.spark.endsWith("/part-[01].parquet"), brackets.spark)
+    assert(assertLikeSpark(file("brackets", brackets), brackets, driverSide = false).get
+      .fieldNames.toSeq == Seq("id"))
+    assert(ids(file("brackets", brackets)) == Seq(0L, 1L, 2L, 10L, 11L, 12L))
+    val braces = Location(d.toString + "/part-{0,2}.parquet")
+    assert(braces.spark.endsWith("/part-{0,2}.parquet"), braces.spark)
+    assert(ids(file("braces", braces)) == Seq(0L, 1L, 2L, 20L, 21L, 22L))
+  }
 }
+
