@@ -413,6 +413,53 @@ class DeltaWriteSpec extends SparkSpec {
     assert(res.map(_.getString(1)).toSeq == Seq("b2"))
   }
 
+  test("row-level rewrites: SQL executions and jobs per op on a plain table") {
+    import spark.implicits._
+    val table = tmpDir("dw-exec-count").toString
+    DeltaWrite.createIfAbsent(spark, table, StructType(Seq(
+      StructField("id", LongType), StructField("v", StringType))))
+    DeltaWrite.append(spark, table,
+      (1L to 40L).map(i => (i, s"v$i")).toDF("id", "v").repartition(2))
+    DeltaWrite.append(spark, table,
+      (100L to 140L).map(i => (i, s"w$i")).toDF("id", "v").repartition(2))
+    val executions = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            executions.incrementAndGet(): Unit
+          case _ =>
+        }
+    }
+    def counted(op: => Long): (Int, Int) = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      executions.set(0); jobs.set(0)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        op
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      (executions.get, jobs.get)
+    }
+    // a broadcast-sized upsert: key-range aggregate, hit detection, write
+    val upsert = counted(DeltaWrite.upsert(spark, table,
+      Seq((5L, "u"), (120L, "u"), (500L, "n")).toDF("id", "v"), Seq("id")))
+    // copy-on-write delete: hit detection, write
+    val delete = counted(DeltaWrite.delete(spark, table, "id = 7"))
+    // replace: hit detection, write
+    val replace = counted(DeltaWrite.replace(spark, table,
+      Seq((130L, "r")).toDF("id", "v"), Seq(ReplaceCondition("id", "130"))))
+    info(s"(executions, jobs): upsert $upsert, delete $delete, replace $replace")
+    // executions are exact; jobs depend on adaptive execution's stage
+    // splitting, so they are bounds
+    assert(upsert._1 == 3 && upsert._2 <= 10, s"upsert $upsert")
+    assert(delete._1 == 2 && delete._2 <= 3, s"delete $delete")
+    assert(replace._1 == 2 && replace._2 <= 3, s"replace $replace")
+  }
+
   test("partition-condition replace prunes by partitionValues before any scan") {
     import spark.implicits._
     val table = tmpDir("dw-prune-part")
