@@ -131,17 +131,15 @@ object DeltaWrite {
       Some(DeltaLog.rowIdHighWaterMark(snap))
     else None
 
-  /** The table's materialized row-id / row-commit-version column names —
-    * required once row tracking is on (this writer records them at create).
+  /** The table's materialized row-id / row-commit-version column names
+    * when it tracks rows (this writer records them at create), else empty.
     */
-  private def materializedRowCols(snap: DeltaLog.Snapshot): (String, String) = (
-    snap.configuration.getOrElse("delta.rowTracking.materializedRowIdColumnName",
-      throw new IllegalStateException(
-        "row-tracking table lacks delta.rowTracking.materializedRowIdColumnName")),
-    snap.configuration.getOrElse(
-      "delta.rowTracking.materializedRowCommitVersionColumnName",
-      throw new IllegalStateException(
-        "row-tracking table lacks delta.rowTracking.materializedRowCommitVersionColumnName")))
+  private def rowIdCols(snap: DeltaLog.Snapshot): Seq[String] =
+    if (!DeltaLog.rowTrackingEnabled(snap)) Nil
+    else Seq("delta.rowTracking.materializedRowIdColumnName",
+      "delta.rowTracking.materializedRowCommitVersionColumnName").map(k =>
+      snap.configuration.getOrElse(k,
+        throw new IllegalStateException(s"row-tracking table lacks $k")))
 
   /** Rewrite-side half of STABLE row ids: read `files` with the survivors'
     * stable ids (and last-change commit versions) attached under the
@@ -154,14 +152,12 @@ object DeltaWrite {
       tablePath: String,
       snap: DeltaLog.Snapshot,
       files: Seq[DeltaLog.AddFile]): (DataFrame, Seq[String]) =
-    if (!DeltaLog.rowTrackingEnabled(snap))
-      (DeltaLog.readFiles(spark, tablePath, snap, files), Nil)
-    else {
-      val (matId, matVer) = materializedRowCols(snap)
-      val df = DeltaLog.readFilesWithRowIds(spark, tablePath, snap, files)
-        .withColumnRenamed("_row_id", matId)
-        .withColumnRenamed("_row_commit_version", matVer)
-      (df, Seq(matId, matVer))
+    rowIdCols(snap) match {
+      case Seq(matId, matVer) =>
+        (DeltaLog.readFilesWithRowIds(spark, tablePath, snap, files)
+          .withColumnRenamed("_row_id", matId)
+          .withColumnRenamed("_row_commit_version", matVer), Seq(matId, matVer))
+      case _ => (DeltaLog.readFiles(spark, tablePath, snap, files), Nil)
     }
 
   /** Refuse to commit to tables whose protocol demands semantics we don't
@@ -1053,155 +1049,195 @@ object DeltaWrite {
     } finally identityCleanup()
   }
 
+  // ------------------------------------------------------ row-level rewrites
+
+  /** The touched files' rows as [[rewriteFiles]] hands them to an op:
+    * `rows` is None when no file was touched. `rowIdCols` names the
+    * materialized row-id columns `rows` carries and the op's output must
+    * carry too (null where a row takes a fresh id); empty when the table
+    * does not track rows.
+    */
+  private final case class Touched(rows: Option[DataFrame], rowIdCols: Seq[String])
+
+  /** The one row-level rewrite step under upsert, merge (and so update),
+    * replace and copy-on-write delete.
+    *
+    * Scale shape: `candidates` are the files the op's own predicate could
+    * not rule out on add-action stats (the check runs on executors over
+    * the distributed add index, so only candidates reach the driver).
+    * `hits` maps the candidates' rows to the rows the op acts on, and one
+    * distinct `_graft_file` collect names the files that really hold them
+    * (None: every candidate is touched, as MERGE's NOT MATCHED BY SOURCE
+    * must see every target row — delta-spark scans the full table then
+    * too). Only those files are read again, through [[readForRewrite]]
+    * (row ids ride along), removed and rewritten. The rest of the table
+    * is untouched bytes and untouched log entries: a sparse rewrite of a
+    * 100 TB table reads the candidate slice and rewrites the hit files.
+    *
+    * `output` builds the rows to write from the touched rows (table
+    * columns + row-id columns; None: nothing to write, so no commit).
+    * `changes` builds the CDF rows (table columns + `_change_type`) and is
+    * asked only when the table has CDF on: copied-over survivors sit in
+    * rewritten files, so without cdc files a reader would derive every one
+    * of them as a delete + insert. The commit takes
+    * [[Concurrency.ReadScope.Table]] and the incremental checksum. Returns
+    * the new version, or the current one when nothing changed (no rows to
+    * write, or no file, cdc or metadata action and no transaction).
+    */
+  private def rewriteFiles(
+      spark: SparkSession,
+      tablePath: String,
+      snap: DeltaLog.Snapshot,
+      candidates: Seq[DeltaLog.AddFile],
+      hits: Option[DataFrame => DataFrame],
+      output: Touched => Option[DataFrame],
+      changes: Touched => Seq[DataFrame],
+      operation: String,
+      opParams: Seq[(String, String)] = Nil,
+      withMeta: Option[(StructType, Seq[String])] = None,
+      metaConfig: Map[String, String] = Map.empty,
+      txn: Option[(String, Long)] = None): Long = {
+    import org.apache.spark.sql.functions.col
+    val table = new Path(tablePath)
+    val touchedFiles: Seq[DeltaLog.AddFile] = hits match {
+      case _ if candidates.isEmpty => Nil
+      case None => candidates
+      case Some(hit) =>
+        val cand = DeltaLog.readFiles(spark, tablePath, snap, candidates, withFilePath = true)
+        val hitFiles = hit(cand).select(col("_graft_file")).distinct()
+          .collect().map(r => new Path(r.getString(0)).toString).toSet
+        val f = fs(spark, table)
+        candidates.filter(c => hitFiles.contains(new Path(
+          f.makeQualified(new Path(table, DeltaLog.decodePath(c.path))).toString).toString))
+    }
+    val touched =
+      if (touchedFiles.isEmpty) Touched(None, rowIdCols(snap))
+      else {
+        val (rows, idCols) = readForRewrite(spark, tablePath, snap, touchedFiles)
+        Touched(Some(rows), idCols)
+      }
+    val rows = output(touched) match {
+      case Some(r) => r
+      case None => return snap.version
+    }
+    val cdcs = if (!cdfEnabled(snap)) Nil else changes(touched) match {
+      case Seq() => Nil
+      case cs => writeChangeData(spark, table, snap, cs.reduce(_ unionByName _))
+    }
+    val (phys, physParts) = toPhysical(rows, snap.schema, snap.partitionColumns,
+      snap.columnMappingMode, passthrough = touched.rowIdCols,
+      fieldIds = icebergCompatOn(snap))
+    val adds = writeDataFiles(spark, table, phys, physParts,
+      statsExclude = touched.rowIdCols.toSet)
+    if (adds.isEmpty && touchedFiles.isEmpty && cdcs.isEmpty && withMeta.isEmpty && txn.isEmpty)
+      return snap.version
+    commit(spark, table, snap.version + 1, operation,
+      withMeta = withMeta, adds = adds, removes = touchedFiles.map(_.path),
+      metaConfig = metaConfig, cdcs = cdcs, ictEnabled = ictOn(snap),
+      rowIdBase = rowIdBaseOf(snap),
+      crc = CrcPlan.Incremental(touchedFiles.map(_.size)), txn = txn,
+      opParams = opParams, readScope = Some(Concurrency.ReadScope.Table))
+  }
+
+  /** Candidate files for a keyed rewrite: one min/max/null-count
+    * aggregate over `src`'s key values (one small row to the driver)
+    * range-prunes every file on its add-action stats; files `keep`
+    * rejects drop out too. `keys` pairs a target column with the `src`
+    * column holding its values.
+    */
+  private def filesInKeyRange(
+      ls: DeltaLog.LazySnapshot,
+      snap: DeltaLog.Snapshot,
+      src: DataFrame,
+      keys: Seq[(String, Column)],
+      keep: DeltaLog.AddFile => Boolean = _ => true): Seq[DeltaLog.AddFile] = {
+    import org.apache.spark.sql.functions.{max, min, sum}
+    val aggs = keys.zipWithIndex.flatMap { case ((_, c), i) =>
+      Seq(min(c).as(s"_min_$i"), max(c).as(s"_max_$i"),
+        sum(c.isNull.cast("long")).as(s"_null_$i"))
+    }
+    val r = src.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val ranges = keys.zipWithIndex.map { case ((tc, _), i) =>
+      (tc, snap.schema(tc).dataType, r.get(3 * i), r.get(3 * i + 1), r.getLong(3 * i + 2) > 0L)
+    }
+    ls.filesWhere(f => keep(f) && ranges.forall { case (tc, dt, lo, hi, hasNull) =>
+      graft.sources.DeltaStats.mayContain(
+        graft.sources.DeltaStats.interval(snap, f, tc), dt, lo, hi, hasNull)
+    })
+  }
+
   /** MERGE keyed on `keys`: existing rows whose key matches an incoming
     * row are replaced, everything else is kept (reference
-    * delta/src/lib.rs:249-286; key equality is [[keyEquals]]), with
-    * two-stage file pruning: add-action stats range-exclude
-    * files driver-side (never read), then an exact `_metadata.file_path`
-    * semi-join over the surviving candidates finds the files that really
-    * hold matching keys. Only touched files are removed and rewritten; the
-    * rest of the table is untouched bytes AND untouched log entries — a
-    * sparse upsert into a 100 TB table reads the candidate slice and
-    * rewrites only the hit files.
+    * delta/src/lib.rs:249-286; key equality is [[keyEquals]]). Duplicate
+    * incoming keys are allowed: every incoming row is written once. The
+    * candidates are the files in the incoming key range, the hits the
+    * rows matching an incoming key ([[rewriteFiles]]).
     */
   def upsert(spark: SparkSession, tablePath: String, df: DataFrame, keys: Seq[String],
       txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit, max => smax, min => smin, sum}
-    require(keys.nonEmpty, "upsert requires at least one key column")
+    import org.apache.spark.sql.functions.{col, lit, min}
+    require(keys.nonEmpty, s"upsert on $tablePath: requires at least one key column")
     val ls = DeltaLog.lazySnapshot(spark, tablePath)
     val snap = ls.meta
     requireWritable(tablePath, snap, "upsert", removesData = true)
-    keys.foreach(k => require(snap.schema.fieldNames.contains(k), s"upsert key $k not in table"))
+    keys.foreach(k => require(snap.schema.fieldNames.contains(k),
+      s"upsert on $tablePath: upsert key $k not in table"))
     val incoming = castToSchema(enforceObligations(snap, df), snap.schema).cache()
     try {
-      val keyTypes = keys.map(k => k -> snap.schema(k).dataType).toMap
-
-      // stage 1: incoming per-key min/max/has-null (one small aggregate to
-      // the driver) range-prunes files on their add-action stats — the
-      // stats check runs ON EXECUTORS over the distributed add index, so
-      // only candidate files ever reach driver memory
-      val candidates = {
-        val aggs = keys.flatMap(k => Seq(
-          smin(col(k)).as(s"_min_$k"), smax(col(k)).as(s"_max_$k"),
-          sum(col(k).isNull.cast("long")).as(s"_null_$k")))
-        val r = incoming.agg(aggs.head, aggs.tail: _*).collect()(0)
-        val inMin = keys.map(k => k -> r.get(r.fieldIndex(s"_min_$k"))).toMap
-        val inMax = keys.map(k => k -> r.get(r.fieldIndex(s"_max_$k"))).toMap
-        val inHasNull = keys.map(k => k -> (r.getLong(r.fieldIndex(s"_null_$k")) > 0L)).toMap
-        ls.filesWhere(f => keys.forall(k =>
-          graft.sources.DeltaStats.mayContain(
-            graft.sources.DeltaStats.interval(snap, f, k), keyTypes(k),
-            inMin(k), inMax(k), inHasNull(k))))
-      }
-
-      // stage 2: exact file-level hit detection over candidates only
-      val srcKeysB = broadcastIfSmall(
-        incoming.select(keys.map(col): _*).distinct())
-      val touched: Seq[DeltaLog.AddFile] =
-        if (candidates.isEmpty) Nil
-        else {
-          val cand = DeltaLog.readFiles(spark, tablePath, snap, candidates, withFilePath = true)
-          val cond = keys.map(k =>
-            keyEquals(cand(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
-          val hit = cand.join(srcKeysB, cond, "left_semi")
-            .select(col("_graft_file")).distinct()
-            .collect().map(r => new Path(r.getString(0)).toString).toSet
-          val table = new Path(tablePath)
-          val f = fs(spark, table)
-          candidates.filter(c => hit.contains(
-            new Path(f.makeQualified(new Path(table, DeltaLog.decodePath(c.path))).toString).toString))
-        }
-
-      // survivors of touched files keep their non-matching rows. Row
-      // tracking: survivors carry their stable ids into the rewrite via
-      // the materialized columns; UPDATED rows INHERIT the replaced row's
-      // stable id (same logical row, new commit version — matVer stays
-      // null so the read-side coalesce falls to this commit); inserts get
-      // fresh ids (both materialized columns null).
-      val tracking = DeltaLog.rowTrackingEnabled(snap)
+      val srcKeys = broadcastIfSmall(incoming.select(keys.map(col): _*).distinct())
+      // `b` holds the key columns under the names `bName` gives them
+      def keysMatch(a: DataFrame, b: DataFrame, bName: String => String = identity): Column =
+        keys.map(k => keyEquals(a(k), b(bName(k)), snap.schema(k).dataType)).reduce(_ && _)
+      def hit(rows: DataFrame) = rows.join(srcKeys, keysMatch(rows, srcKeys), "left_semi")
       val cols = snap.schema.fieldNames.toIndexedSeq.map(col)
-      val (touchedDfOpt, matCols) =
-        if (touched.isEmpty) (None, if (tracking) materializedRowCols(snap) match {
-          case (a, b) => Seq(a, b)
-        } else Nil)
-        else {
-          val (df, mc) = readForRewrite(spark, tablePath, snap, touched)
-          (Some(df), mc)
-        }
-      val outCols = cols ++ matCols.map(col)
-      val incomingTracked =
-        if (!tracking) incoming
-        else {
-          val (matId, matVer) = materializedRowCols(snap)
-          val withId = touchedDfOpt match {
-            case None => incoming.withColumn(matId, lit(null).cast("long"))
-            case Some(tdf) =>
-              val condT = keys.map(k =>
-                keyEquals(tdf(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
-              // min() disambiguates duplicate-key pre-images deterministically
-              val oldIds = broadcastIfSmall(
-                tdf.join(srcKeysB, condT, "left_semi")
-                  .groupBy(keys.map(col): _*)
-                  .agg(org.apache.spark.sql.functions.min(col(matId)).as(matId))
-                  .select(keys.map(k => col(k).as(s"_k_$k")) :+ col(matId): _*))
-              val condI = keys.map(k =>
-                keyEquals(incoming(k), oldIds(s"_k_$k"), keyTypes(k))).reduce(_ && _)
-              incoming.join(oldIds, condI, "left")
-                .drop(keys.map("_k_" + _): _*)
+      rewriteFiles(spark, tablePath, snap,
+        candidates = filesInKeyRange(ls, snap, incoming, keys.map(k => k -> col(k))),
+        hits = Some(hit(_)),
+        output = { t =>
+          // row tracking: an updated row inherits the smallest id among the
+          // rows its key replaced (its commit version nulls to this
+          // commit); inserts get fresh ids (both columns null)
+          val incomingTracked = t.rowIdCols match {
+            case Seq(matId, matVer) =>
+              val withId = t.rows match {
+                case None => incoming.withColumn(matId, lit(null).cast("long"))
+                case Some(rows) =>
+                  val oldIds = broadcastIfSmall(hit(rows)
+                    .groupBy(keys.map(col): _*)
+                    .agg(min(col(matId)).as(matId))
+                    .select(keys.map(k => col(k).as(s"_k_$k")) :+ col(matId): _*))
+                  incoming.join(oldIds, keysMatch(incoming, oldIds, "_k_" + _), "left")
+                    .drop(keys.map("_k_" + _): _*)
+              }
+              withId.withColumn(matVer, lit(null).cast("long"))
+            case _ => incoming
           }
-          withId.withColumn(matVer, lit(null).cast("long"))
-        }
-      val rewritten = touchedDfOpt match {
-        case None => incomingTracked
-        case Some(touchedDf) =>
-          val cond = keys.map(k =>
-            keyEquals(touchedDf(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
-          touchedDf.join(srcKeysB, cond, "left_anti")
-            .select(outCols: _*)
-            .unionByName(incomingTracked.select(outCols: _*))
-      }
-      // CDF: matched old rows are update_preimage, their incoming
-      // replacements update_postimage, unmatched incoming rows insert —
-      // without cdc files a reader would mis-derive every copied-over
-      // survivor row as delete+insert, so a partial rewrite MUST emit them
-      val cdcs =
-        if (!cdfEnabled(snap)) Nil
-        else {
-          import org.apache.spark.sql.functions.lit
-          val pre = touchedDfOpt.map { touchedDf =>
-            val cond = keys.map(k =>
-              keyEquals(touchedDf(k), srcKeysB(k), keyTypes(k))).reduce(_ && _)
-            touchedDf.join(srcKeysB, cond, "left_semi").select(cols: _*)
-          }
+          val outCols = cols ++ t.rowIdCols.map(col)
+          Some(t.rows.fold(incomingTracked) { rows =>
+            rows.join(srcKeys, keysMatch(rows, srcKeys), "left_anti").select(outCols: _*)
+              .unionByName(incomingTracked.select(outCols: _*))
+          })
+        },
+        // matched old rows are update_preimage, their incoming replacements
+        // update_postimage, unmatched incoming rows insert
+        changes = { t =>
+          val pre = t.rows.map(hit(_).select(cols: _*))
           val (post, ins) = pre match {
             case Some(p) =>
-              val oldKeys = broadcastIfSmall(
-                p.select(keys.map(col): _*).distinct())
-              val cond = keys.map(k =>
-                keyEquals(incoming(k), oldKeys(k), keyTypes(k))).reduce(_ && _)
-              (Some(incoming.join(oldKeys, cond, "left_semi").select(cols: _*)),
-                incoming.join(oldKeys, cond, "left_anti").select(cols: _*))
+              val oldKeys = broadcastIfSmall(p.select(keys.map(col): _*).distinct())
+              val m = keysMatch(incoming, oldKeys)
+              (Some(incoming.join(oldKeys, m, "left_semi").select(cols: _*)),
+                incoming.join(oldKeys, m, "left_anti").select(cols: _*))
             case None => (None, incoming.select(cols: _*))
           }
-          val changes = (
-            pre.map(_.withColumn("_change_type", lit("update_preimage"))).toSeq ++
+          pre.map(_.withColumn("_change_type", lit("update_preimage"))).toSeq ++
             post.map(_.withColumn("_change_type", lit("update_postimage"))).toSeq :+
-            ins.withColumn("_change_type", lit("insert"))).reduce(_ unionByName _)
-          writeChangeData(spark, new Path(tablePath), snap, changes)
-        }
-      val (phys, physParts) =
-        toPhysical(rewritten, snap.schema, snap.partitionColumns,
-          snap.columnMappingMode, passthrough = matCols,
-          fieldIds = icebergCompatOn(snap))
-      val adds = writeDataFiles(spark, new Path(tablePath), phys, physParts,
-        statsExclude = matCols.toSet)
-      commit(spark, new Path(tablePath), snap.version + 1, "MERGE",
-        withMeta = None, adds = adds, removes = touched.map(_.path),
-        cdcs = cdcs, ictEnabled = ictOn(snap), rowIdBase = rowIdBaseOf(snap),
-        crc = CrcPlan.Incremental(touched.map(_.size)), txn = txn,
+            ins.withColumn("_change_type", lit("insert"))
+        },
+        operation = "MERGE",
         opParams = Seq("matchedPredicates" ->
           keys.map(k => s"s.$k <=> t.$k").mkString(" AND ")),
-        readScope = Some(Concurrency.ReadScope.Table))
+        txn = txn)
     } finally incoming.unpersist()
   }
 
@@ -1240,15 +1276,13 @@ object DeltaWrite {
     * (delta-spark's cardinality rule — the result would be
     * nondeterministic).
     *
-    * Scale shape: equality conjuncts `t.k = s.k` in the condition
-    * stats-prune files driver-side exactly like [[upsert]]; the surviving
-    * candidates take one `_metadata.file_path` semi-join to find the
-    * files that really hold matches, and ONLY those are rewritten —
-    * unless a NOT MATCHED BY SOURCE clause exists, which by definition
-    * must see every target row (delta-spark scans the full table then
-    * too). CDF emits per-clause update_pre/postimage / delete / insert
-    * rows; row ids are preserved (updates inherit, copies keep, inserts
-    * mint). Commits under [[Concurrency.ReadScope.Table]].
+    * The candidates are the files that equality conjuncts `t.k = s.k`
+    * (key range) and target-only conjuncts (stats) cannot rule out; the
+    * hits are the target rows the condition joins to a source row, or
+    * every candidate row when a NOT MATCHED BY SOURCE clause exists
+    * ([[rewriteFiles]]). CDF emits per-clause update_pre/postimage /
+    * delete / insert rows; row ids are preserved (updates inherit, copies
+    * keep, inserts mint).
     */
   def merge(
       spark: SparkSession,
@@ -1263,20 +1297,21 @@ object DeltaWrite {
       // SetTransaction stamped into the commit — the exactly-once handle
       // for streaming foreachBatch MERGE (same contract as append/upsert)
       txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, expr, lit, when, max => smax, min => smin, sum}
+    import org.apache.spark.sql.functions.{col, expr, lit, when}
+    val where = s"${operation.toLowerCase} on $tablePath: "
     require(matched.forall(c =>
       c.isInstanceOf[MergeClause.Update] || c.isInstanceOf[MergeClause.Delete]),
-      "matched clauses must be Update or Delete")
+      where + "matched clauses must be Update or Delete")
     require(notMatchedBySource.forall(c =>
       c.isInstanceOf[MergeClause.SourceUpdate] || c.isInstanceOf[MergeClause.SourceDelete]),
-      "notMatchedBySource clauses must be SourceUpdate or SourceDelete")
+      where + "notMatchedBySource clauses must be SourceUpdate or SourceDelete")
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
-      "merge needs at least one WHEN clause")
+      where + "merge needs at least one WHEN clause")
     // delta-spark's reachability rule: a clause after an unconditioned one
     // in the same group can never apply
     Seq(matched, notMatched, notMatchedBySource).foreach { group =>
       group.dropRight(1).zipWithIndex.foreach { case (c, i) =>
-        require(c.condition.isDefined,
+        require(c.condition.isDefined, where +
           s"clause ${i + 1} of ${group.size} has no condition; later clauses are unreachable")
       }
     }
@@ -1301,13 +1336,13 @@ object DeltaWrite {
       }
     val existingLower = schemaCols.map(_.toLowerCase).toSet
     val evolving = targeted.filterNot(kv => existingLower(kv._1.toLowerCase))
-    require(evolving.isEmpty || mergeSchema,
+    require(evolving.isEmpty || mergeSchema, where +
       s"SET/INSERT columns not in table: ${evolving.map(_._1).distinct.mkString(", ")} " +
         "(pass mergeSchema = true to evolve the schema)")
     val newCols: Seq[StructField] = evolving.map(_._1).distinct.map { c =>
       val dt = evolving.collect { case (`c`, e) => e }.view.flatMap { e =>
         scala.util.Try(src.alias("s").selectExpr(e).schema.head.dataType).toOption
-      }.headOption.getOrElse(throw new IllegalArgumentException(
+      }.headOption.getOrElse(throw new IllegalArgumentException(where +
         s"cannot infer the type of evolved column $c: its expression must " +
           "be analyzable against the source alone (reference s.* only)"))
       StructField(c, dt, nullable = true)
@@ -1389,52 +1424,8 @@ object DeltaWrite {
       val candidates: Seq[DeltaLog.AddFile] =
         if (notMatchedBySource.nonEmpty) ls.filesWhere(_ => true)
         else if (equiKeys.isEmpty) ls.filesWhere(tOnlyKeep)
-        else {
-          val keyTypes = equiKeys.map { case (tc, _) => tc -> snap.schema(tc).dataType }.toMap
-          val aggs = equiKeys.flatMap { case (tc, sc) => Seq(
-            smin(col(q(sc))).as(s"_min_$tc"), smax(col(q(sc))).as(s"_max_$tc"),
-            sum(col(q(sc)).isNull.cast("long")).as(s"_null_$tc")) }
-          val r = src.agg(aggs.head, aggs.tail: _*).collect()(0)
-          val inMin = equiKeys.map { case (tc, _) => tc -> r.get(r.fieldIndex(s"_min_$tc")) }.toMap
-          val inMax = equiKeys.map { case (tc, _) => tc -> r.get(r.fieldIndex(s"_max_$tc")) }.toMap
-          val inNull = equiKeys.map { case (tc, _) =>
-            tc -> (r.getLong(r.fieldIndex(s"_null_$tc")) > 0L) }.toMap
-          ls.filesWhere(f => tOnlyKeep(f) && equiKeys.forall { case (tc, _) =>
-            graft.sources.DeltaStats.mayContain(
-              graft.sources.DeltaStats.interval(snap, f, tc), keyTypes(tc),
-              inMin(tc), inMax(tc), inNull(tc)) })
-        }
-
-      // ---- touched files: exact hit detection, unless every target row is
-      // in play (NOT MATCHED BY SOURCE)
-      val touched: Seq[DeltaLog.AddFile] =
-        if (notMatchedBySource.nonEmpty) candidates
-        else if (candidates.isEmpty) Nil
-        else {
-          val cand = DeltaLog
-            .readFiles(spark, tablePath, snap, candidates, withFilePath = true)
-            .alias("t")
-          val hit = cand.join(src.alias("s"), expr(condition), "left_semi")
-            .select(col("_graft_file")).distinct()
-            .collect().map(r => new Path(r.getString(0)).toString).toSet
-          val table = new Path(tablePath)
-          val f = fs(spark, table)
-          candidates.filter(c => hit.contains(
-            new Path(f.makeQualified(new Path(table, DeltaLog.decodePath(c.path))).toString).toString))
-        }
-
-      val tracking = DeltaLog.rowTrackingEnabled(snap)
-      val (touchedDfOpt, matCols) =
-        if (touched.isEmpty)
-          (None, if (tracking) { val (a, b) = materializedRowCols(snap); Seq(a, b) } else Nil)
-        else {
-          val (df, mc) = readForRewrite(spark, tablePath, snap, touched)
-          (Some(df), mc)
-        }
-      val (matIdOpt, matVerOpt) = matCols match {
-        case Seq(a, b) => (Some(a), Some(b))
-        case _ => (None, None)
-      }
+        else filesInKeyRange(ls, snap, src,
+          equiKeys.map { case (tc, sc) => tc -> col(q(sc)) }, tOnlyKeep)
 
       // ---- first-match-wins action index over a clause group (-1 = none)
       def actionOf(group: Seq[MergeClause]): Column =
@@ -1446,11 +1437,6 @@ object DeltaWrite {
           case (_: MergeClause.Delete, i) => i
           case (_: MergeClause.SourceDelete, i) => i
         }
-      def setOf(group: Seq[MergeClause], i: Int): Map[String, String] = group(i) match {
-        case MergeClause.Update(_, s) => s
-        case MergeClause.SourceUpdate(_, s) => s
-        case _ => Map.empty
-      }
       // target column f under the group's action: CASE on _m_action
       def outCol(group: Seq[MergeClause], f: StructField): Column = {
         val base: Column = col(s"t.${q(f.name)}")
@@ -1472,9 +1458,9 @@ object DeltaWrite {
         }
       // row-tracking columns: updates inherit the id (ver nulls to THIS
       // commit), copies keep both, inserts mint fresh ids
-      def trackCols(group: Seq[MergeClause]): Seq[Column] =
-        (matIdOpt, matVerOpt) match {
-          case (Some(matId), Some(matVer)) =>
+      def trackCols(group: Seq[MergeClause], rowIdCols: Seq[String]): Seq[Column] =
+        rowIdCols match {
+          case Seq(matId, matVer) =>
             val upd = updatedIdxs(group)
             Seq(col(s"t.${q(matId)}").as(matId),
               when(col("_m_action").isin(upd.map(Integer.valueOf): _*),
@@ -1482,56 +1468,25 @@ object DeltaWrite {
                 .otherwise(col(s"t.${q(matVer)}")).as(matVer))
           case _ => Nil
         }
-
-      // ---- matched side
-      val matchedPairs: Option[DataFrame] = touchedDfOpt.map { tdf =>
-        tdf.alias("t").join(src.alias("s"), expr(condition), "inner")
-      }
-      if (matched.nonEmpty) matchedPairs.foreach { mp =>
-        // cardinality rule: a target row matched by >1 source rows makes
-        // update/delete nondeterministic — abort, delta-spark-style. The
-        // probe groups on the target's physical row identity.
-        val probe = touchedDfOpt.get.alias("t")
-          .withColumn("_t_tag", org.apache.spark.sql.functions.monotonically_increasing_id())
-          .join(src.alias("s"), expr(condition), "inner")
-          .groupBy(col("_t_tag")).count().filter(col("count") > 1).limit(1)
-        require(probe.isEmpty,
-          "MERGE cannot update/delete a target row matched by multiple source rows")
-      }
-      val matchedOut: Option[DataFrame] = matchedPairs.map { mp =>
-        val acted = mp.withColumn("_m_action", actionOf(matched))
-        val kept = acted.filter(!col("_m_action")
-          .isin((deleteIdxs(matched) :+ -999).map(Integer.valueOf): _*))
-        kept.select(snap.schema.fields.toIndexedSeq.map(outCol(matched, _)) ++
-          trackCols(matched): _*)
-      }
-
-      // ---- not-matched-by-source side (target rows with no source hit)
-      val nmbsOut: Option[DataFrame] = touchedDfOpt.map { tdf =>
-        val unmatched = tdf.alias("t").join(src.alias("s"), expr(condition), "left_anti")
-          .alias("t")
-        if (notMatchedBySource.isEmpty)
-          // no clause: unmatched rows in touched files copy through
-          unmatched.select(snap.schema.fieldNames.toIndexedSeq.map(f =>
-            col(s"t.${q(f)}").as(f)) ++ matCols.map(c => col(s"t.${q(c)}").as(c)): _*)
-        else {
-          val acted = unmatched.withColumn("_m_action", actionOf(notMatchedBySource))
-          val kept = acted.filter(!col("_m_action")
-            .isin((deleteIdxs(notMatchedBySource) :+ -999).map(Integer.valueOf): _*))
-          kept.select(snap.schema.fields.toIndexedSeq.map(outCol(notMatchedBySource, _)) ++
-            trackCols(notMatchedBySource): _*)
-        }
-      }
+      // a clause group applied to its rows: deletes dropped, sets projected
+      def applied(acted: DataFrame, group: Seq[MergeClause], rowIdCols: Seq[String]) =
+        acted.filter(!col("_m_action")
+          .isin((deleteIdxs(group) :+ -999).map(Integer.valueOf): _*))
+          .select(snap.schema.fields.toIndexedSeq.map(outCol(group, _)) ++
+            trackCols(group, rowIdCols): _*)
+      def matchedActed(rows: DataFrame) =
+        rows.alias("t").join(src.alias("s"), expr(condition), "inner")
+          .withColumn("_m_action", actionOf(matched))
+      def unmatchedTarget(rows: DataFrame) =
+        rows.alias("t").join(src.alias("s"), expr(condition), "left_anti").alias("t")
 
       // ---- not-matched (insert) side: source rows with no target hit
-      val insertBase: DataFrame = touchedDfOpt match {
-        case Some(tdf) =>
-          src.alias("s").join(tdf.alias("t"), expr(condition), "left_anti").alias("s")
-        case None => src.alias("s")
-      }
-      val insertsOut: Option[DataFrame] =
+      def inserts(t: Touched): Option[DataFrame] =
         if (notMatched.isEmpty) None
         else Some {
+          val insertBase = t.rows.fold(src.alias("s")) { rows =>
+            src.alias("s").join(rows.alias("t"), expr(condition), "left_anti").alias("s")
+          }
           val acted = insertBase.withColumn("_m_action",
             actionOf(notMatched)).filter(col("_m_action") =!= -1)
           val insCols = snap.schema.fields.toIndexedSeq.map { f =>
@@ -1549,79 +1504,72 @@ object DeltaWrite {
                   .getOrElse(unnamed)
                 when(col("_m_action") === i, v).otherwise(els)
             }.as(f.name)
-          } ++ matCols.map(c => lit(null).cast("long").as(c)) // fresh row ids
+          } ++ t.rowIdCols.map(c => lit(null).cast("long").as(c)) // fresh row ids
           acted.select(insCols: _*)
         }
 
-      val pieces = matchedOut.toSeq ++ nmbsOut.toSeq ++ insertsOut.toSeq
-      if (pieces.isEmpty) return snap.version
-      val rewritten = enforceObligations(snap,
-        pieces.reduce(_ unionByName _), schemaObligations = true)
-
-      // ---- CDF per clause class
-      val cdcs =
-        if (!cdfEnabled(snap)) Nil
-        else {
+      rewriteFiles(spark, tablePath, snap, candidates,
+        hits =
+          if (notMatchedBySource.nonEmpty) None
+          else Some(_.alias("t").join(src.alias("s"), expr(condition), "left_semi")),
+        output = { t =>
+          if (matched.nonEmpty) t.rows.foreach { rows =>
+            // cardinality rule: a target row matched by >1 source rows makes
+            // update/delete nondeterministic — abort, delta-spark-style. The
+            // probe groups on the target's physical row identity.
+            val probe = rows.alias("t")
+              .withColumn("_t_tag", org.apache.spark.sql.functions.monotonically_increasing_id())
+              .join(src.alias("s"), expr(condition), "inner")
+              .groupBy(col("_t_tag")).count().filter(col("count") > 1).limit(1)
+            require(probe.isEmpty,
+              where + "MERGE cannot update/delete a target row matched by multiple source rows")
+          }
+          val matchedOut = t.rows.map(rows => applied(matchedActed(rows), matched, t.rowIdCols))
+          // target rows with no source hit: copied through, or acted on by
+          // the NOT MATCHED BY SOURCE clauses
+          val unmatchedOut = t.rows.map { rows =>
+            if (notMatchedBySource.isEmpty)
+              unmatchedTarget(rows).select((snap.schema.fieldNames.toIndexedSeq ++
+                t.rowIdCols).map(f =>
+                col(s"t.${q(f)}").as(f)): _*)
+            else applied(unmatchedTarget(rows)
+              .withColumn("_m_action", actionOf(notMatchedBySource)),
+              notMatchedBySource, t.rowIdCols)
+          }
+          (matchedOut.toSeq ++ unmatchedOut.toSeq ++ inserts(t).toSeq)
+            .reduceOption(_ unionByName _)
+            .map(enforceObligations(snap, _, schemaObligations = true))
+        },
+        changes = { t =>
           val tCols = snap.schema.fieldNames.toIndexedSeq
           def tSel(df: DataFrame) = df.select(tCols.map(f => col(s"t.${q(f)}").as(f)): _*)
-          val changes = Seq.newBuilder[DataFrame]
-          matchedPairs.foreach { mp =>
-            val acted = mp.withColumn("_m_action", actionOf(matched))
-            val updIdx = updatedIdxs(matched).map(Integer.valueOf)
-            val delIdx = deleteIdxs(matched).map(Integer.valueOf)
-            if (updIdx.nonEmpty) {
-              val upd = acted.filter(col("_m_action").isin(updIdx: _*))
-              changes += tSel(upd).withColumn("_change_type", lit("update_preimage"))
-              changes += upd.select(snap.schema.fields.toIndexedSeq.map(outCol(matched, _)): _*)
-                .withColumn("_change_type", lit("update_postimage"))
-            }
-            if (delIdx.nonEmpty)
-              changes += tSel(acted.filter(col("_m_action").isin(delIdx: _*)))
-                .withColumn("_change_type", lit("delete"))
+          // update_pre/postimage and delete rows of one clause group
+          def groupChanges(acted: DataFrame, group: Seq[MergeClause]): Seq[DataFrame] = {
+            val updIdx = updatedIdxs(group).map(Integer.valueOf)
+            val delIdx = deleteIdxs(group).map(Integer.valueOf)
+            val upd = acted.filter(col("_m_action").isin(updIdx: _*))
+            (if (updIdx.isEmpty) Nil
+            else Seq(tSel(upd).withColumn("_change_type", lit("update_preimage")),
+              upd.select(snap.schema.fields.toIndexedSeq.map(outCol(group, _)): _*)
+                .withColumn("_change_type", lit("update_postimage")))) ++
+              (if (delIdx.isEmpty) Nil
+              else Seq(tSel(acted.filter(col("_m_action").isin(delIdx: _*)))
+                .withColumn("_change_type", lit("delete"))))
           }
-          if (notMatchedBySource.nonEmpty) touchedDfOpt.foreach { tdf =>
-            val unmatched = tdf.alias("t")
-              .join(src.alias("s"), expr(condition), "left_anti").alias("t")
-              .withColumn("_m_action", actionOf(notMatchedBySource))
-            val updIdx = updatedIdxs(notMatchedBySource).map(Integer.valueOf)
-            val delIdx = deleteIdxs(notMatchedBySource).map(Integer.valueOf)
-            if (updIdx.nonEmpty) {
-              val upd = unmatched.filter(col("_m_action").isin(updIdx: _*))
-              changes += tSel(upd).withColumn("_change_type", lit("update_preimage"))
-              changes += upd.select(snap.schema.fields.toIndexedSeq
-                .map(outCol(notMatchedBySource, _)): _*)
-                .withColumn("_change_type", lit("update_postimage"))
-            }
-            if (delIdx.nonEmpty)
-              changes += tSel(unmatched.filter(col("_m_action").isin(delIdx: _*)))
-                .withColumn("_change_type", lit("delete"))
-          }
-          insertsOut.foreach(ins => changes += ins
-            .select(tCols.map(col): _*).withColumn("_change_type", lit("insert")))
-          val all = changes.result()
-          if (all.isEmpty) Nil
-          else writeChangeData(spark, new Path(tablePath), snap,
-            all.reduce(_ unionByName _))
-        }
-
-      val (phys, physParts) =
-        toPhysical(rewritten, snap.schema, snap.partitionColumns,
-          snap.columnMappingMode, passthrough = matCols,
-          fieldIds = icebergCompatOn(snap))
-      val adds = writeDataFiles(spark, new Path(tablePath), phys, physParts,
-        statsExclude = matCols.toSet)
-      if (adds.isEmpty && touched.isEmpty && cdcs.isEmpty && withMeta.isEmpty)
-        return snap.version
-      commit(spark, new Path(tablePath), snap.version + 1, operation,
-        withMeta = withMeta, adds = adds, removes = touched.map(_.path),
-        metaConfig = metaCfg,
-        cdcs = cdcs, ictEnabled = ictOn(snap), rowIdBase = rowIdBaseOf(snap),
-        crc = CrcPlan.Incremental(touched.map(_.size)), txn = txn,
+          t.rows.toSeq.flatMap { rows =>
+            groupChanges(matchedActed(rows), matched) ++
+              (if (notMatchedBySource.isEmpty) Nil
+              else groupChanges(unmatchedTarget(rows)
+                .withColumn("_m_action", actionOf(notMatchedBySource)), notMatchedBySource))
+          } ++ inserts(t).map(_.select(tCols.map(col): _*)
+            .withColumn("_change_type", lit("insert")))
+        },
+        operation = operation,
         opParams = Seq("predicate" -> condition,
           "matchedPredicates" -> matched.size.toString,
           "notMatchedPredicates" -> notMatched.size.toString,
           "notMatchedBySourcePredicates" -> notMatchedBySource.size.toString),
-        readScope = Some(Concurrency.ReadScope.Table))
+        withMeta = withMeta, metaConfig = metaCfg, txn = txn)
     } finally src.unpersist()
   }
 
@@ -1639,7 +1587,7 @@ object DeltaWrite {
       tablePath: String,
       predicate: String,
       set: Map[String, String]): Long = {
-    require(set.nonEmpty, "UPDATE needs at least one SET column")
+    require(set.nonEmpty, s"update on $tablePath: UPDATE needs at least one SET column")
     val snap = DeltaLog.lazySnapshot(spark, tablePath).meta
     // qualify bare target-column references so the MERGE layer's t-only
     // conjunct pruning sees them (and the dummy source can't shadow them)
@@ -1661,32 +1609,28 @@ object DeltaWrite {
   }
 
   /** Delete rows matching ALL `conditions` (empty ⇒ full overwrite), then
-    * write `df` (reference delta/src/lib.rs:203-231, :365-375). Files
-    * are pruned before any read: partition-column
-    * conditions match against the log's `partitionValues` exactly, other
-    * conditions range-check add-action stats; only files that can hold
-    * matching rows are scanned, and of those only the ones that DO get
-    * removed and rewritten.
+    * write `df` (reference delta/src/lib.rs:203-231, :365-375): a
+    * copy-on-write delete with the null-safe predicate, plus the incoming
+    * rows. Partition-column conditions match the log's `partitionValues`
+    * exactly (a NULL partition never matches), other conditions
+    * range-check add-action stats; those are the candidates.
     */
   def replace(
       spark: SparkSession,
       tablePath: String,
       df: DataFrame,
       conditions: Seq[graft.config.ReplaceCondition]): Long = {
-    import org.apache.spark.sql.functions.{col, lit, not}
+    import org.apache.spark.sql.functions.{col, lit}
     val ls = DeltaLog.lazySnapshot(spark, tablePath)
     val snap = ls.meta
     requireWritable(tablePath, snap, "replace", removesData = true)
     val incoming = castToSchema(enforceObligations(snap, df), snap.schema)
     if (conditions.isEmpty) return overwrite(spark, tablePath, incoming)
     conditions.foreach(c => require(snap.schema.fieldNames.contains(c.column),
-      s"replace column '${c.column}' not in table"))
+      s"replace on $tablePath: replace column '${c.column}' not in table"))
     val pred = conditions.map { c =>
       col(c.column) <=> lit(c.value).cast(snap.schema(c.column).dataType)
     }.reduce(_ && _)
-
-    // partition/stats pruning runs ON EXECUTORS over the distributed add
-    // index; only candidate files reach the driver
     val condList = conditions.toList
     val candidates = ls.filesWhere { f =>
       condList.forall { c =>
@@ -1703,57 +1647,39 @@ object DeltaWrite {
             snap.schema(c.column).dataType, c.value, c.value, inHasNull = false)
       }
     }
-    val touched: Seq[DeltaLog.AddFile] =
-      if (candidates.isEmpty) Nil
-      else {
-        val cand = DeltaLog.readFiles(spark, tablePath, snap, candidates, withFilePath = true)
-        val hit = cand.filter(pred).select(col("_graft_file")).distinct()
-          .collect().map(r => new Path(r.getString(0)).toString).toSet
-        val table = new Path(tablePath)
-        val f = fs(spark, table)
-        candidates.filter(c => hit.contains(
-          new Path(f.makeQualified(new Path(table, DeltaLog.decodePath(c.path))).toString).toString))
-      }
+    deleteRows(spark, tablePath, snap, candidates, pred, Some(incoming), "DELETE+WRITE")
+  }
+
+  /** Copy-on-write delete over [[rewriteFiles]]: the rows of `candidates`
+    * where `pred` is true leave (NULL keeps the row, per SQL DELETE) as
+    * `delete` change rows, and `incoming` rows are added with fresh row
+    * ids as `insert` change rows.
+    */
+  private def deleteRows(
+      spark: SparkSession,
+      tablePath: String,
+      snap: DeltaLog.Snapshot,
+      candidates: Seq[DeltaLog.AddFile],
+      pred: Column,
+      incoming: Option[DataFrame],
+      operation: String,
+      opParams: Seq[(String, String)] = Nil): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     val cols = snap.schema.fieldNames.toIndexedSeq.map(col)
-    // row tracking: survivors keep stable ids via the materialized columns;
-    // replace's incoming rows are NEW rows (fresh ids)
-    val tracking = DeltaLog.rowTrackingEnabled(snap)
-    val matCols =
-      if (!tracking) Nil
-      else materializedRowCols(snap) match { case (a, b) => Seq(a, b) }
-    val outCols = cols ++ matCols.map(col)
-    val incomingTracked = matCols.foldLeft(incoming)(
-      (d, c) => d.withColumn(c, lit(null).cast("long")))
-    val rewritten =
-      if (touched.isEmpty) incomingTracked
-      else readForRewrite(spark, tablePath, snap, touched)._1.filter(not(pred))
-        .select(outCols: _*)
-        .unionByName(incomingTracked.select(outCols: _*))
-    // CDF: predicate-matched rows are deletes, the new data inserts; the
-    // copied-over survivors must NOT surface as changes (hence cdc files)
-    val cdcs =
-      if (!cdfEnabled(snap)) Nil
-      else {
-        val deleted =
-          if (touched.isEmpty) None
-          else Some(DeltaLog.readFiles(spark, tablePath, snap, touched).filter(pred)
-            .select(cols: _*).withColumn("_change_type", lit("delete")))
-        val inserted = incoming.select(cols: _*)
-          .withColumn("_change_type", lit("insert"))
-        writeChangeData(spark, new Path(tablePath), snap,
-          (deleted.toSeq :+ inserted).reduce(_ unionByName _))
-      }
-    val (phys, physParts) =
-      toPhysical(rewritten, snap.schema, snap.partitionColumns,
-        snap.columnMappingMode, passthrough = matCols,
-        fieldIds = icebergCompatOn(snap))
-    val adds = writeDataFiles(spark, new Path(tablePath), phys, physParts,
-      statsExclude = matCols.toSet)
-    commit(spark, new Path(tablePath), snap.version + 1, "DELETE+WRITE",
-      withMeta = None, adds = adds, removes = touched.map(_.path),
-      cdcs = cdcs, ictEnabled = ictOn(snap), rowIdBase = rowIdBaseOf(snap),
-      crc = CrcPlan.Incremental(touched.map(_.size)),
-      readScope = Some(Concurrency.ReadScope.Table))
+    rewriteFiles(spark, tablePath, snap, candidates,
+      hits = Some(_.filter(pred)),
+      output = { t =>
+        val fresh = incoming.map(in => t.rowIdCols.foldLeft(in)(
+          (d, c) => d.withColumn(c, lit(null).cast("long"))))
+        (t.rows.map(_.filter(coalesce(not(pred), lit(true)))).toSeq ++ fresh)
+          .map(_.select(cols ++ t.rowIdCols.map(col): _*))
+          .reduceOption(_ unionByName _)
+      },
+      changes = t =>
+        t.rows.map(_.filter(pred).select(cols: _*)
+          .withColumn("_change_type", lit("delete"))).toSeq ++
+          incoming.map(_.select(cols: _*).withColumn("_change_type", lit("insert"))),
+      operation = operation, opParams = opParams)
   }
 
   /** DELETE rows matching `predicate` (SQL boolean over the table's
@@ -1773,13 +1699,12 @@ object DeltaWrite {
     * readers see deleted rows filtered, pre-DV readers refuse loudly
     * rather than resurrecting them.
     *
-    * Without the table property the delete is COPY-ON-WRITE: stats-pruned
-    * candidate files that really hold matches are rewritten without the
-    * matching rows ([[replace]]'s shape with an arbitrary predicate).
+    * Without the table property the delete is COPY-ON-WRITE
+    * ([[deleteRows]]) over the stats-pruned candidate files.
     * Returns the new version, or the current one when nothing matched.
     */
   def delete(spark: SparkSession, tablePath: String, predicate: String): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, collect_list, expr, lit, not}
+    import org.apache.spark.sql.functions.{col, collect_list, expr, lit}
     val ls = DeltaLog.lazySnapshot(spark, tablePath)
     val snap = ls.meta
     requireWritable(tablePath, snap, "delete", removesData = true)
@@ -1788,153 +1713,120 @@ object DeltaWrite {
     // stats pruning on executors; only candidates reach the driver
     val candidates = ls.filesWhere(f => graft.sources.DeltaStats.mayMatch(snap, f, parsed))
     if (candidates.isEmpty) return snap.version
-    val table = new Path(tablePath)
-    val f = fs(spark, table)
-    def absOf(a: DeltaLog.AddFile): String =
-      f.makeQualified(new Path(table, DeltaLog.decodePath(a.path))).toString
-    val byAbs = candidates.map(a => absOf(a) -> a).toMap
     val useDv = snap.configuration.get("delta.enableDeletionVectors")
       .exists(_.equalsIgnoreCase("true"))
+    if (!useDv)
+      return deleteRows(spark, tablePath, snap, candidates, expr(predicate), None,
+        "DELETE", Seq("predicate" -> predicate))
 
-    if (useDv) {
-      import graft.sources.DeletionVectors
-      // live rows only (existing DVs already filtered): new deletions are
-      // serialized per file on executors; the driver sees compressed bytes
-      val scan = DeltaLog.readFiles(spark, tablePath, snap, candidates,
-        withFilePath = true, withRowIndex = true)
-      import spark.implicits._
-      val matched = scan.filter(predicate)
-        .select(col("_graft_file"), col("_graft_row_index"))
-        .groupBy(col("_graft_file"))
-        .agg(collect_list(col("_graft_row_index")).as("idx"))
-        .as[(String, Seq[Long])]
-        .map { case (file, idxs) =>
-          val arr = idxs.toArray
-          (file, DeletionVectors.serialize(arr), arr.distinct.length.toLong)
-        }
-        .collect().toSeq
-      if (matched.isEmpty) return snap.version
-
-      val touched: Seq[(DeltaLog.AddFile, Array[Byte], Long)] = matched.flatMap {
-        case (file, bytes, card) =>
-          byAbs.get(new Path(file).toString).map { a =>
-            a.deletionVector match {
-              case None => (a, bytes, card)
-              case Some(dj) => // union with the file's existing deletions
-                val old = DeletionVectors
-                  .readBitmap(spark, tablePath, DeletionVectors.parse(dj)).toLongArray
-                val merged = DeletionVectors.serialize(
-                  old ++ DeletionVectors.decode(bytes).toLongArray)
-                (a, merged, DeletionVectors.decode(merged).cardinality)
-            }
-          }
+    val table = new Path(tablePath)
+    val f = fs(spark, table)
+    val byAbs = candidates.map(a =>
+      f.makeQualified(new Path(table, DeltaLog.decodePath(a.path))).toString -> a).toMap
+    import graft.sources.DeletionVectors
+    // live rows only (existing DVs already filtered): new deletions are
+    // serialized per file on executors; the driver sees compressed bytes
+    val scan = DeltaLog.readFiles(spark, tablePath, snap, candidates,
+      withFilePath = true, withRowIndex = true)
+    import spark.implicits._
+    val matched = scan.filter(predicate)
+      .select(col("_graft_file"), col("_graft_row_index"))
+      .groupBy(col("_graft_file"))
+      .agg(collect_list(col("_graft_row_index")).as("idx"))
+      .as[(String, Seq[Long])]
+      .map { case (file, idxs) =>
+        val arr = idxs.toArray
+        (file, DeletionVectors.serialize(arr), arr.distinct.length.toLong)
       }
+      .collect().toSeq
+    if (matched.isEmpty) return snap.version
 
-      // fully-dead files (every physical row deleted) drop without a re-add
-      val (dead, marked) = touched.partition { case (a, _, card) =>
-        graft.sources.DeltaStats.numRecords(a).contains(card)
-      }
-      // small DVs inline in the add action; the rest frame into ONE .bin
-      val (inline, filed) = marked.partition(_._2.length <= DeletionVectors.InlineThresholdBytes)
-      val filedDescriptors: Seq[(DeltaLog.AddFile, String)] =
-        if (filed.isEmpty) Nil
-        else {
-          val uuid = java.util.UUID.randomUUID()
-          val (blob, offsets) = DeletionVectors.frameBinFile(filed.map(_._2))
-          val out = LocalIo.create(f, new Path(table, s"deletion_vector_$uuid.bin"), false)
-          try out.write(blob) finally out.close()
-          filed.zip(offsets).map { case ((a, bytes, card), off) =>
-            a -> DeletionVectors.uuidDescriptorJson(uuid, off, bytes.length, card)
+    val touched: Seq[(DeltaLog.AddFile, Array[Byte], Long)] = matched.flatMap {
+      case (file, bytes, card) =>
+        byAbs.get(new Path(file).toString).map { a =>
+          a.deletionVector match {
+            case None => (a, bytes, card)
+            case Some(dj) => // union with the file's existing deletions
+              val old = DeletionVectors
+                .readBitmap(spark, tablePath, DeletionVectors.parse(dj)).toLongArray
+              val merged = DeletionVectors.serialize(
+                old ++ DeletionVectors.decode(bytes).toLongArray)
+              (a, merged, DeletionVectors.decode(merged).cardinality)
           }
         }
-      val descriptors = inline.map { case (a, bytes, card) =>
-        a -> DeletionVectors.inlineDescriptorJson(bytes, card)
-      } ++ filedDescriptors
-
-      val adds = descriptors.map { case (a, dj) =>
-        AddDescriptor(
-          DeltaLog.decodePath(a.path),
-          a.partitionValues.toSeq.sortBy(_._1).map { case (k, v) => k -> Option(v) },
-          a.size, a.modificationTime, a.stats, Some(dj),
-          // file bytes untouched: row-tracking ids ride through unchanged
-          a.baseRowId, a.defaultRowCommitVersion)
-      }
-      // CDF: the DV commit re-adds files with descriptors, which no reader
-      // can derive changes from — emit the matched rows as delete cdc
-      val cdcs =
-        if (!cdfEnabled(snap)) Nil
-        else writeChangeData(spark, table, snap,
-          scan.filter(predicate)
-            .select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
-            .withColumn("_change_type", lit("delete")))
-      val upgrade =
-        if (snap.protocol.exists(p =>
-          p.minReaderVersion >= 3 && p.readerFeatures.contains("deletionVectors") &&
-            p.minWriterVersion >= 7 && p.writerFeatures.contains("deletionVectors")))
-          None
-        else Some {
-          val p = snap.protocol.getOrElse(DeltaLog.Protocol(1, 2))
-          val mapped = snap.columnMappingMode != "none"
-          // name only the legacy obligations the table actually carries:
-          // declaring unused legacy features (CDF, generated columns, …)
-          // would lock this writer out of its own table
-          val legacyReader =
-            if (p.minReaderVersion >= 3) p.readerFeatures
-            else if (mapped) Set("columnMapping")
-            else Set.empty[String]
-          val legacyWriter =
-            if (p.minWriterVersion >= 7) p.writerFeatures
-            else Set("appendOnly", "invariants") ++
-              (if (mapped) Set("columnMapping") else Set.empty) ++
-              (if (cdfEnabled(snap)) Set("changeDataFeed") else Set.empty) ++
-              (if (snap.configuration.keys
-                .exists(_.startsWith("delta.constraints.")))
-                Set("checkConstraints") else Set.empty)
-          DeltaLog.Protocol(3, 7,
-            legacyReader + "deletionVectors", legacyWriter + "deletionVectors")
-        }
-      commit(spark, table, snap.version + 1, "DELETE",
-        withMeta = None, adds = adds,
-        removes = (dead ++ marked).map(_._1.path),
-        protocolUpgrade = upgrade, cdcs = cdcs, ictEnabled = ictOn(snap),
-        rowIdBase = rowIdBaseOf(snap),
-        crc = CrcPlan.Incremental((dead ++ marked).map(_._1.size)),
-        opParams = Seq("predicate" -> predicate),
-        readScope = Some(Concurrency.ReadScope.Table))
-    } else {
-      // copy-on-write: exact hit detection, rewrite only files with matches
-      val cand = DeltaLog.readFiles(spark, tablePath, snap, candidates, withFilePath = true)
-      val hit = cand.filter(predicate).select(col("_graft_file")).distinct()
-        .collect().map(r => new Path(r.getString(0)).toString).toSet
-      val touched = candidates.filter(c => hit.contains(new Path(absOf(c)).toString))
-      if (touched.isEmpty) return snap.version
-      // NULL-predicate rows are KEPT: not(pred) alone would drop them.
-      // Row tracking: survivors carry their stable ids into the rewrite.
-      val (keptSrc, matCols) = readForRewrite(spark, tablePath, snap, touched)
-      val kept = keptSrc
-        .filter(coalesce(not(expr(predicate)), lit(true)))
-        .select((snap.schema.fieldNames.toIndexedSeq ++ matCols).map(col): _*)
-      // CDF: survivors are copied over, so only cdc files can tell a reader
-      // which rows actually left
-      val cdcs =
-        if (!cdfEnabled(snap)) Nil
-        else writeChangeData(spark, table, snap,
-          DeltaLog.readFiles(spark, tablePath, snap, touched).filter(predicate)
-            .select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
-            .withColumn("_change_type", lit("delete")))
-      val (phys, physParts) =
-        toPhysical(kept, snap.schema, snap.partitionColumns,
-          snap.columnMappingMode, passthrough = matCols,
-          fieldIds = icebergCompatOn(snap))
-      val adds = writeDataFiles(spark, table, phys, physParts,
-        statsExclude = matCols.toSet)
-      commit(spark, table, snap.version + 1, "DELETE",
-        withMeta = None, adds = adds, removes = touched.map(_.path),
-        cdcs = cdcs, ictEnabled = ictOn(snap), rowIdBase = rowIdBaseOf(snap),
-        crc = CrcPlan.Incremental(touched.map(_.size)),
-        opParams = Seq("predicate" -> predicate),
-        readScope = Some(Concurrency.ReadScope.Table))
     }
+
+    // fully-dead files (every physical row deleted) drop without a re-add
+    val (dead, marked) = touched.partition { case (a, _, card) =>
+      graft.sources.DeltaStats.numRecords(a).contains(card)
+    }
+    // small DVs inline in the add action; the rest frame into ONE .bin
+    val (inline, filed) = marked.partition(_._2.length <= DeletionVectors.InlineThresholdBytes)
+    val filedDescriptors: Seq[(DeltaLog.AddFile, String)] =
+      if (filed.isEmpty) Nil
+      else {
+        val uuid = java.util.UUID.randomUUID()
+        val (blob, offsets) = DeletionVectors.frameBinFile(filed.map(_._2))
+        val out = LocalIo.create(f, new Path(table, s"deletion_vector_$uuid.bin"), false)
+        try out.write(blob) finally out.close()
+        filed.zip(offsets).map { case ((a, bytes, card), off) =>
+          a -> DeletionVectors.uuidDescriptorJson(uuid, off, bytes.length, card)
+        }
+      }
+    val descriptors = inline.map { case (a, bytes, card) =>
+      a -> DeletionVectors.inlineDescriptorJson(bytes, card)
+    } ++ filedDescriptors
+
+    val adds = descriptors.map { case (a, dj) =>
+      AddDescriptor(
+        DeltaLog.decodePath(a.path),
+        a.partitionValues.toSeq.sortBy(_._1).map { case (k, v) => k -> Option(v) },
+        a.size, a.modificationTime, a.stats, Some(dj),
+        // file bytes untouched: row-tracking ids ride through unchanged
+        a.baseRowId, a.defaultRowCommitVersion)
+    }
+    // CDF: the DV commit re-adds files with descriptors, which no reader
+    // can derive changes from — emit the matched rows as delete cdc
+    val cdcs =
+      if (!cdfEnabled(snap)) Nil
+      else writeChangeData(spark, table, snap,
+        scan.filter(predicate)
+          .select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
+          .withColumn("_change_type", lit("delete")))
+    val upgrade =
+      if (snap.protocol.exists(p =>
+        p.minReaderVersion >= 3 && p.readerFeatures.contains("deletionVectors") &&
+          p.minWriterVersion >= 7 && p.writerFeatures.contains("deletionVectors")))
+        None
+      else Some {
+        val p = snap.protocol.getOrElse(DeltaLog.Protocol(1, 2))
+        val mapped = snap.columnMappingMode != "none"
+        // name only the legacy obligations the table actually carries:
+        // declaring unused legacy features (CDF, generated columns, …)
+        // would lock this writer out of its own table
+        val legacyReader =
+          if (p.minReaderVersion >= 3) p.readerFeatures
+          else if (mapped) Set("columnMapping")
+          else Set.empty[String]
+        val legacyWriter =
+          if (p.minWriterVersion >= 7) p.writerFeatures
+          else Set("appendOnly", "invariants") ++
+            (if (mapped) Set("columnMapping") else Set.empty) ++
+            (if (cdfEnabled(snap)) Set("changeDataFeed") else Set.empty) ++
+            (if (snap.configuration.keys
+              .exists(_.startsWith("delta.constraints.")))
+              Set("checkConstraints") else Set.empty)
+        DeltaLog.Protocol(3, 7,
+          legacyReader + "deletionVectors", legacyWriter + "deletionVectors")
+      }
+    commit(spark, table, snap.version + 1, "DELETE",
+      withMeta = None, adds = adds,
+      removes = (dead ++ marked).map(_._1.path),
+      protocolUpgrade = upgrade, cdcs = cdcs, ictEnabled = ictOn(snap),
+      rowIdBase = rowIdBaseOf(snap),
+      crc = CrcPlan.Incremental((dead ++ marked).map(_._1.size)),
+      opParams = Seq("predicate" -> predicate),
+      readScope = Some(Concurrency.ReadScope.Table))
   }
 
   /** CONVERT TO DELTA, metadata-only: migrate a table written in the
