@@ -610,6 +610,40 @@ object DeltaWrite {
 
   // ---------------------------------------------------- write-mode helpers
 
+  /** Schema evolution (mergeSchema): `newCols` appended to `base` as
+    * nullable columns; on mapped tables they get fresh ids + physical
+    * names continuing the table's id space. Returns the merged schema and
+    * the configuration to commit with it. A VARIANT column needs the
+    * variantType reader-writer feature named BEFORE the evolved metaData
+    * exists (create with a variant column, or
+    * delta.feature.variantType=supported), rather than emitting a schema
+    * foreign readers would mis-read, and cannot enter a UniForm table.
+    */
+  private def evolveSchema(
+      tablePath: String,
+      snap: DeltaLog.Snapshot,
+      base: StructType,
+      newCols: Seq[StructField]): (StructType, Map[String, String]) = {
+    if (newCols.exists(f => containsVariant(f.dataType))) {
+      require(snap.protocol.exists(p =>
+          p.minWriterVersion >= 7 && p.writerFeatures.contains("variantType")),
+        s"cannot add a VARIANT column to $tablePath by schema evolution: the " +
+          "protocol does not name the variantType feature; set " +
+          "delta.feature.variantType=supported first")
+      require(!uniformIceberg(snap.configuration),
+        s"cannot add a VARIANT column to UniForm table $tablePath: Iceberg " +
+          "v2 has no variant representation, so the auto-sync would wedge")
+    }
+    val added = StructType(newCols.map(_.copy(nullable = true)))
+    if (snap.columnMappingMode == "none")
+      (StructType(base.fields ++ added.fields), snap.configuration)
+    else {
+      val (mapped, maxId) = assignMapping(added, maxColumnId(snap))
+      (StructType(base.fields ++ mapped.fields),
+        snap.configuration + ("delta.columnMapping.maxColumnId" -> maxId.toString))
+    }
+  }
+
   /** Cast input to the table schema (reference delta/src/lib.rs:331-362):
     * matching columns cast to the declared type; absent nullable columns
     * become nulls; absent non-nullable columns are an error; extras dropped.
@@ -887,11 +921,6 @@ object DeltaWrite {
     val baseSchema = identitySchema.getOrElse(snap.schema)
     val existing = snap.schema.fieldNames.map(_.toLowerCase).toSet
     val newCols = dfWithIds.schema.fields.filter(f => !existing.contains(f.name.toLowerCase))
-    // a VARIANT column arriving via mergeSchema needs the variantType
-    // reader-writer feature BEFORE the evolved metaData exists — refuse
-    // unless the protocol already names it (create with a variant column,
-    // or delta.feature.variantType=supported), rather than emitting a
-    // schema foreign readers would mis-read
     // the protocol forbids ADDING a column with a default: old files were
     // written without it, and nothing backfills them — defaults attach at
     // CREATE or via setDefault on an existing column only
@@ -899,29 +928,11 @@ object DeltaWrite {
       "cannot add a column carrying a DEFAULT via mergeSchema (Delta " +
         "protocol: defaults attach at create, or via setDefault on an " +
         "existing column)")
-    if (mergeSchema && newCols.exists(f => containsVariant(f.dataType))) {
-      require(snap.protocol.exists(p =>
-          p.minWriterVersion >= 7 && p.writerFeatures.contains("variantType")),
-        s"cannot add a VARIANT column to $tablePath via mergeSchema: the " +
-          "protocol does not name the variantType feature; set " +
-          "delta.feature.variantType=supported first")
-      require(!uniformIceberg(snap.configuration),
-        s"cannot add a VARIANT column to UniForm table $tablePath: Iceberg " +
-          "v2 has no variant representation, so the auto-sync would wedge")
-    }
     val (schema0, meta0, metaCfg) =
       if (!mergeSchema || newCols.isEmpty) (baseSchema, None, snap.configuration)
-      else if (mode == "none") {
-        val merged = StructType(baseSchema.fields ++ newCols.map(_.copy(nullable = true)))
-        (merged, Some((merged, snap.partitionColumns)), snap.configuration)
-      } else {
-        // mapped evolution: new columns get fresh ids + physical names,
-        // continuing the table's id space
-        val (mappedNew, maxId) =
-          assignMapping(StructType(newCols.map(_.copy(nullable = true))), maxColumnId(snap))
-        val merged = StructType(baseSchema.fields ++ mappedNew.fields)
-        (merged, Some((merged, snap.partitionColumns)),
-          snap.configuration + ("delta.columnMapping.maxColumnId" -> maxId.toString))
+      else {
+        val (merged, cfg) = evolveSchema(tablePath, snap, baseSchema, newCols.toSeq)
+        (merged, Some((merged, snap.partitionColumns)), cfg)
       }
     // type widening (delta.enableTypeWidening): existing columns whose
     // INCOMING type is strictly wider re-type the column instead of
@@ -1347,78 +1358,49 @@ object DeltaWrite {
           "be analyzable against the source alone (reference s.* only)"))
       StructField(c, dt, nullable = true)
     }
-    if (newCols.exists(f => containsVariant(f.dataType))) {
-      require(snap0.protocol.exists(p =>
-          p.minWriterVersion >= 7 && p.writerFeatures.contains("variantType")),
-        s"cannot add a VARIANT column to $tablePath via merge schema " +
-          "evolution: set delta.feature.variantType=supported first")
-      require(!uniformIceberg(snap0.configuration),
-        s"cannot add a VARIANT column to UniForm table $tablePath: Iceberg " +
-          "v2 has no variant representation, so the auto-sync would wedge")
-    }
     val (snap, withMeta, metaCfg) =
       if (newCols.isEmpty) (snap0, None, Map.empty[String, String])
-      else if (snap0.columnMappingMode == "none") {
-        val merged = StructType(snap0.schema.fields ++ newCols)
-        (snap0.copy(schema = merged),
-          Some((merged, snap0.partitionColumns)), snap0.configuration)
-      } else {
-        val (mappedNew, maxId) =
-          assignMapping(StructType(newCols), maxColumnId(snap0))
-        val merged = StructType(snap0.schema.fields ++ mappedNew.fields)
-        (snap0.copy(schema = merged),
-          Some((merged, snap0.partitionColumns)),
-          snap0.configuration + ("delta.columnMapping.maxColumnId" -> maxId.toString))
+      else {
+        val (merged, cfg) = evolveSchema(tablePath, snap0, snap0.schema, newCols)
+        (snap0.copy(schema = merged), Some((merged, snap0.partitionColumns)), cfg)
       }
       // ---- candidate files: equality conjuncts `t.k = s.k` range-prune on
       // stats exactly like upsert; a NOT MATCHED BY SOURCE clause needs
       // every target row, so pruning is off then
-      val parsed = spark.sessionState.sqlParser.parseExpression(condition)
-      def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
-          : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-        case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-          conjuncts(l) ++ conjuncts(r)
+      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+      import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
+      def conjuncts(e: Expression): Seq[Expression] = e match {
+        case And(l, r) => conjuncts(l) ++ conjuncts(r)
         case other => Seq(other)
       }
+      val parsed = conjuncts(spark.sessionState.sqlParser.parseExpression(condition))
+      // an `alias.column` reference as (lower-cased alias, column)
+      def ref(e: Expression): Option[(String, String)] = e match {
+        case u: UnresolvedAttribute if u.nameParts.length == 2 =>
+          Some((u.nameParts.head.toLowerCase, u.nameParts.last))
+        case _ => None
+      }
       // (targetCol, sourceCol) pairs from t.k = s.k / s.k = t.k conjuncts
-      val equiKeys: Seq[(String, String)] = conjuncts(parsed).flatMap {
-        case org.apache.spark.sql.catalyst.expressions.EqualTo(a, b) =>
-          def side(e: org.apache.spark.sql.catalyst.expressions.Expression)
-              : Option[(String, String)] = e match {
-            case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-                if u.nameParts.length == 2 =>
-              Some((u.nameParts.head.toLowerCase, u.nameParts.last))
-            case _ => None
-          }
-          (side(a), side(b)) match {
-            case (Some(("t", tc)), Some(("s", sc))) => Some((tc, sc))
-            case (Some(("s", sc)), Some(("t", tc))) => Some((tc, sc))
-            case _ => None
-          }
+      val equiKeys: Seq[(String, String)] = parsed.flatMap {
+        case EqualTo(a, b) => (ref(a), ref(b)) match {
+          case (Some(("t", tc)), Some(("s", sc))) => Some((tc, sc))
+          case (Some(("s", sc)), Some(("t", tc))) => Some((tc, sc))
+          case _ => None
+        }
         case _ => None
       }.filter { case (tc, _) => snap.schema.fieldNames.contains(tc) }
       // conjuncts over TARGET columns only (t.x > 5) stats-prune files
       // exactly like DELETE — the UPDATE-shaped merges live on this
-      val tOnlyPred: Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
-        def stripT(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-          e.transform {
-            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-                if a.nameParts.length == 2 && a.nameParts.head.equalsIgnoreCase("t") =>
-              org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
-                Seq(a.nameParts.last))
-          }
-        val tOnly = conjuncts(parsed).filter { c =>
-          val attrs = c.collect {
-            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a
-          }
-          attrs.nonEmpty && attrs.forall(a =>
-            a.nameParts.length == 2 && a.nameParts.head.equalsIgnoreCase("t") &&
-              snap.schema.fieldNames.exists(_.equalsIgnoreCase(a.nameParts.last)))
-        }
-        tOnly.map(stripT).reduceOption(
-          org.apache.spark.sql.catalyst.expressions.And(_, _))
-          .map(p => graft.sources.GeneratedPruning.augment(spark, snap, p))
-      }
+      val tOnlyPred: Option[Expression] = parsed.filter { c =>
+        val refs = c.collect { case a: UnresolvedAttribute => ref(a) }
+        refs.nonEmpty && refs.forall(_.exists { case (alias, n) =>
+          alias == "t" && snap.schema.fieldNames.exists(_.equalsIgnoreCase(n))
+        })
+      }.map(_.transform {
+        case a: UnresolvedAttribute if ref(a).exists(_._1 == "t") =>
+          UnresolvedAttribute(Seq(a.nameParts.last))
+      }).reduceOption(And(_, _))
+        .map(p => graft.sources.GeneratedPruning.augment(spark, snap, p))
       def tOnlyKeep(f: DeltaLog.AddFile): Boolean =
         tOnlyPred.forall(p => graft.sources.DeltaStats.mayMatch(snap, f, p))
       val candidates: Seq[DeltaLog.AddFile] =
@@ -1432,53 +1414,48 @@ object DeltaWrite {
         group.zipWithIndex.foldRight(lit(-1): Column) { case ((c, i), els) =>
           when(c.condition.map(expr).getOrElse(lit(true)), lit(i)).otherwise(els)
         }
-      def deleteIdxs(group: Seq[MergeClause]): Seq[Int] =
-        group.zipWithIndex.collect {
-          case (_: MergeClause.Delete, i) => i
-          case (_: MergeClause.SourceDelete, i) => i
-        }
-      // target column f under the group's action: CASE on _m_action
-      def outCol(group: Seq[MergeClause], f: StructField): Column = {
-        val base: Column = col(s"t.${q(f.name)}")
+      // a clause's SET (or INSERT VALUES) map; None for the DELETE clauses
+      def setOf(c: MergeClause): Option[Map[String, String]] = c match {
+        case MergeClause.Update(_, set) => Some(set)
+        case MergeClause.SourceUpdate(_, set) => Some(set)
+        case MergeClause.Insert(_, values) => Some(values)
+        case _ => None
+      }
+      // the group's UPDATE (or else DELETE) clause indices
+      def idxs(group: Seq[MergeClause], updates: Boolean): Seq[Integer] =
+        group.indices.filter(i => setOf(group(i)).isDefined == updates).map(Integer.valueOf)
+      // column f under the group's action (CASE on _m_action); `base`
+      // where the clause names no value for f
+      def outCol(group: Seq[MergeClause], f: StructField)(
+          base: Column = col(s"t.${q(f.name)}")): Column =
         group.zipWithIndex.foldRight(base) { case ((c, i), els) =>
-          val v = c match {
-            case MergeClause.Update(_, set) =>
-              set.get(f.name).map(s => expr(s).cast(f.dataType)).getOrElse(base)
-            case MergeClause.SourceUpdate(_, set) =>
-              set.get(f.name).map(s => expr(s).cast(f.dataType)).getOrElse(base)
-            case _ => base // deletes are filtered out before projection
-          }
+          val v = setOf(c).flatMap(_.get(f.name)).fold(base)(s => expr(s).cast(f.dataType))
           when(col("_m_action") === i, v).otherwise(els)
         }.as(f.name)
-      }
-      def updatedIdxs(group: Seq[MergeClause]): Seq[Int] =
-        group.zipWithIndex.collect {
-          case (_: MergeClause.Update, i) => i
-          case (_: MergeClause.SourceUpdate, i) => i
-        }
-      // row-tracking columns: updates inherit the id (ver nulls to THIS
-      // commit), copies keep both, inserts mint fresh ids
-      def trackCols(group: Seq[MergeClause], rowIdCols: Seq[String]): Seq[Column] =
-        rowIdCols match {
+      // a clause group applied to its acted rows: deletes dropped, sets
+      // projected; row ids: updates inherit the id (ver nulls to THIS
+      // commit), copies keep both
+      def applied(acted: DataFrame, group: Seq[MergeClause], rowIdCols: Seq[String]) = {
+        val track = rowIdCols match {
           case Seq(matId, matVer) =>
-            val upd = updatedIdxs(group)
             Seq(col(s"t.${q(matId)}").as(matId),
-              when(col("_m_action").isin(upd.map(Integer.valueOf): _*),
+              when(col("_m_action").isin(idxs(group, updates = true): _*),
                 lit(null).cast("long"))
                 .otherwise(col(s"t.${q(matVer)}")).as(matVer))
           case _ => Nil
         }
-      // a clause group applied to its rows: deletes dropped, sets projected
-      def applied(acted: DataFrame, group: Seq[MergeClause], rowIdCols: Seq[String]) =
-        acted.filter(!col("_m_action")
-          .isin((deleteIdxs(group) :+ -999).map(Integer.valueOf): _*))
-          .select(snap.schema.fields.toIndexedSeq.map(outCol(group, _)) ++
-            trackCols(group, rowIdCols): _*)
+        acted.filter(!col("_m_action").isin(idxs(group, updates = false) :+ Integer.valueOf(-999): _*))
+          .select(snap.schema.fields.toIndexedSeq.map(outCol(group, _)()) ++ track: _*)
+      }
+      // target rows tagged with the action their clause group picks:
+      // matched rows join a source row, unmatched ones (copied through
+      // when there is no NOT MATCHED BY SOURCE clause) have none
       def matchedActed(rows: DataFrame) =
         rows.alias("t").join(src.alias("s"), expr(condition), "inner")
           .withColumn("_m_action", actionOf(matched))
-      def unmatchedTarget(rows: DataFrame) =
+      def unmatchedActed(rows: DataFrame) =
         rows.alias("t").join(src.alias("s"), expr(condition), "left_anti").alias("t")
+          .withColumn("_m_action", actionOf(notMatchedBySource))
 
       // ---- not-matched (insert) side: source rows with no target hit
       def inserts(t: Touched): Option[DataFrame] =
@@ -1489,22 +1466,12 @@ object DeltaWrite {
           }
           val acted = insertBase.withColumn("_m_action",
             actionOf(notMatched)).filter(col("_m_action") =!= -1)
-          val insCols = snap.schema.fields.toIndexedSeq.map { f =>
-            // an INSERT clause that doesn't name the column takes its
-            // DEFAULT when one is declared (allowColumnDefaults), NULL
-            // otherwise — delta-spark's insert semantics
-            val unnamed: Column =
-              if (f.metadata.contains("CURRENT_DEFAULT"))
-                expr(defaultSqlOf(f)).cast(f.dataType)
-              else lit(null).cast(f.dataType)
-            notMatched.zipWithIndex.foldRight(unnamed) {
-              case ((c, i), els) =>
-                val v = c.values.get(f.name)
-                  .map(s => expr(s).cast(f.dataType))
-                  .getOrElse(unnamed)
-                when(col("_m_action") === i, v).otherwise(els)
-            }.as(f.name)
-          } ++ t.rowIdCols.map(c => lit(null).cast("long").as(c)) // fresh row ids
+          // an INSERT clause that doesn't name the column takes its
+          // DEFAULT when one is declared (allowColumnDefaults), NULL
+          // otherwise — delta-spark's insert semantics
+          val insCols = snap.schema.fields.toIndexedSeq.map(f => outCol(notMatched, f)(
+            if (f.metadata.contains("CURRENT_DEFAULT")) expr(defaultSqlOf(f)).cast(f.dataType)
+            else lit(null).cast(f.dataType))) ++ t.rowIdCols.map(c => lit(null).cast("long").as(c)) // fresh row ids
           acted.select(insCols: _*)
         }
 
@@ -1524,19 +1491,8 @@ object DeltaWrite {
             require(probe.isEmpty,
               where + "MERGE cannot update/delete a target row matched by multiple source rows")
           }
-          val matchedOut = t.rows.map(rows => applied(matchedActed(rows), matched, t.rowIdCols))
-          // target rows with no source hit: copied through, or acted on by
-          // the NOT MATCHED BY SOURCE clauses
-          val unmatchedOut = t.rows.map { rows =>
-            if (notMatchedBySource.isEmpty)
-              unmatchedTarget(rows).select((snap.schema.fieldNames.toIndexedSeq ++
-                t.rowIdCols).map(f =>
-                col(s"t.${q(f)}").as(f)): _*)
-            else applied(unmatchedTarget(rows)
-              .withColumn("_m_action", actionOf(notMatchedBySource)),
-              notMatchedBySource, t.rowIdCols)
-          }
-          (matchedOut.toSeq ++ unmatchedOut.toSeq ++ inserts(t).toSeq)
+          (t.rows.toSeq.flatMap(rows => Seq(applied(matchedActed(rows), matched, t.rowIdCols),
+            applied(unmatchedActed(rows), notMatchedBySource, t.rowIdCols))) ++ inserts(t))
             .reduceOption(_ unionByName _)
             .map(enforceObligations(snap, _, schemaObligations = true))
         },
@@ -1545,12 +1501,11 @@ object DeltaWrite {
           def tSel(df: DataFrame) = df.select(tCols.map(f => col(s"t.${q(f)}").as(f)): _*)
           // update_pre/postimage and delete rows of one clause group
           def groupChanges(acted: DataFrame, group: Seq[MergeClause]): Seq[DataFrame] = {
-            val updIdx = updatedIdxs(group).map(Integer.valueOf)
-            val delIdx = deleteIdxs(group).map(Integer.valueOf)
+            val (updIdx, delIdx) = (idxs(group, updates = true), idxs(group, updates = false))
             val upd = acted.filter(col("_m_action").isin(updIdx: _*))
             (if (updIdx.isEmpty) Nil
             else Seq(tSel(upd).withColumn("_change_type", lit("update_preimage")),
-              upd.select(snap.schema.fields.toIndexedSeq.map(outCol(group, _)): _*)
+              upd.select(snap.schema.fields.toIndexedSeq.map(outCol(group, _)()): _*)
                 .withColumn("_change_type", lit("update_postimage")))) ++
               (if (delIdx.isEmpty) Nil
               else Seq(tSel(acted.filter(col("_m_action").isin(delIdx: _*)))
@@ -1558,9 +1513,7 @@ object DeltaWrite {
           }
           t.rows.toSeq.flatMap { rows =>
             groupChanges(matchedActed(rows), matched) ++
-              (if (notMatchedBySource.isEmpty) Nil
-              else groupChanges(unmatchedTarget(rows)
-                .withColumn("_m_action", actionOf(notMatchedBySource)), notMatchedBySource))
+              groupChanges(unmatchedActed(rows), notMatchedBySource)
           } ++ inserts(t).map(_.select(tCols.map(col): _*)
             .withColumn("_change_type", lit("insert")))
         },
@@ -2974,7 +2927,6 @@ object DeltaWrite {
       spark: SparkSession,
       tablePath: String,
       partActions: Long = checkpointPartActions): Long = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     require(partActions > 0, "partActions must be positive")
     val table = new Path(tablePath)
@@ -2988,86 +2940,33 @@ object DeltaWrite {
     if (snap.protocol.exists(_.writerFeatures.contains("v2Checkpoint")) ||
         snap.configuration.get("delta.checkpointPolicy").contains("v2"))
       return checkpointV2(spark, tablePath, partActions = partActions)
-    val strMap = MapType(StringType, StringType, valueContainsNull = true)
-    val cpSchema = StructType(Seq(
-      StructField("protocol", StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType))))),
-      StructField("txn", StructType(Seq(
-        StructField("appId", StringType),
-        StructField("version", LongType)))),
-      StructField("metaData", StructType(Seq(
-        StructField("id", StringType),
-        StructField("format", StructType(Seq(
-          StructField("provider", StringType),
-          StructField("options", strMap)))),
-        StructField("schemaString", StringType),
-        StructField("partitionColumns", ArrayType(StringType)),
-        StructField("configuration", strMap),
-        StructField("createdTime", LongType)))),
-      StructField("domainMetadata", StructType(Seq(
-        StructField("domain", StringType),
-        StructField("configuration", StringType),
-        StructField("removed", BooleanType)))),
-      StructField("add", StructType(Seq(
-        StructField("path", StringType),
-        StructField("partitionValues", strMap),
-        StructField("size", LongType),
-        StructField("modificationTime", LongType),
-        StructField("dataChange", BooleanType),
-        StructField("stats", StringType),
-        // dropping a live add's DV from a checkpoint would resurrect its
-        // deleted rows for every reader that replays from it
-        StructField("deletionVector", StructType(Seq(
-          StructField("storageType", StringType),
-          StructField("pathOrInlineDv", StringType),
-          StructField("offset", IntegerType),
-          StructField("sizeInBytes", IntegerType),
-          StructField("cardinality", LongType)))),
-        // row tracking: ids live in the add actions; a checkpoint that
-        // dropped them would re-assign every row on the next replay
-        StructField("baseRowId", LongType),
-        StructField("defaultRowCommitVersion", LongType))))))
-    val metaNode = snap.metaDataRaw.map(mapper.readTree)
-    def metaField(f: String): Option[com.fasterxml.jackson.databind.JsonNode] =
-      metaNode.flatMap(n => Option(n.get(f)).filterNot(_.isNull))
-    val metaRow = Row(
-      metaField("id").map(_.asText).getOrElse(java.util.UUID.randomUUID().toString),
-      Row("parquet", Map.empty[String, String]),
-      snap.schema.json,
-      snap.partitionColumns,
-      snap.configuration, // dropping config here would strip DV/mapping opt-ins
-      metaField("createdTime").map(_.asLong()).getOrElse(System.currentTimeMillis()))
-    val p = snap.protocol.getOrElse(DeltaLog.Protocol(1, 2))
-    def feats(s: Set[String]) = if (s.isEmpty) null else s.toSeq.sorted
-    val protoRow = Row(p.minReaderVersion, p.minWriterVersion,
-      feats(p.readerFeatures), feats(p.writerFeatures))
-    val metaRows: Seq[Row] =
-      Seq(Row(protoRow, null, null, null, null), Row(null, null, metaRow, null, null)) ++
-        snap.txns.toSeq.sortBy(_._1).map { case (app, v) =>
-          Row(null, Row(app, v), null, null, null)
-        } ++
-        snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, cfg) =>
-          Row(null, null, null, Row(d, cfg, false), null)
-        }
+    val cpSchema = StructType(CheckpointActions.fields :+ StructField("add", StructType(Seq(
+      StructField("path", StringType),
+      StructField("partitionValues", MapType(StringType, StringType, valueContainsNull = true)),
+      StructField("size", LongType),
+      StructField("modificationTime", LongType),
+      StructField("dataChange", BooleanType),
+      StructField("stats", StringType),
+      // dropping a live add's DV from a checkpoint would resurrect its
+      // deleted rows for every reader that replays from it
+      StructField("deletionVector", StructType(Seq(
+        StructField("storageType", StringType),
+        StructField("pathOrInlineDv", StringType),
+        StructField("offset", IntegerType),
+        StructField("sizeInBytes", IntegerType),
+        StructField("cardinality", LongType)))),
+      // row tracking: ids live in the add actions; a checkpoint that
+      // dropped them would re-assign every row on the next replay
+      StructField("baseRowId", LongType),
+      StructField("defaultRowCommitVersion", LongType)))))
+    val metaRows = CheckpointActions.rows(snap, cpSchema)
     val metaDf = spark.createDataFrame(
       spark.sparkContext.parallelize(metaRows, 1), cpSchema)
     // add actions stream from the distributed index — never collected
     val addDf = {
-      import org.apache.spark.sql.functions.{col, from_json, lit, struct}
-      ls.indexDF.select(
-        lit(null).cast(cpSchema("protocol").dataType).as("protocol"),
-        lit(null).cast(cpSchema("txn").dataType).as("txn"),
-        lit(null).cast(cpSchema("metaData").dataType).as("metaData"),
-        lit(null).cast(cpSchema("domainMetadata").dataType).as("domainMetadata"),
-        struct(
-          col("path"), col("partitionValues"), col("size"),
-          col("modificationTime"), lit(false).as("dataChange"), col("stats"),
-          from_json(col("deletionVector"), graft.sources.DeltaLog.dvStructType)
-            .as("deletionVector"),
-          col("baseRowId"), col("defaultRowCommitVersion")).as("add"))
+      import org.apache.spark.sql.functions.lit
+      ls.indexDF.select(CheckpointActions.fields.map(f =>
+        lit(null).cast(f.dataType).as(f.name)) :+ CheckpointActions.add: _*)
     }
     val nFiles = addDf.count()
     val nParts = math.max(1L, math.min(512L,
@@ -3078,17 +2977,7 @@ object DeltaWrite {
     val f = fs(spark, table)
     val tmp = new Path(logDir(table), s".cp-tmp-${java.util.UUID.randomUUID()}")
     out.write.parquet(tmp.toString)
-    val parts = {
-      val it = f.listFiles(tmp, false)
-      val found = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile && s.getPath.getName.endsWith(".parquet")) found += s.getPath
-      }
-      val r = found.result().sortBy(_.getName)
-      require(r.nonEmpty, s"checkpoint write produced no parquet part in $tmp")
-      r
-    }
+    val parts = CheckpointActions.parquetParts(f, tmp)
     // idempotent re-checkpoint: clear any prior checkpoint files of this
     // version (single- or multi-part) before publishing
     val CpName = (f"${snap.version}%020d" + """\.checkpoint(\..*)?\.parquet""").r
@@ -3114,6 +3003,89 @@ object DeltaWrite {
     val outLc = LocalIo.create(f, new Path(logDir(table), "_last_checkpoint"), true)
     try outLc.write(mapper.writeValueAsBytes(lc)) finally outLc.close()
     snap.version
+  }
+
+  /** The checkpoint parquet columns of the non-file actions (protocol,
+    * txn, metaData, domainMetadata — the spec's checkpoint schema) and of
+    * an add action, shared by [[checkpoint]] and [[checkpointV2]].
+    */
+  private object CheckpointActions {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    private val strMap = MapType(StringType, StringType, valueContainsNull = true)
+    val fields: Seq[StructField] = Seq(
+      StructField("protocol", StructType(Seq(
+        StructField("minReaderVersion", IntegerType),
+        StructField("minWriterVersion", IntegerType),
+        StructField("readerFeatures", ArrayType(StringType)),
+        StructField("writerFeatures", ArrayType(StringType))))),
+      StructField("txn", StructType(Seq(
+        StructField("appId", StringType),
+        StructField("version", LongType)))),
+      StructField("metaData", StructType(Seq(
+        StructField("id", StringType),
+        StructField("format", StructType(Seq(
+          StructField("provider", StringType),
+          StructField("options", strMap)))),
+        StructField("schemaString", StringType),
+        StructField("partitionColumns", ArrayType(StringType)),
+        StructField("configuration", strMap),
+        StructField("createdTime", LongType)))),
+      StructField("domainMetadata", StructType(Seq(
+        StructField("domain", StringType),
+        StructField("configuration", StringType),
+        StructField("removed", BooleanType)))))
+
+    /** `snap`'s non-file actions as rows of `schema` (which holds
+      * [[fields]]): protocol, metaData (the table's original identity),
+      * every txn, every domainMetadata. */
+    def rows(snap: DeltaLog.Snapshot, schema: StructType): Seq[Row] = {
+      def row(column: String, value: Row) = Row.fromSeq(schema.fieldNames.toSeq
+        .map(n => if (n == column) value else null))
+      val metaNode = snap.metaDataRaw.map(mapper.readTree)
+      def metaField(f: String): Option[com.fasterxml.jackson.databind.JsonNode] =
+        metaNode.flatMap(n => Option(n.get(f)).filterNot(_.isNull))
+      val p = snap.protocol.getOrElse(DeltaLog.Protocol(1, 2))
+      def feats(s: Set[String]) = if (s.isEmpty) null else s.toSeq.sorted
+      Seq(
+        row("protocol", Row(p.minReaderVersion, p.minWriterVersion,
+          feats(p.readerFeatures), feats(p.writerFeatures))),
+        row("metaData", Row(
+          metaField("id").map(_.asText).getOrElse(java.util.UUID.randomUUID().toString),
+          Row("parquet", Map.empty[String, String]),
+          snap.schema.json,
+          snap.partitionColumns,
+          snap.configuration, // dropping config here would strip DV/mapping opt-ins
+          metaField("createdTime").map(_.asLong()).getOrElse(System.currentTimeMillis())))) ++
+        snap.txns.toSeq.sortBy(_._1).map { case (app, v) => row("txn", Row(app, v)) } ++
+        snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, cfg) =>
+          row("domainMetadata", Row(d, cfg, false))
+        }
+    }
+
+    /** The `add` column over the distributed log index's rows. */
+    def add: Column = {
+      import org.apache.spark.sql.functions.{col, from_json, lit, struct}
+      struct(
+        col("path"), col("partitionValues"), col("size"),
+        col("modificationTime"), lit(false).as("dataChange"), col("stats"),
+        from_json(col("deletionVector"), graft.sources.DeltaLog.dvStructType)
+          .as("deletionVector"),
+        col("baseRowId"), col("defaultRowCommitVersion")).as("add")
+    }
+
+    /** The parquet part files a write left in `dir`, by name. */
+    def parquetParts(f: FileSystem, dir: Path): Seq[Path] = {
+      val it = f.listFiles(dir, false)
+      val found = Seq.newBuilder[Path]
+      while (it.hasNext) {
+        val s = it.next()
+        if (s.isFile && s.getPath.getName.endsWith(".parquet")) found += s.getPath
+      }
+      val parts = found.result().sortBy(_.getName)
+      require(parts.nonEmpty, s"checkpoint write produced no parquet part in $dir")
+      parts
+    }
   }
 
   /** Multi-part checkpoint threshold: past this many add actions the
@@ -3152,7 +3124,7 @@ object DeltaWrite {
       partActions: Long = checkpointPartActions): Long = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.functions.{col, from_json, lit, struct}
+    import org.apache.spark.sql.functions.lit
     require(partActions > 0, "partActions must be positive")
     val table = new Path(tablePath)
     val ls = DeltaLog.lazySnapshot(spark, tablePath)
@@ -3167,13 +3139,7 @@ object DeltaWrite {
       StructField("path", StringType),
       StructField("deletionTimestamp", LongType),
       StructField("dataChange", BooleanType)))
-    val addDf = ls.indexDF.select(
-      struct(
-        col("path"), col("partitionValues"), col("size"),
-        col("modificationTime"), lit(false).as("dataChange"), col("stats"),
-        from_json(col("deletionVector"), graft.sources.DeltaLog.dvStructType)
-          .as("deletionVector"),
-        col("baseRowId"), col("defaultRowCommitVersion")).as("add"),
+    val addDf = ls.indexDF.select(CheckpointActions.add,
       lit(null).cast(removeType).as("remove"))
     val nFiles = addDf.count()
     val sidecars: Seq[(String, Long, Long)] =
@@ -3186,16 +3152,7 @@ object DeltaWrite {
           .write.parquet(tmp.toString)
         val sidecarDir = new Path(logDir(table), "_sidecars")
         f.mkdirs(sidecarDir)
-        val parts = {
-          val it = f.listFiles(tmp, false)
-          val found = Seq.newBuilder[Path]
-          while (it.hasNext) {
-            val s = it.next()
-            if (s.isFile && s.getPath.getName.endsWith(".parquet")) found += s.getPath
-          }
-          found.result().sortBy(_.getName)
-        }
-        require(parts.nonEmpty, s"sidecar write produced no parquet part in $tmp")
+        val parts = CheckpointActions.parquetParts(f, tmp)
         val out = parts.zipWithIndex.map { case (src, i) =>
           // fresh uuid-based names: sidecars are immutable and shared
           // across checkpoints that reference them — never overwritten
@@ -3223,19 +3180,7 @@ object DeltaWrite {
       val cm = mapper.createObjectNode()
       cm.putObject("checkpointMetadata").put("version", snap.version)
       lines += mapper.writeValueAsString(cm)
-      val pn = mapper.createObjectNode()
-      val proto = pn.putObject("protocol")
-      proto.put("minReaderVersion", p.minReaderVersion)
-      proto.put("minWriterVersion", p.minWriterVersion)
-      if (p.minReaderVersion >= 3) {
-        val rf = proto.putArray("readerFeatures")
-        p.readerFeatures.toSeq.sorted.foreach(rf.add)
-      }
-      if (p.minWriterVersion >= 7) {
-        val wf = proto.putArray("writerFeatures")
-        p.writerFeatures.toSeq.sorted.foreach(wf.add)
-      }
-      lines += mapper.writeValueAsString(pn)
+      lines += mapper.writeValueAsString(protocolAction(p))
       val mn = mapper.createObjectNode()
       metaNode match {
         case Some(raw) => mn.set[com.fasterxml.jackson.databind.JsonNode]("metaData", raw)
@@ -3278,64 +3223,25 @@ object DeltaWrite {
       if (!f.rename(tmpManifest, manifestPath))
         throw new IllegalStateException(s"Failed to publish manifest $manifestPath")
     } else {
-      val manifestSchema = StructType(Seq(
+      val manifestSchema = StructType(
         StructField("checkpointMetadata", StructType(Seq(
           StructField("version", LongType),
-          StructField("tags", strMap)))),
-        StructField("protocol", StructType(Seq(
-          StructField("minReaderVersion", IntegerType),
-          StructField("minWriterVersion", IntegerType),
-          StructField("readerFeatures", ArrayType(StringType)),
-          StructField("writerFeatures", ArrayType(StringType))))),
-        StructField("metaData", StructType(Seq(
-          StructField("id", StringType),
-          StructField("format", StructType(Seq(
-            StructField("provider", StringType),
-            StructField("options", strMap)))),
-          StructField("schemaString", StringType),
-          StructField("partitionColumns", ArrayType(StringType)),
-          StructField("configuration", strMap),
-          StructField("createdTime", LongType)))),
-        StructField("txn", StructType(Seq(
-          StructField("appId", StringType),
-          StructField("version", LongType)))),
-        StructField("domainMetadata", StructType(Seq(
-          StructField("domain", StringType),
-          StructField("configuration", StringType),
-          StructField("removed", BooleanType)))),
+          StructField("tags", strMap)))) +: CheckpointActions.fields :+
         StructField("sidecar", StructType(Seq(
           StructField("path", StringType),
           StructField("sizeInBytes", LongType),
           StructField("modificationTime", LongType),
-          StructField("tags", strMap))))))
-      def feats(s: Set[String]) = if (s.isEmpty) null else s.toSeq.sorted
-      val protoRow = Row(p.minReaderVersion, p.minWriterVersion,
-        feats(p.readerFeatures), feats(p.writerFeatures))
-      val metaRow = Row(
-        metaField("id").map(_.asText).getOrElse(java.util.UUID.randomUUID().toString),
-        Row("parquet", Map.empty[String, String]),
-        snap.schema.json,
-        snap.partitionColumns,
-        snap.configuration,
-        metaField("createdTime").map(_.asLong()).getOrElse(System.currentTimeMillis()))
+          StructField("tags", strMap)))))
+      def row(column: String, value: Row) = Row.fromSeq(manifestSchema.fieldNames.toSeq
+        .map(n => if (n == column) value else null))
       // domainMetadata MUST ride in the manifest (like the JSON flavor and
       // the classic checkpoint): after metadata cleanup it is the only
       // carrier of e.g. delta.rowTracking's rowIdHighWaterMark — dropping
       // it would reassign stable row ids from 0 on the next commit
       val rows: Seq[Row] =
-        Seq(
-          Row(Row(snap.version, null), null, null, null, null, null),
-          Row(null, protoRow, null, null, null, null),
-          Row(null, null, metaRow, null, null, null)) ++
-          snap.txns.toSeq.sortBy(_._1).map { case (app, v) =>
-            Row(null, null, null, Row(app, v), null, null)
-          } ++
-          snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, cfg) =>
-            Row(null, null, null, null, Row(d, cfg, false), null)
-          } ++
-          sidecars.map { case (name, len, mt) =>
-            Row(null, null, null, null, null, Row(name, len, mt, null))
-          }
+        row("checkpointMetadata", Row(snap.version, null)) +:
+          CheckpointActions.rows(snap, manifestSchema) ++:
+          sidecars.map { case (name, len, mt) => row("sidecar", Row(name, len, mt, null)) }
       val manifestDf = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), manifestSchema)
       val tmpManifest = new Path(logDir(table), s".tmp-manifest-$uuid")
@@ -3894,6 +3800,25 @@ object DeltaWrite {
     *     restore, which re-adds live paths without removing them and
     *     already holds the target index to aggregate).
     */
+  /** The `{"protocol": {...}}` action for `p`; the feature lists appear
+    * only at the versions that carry them (reader 3, writer 7). */
+  private def protocolAction(p: DeltaLog.Protocol)
+      : com.fasterxml.jackson.databind.node.ObjectNode = {
+    val pn = mapper.createObjectNode()
+    val proto = pn.putObject("protocol")
+    proto.put("minReaderVersion", p.minReaderVersion)
+    proto.put("minWriterVersion", p.minWriterVersion)
+    if (p.minReaderVersion >= 3) {
+      val rf = proto.putArray("readerFeatures")
+      p.readerFeatures.toSeq.sorted.foreach(rf.add)
+    }
+    if (p.minWriterVersion >= 7) {
+      val wf = proto.putArray("writerFeatures")
+      p.writerFeatures.toSeq.sorted.foreach(wf.add)
+    }
+    pn
+  }
+
   private[graft] sealed trait CrcPlan
   private[graft] object CrcPlan {
     final case class Incremental(removedSizes: Seq[Long]) extends CrcPlan
@@ -3923,10 +3848,246 @@ object DeltaWrite {
       opParams: Seq[(String, String)] = Nil,
       opMetrics: Seq[(String, String)] = Nil,
       readScope: Option[Concurrency.ReadScope] = None): Long = {
-    val committed = commitRebasing(spark, table, version, operation, withMeta,
-      adds, removes, dataChange, protocolUpgrade, metaConfig, cdcs, ictEnabled,
-      rowIdBase, extraDomains, tableId, crc, txn, opParams, opMetrics,
-      readScope)
+    // one attempt at `version`, with the row-id base for that version
+    def attempt(version: Long, rowIdBase: Option[Long], blindAppend: Boolean): Long = {
+      val now = System.currentTimeMillis()
+      val nonce = java.util.UUID.randomUUID().toString
+      val lines = Seq.newBuilder[String]
+
+      // row tracking: every add needs a baseRowId (its first fresh row id)
+      // and defaultRowCommitVersion. Fresh files take ids past the table's
+      // high-water mark in order (id space advances by numRecords per file);
+      // adds arriving WITH ids (restore re-adds) keep them, only bumping the
+      // mark. The new mark commits as a `delta.rowTracking` domainMetadata
+      // action in the SAME commit — the spec's atomicity requirement.
+      def nRecs(stats: Option[String]): Option[Long] =
+        stats.flatMap(s =>
+          try Option(mapper.readTree(s).get("numRecords")).filterNot(_.isNull).map(_.asLong())
+          catch { case scala.util.control.NonFatal(_) => None })
+      val (trackedAdds, rowDomain) = rowIdBase match {
+        case None => (adds, None)
+        case Some(prevHwm) =>
+          var hwm = prevHwm
+          val assigned = adds.map { a =>
+            a.baseRowId match {
+              case Some(b) =>
+                nRecs(a.stats).foreach(n => hwm = math.max(hwm, b + n - 1))
+                a
+              case None =>
+                val n = nRecs(a.stats).getOrElse(throw new IllegalStateException(
+                  s"row tracking requires numRecords stats on ${a.relPath}"))
+                val b = hwm + 1
+                hwm += n
+                a.copy(baseRowId = Some(b),
+                  defaultRowCommitVersion = Some(version))
+            }
+          }
+          val dm =
+            if (hwm == prevHwm) None
+            else Some("delta.rowTracking" -> s"""{"rowIdHighWaterMark":$hwm}""")
+          (assigned, dm)
+      }
+
+      // in-commit timestamps: the authoritative monotonic clock lives in
+      // commitInfo (file mtimes lie after copies/restores). Enablement comes
+      // from the config riding THIS commit when one does (create / metadata
+      // / append paths pass the table config) or from the caller's snapshot
+      // config (`ictEnabled` — partial-rewrite commits pass no config), so
+      // the chain NEVER depends on the previous commit file's survival
+      // (checkpoint cleanup may remove it). The previous commit is read
+      // only on ICT tables, for monotonicity: max(now, prev+1) per spec;
+      // when cleanup removed it, `now` is the best available clock.
+      val enabled =
+        if (version == 0L || metaConfig.nonEmpty)
+          metaConfig.get("delta.enableInCommitTimestamps")
+            .exists(_.equalsIgnoreCase("true"))
+        else ictEnabled
+      val ict: Option[Long] =
+        if (!enabled) None
+        else {
+          val prev =
+            if (version == 0L) None
+            else prevInCommitTimestamp(spark, table, version - 1)
+          Some(math.max(now, prev.map(_ + 1L).getOrElse(now)))
+        }
+
+      val ci = mapper.createObjectNode()
+      val info = ci.putObject("commitInfo")
+      info.put("timestamp", now)
+      ict.foreach(t => info.put("inCommitTimestamp", t))
+      info.put("operation", operation)
+      // DESCRIBE HISTORY fidelity (delta-spark convention: both maps carry
+      // STRING values; metrics are the generic add/remove counts every
+      // operation can state truthfully)
+      val params = info.putObject("operationParameters")
+      opParams.foreach { case (k, v) => params.put(k, v) }
+      val metrics = info.putObject("operationMetrics")
+      metrics.put("numAddedFiles", trackedAdds.size.toString)
+      metrics.put("numRemovedFiles", removes.size.toString)
+      metrics.put("numAddedBytes", trackedAdds.map(_.size).sum.toString)
+      if (cdcs.nonEmpty)
+        metrics.put("numAddedChangeFiles", cdcs.size.toString)
+      val outRows = trackedAdds.map(a => nRecs(a.stats))
+      if (trackedAdds.nonEmpty && outRows.forall(_.isDefined))
+        metrics.put("numOutputRows", outRows.flatten.sum.toString)
+      opMetrics.foreach { case (k, v) => metrics.put(k, v) }
+      info.put("engineInfo", "graft")
+      info.put("isBlindAppend", blindAppend)
+      info.put("txnId", nonce)
+      lines += mapper.writeValueAsString(ci)
+
+      // idempotent-writer bookmark (SetTransaction): replay keeps the latest
+      // version per appId, so a restarted job can ask "did my batch N land?"
+      txn.foreach { case (appId, v) =>
+        val tn = mapper.createObjectNode()
+        val t = tn.putObject("txn")
+        t.put("appId", appId)
+        t.put("version", v)
+        t.put("lastUpdated", now)
+        lines += mapper.writeValueAsString(tn)
+      }
+
+      val protoJsonThisCommit: Option[String] = protocolUpgrade
+        .orElse(if (version == 0L) Some(DeltaLog.Protocol(1, 2)) else None).map { p =>
+          val pn = protocolAction(p)
+          lines += mapper.writeValueAsString(pn)
+          mapper.writeValueAsString(pn.get("protocol"))
+        }
+      val metaJsonThisCommit: Option[String] = withMeta.map { case (schema, partitionBy) =>
+        val mn = mapper.createObjectNode()
+        val meta = mn.putObject("metaData")
+        // the table id is its IDENTITY: a re-emit keeps the one assigned at
+        // create (a fresh id per schema change would make every evolution
+        // look like a table replacement to streaming readers)
+        meta.put("id", tableId.getOrElse(java.util.UUID.randomUUID().toString))
+        val fmt = meta.putObject("format")
+        fmt.put("provider", "parquet")
+        fmt.putObject("options")
+        meta.put("schemaString", schema.json)
+        val pcs = meta.putArray("partitionColumns"); partitionBy.foreach(pcs.add)
+        // a re-emitted metaData REPLACES the old one wholesale: dropping the
+        // table's configuration here would silently strip properties like
+        // delta.enableDeletionVectors or the column-mapping mode
+        val cfg = meta.putObject("configuration")
+        metaConfig.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
+        meta.put("createdTime", now)
+        lines += mapper.writeValueAsString(mn)
+        mapper.writeValueAsString(mn.get("metaData"))
+      }
+      removes.foreach { p =>
+        val rn = mapper.createObjectNode()
+        val rm = rn.putObject("remove")
+        rm.put("path", p) // already encoded in the log we replayed it from
+        rm.put("deletionTimestamp", now)
+        rm.put("dataChange", dataChange)
+        lines += mapper.writeValueAsString(rn)
+      }
+      val domainsThisCommit = rowDomain.toSeq ++ extraDomains
+      domainsThisCommit.foreach { case (domain, cfg) =>
+        val dn = mapper.createObjectNode()
+        val d = dn.putObject("domainMetadata")
+        d.put("domain", domain)
+        d.put("configuration", cfg)
+        d.put("removed", false)
+        lines += mapper.writeValueAsString(dn)
+      }
+      trackedAdds.foreach { a =>
+        val an = mapper.createObjectNode()
+        val add = an.putObject("add")
+        add.put("path", encodePath(a.relPath))
+        val pv = add.putObject("partitionValues")
+        a.partitionValues.foreach {
+          case (k, Some(v)) => pv.put(k, v)
+          case (k, None) => pv.putNull(k)
+        }
+        add.put("size", a.size)
+        add.put("modificationTime", a.modificationTime)
+        add.put("dataChange", dataChange)
+        a.stats.foreach(add.put("stats", _))
+        a.deletionVector.foreach(dj => add.set[com.fasterxml.jackson.databind.JsonNode](
+          "deletionVector", mapper.readTree(dj)))
+        a.baseRowId.foreach(add.put("baseRowId", _))
+        a.defaultRowCommitVersion.foreach(add.put("defaultRowCommitVersion", _))
+        lines += mapper.writeValueAsString(an)
+      }
+      // change-data files (CDF): readers use these EXCLUSIVELY for this
+      // commit's changes when present; dataChange is false by spec (the cdc
+      // file describes the change, it is not table data)
+      cdcs.foreach { c =>
+        val cn = mapper.createObjectNode()
+        val cdc = cn.putObject("cdc")
+        cdc.put("path", encodePath(c.relPath))
+        val pv = cdc.putObject("partitionValues")
+        c.partitionValues.foreach {
+          case (k, Some(v)) => pv.put(k, v)
+          case (k, None) => pv.putNull(k)
+        }
+        cdc.put("size", c.size)
+        cdc.put("dataChange", false)
+        lines += mapper.writeValueAsString(cn)
+      }
+
+      publishCommit(spark, table, version, lines.result().mkString("", "\n", "\n"))
+      // the commit is durable; checksum maintenance is best-effort on top
+      // (a crc write failure must not surface as a commit failure — the
+      // retry discipline above would then double-publish). The failure IS
+      // logged: it severs the incremental chain until the next Exact-plan
+      // commit or an explicit [[repairChecksum]], and a silent severance
+      // would surface as a confusing audit failure far from the cause.
+      try maybeWriteCrc(spark, table, version, trackedAdds, removes, crc,
+        metaJsonThisCommit, protoJsonThisCommit, domainsThisCommit)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          Console.err.println(
+            s"[graft] WARN: version checksum write failed for $table@$version " +
+              s"(chain severed until repairChecksum): $e")
+      }
+      version
+    }
+    def rebasing(): Long = {
+      // Optimistic concurrency: with a declared readScope, a lost commit race
+      // re-reads the winning commit(s), classifies the overlap
+      // (WriteSerializable rules, [[Concurrency.classify]]) and REBASES the
+      // same actions at the next free version when disjoint — re-deriving the
+      // row-id high-water mark from the winners so fresh ids never collide.
+      // Without a readScope (create/convert/clone, version-embedding paths)
+      // a lost race stays a loud ConcurrentCommitException.
+      // stamped into commitInfo so a racing writer can tell a true blind
+      // append from an insert-only read-based commit (MERGE with no matches
+      // emits only adds but its adds are post-images) — delta-spark's
+      // isBlindAppend convention, consumed by [[Concurrency.summarize]]
+      val blindAppend =
+        readScope.contains(Concurrency.ReadScope.Blind) && removes.isEmpty
+      var attemptVersion = version
+      var attemptRowIdBase = rowIdBase
+      var rebases = 0
+      while (readScope.isDefined) {
+        try {
+          return attempt(attemptVersion, attemptRowIdBase, blindAppend)
+        } catch {
+          case e: Concurrency.ConcurrentCommitException =>
+            if (rebases >= 10) throw e
+            rebases += 1
+            val latest = DeltaLog.lazySnapshot(spark, table.toString).meta
+            val winners =
+              Concurrency.summarize(spark, table, attemptVersion, latest.version)
+            val serializable = latest.configuration
+              .get("delta.isolationLevel").exists(_.equalsIgnoreCase("Serializable"))
+            Concurrency.classify(readScope.get, removes.toSet,
+              txn.map(_._1).toSet, extraDomains.map(_._1).toSet,
+              serializable, winners) match {
+              case Some(reason) => throw new Concurrency.ConflictException(
+                s"cannot commit $operation to $table: $reason")
+              case None =>
+                attemptVersion = latest.version + 1
+                attemptRowIdBase = attemptRowIdBase
+                  .map(_ => DeltaLog.rowIdHighWaterMark(latest))
+            }
+        }
+      }
+      attempt(version, rowIdBase, blindAppend)
+    }
+    val committed = rebasing()
     maybeUniformSync(spark, table, operation)
     committed
   }
@@ -3971,309 +4132,7 @@ object DeltaWrite {
       }
   }
 
-  private def commitRebasing(
-      spark: SparkSession,
-      table: Path,
-      version: Long,
-      operation: String,
-      withMeta: Option[(StructType, Seq[String])],
-      adds: Seq[AddDescriptor],
-      removes: Seq[String],
-      dataChange: Boolean,
-      protocolUpgrade: Option[DeltaLog.Protocol],
-      metaConfig: Map[String, String],
-      cdcs: Seq[AddDescriptor],
-      ictEnabled: Boolean,
-      rowIdBase: Option[Long],
-      extraDomains: Seq[(String, String)],
-      tableId: Option[String],
-      crc: CrcPlan,
-      txn: Option[(String, Long)],
-      opParams: Seq[(String, String)],
-      opMetrics: Seq[(String, String)],
-      readScope: Option[Concurrency.ReadScope]): Long = {
-    // Optimistic concurrency: with a declared readScope, a lost commit race
-    // re-reads the winning commit(s), classifies the overlap
-    // (WriteSerializable rules, [[Concurrency.classify]]) and REBASES the
-    // same actions at the next free version when disjoint — re-deriving the
-    // row-id high-water mark from the winners so fresh ids never collide.
-    // Without a readScope (create/convert/clone, version-embedding paths)
-    // a lost race stays a loud ConcurrentCommitException.
-    // stamped into commitInfo so a racing writer can tell a true blind
-    // append from an insert-only read-based commit (MERGE with no matches
-    // emits only adds but its adds are post-images) — delta-spark's
-    // isBlindAppend convention, consumed by [[Concurrency.summarize]]
-    val blindAppend =
-      readScope.contains(Concurrency.ReadScope.Blind) && removes.isEmpty
-    var attemptVersion = version
-    var attemptRowIdBase = rowIdBase
-    var rebases = 0
-    while (readScope.isDefined) {
-      try {
-        return commitAttempt(spark, table, attemptVersion, operation, withMeta,
-          adds, removes, dataChange, protocolUpgrade, metaConfig, cdcs,
-          ictEnabled, attemptRowIdBase, extraDomains, tableId, crc, txn,
-          opParams, opMetrics, blindAppend)
-      } catch {
-        case e: Concurrency.ConcurrentCommitException =>
-          if (rebases >= 10) throw e
-          rebases += 1
-          val latest = DeltaLog.lazySnapshot(spark, table.toString).meta
-          val winners =
-            Concurrency.summarize(spark, table, attemptVersion, latest.version)
-          val serializable = latest.configuration
-            .get("delta.isolationLevel").exists(_.equalsIgnoreCase("Serializable"))
-          Concurrency.classify(readScope.get, removes.toSet,
-            txn.map(_._1).toSet, extraDomains.map(_._1).toSet,
-            serializable, winners) match {
-            case Some(reason) => throw new Concurrency.ConflictException(
-              s"cannot commit $operation to $table: $reason")
-            case None =>
-              attemptVersion = latest.version + 1
-              attemptRowIdBase = attemptRowIdBase
-                .map(_ => DeltaLog.rowIdHighWaterMark(latest))
-          }
-      }
-    }
-    commitAttempt(spark, table, version, operation, withMeta, adds, removes,
-      dataChange, protocolUpgrade, metaConfig, cdcs, ictEnabled, rowIdBase,
-      extraDomains, tableId, crc, txn, opParams, opMetrics, blindAppend)
-  }
 
-  private def commitAttempt(
-      spark: SparkSession,
-      table: Path,
-      version: Long,
-      operation: String,
-      withMeta: Option[(StructType, Seq[String])],
-      adds: Seq[AddDescriptor],
-      removes: Seq[String],
-      dataChange: Boolean,
-      protocolUpgrade: Option[DeltaLog.Protocol],
-      metaConfig: Map[String, String],
-      cdcs: Seq[AddDescriptor],
-      ictEnabled: Boolean,
-      rowIdBase: Option[Long],
-      extraDomains: Seq[(String, String)],
-      tableId: Option[String],
-      crc: CrcPlan,
-      txn: Option[(String, Long)],
-      opParams: Seq[(String, String)],
-      opMetrics: Seq[(String, String)],
-      blindAppend: Boolean = false): Long = {
-    val now = System.currentTimeMillis()
-    val nonce = java.util.UUID.randomUUID().toString
-    val lines = Seq.newBuilder[String]
-
-    // row tracking: every add needs a baseRowId (its first fresh row id)
-    // and defaultRowCommitVersion. Fresh files take ids past the table's
-    // high-water mark in order (id space advances by numRecords per file);
-    // adds arriving WITH ids (restore re-adds) keep them, only bumping the
-    // mark. The new mark commits as a `delta.rowTracking` domainMetadata
-    // action in the SAME commit — the spec's atomicity requirement.
-    def nRecs(stats: Option[String]): Option[Long] =
-      stats.flatMap(s =>
-        try Option(mapper.readTree(s).get("numRecords")).filterNot(_.isNull).map(_.asLong())
-        catch { case scala.util.control.NonFatal(_) => None })
-    val (trackedAdds, rowDomain) = rowIdBase match {
-      case None => (adds, None)
-      case Some(prevHwm) =>
-        var hwm = prevHwm
-        val assigned = adds.map { a =>
-          a.baseRowId match {
-            case Some(b) =>
-              nRecs(a.stats).foreach(n => hwm = math.max(hwm, b + n - 1))
-              a
-            case None =>
-              val n = nRecs(a.stats).getOrElse(throw new IllegalStateException(
-                s"row tracking requires numRecords stats on ${a.relPath}"))
-              val b = hwm + 1
-              hwm += n
-              a.copy(baseRowId = Some(b),
-                defaultRowCommitVersion = Some(version))
-          }
-        }
-        val dm =
-          if (hwm == prevHwm) None
-          else Some("delta.rowTracking" -> s"""{"rowIdHighWaterMark":$hwm}""")
-        (assigned, dm)
-    }
-
-    // in-commit timestamps: the authoritative monotonic clock lives in
-    // commitInfo (file mtimes lie after copies/restores). Enablement comes
-    // from the config riding THIS commit when one does (create / metadata
-    // / append paths pass the table config) or from the caller's snapshot
-    // config (`ictEnabled` — partial-rewrite commits pass no config), so
-    // the chain NEVER depends on the previous commit file's survival
-    // (checkpoint cleanup may remove it). The previous commit is read
-    // only on ICT tables, for monotonicity: max(now, prev+1) per spec;
-    // when cleanup removed it, `now` is the best available clock.
-    val enabled =
-      if (version == 0L || metaConfig.nonEmpty)
-        metaConfig.get("delta.enableInCommitTimestamps")
-          .exists(_.equalsIgnoreCase("true"))
-      else ictEnabled
-    val ict: Option[Long] =
-      if (!enabled) None
-      else {
-        val prev =
-          if (version == 0L) None
-          else prevInCommitTimestamp(spark, table, version - 1)
-        Some(math.max(now, prev.map(_ + 1L).getOrElse(now)))
-      }
-
-    val ci = mapper.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now)
-    ict.foreach(t => info.put("inCommitTimestamp", t))
-    info.put("operation", operation)
-    // DESCRIBE HISTORY fidelity (delta-spark convention: both maps carry
-    // STRING values; metrics are the generic add/remove counts every
-    // operation can state truthfully)
-    val params = info.putObject("operationParameters")
-    opParams.foreach { case (k, v) => params.put(k, v) }
-    val metrics = info.putObject("operationMetrics")
-    metrics.put("numAddedFiles", trackedAdds.size.toString)
-    metrics.put("numRemovedFiles", removes.size.toString)
-    metrics.put("numAddedBytes", trackedAdds.map(_.size).sum.toString)
-    if (cdcs.nonEmpty)
-      metrics.put("numAddedChangeFiles", cdcs.size.toString)
-    val outRows = trackedAdds.map(a => nRecs(a.stats))
-    if (trackedAdds.nonEmpty && outRows.forall(_.isDefined))
-      metrics.put("numOutputRows", outRows.flatten.sum.toString)
-    opMetrics.foreach { case (k, v) => metrics.put(k, v) }
-    info.put("engineInfo", "graft")
-    info.put("isBlindAppend", blindAppend)
-    info.put("txnId", nonce)
-    lines += mapper.writeValueAsString(ci)
-
-    // idempotent-writer bookmark (SetTransaction): replay keeps the latest
-    // version per appId, so a restarted job can ask "did my batch N land?"
-    txn.foreach { case (appId, v) =>
-      val tn = mapper.createObjectNode()
-      val t = tn.putObject("txn")
-      t.put("appId", appId)
-      t.put("version", v)
-      t.put("lastUpdated", now)
-      lines += mapper.writeValueAsString(tn)
-    }
-
-    val protoJsonThisCommit: Option[String] = protocolUpgrade match {
-      case Some(p) =>
-        val pn = mapper.createObjectNode()
-        val proto = pn.putObject("protocol")
-        proto.put("minReaderVersion", p.minReaderVersion)
-        proto.put("minWriterVersion", p.minWriterVersion)
-        if (p.minReaderVersion >= 3) {
-          val rf = proto.putArray("readerFeatures")
-          p.readerFeatures.toSeq.sorted.foreach(rf.add)
-        }
-        if (p.minWriterVersion >= 7) {
-          val wf = proto.putArray("writerFeatures")
-          p.writerFeatures.toSeq.sorted.foreach(wf.add)
-        }
-        lines += mapper.writeValueAsString(pn)
-        Some(mapper.writeValueAsString(pn.get("protocol")))
-      case None if version == 0L =>
-        val pn = mapper.createObjectNode()
-        val proto = pn.putObject("protocol")
-        proto.put("minReaderVersion", 1)
-        proto.put("minWriterVersion", 2)
-        lines += mapper.writeValueAsString(pn)
-        Some(mapper.writeValueAsString(pn.get("protocol")))
-      case None => None
-    }
-    val metaJsonThisCommit: Option[String] = withMeta.map { case (schema, partitionBy) =>
-      val mn = mapper.createObjectNode()
-      val meta = mn.putObject("metaData")
-      // the table id is its IDENTITY: a re-emit keeps the one assigned at
-      // create (a fresh id per schema change would make every evolution
-      // look like a table replacement to streaming readers)
-      meta.put("id", tableId.getOrElse(java.util.UUID.randomUUID().toString))
-      val fmt = meta.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      meta.put("schemaString", schema.json)
-      val pcs = meta.putArray("partitionColumns"); partitionBy.foreach(pcs.add)
-      // a re-emitted metaData REPLACES the old one wholesale: dropping the
-      // table's configuration here would silently strip properties like
-      // delta.enableDeletionVectors or the column-mapping mode
-      val cfg = meta.putObject("configuration")
-      metaConfig.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-      meta.put("createdTime", now)
-      lines += mapper.writeValueAsString(mn)
-      mapper.writeValueAsString(mn.get("metaData"))
-    }
-    removes.foreach { p =>
-      val rn = mapper.createObjectNode()
-      val rm = rn.putObject("remove")
-      rm.put("path", p) // already encoded in the log we replayed it from
-      rm.put("deletionTimestamp", now)
-      rm.put("dataChange", dataChange)
-      lines += mapper.writeValueAsString(rn)
-    }
-    val domainsThisCommit = rowDomain.toSeq ++ extraDomains
-    domainsThisCommit.foreach { case (domain, cfg) =>
-      val dn = mapper.createObjectNode()
-      val d = dn.putObject("domainMetadata")
-      d.put("domain", domain)
-      d.put("configuration", cfg)
-      d.put("removed", false)
-      lines += mapper.writeValueAsString(dn)
-    }
-    trackedAdds.foreach { a =>
-      val an = mapper.createObjectNode()
-      val add = an.putObject("add")
-      add.put("path", encodePath(a.relPath))
-      val pv = add.putObject("partitionValues")
-      a.partitionValues.foreach {
-        case (k, Some(v)) => pv.put(k, v)
-        case (k, None) => pv.putNull(k)
-      }
-      add.put("size", a.size)
-      add.put("modificationTime", a.modificationTime)
-      add.put("dataChange", dataChange)
-      a.stats.foreach(add.put("stats", _))
-      a.deletionVector.foreach(dj => add.set[com.fasterxml.jackson.databind.JsonNode](
-        "deletionVector", mapper.readTree(dj)))
-      a.baseRowId.foreach(add.put("baseRowId", _))
-      a.defaultRowCommitVersion.foreach(add.put("defaultRowCommitVersion", _))
-      lines += mapper.writeValueAsString(an)
-    }
-    // change-data files (CDF): readers use these EXCLUSIVELY for this
-    // commit's changes when present; dataChange is false by spec (the cdc
-    // file describes the change, it is not table data)
-    cdcs.foreach { c =>
-      val cn = mapper.createObjectNode()
-      val cdc = cn.putObject("cdc")
-      cdc.put("path", encodePath(c.relPath))
-      val pv = cdc.putObject("partitionValues")
-      c.partitionValues.foreach {
-        case (k, Some(v)) => pv.put(k, v)
-        case (k, None) => pv.putNull(k)
-      }
-      cdc.put("size", c.size)
-      cdc.put("dataChange", false)
-      lines += mapper.writeValueAsString(cn)
-    }
-
-    publishCommit(spark, table, version, lines.result().mkString("", "\n", "\n"))
-    // the commit is durable; checksum maintenance is best-effort on top
-    // (a crc write failure must not surface as a commit failure — the
-    // retry discipline above would then double-publish). The failure IS
-    // logged: it severs the incremental chain until the next Exact-plan
-    // commit or an explicit [[repairChecksum]], and a silent severance
-    // would surface as a confusing audit failure far from the cause.
-    try maybeWriteCrc(spark, table, version, trackedAdds, removes, crc,
-      metaJsonThisCommit, protoJsonThisCommit, domainsThisCommit)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        Console.err.println(
-          s"[graft] WARN: version checksum write failed for $table@$version " +
-            s"(chain severed until repairChecksum): $e")
-    }
-    version
-  }
 
   /** Write `<version>.crc` (delta-spark's VersionChecksum shape) when the
     * state can be derived soundly — see [[CrcPlan]]. Never throws into the
@@ -4367,19 +4226,9 @@ object DeltaWrite {
     val metaJson = snap.metaDataRaw.getOrElse(throw new IllegalStateException(
       s"cannot repair checksum: $tablePath resolves no metaData"))
     val p = snap.protocol.getOrElse(DeltaLog.Protocol(1, 2))
-    val pn = mapper.createObjectNode()
-    pn.put("minReaderVersion", p.minReaderVersion)
-    pn.put("minWriterVersion", p.minWriterVersion)
-    if (p.minReaderVersion >= 3) {
-      val rf = pn.putArray("readerFeatures")
-      p.readerFeatures.toSeq.sorted.foreach(rf.add)
-    }
-    if (p.minWriterVersion >= 7) {
-      val wf = pn.putArray("writerFeatures")
-      p.writerFeatures.toSeq.sorted.foreach(wf.add)
-    }
     writeCrcFile(spark, new Path(tablePath), snap.version, nFiles, bytes,
-      metaJson, mapper.writeValueAsString(pn), snap.domainMetadata)
+      metaJson, mapper.writeValueAsString(protocolAction(p).get("protocol")),
+      snap.domainMetadata)
     snap.version
   }
 

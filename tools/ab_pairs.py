@@ -18,7 +18,10 @@ the change won and tied, and two verdicts:
   parent's by more than the bound `BENCHMARK.json` fixes for the metric.
 
 The direction of each metric (`better`) and the bounds come from the
-change's `BENCHMARK.json`. The exit code is non-zero when any run reports
+change's `BENCHMARK.json`. `--trace 1` passes through to `perfbench/run.py`,
+so the per-layer metrics (`spark.jobs`, `destinations.commit_driver_ms`, ...)
+get paired medians and win counts too; they have no bound, so their `bound`
+column reads `-`. The exit code is non-zero when any run reports
 `correct: false` or prints no result.
 """
 import argparse
@@ -31,11 +34,11 @@ import sys
 import time
 
 
-def run_side(checkout, workload, seed, seconds):
+def run_side(checkout, workload, seed, seconds, trace):
     """Runs the benchmark once in `checkout`; returns its result line (a
     dict) or None when it printed none."""
     cmd = [sys.executable, os.path.join("perfbench", "run.py"), "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds)]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, text=True)
     lines = [ln for ln in p.stdout.splitlines() if ln.strip()]
     try:
@@ -117,6 +120,8 @@ def main():
                    choices=["etl", "delta_upsert", "remote_small", "all"])
     a.add_argument("--seconds", type=float, default=12)
     a.add_argument("--first-seed", type=int, default=1)
+    a.add_argument("--trace", type=int, choices=[0, 1], default=0,
+                   help="1: per-layer metrics too (perfbench/run.py --trace 1)")
     a.add_argument("--raw", help="also write every run's result line to this JSON file")
     args = a.parse_args()
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
@@ -128,7 +133,7 @@ def main():
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
             t0 = time.time()
-            result = run_side(sides[side], args.workload, seed, args.seconds)
+            result = run_side(sides[side], args.workload, seed, args.seconds, args.trace)
             ok = result is not None and result.get("correct") is True
             print(f"pair {i + 1}/{args.pairs} seed {seed} {side}: "
                   f"{'correct' if ok else 'FAILED'} ({time.time() - t0:.0f} s)",
