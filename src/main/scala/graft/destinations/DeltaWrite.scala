@@ -1168,8 +1168,10 @@ object DeltaWrite {
         sum(c.isNull.cast("long")).as(s"_null_$i"))
     }
     val r = src.agg(aggs.head, aggs.tail: _*).collect()(0)
+    // an empty `src` reads null counts (and null ranges): no file is a candidate
     val ranges = keys.zipWithIndex.map { case ((tc, _), i) =>
-      (tc, snap.schema(tc).dataType, r.get(3 * i), r.get(3 * i + 1), r.getLong(3 * i + 2) > 0L)
+      (tc, snap.schema(tc).dataType, r.get(3 * i), r.get(3 * i + 1),
+        !r.isNullAt(3 * i + 2) && r.getLong(3 * i + 2) > 0L)
     }
     ls.filesWhere(f => keep(f) && ranges.forall { case (tc, dt, lo, hi, hasNull) =>
       graft.sources.DeltaStats.mayContain(
@@ -1186,7 +1188,7 @@ object DeltaWrite {
     */
   def upsert(spark: SparkSession, tablePath: String, df: DataFrame, keys: Seq[String],
       txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit, min}
+    import org.apache.spark.sql.functions.{array_distinct, array_sort, col, lit, min}
     require(keys.nonEmpty, s"upsert on $tablePath: requires at least one key column")
     val ls = DeltaLog.lazySnapshot(spark, tablePath)
     val snap = ls.meta
@@ -1207,14 +1209,21 @@ object DeltaWrite {
         output = { t =>
           // row tracking: an updated row inherits the smallest id among the
           // rows its key replaced (its commit version nulls to this
-          // commit); inserts get fresh ids (both columns null)
+          // commit); inserts get fresh ids (both columns null). The replaced
+          // rows group by key value as [[keyEquals]] compares it (a list key
+          // as its sorted distinct elements), so each incoming row joins
+          // one group.
           val incomingTracked = t.rowIdCols match {
             case Seq(matId, matVer) =>
               val withId = t.rows match {
                 case None => incoming.withColumn(matId, lit(null).cast("long"))
                 case Some(rows) =>
                   val oldIds = broadcastIfSmall(hit(rows)
-                    .groupBy(keys.map(col): _*)
+                    .groupBy(keys.map(k => snap.schema(k).dataType match {
+                      case _: org.apache.spark.sql.types.ArrayType =>
+                        array_sort(array_distinct(col(k))).as(k)
+                      case _ => col(k)
+                    }): _*)
                     .agg(min(col(matId)).as(matId))
                     .select(keys.map(k => col(k).as(s"_k_$k")) :+ col(matId): _*))
                   incoming.join(oldIds, keysMatch(incoming, oldIds, "_k_" + _), "left")
@@ -1449,9 +1458,13 @@ object DeltaWrite {
       }
       // target rows tagged with the action their clause group picks:
       // matched rows join a source row, unmatched ones (copied through
-      // when there is no NOT MATCHED BY SOURCE clause) have none
+      // when there is no NOT MATCHED BY SOURCE clause) have none. Without
+      // a MATCHED clause a matched row only copies through, once however
+      // many source rows it matches (the cardinality rule does not apply).
       def matchedActed(rows: DataFrame) =
-        rows.alias("t").join(src.alias("s"), expr(condition), "inner")
+        (if (matched.isEmpty)
+          rows.alias("t").join(src.alias("s"), expr(condition), "left_semi").alias("t")
+        else rows.alias("t").join(src.alias("s"), expr(condition), "inner"))
           .withColumn("_m_action", actionOf(matched))
       def unmatchedActed(rows: DataFrame) =
         rows.alias("t").join(src.alias("s"), expr(condition), "left_anti").alias("t")

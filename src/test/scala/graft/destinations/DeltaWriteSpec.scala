@@ -460,6 +460,44 @@ class DeltaWriteSpec extends SparkSpec {
     assert(replace._1 == 2 && replace._2 <= 3, s"replace $replace")
   }
 
+  test("row-level rewrites write each row once: set-equal list keys, insert-only merge") {
+    import spark.implicits._
+    // a tracked table holding one key set in two orders: the incoming row
+    // replaces both and inherits the smaller row id
+    val arr = tmpDir("dw-once-array").toString
+    DeltaWrite.createIfAbsent(spark, arr, StructType(Seq(StructField("k", LongType),
+      StructField("tags", ArrayType(IntegerType)))),
+      properties = Map("delta.enableRowTracking" -> "true"))
+    DeltaWrite.append(spark, arr, Seq((1L, Seq(1, 2)), (2L, Seq(2, 1))).toDF("k", "tags"))
+    val ids0 = DeltaLog.readWithRowIds(spark, arr).select("_row_id").as[Long].collect()
+    DeltaWrite.upsert(spark, arr, Seq((9L, Seq(1, 2))).toDF("k", "tags"), Seq("tags"))
+    val after = DeltaLog.readWithRowIds(spark, arr).select("k", "_row_id").as[(Long, Long)]
+      .collect().toSeq
+    assert(after == Seq((9L, ids0.min)), after)
+    // a target row matched by two source rows, no MATCHED clause: kept once
+    val ins = tmpDir("dw-once-merge").toString
+    DeltaWrite.createIfAbsent(spark, ins, StructType(Seq(StructField("k", LongType),
+      StructField("v", StringType))))
+    DeltaWrite.append(spark, ins, Seq((1L, "a")).toDF("k", "v"))
+    DeltaWrite.merge(spark, ins, Seq((1L, "x"), (1L, "y"), (2L, "z")).toDF("k", "v"),
+      "t.k = s.k", notMatched = Seq(DeltaWrite.MergeClause.Insert(None,
+        Map("k" -> "s.k", "v" -> "s.v"))))
+    assert(DeltaLog.read(spark, ins).as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "z")))
+  }
+
+  test("an empty upsert changes nothing and commits nothing") {
+    import spark.implicits._
+    val table = tmpDir("dw-empty-upsert").toString
+    DeltaWrite.createIfAbsent(spark, table, StructType(Seq(
+      StructField("id", LongType), StructField("v", StringType))))
+    val v1 = DeltaWrite.append(spark, table, Seq((1L, "a")).toDF("id", "v"))
+    val v2 = DeltaWrite.upsert(spark, table,
+      Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"))
+    assert(v2 == v1)
+    assert(DeltaLog.read(spark, table).collect().map(_.getString(1)).toSeq == Seq("a"))
+  }
+
   test("partition-condition replace prunes by partitionValues before any scan") {
     import spark.implicits._
     val table = tmpDir("dw-prune-part")
