@@ -1827,13 +1827,7 @@ object DeltaWrite {
     val partitionColumns = last.get("partitionColumns").elements().asScala.map(_.asText()).toSeq
     val adds = last.get("files").elements().asScala.map(_.asText()).toSeq.map { rel =>
       val st = f.getFileStatus(new Path(table, rel))
-      val pv: Seq[(String, Option[String])] = rel.split('/').dropRight(1).toSeq
-        .filter(_.contains('=')).map { seg =>
-          val eq = seg.indexOf('=')
-          val k = unescapePathName(seg.substring(0, eq))
-          val v = unescapePathName(seg.substring(eq + 1))
-          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v))
-        }
+      val pv = hivePartitionValues(rel.split('/').dropRight(1).toSeq.filter(_.contains('=')))
       AddDescriptor(rel, pv, st.getLen, st.getModificationTime)
     }
     commit(spark, table, 0L, "CONVERT", withMeta = Some((schema, partitionColumns)),
@@ -1876,13 +1870,7 @@ object DeltaWrite {
         .stripPrefix(qualifiedRoot).dropWhile(_ == '/')
       val hidden = rel.split('/').exists(s => s.startsWith("_") || s.startsWith("."))
       if (st.isFile && !hidden && rel.endsWith(".parquet")) {
-        val pv: Seq[(String, Option[String])] = rel.split('/').dropRight(1).toSeq
-          .filter(_.contains('=')).map { seg =>
-            val eq = seg.indexOf('=')
-            val k = unescapePathName(seg.substring(0, eq))
-            val v = unescapePathName(seg.substring(eq + 1))
-            k -> (if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v))
-          }
+        val pv = hivePartitionValues(rel.split('/').dropRight(1).toSeq.filter(_.contains('=')))
         val pvKeys = pv.map(_._1).toSet
         require(pvKeys == partCols.toSet,
           s"file $rel sits under partition dirs [${pvKeys.mkString(",")}] " +
@@ -3361,6 +3349,19 @@ object DeltaWrite {
     sb.toString
   }
 
+  /** Partition values of hive `k=v` dir segments, Spark's escaping undone;
+    * `__HIVE_DEFAULT_PARTITION__` (Spark's null marker) becomes a JSON null
+    * per the Delta spec.
+    */
+  private def hivePartitionValues(segments: Seq[String]): Seq[(String, Option[String])] =
+    segments.map { seg =>
+      val eq = seg.indexOf('=')
+      require(eq > 0, s"unexpected non-hive partition dir: $seg")
+      val v = unescapePathName(seg.substring(eq + 1))
+      unescapePathName(seg.substring(0, eq)) ->
+        (if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v))
+    }
+
   /** Write `df` as parquet under the table root (hive `col=value/` layout,
     * partition columns dropped from the file data per the Delta spec) and
     * return the add-action descriptors. Move-dont-copy publication:
@@ -3409,17 +3410,7 @@ object DeltaWrite {
         val st = f.getFileStatus(dest)
         val rel0 = if (relDir.isEmpty) unique else s"$relDir/$unique"
         val rel = if (subdir.isEmpty) rel0 else s"$subdir/$rel0"
-        // partitionValues from the hive dir segments; __HIVE_DEFAULT_PARTITION__
-        // (Spark's null marker) becomes a JSON null per the Delta spec
-        val pv: Seq[(String, Option[String])] =
-          if (relDir.isEmpty) Nil
-          else relDir.split('/').toSeq.map { seg =>
-            val eq = seg.indexOf('=')
-            require(eq > 0, s"unexpected non-hive partition dir: $seg")
-            val k = unescapePathName(seg.substring(0, eq))
-            val v = unescapePathName(seg.substring(eq + 1))
-            k -> (if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v))
-          }
+        val pv = if (relDir.isEmpty) Nil else hivePartitionValues(relDir.split('/').toSeq)
         adds += AddDescriptor(rel, pv, st.getLen, st.getModificationTime)
       }
     }
