@@ -3037,12 +3037,15 @@ object DeltaWrite {
         StructField("configuration", StringType),
         StructField("removed", BooleanType)))))
 
+    /** A row of `schema` holding `value` in `column`, null elsewhere. */
+    def row(schema: StructType, column: String, value: Row): Row =
+      Row.fromSeq(schema.fieldNames.toSeq.map(n => if (n == column) value else null))
+
     /** `snap`'s non-file actions as rows of `schema` (which holds
       * [[fields]]): protocol, metaData (the table's original identity),
       * every txn, every domainMetadata. */
     def rows(snap: DeltaLog.Snapshot, schema: StructType): Seq[Row] = {
-      def row(column: String, value: Row) = Row.fromSeq(schema.fieldNames.toSeq
-        .map(n => if (n == column) value else null))
+      def row(column: String, value: Row) = CheckpointActions.row(schema, column, value)
       val metaNode = snap.metaDataRaw.map(mapper.readTree)
       def metaField(f: String): Option[com.fasterxml.jackson.databind.JsonNode] =
         metaNode.flatMap(n => Option(n.get(f)).filterNot(_.isNull))
@@ -3233,8 +3236,7 @@ object DeltaWrite {
           StructField("sizeInBytes", LongType),
           StructField("modificationTime", LongType),
           StructField("tags", strMap)))))
-      def row(column: String, value: Row) = Row.fromSeq(manifestSchema.fieldNames.toSeq
-        .map(n => if (n == column) value else null))
+      def row(column: String, value: Row) = CheckpointActions.row(manifestSchema, column, value)
       // domainMetadata MUST ride in the manifest (like the JSON flavor and
       // the classic checkpoint): after metadata cleanup it is the only
       // carrier of e.g. delta.rowTracking's rowIdHighWaterMark — dropping
