@@ -673,8 +673,59 @@ object DeltaWrite {
       case _ => a <=> b
     }
 
-  /** Broadcast the key set when small enough for a map-side semi/anti join —
-    * the common case (incremental upserts are small vs the table).
+  /** A key value in the form [[keyEquals]] compares: a list key as its
+    * sorted distinct elements, a scalar as itself. Two values are
+    * `keyEquals` iff their normal forms are `<=>`.
+    */
+  private def normalKey(c: Column, dt: org.apache.spark.sql.types.DataType): Column = dt match {
+    case _: org.apache.spark.sql.types.ArrayType =>
+      import org.apache.spark.sql.functions.{array_distinct, array_sort}
+      array_sort(array_distinct(c))
+    case _ => c
+  }
+
+  /** Can a key of `dt` be matched through [[keySetContains]] with exactly
+    * [[keyEquals]]'s result? The set compares normal forms with Spark's
+    * interpreted ordering, which is `<=>` for atomic values (nulls equal,
+    * -0.0 = 0.0, NaN = NaN). A list key qualifies when its elements are
+    * atomic and not floating point: `array_sort` leaves -0.0 and 0.0 in
+    * either order, so two set-equal lists of doubles need not normalize to
+    * one form. Those keys, and struct or map keys, keep the join.
+    */
+  private def keySetExact(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    def atomic(t: DataType) = t match {
+      case _: NumericType | _: StringType | BinaryType | BooleanType | DateType |
+          TimestampType | TimestampNTZType => true
+      case _ => false
+    }
+    dt match {
+      case ArrayType(DoubleType | FloatType, _) => false
+      case ArrayType(e, _) => atomic(e)
+      case t => atomic(t)
+    }
+  }
+
+  /** One Catalyst `InSet` over `normal` (a struct of normal-form keys) and
+    * the set of its values in `keys`: the set is built once on the driver
+    * and travels with the plan, so matching needs neither a join nor a
+    * broadcast job. Its values are structs, which `InSet` compares by
+    * ordering, never by `equals`; a struct is never null, so the result is
+    * never null either.
+    */
+  private def keySetContains(normal: Column, dt: StructType,
+      keys: Seq[org.apache.spark.sql.Row]): Column = {
+    val toCatalyst =
+      org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dt)
+    org.apache.spark.sql.GraftShims.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.GraftShims.expression(normal), keys.map(toCatalyst).toSet))
+  }
+
+  /** Is `df` small by the optimizer's size estimate (at most 32 MiB) and
+    * is that estimate reliable? Decides both the broadcast hint
+    * ([[broadcastIfSmall]]) and whether [[upsert]] matches its keys
+    * through one driver-built set, so there is one threshold.
     *
     * r18: decided from the OPTIMIZER'S size estimate, not a counting job —
     * the old `limit(100001).count()` launched a Spark job (and recomputed
@@ -683,32 +734,36 @@ object DeltaWrite {
     * changes the plan, never the result — the estimate is a fast path,
     * not a correctness gate.
     *
-    * r19 (r18 verdict/advice): the hint is added ONLY when the estimate
-    * cannot be a fan-out underestimate. Size-only estimation passes
-    * `Generate` (explode) through at the child's size and a join's output
-    * can dwarf its inputs, so a plan containing either can report 32 MB
-    * for a frame that is really unbounded — and an explicit `broadcast()`
-    * bypasses `autoBroadcastJoinThreshold` AND AQE's runtime size checks
-    * (driver OOM or the hard 8 GB broadcast cap at 100 TB). Filters,
-    * projections, aggregates and limits only ever shrink the TRUE size
-    * below their input's, and leaves without real statistics surface the
-    * conf default (huge), failing the threshold on their own. When the
-    * hint is withheld, AQE still promotes the runtime-small side to a
-    * broadcast join from actual shuffle sizes — we lose only the
-    * pre-runtime shortcut, never safety. DeltaWriteSpec pins that a
-    * Generate-bearing frame is never hinted.
+    * r19 (r18 verdict/advice): the estimate counts ONLY when it cannot be
+    * a fan-out underestimate. Size-only estimation passes `Generate`
+    * (explode) through at the child's size and a join's output can dwarf
+    * its inputs, so a plan containing either can report 32 MB for a frame
+    * that is really unbounded — and an explicit `broadcast()` bypasses
+    * `autoBroadcastJoinThreshold` AND AQE's runtime size checks (driver
+    * OOM or the hard 8 GB broadcast cap at 100 TB). Filters, projections,
+    * aggregates and limits only ever shrink the TRUE size below their
+    * input's, and leaves without real statistics surface the conf default
+    * (huge), failing the threshold on their own.
     */
-  private[destinations] def broadcastIfSmall(df: DataFrame): DataFrame = {
+  private[destinations] def smallByEstimate(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan}
     def estimateReliable(p: LogicalPlan): Boolean = p match {
       case _: Generate | _: Join => false
       case other => other.children.forall(estimateReliable)
     }
     val plan = df.queryExecution.optimizedPlan
-    if (plan.stats.sizeInBytes <= BigInt(32L << 20) && estimateReliable(plan))
-      org.apache.spark.sql.functions.broadcast(df)
-    else df
+    plan.stats.sizeInBytes <= BigInt(32L << 20) && estimateReliable(plan)
   }
+
+  /** Broadcast the key set when [[smallByEstimate]] holds, for a map-side
+    * semi/anti join — the common case (incremental upserts are small vs
+    * the table). When the hint is withheld, AQE still promotes the
+    * runtime-small side to a broadcast join from actual shuffle sizes — we
+    * lose only the pre-runtime shortcut, never safety. DeltaWriteSpec pins
+    * that a Generate-bearing frame is never hinted.
+    */
+  private[destinations] def broadcastIfSmall(df: DataFrame): DataFrame =
+    if (smallByEstimate(df)) org.apache.spark.sql.functions.broadcast(df) else df
 
   // ------------------------------------------------------------- write API
 
@@ -1115,8 +1170,10 @@ object DeltaWrite {
       case None => candidates
       case Some(hit) =>
         val cand = DeltaLog.readFiles(spark, tablePath, snap, candidates, withFilePath = true)
+        // `_graft_file` is percent-encoded (a space reads %20): decode it
+        // as the add paths are
         val hitFiles = hit(cand).select(col("_graft_file")).distinct()
-          .collect().map(r => new Path(r.getString(0)).toString).toSet
+          .collect().map(r => DeltaLog.decodePath(r.getString(0))).toSet
         val f = fs(spark, table)
         candidates.filter(c => hitFiles.contains(new Path(
           f.makeQualified(new Path(table, DeltaLog.decodePath(c.path))).toString).toString))
@@ -1154,29 +1211,63 @@ object DeltaWrite {
     * aggregate over `src`'s key values (one small row to the driver)
     * range-prunes every file on its add-action stats; files `keep`
     * rejects drop out too. `keys` pairs a target column with the `src`
-    * column holding its values.
+    * column holding its values. With `keySet` (a struct column), the same
+    * aggregate also collects that column's distinct values, and the
+    * second result is the [[keySetContains]] predicate over them; None
+    * when there are more than [[KeySetMaxKeys]].
     */
   private def filesInKeyRange(
       ls: DeltaLog.LazySnapshot,
       snap: DeltaLog.Snapshot,
       src: DataFrame,
       keys: Seq[(String, Column)],
-      keep: DeltaLog.AddFile => Boolean = _ => true): Seq[DeltaLog.AddFile] = {
+      keep: DeltaLog.AddFile => Boolean = _ => true,
+      keySet: Option[Column] = None): (Seq[DeltaLog.AddFile], Option[Column]) = {
     import org.apache.spark.sql.functions.{max, min, sum}
     val aggs = keys.zipWithIndex.flatMap { case ((_, c), i) =>
       Seq(min(c).as(s"_min_$i"), max(c).as(s"_max_$i"),
         sum(c.isNull.cast("long")).as(s"_null_$i"))
-    }
+    } ++ keySet.map(BoundedCollectSet(_, KeySetMaxKeys).as("_key_set"))
     val r = src.agg(aggs.head, aggs.tail: _*).collect()(0)
     // an empty `src` reads null counts (and null ranges): no file is a candidate
     val ranges = keys.zipWithIndex.map { case ((tc, _), i) =>
       (tc, snap.schema(tc).dataType, r.get(3 * i), r.get(3 * i + 1),
         !r.isNullAt(3 * i + 2) && r.getLong(3 * i + 2) > 0L)
     }
-    ls.filesWhere(f => keep(f) && ranges.forall { case (tc, dt, lo, hi, hasNull) =>
+    val files = ls.filesWhere(f => keep(f) && ranges.forall { case (tc, dt, lo, hi, hasNull) =>
       graft.sources.DeltaStats.mayContain(
         graft.sources.DeltaStats.interval(snap, f, tc), dt, lo, hi, hasNull)
     })
+    val set = 3 * keys.size
+    (files, keySet.filterNot(_ => r.isNullAt(set)).map(keySetContains(_,
+      r.schema(set).dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+        .elementType.asInstanceOf[StructType],
+      r.getSeq[org.apache.spark.sql.Row](set))))
+  }
+
+  /** The most distinct keys [[upsert]] matches through a key set; more
+    * keep the join. An `InSet` travels inside every task of each query
+    * that holds it and is printed into the query's plan description, so
+    * its cost grows with its size while the join's broadcast is paid
+    * once. Measured on sf0.1 orders (a 150,000-row table, one `long` key,
+    * 4 vCPU, local[4], min of 3 upserts, key set against join): 1,500 keys
+    * 470/489 ms, 3,334 keys 520/521 ms, 3,948 keys 531/511 ms, 5,000
+    * keys 570/505 ms, 15,000 keys 686/493 ms. The bound sits where the
+    * key set is still within 5 % of the join.
+    */
+  private[destinations] val KeySetMaxKeys = 4000
+
+  /** How [[upsert]] finds the table rows an incoming key matches. */
+  private[destinations] sealed trait KeyMatch
+  private[destinations] object KeyMatch {
+    /** The key set when the distinct incoming keys are [[smallByEstimate]],
+      * every key type is [[keySetExact]] and there are at most
+      * [[KeySetMaxKeys]] keys; otherwise the join. */
+    case object ByEstimate extends KeyMatch
+    /** As [[ByEstimate]], without the size estimate. */
+    case object KeySet extends KeyMatch
+    /** The semi/anti join against the (broadcast-if-small) key frame. */
+    case object Join extends KeyMatch
   }
 
   /** MERGE keyed on `keys`: existing rows whose key matches an incoming
@@ -1185,10 +1276,25 @@ object DeltaWrite {
     * incoming keys are allowed: every incoming row is written once. The
     * candidates are the files in the incoming key range, the hits the
     * rows matching an incoming key ([[rewriteFiles]]).
+    *
+    * A small source (its distinct keys [[smallByEstimate]], at most
+    * [[KeySetMaxKeys]] of them) is matched through one driver-built key
+    * set: the key-range aggregate also collects the distinct normal-form
+    * keys, and hit detection and the write's survivor filter test each
+    * table row against them with one `InSet`. Neither step then needs a
+    * broadcast job. A larger source keeps the semi/anti join.
     */
   def upsert(spark: SparkSession, tablePath: String, df: DataFrame, keys: Seq[String],
-      txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{array_distinct, array_sort, col, lit, min}
+      txn: Option[(String, Long)] = None): Long =
+    upsertMatching(spark, tablePath, df, keys, txn, KeyMatch.ByEstimate)
+
+  /** [[upsert]] with its key match chosen by `keyMatch`. */
+  private[destinations] def upsertMatching(spark: SparkSession, tablePath: String,
+      df: DataFrame, keys: Seq[String], txn: Option[(String, Long)],
+      keyMatch: KeyMatch): Long = {
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, lit, min, row_number, struct, when}
     require(keys.nonEmpty, s"upsert on $tablePath: requires at least one key column")
     val ls = DeltaLog.lazySnapshot(spark, tablePath)
     val snap = ls.meta
@@ -1197,45 +1303,58 @@ object DeltaWrite {
       s"upsert on $tablePath: upsert key $k not in table"))
     val incoming = castToSchema(enforceObligations(snap, df), snap.schema).cache()
     try {
-      val srcKeys = broadcastIfSmall(incoming.select(keys.map(col): _*).distinct())
-      // `b` holds the key columns under the names `bName` gives them
-      def keysMatch(a: DataFrame, b: DataFrame, bName: String => String = identity): Column =
-        keys.map(k => keyEquals(a(k), b(bName(k)), snap.schema(k).dataType)).reduce(_ && _)
-      def hit(rows: DataFrame) = rows.join(srcKeys, keysMatch(rows, srcKeys), "left_semi")
+      val keyType = keys.map(k => k -> snap.schema(k).dataType).toMap
+      val keyFrame = incoming.select(keys.map(col): _*).distinct()
+      val viaSet = keys.forall(k => keySetExact(keyType(k))) && (keyMatch match {
+        case KeyMatch.ByEstimate => smallByEstimate(keyFrame)
+        case KeyMatch.KeySet => true
+        case KeyMatch.Join => false
+      })
+      val normal = keys.map(k => normalKey(col(k), keyType(k)))
+      val (candidates, inKeySet) = filesInKeyRange(ls, snap, incoming,
+        keys.map(k => k -> col(k)), keySet = if (viaSet) Some(struct(normal: _*)) else None)
+      def keysMatch(a: DataFrame, b: DataFrame): Column =
+        keys.map(k => keyEquals(a(k), b(k), keyType(k))).reduce(_ && _)
+      lazy val srcKeys = broadcastIfSmall(keyFrame)
+      // the table rows whose key an incoming row carries, and the others
+      def hit(rows: DataFrame) = inKeySet.fold(
+        rows.join(srcKeys, keysMatch(rows, srcKeys), "left_semi"))(rows.filter)
+      def miss(rows: DataFrame) = inKeySet.fold(
+        rows.join(srcKeys, keysMatch(rows, srcKeys), "left_anti"))(s => rows.filter(!s))
       val cols = snap.schema.fieldNames.toIndexedSeq.map(col)
       rewriteFiles(spark, tablePath, snap,
-        candidates = filesInKeyRange(ls, snap, incoming, keys.map(k => k -> col(k))),
+        candidates = candidates,
         hits = Some(hit(_)),
         output = { t =>
-          // row tracking: an updated row inherits the smallest id among the
-          // rows its key replaced (its commit version nulls to this
-          // commit); inserts get fresh ids (both columns null). The replaced
-          // rows group by key value as [[keyEquals]] compares it (a list key
-          // as its sorted distinct elements), so each incoming row joins
-          // one group.
+          // row tracking: the replaced rows group by normal-form key; the
+          // smallest id of a group goes to one incoming row with that key,
+          // the first in table-column order (its commit version nulls to
+          // this commit). The other incoming rows of the group, and
+          // inserts, get fresh ids (both columns null).
           val incomingTracked = t.rowIdCols match {
             case Seq(matId, matVer) =>
               val withId = t.rows match {
                 case None => incoming.withColumn(matId, lit(null).cast("long"))
                 case Some(rows) =>
+                  val (inK, oldK) = keys.indices.map(i => (s"_k_$i", s"_o_$i")).unzip
                   val oldIds = broadcastIfSmall(hit(rows)
-                    .groupBy(keys.map(k => snap.schema(k).dataType match {
-                      case _: org.apache.spark.sql.types.ArrayType =>
-                        array_sort(array_distinct(col(k))).as(k)
-                      case _ => col(k)
-                    }): _*)
-                    .agg(min(col(matId)).as(matId))
-                    .select(keys.map(k => col(k).as(s"_k_$k")) :+ col(matId): _*))
-                  incoming.join(oldIds, keysMatch(incoming, oldIds, "_k_" + _), "left")
-                    .drop(keys.map("_k_" + _): _*)
+                    .groupBy(normal.zip(oldK).map { case (c, o) => c.as(o) }: _*)
+                    .agg(min(col(matId)).as("_old_id")))
+                  val first = row_number().over(Window.partitionBy(inK.map(col): _*)
+                    .orderBy(snap.schema.fields.toIndexedSeq
+                      .filter(f => RowOrdering.isOrderable(f.dataType)).map(f => col(f.name)): _*))
+                  incoming.withColumns(inK.zip(normal).toMap)
+                    .join(oldIds, inK.zip(oldK).map { case (i, o) => col(i) <=> col(o) }
+                      .reduce(_ && _), "left")
+                    .withColumn(matId, when(first === 1, col("_old_id")))
+                    .drop(inK ++ oldK :+ "_old_id": _*)
               }
               withId.withColumn(matVer, lit(null).cast("long"))
             case _ => incoming
           }
           val outCols = cols ++ t.rowIdCols.map(col)
           Some(t.rows.fold(incomingTracked) { rows =>
-            rows.join(srcKeys, keysMatch(rows, srcKeys), "left_anti").select(outCols: _*)
-              .unionByName(incomingTracked.select(outCols: _*))
+            miss(rows).select(outCols: _*).unionByName(incomingTracked.select(outCols: _*))
           })
         },
         // matched old rows are update_preimage, their incoming replacements
@@ -1416,7 +1535,7 @@ object DeltaWrite {
         if (notMatchedBySource.nonEmpty) ls.filesWhere(_ => true)
         else if (equiKeys.isEmpty) ls.filesWhere(tOnlyKeep)
         else filesInKeyRange(ls, snap, src,
-          equiKeys.map { case (tc, sc) => tc -> col(q(sc)) }, tOnlyKeep)
+          equiKeys.map { case (tc, sc) => tc -> col(q(sc)) }, tOnlyKeep)._1
 
       // ---- first-match-wins action index over a clause group (-1 = none)
       def actionOf(group: Seq[MergeClause]): Column =
@@ -1709,7 +1828,7 @@ object DeltaWrite {
 
     val touched: Seq[(DeltaLog.AddFile, Array[Byte], Long)] = matched.flatMap {
       case (file, bytes, card) =>
-        byAbs.get(new Path(file).toString).map { a =>
+        byAbs.get(DeltaLog.decodePath(file)).map { a =>
           a.deletionVector match {
             case None => (a, bytes, card)
             case Some(dj) => // union with the file's existing deletions

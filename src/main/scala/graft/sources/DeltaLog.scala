@@ -1883,7 +1883,7 @@ object DeltaLog {
         val emptyAuthority =
           uri.getScheme == "file" && (uri.getAuthority == null || uri.getAuthority.isEmpty)
         Seq(qualified.toString, uri.toString) ++
-          (if (emptyAuthority) Seq("file://" + uri.getPath) else Nil)
+          (if (emptyAuthority) Seq("file://" + uri.getPath, "file:" + uri.getRawPath) else Nil)
       }.distinct
       spellings.map(key => org.apache.spark.sql.Row(key,
         a.baseRowId.map(Long.box).orNull,

@@ -107,6 +107,23 @@ class DeltaDvWriteSpec extends SparkSpec {
     assert(back == (1L to 100L).filterNot(_ % 10 == 0).toSet)
   }
 
+  test("a table path with a space and a comma: DV delete, upsert and row ids find the files") {
+    import spark.implicits._
+    // `_metadata.file_path` percent-encodes the space; the log's paths do not
+    val table = tmpDir("dv path, spaced").toString
+    DeltaWrite.createIfAbsent(spark, table, StructType(Seq(
+      StructField("id", LongType), StructField("v", StringType))),
+      properties = dvProps + ("delta.enableRowTracking" -> "true"))
+    DeltaWrite.append(spark, table, (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v").repartition(2))
+    DeltaWrite.delete(spark, table, "id % 5 = 0")
+    DeltaWrite.upsert(spark, table, Seq((1L, "u"), (21L, "n")).toDF("id", "v"), Seq("id"))
+    val rows = DeltaLog.readWithRowIds(spark, table).select("id", "v", "_row_id")
+      .as[(Long, String, Long)].collect().toSeq
+    assert(rows.map(_._1).sorted == (1L to 21L).filterNot(_ % 5 == 0))
+    assert(rows.collect { case (1L, v, _) => v } == Seq("u"))
+    assert(rows.map(_._3).distinct.size == rows.size, rows)
+  }
+
   test("second delete unions into existing DVs; time travel sees each state") {
     val table = mkTable("dv-union", (1L to 50L).map(i => (i, s"v$i")), parts = 1)
     DeltaWrite.delete(spark, table.toString, "id <= 10")

@@ -444,18 +444,33 @@ class DeltaWriteSpec extends SparkSpec {
       } finally spark.sparkContext.removeSparkListener(listener)
       (executions.get, jobs.get)
     }
-    // a broadcast-sized upsert: key-range aggregate, hit detection, write
+    // a broadcast-sized upsert: the key-range aggregate (which also
+    // collects the key set), hit detection, write
     val upsert = counted(DeltaWrite.upsert(spark, table,
       Seq((5L, "u"), (120L, "u"), (500L, "n")).toDF("id", "v"), Seq("id")))
+    // the same under the small-input policy's settings: one job per execution
+    val small = spark.newSession()
+    small.conf.set("spark.sql.adaptive.enabled", "false")
+    small.conf.set("spark.sql.shuffle.partitions", "1")
+    val smallUpsert = counted(DeltaWrite.upsert(small, table,
+      small.createDataFrame(Seq((6L, "s"), (121L, "s"), (501L, "n"))).toDF("id", "v"),
+      Seq("id")))
+    // the semi/anti join a source above the estimate runs
+    val joinUpsert = counted(DeltaWrite.upsertMatching(spark, table,
+      Seq((7L, "j"), (122L, "j"), (502L, "n")).toDF("id", "v"), Seq("id"), None,
+      DeltaWrite.KeyMatch.Join))
     // copy-on-write delete: hit detection, write
     val delete = counted(DeltaWrite.delete(spark, table, "id = 7"))
     // replace: hit detection, write
     val replace = counted(DeltaWrite.replace(spark, table,
       Seq((130L, "r")).toDF("id", "v"), Seq(ReplaceCondition("id", "130"))))
-    info(s"(executions, jobs): upsert $upsert, delete $delete, replace $replace")
+    info(s"(executions, jobs): upsert $upsert, small-input upsert $smallUpsert, " +
+      s"join upsert $joinUpsert, delete $delete, replace $replace")
     // executions are exact; jobs depend on adaptive execution's stage
-    // splitting, so they are bounds
-    assert(upsert._1 == 3 && upsert._2 <= 10, s"upsert $upsert")
+    // splitting, so they are bounds (exact without it)
+    assert(upsert._1 == 3 && upsert._2 <= 6, s"upsert $upsert")
+    assert(smallUpsert == ((3, 3)), s"small-input upsert $smallUpsert")
+    assert(joinUpsert._1 == 3 && joinUpsert._2 <= 10, s"join upsert $joinUpsert")
     assert(delete._1 == 2 && delete._2 <= 3, s"delete $delete")
     assert(replace._1 == 2 && replace._2 <= 3, s"replace $replace")
   }

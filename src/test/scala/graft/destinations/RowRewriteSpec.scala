@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   *   - the snapshot's rows against the model (as a multiset);
   *   - the version's `readCdf` rows against the model's change set;
   *   - each row's `_row_id` / `_row_commit_version` against the row's
-  *     origin (kept, updated, inherited from matched rows, or fresh);
+  *     origin (kept, updated, inherited from matched rows, or fresh),
+  *     and that no two live rows share a `_row_id`;
   *   - that the commit removed every file holding a changed row and no
   *     file outside the op's hit set.
   *
@@ -138,6 +139,9 @@ class RowRewriteSpec extends SparkSpec {
           }
           val f = fresh.result()
           assert(f.distinct.size == f.size, s"$ctx: fresh row ids repeat: $f")
+          val live = ids1.toSeq.map { case (u, (id, _)) => id -> u }
+          val shared = live.groupBy(_._1).filter(_._2.size > 1)
+          assert(shared.isEmpty, s"$ctx: live rows share a row id (id -> uids): $shared")
         }
       }
       model = want
@@ -192,9 +196,13 @@ class RowRewriteSpec extends SparkSpec {
         val eq = keyEq(keys) _
         val hit = h.model.filter(o => in.exists(eq(o, _)))
         val hitUids = hit.map(_.uid).toSet
+        // one incoming row per replaced key group inherits the group's
+        // smallest id: the first in table-column order, which here is the
+        // smallest uid; the group's other incoming rows take fresh ids
         val after = h.model.filterNot(o => hitUids(o.uid)).map(_ -> Kept) ++ in.map { i =>
           val ms = hit.filter(eq(_, i))
-          i -> (if (ms.isEmpty) Fresh else Inherit(ms.map(_.uid)))
+          val first = in.filter(eq(_, i)).map(_.uid).min == i.uid
+          i -> (if (ms.isEmpty || !first) Fresh else Inherit(ms.map(_.uid)))
         }
         val changes = hit.map(_ -> "update_preimage") ++ in.map { i =>
           i -> (if (hit.exists(eq(_, i))) "update_postimage" else "insert")
