@@ -3554,9 +3554,7 @@ object DeltaWrite {
     // a non-empty miss fails loudly rather than committing a blind add.
     statless.foreach { a =>
       val p = new Path(base, a.relPath.stripPrefix(if (subdir.isEmpty) "" else s"$subdir/"))
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          f.makeQualified(p), spark.sessionState.newHadoopConf()))
+      val r = LocalIo.openParquet(f.makeQualified(p), spark.sessionState.newHadoopConf())
       val n = try r.getRecordCount finally r.close()
       if (n != 0L) throw new IllegalStateException(
         s"stats scan missed non-empty new file ${a.relPath} ($n rows)")
@@ -3756,8 +3754,7 @@ object DeltaWrite {
       // outer None = undecodable (whole commit falls back); inner None =
       // empty file (no stats entry, like the scan)
       val p = f.makeQualified(new Path(table, a.relPath))
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      val r = LocalIo.openParquet(p, conf)
       try {
         val n = r.getRecordCount
         if (n == 0L) return Some(None)

@@ -543,9 +543,7 @@ object IcebergExport {
               // driver-side footer read — bounded by the stats-less count,
               // and exact (the footer's record count is authoritative)
               val f = new Path(qualifiedTable, DeltaLog.decodePath(a.path))
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                  f, spark.sessionState.newHadoopConf()))
+              val r = LocalIo.openParquet(f, spark.sessionState.newHadoopConf())
               try r.getRecordCount finally r.close()
             }
           rows += rc

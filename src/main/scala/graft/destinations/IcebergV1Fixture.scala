@@ -106,9 +106,7 @@ object IcebergV1Fixture {
           val target = new Path(dataDir,
             s"${java.util.UUID.randomUUID()}.parquet")
           require(fs.rename(st.getPath, target), s"rename to $target failed")
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(target, conf))
+          val r = LocalIo.openParquet(target, conf)
           val rc = try r.getRecordCount finally r.close()
           (target, rc, fs.getFileStatus(target).getLen)
         }

@@ -145,8 +145,7 @@ object IcebergV3Fixture {
     require(fs.rename(part, dataFile), s"rename to $dataFile failed")
     fs.delete(tmp, true)
     val recordCount = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dataFile, conf))
+      val r = LocalIo.openParquet(dataFile, conf)
       try r.getRecordCount finally r.close()
     }
 

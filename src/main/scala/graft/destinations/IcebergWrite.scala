@@ -535,8 +535,7 @@ object IcebergWrite {
     val delPath = new Path(dataDir, s"eq-delete-${java.util.UUID.randomUUID()}.parquet")
     require(fs.rename(part, delPath), s"rename to $delPath failed")
     fs.delete(tmp, true)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(delPath, conf))
+    val r = LocalIo.openParquet(delPath, conf)
     val delRows = try r.getRecordCount finally r.close()
     (delPath, eqFields, delRows, fs.getFileStatus(delPath).getLen)
   }
@@ -773,8 +772,7 @@ object IcebergWrite {
           val statsLogical =
             StructType(logical.fields.filterNot(f => identitySources(f.name)))
           def footer(target: Path) = {
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(target, conf))
+            val r = LocalIo.openParquet(target, conf)
             val (rc, stats) =
               try (r.getRecordCount, columnStats(r, statsLogical))
               finally r.close()
@@ -807,8 +805,7 @@ object IcebergWrite {
               // skipped entirely. One footer read resolves the count; a
               // non-empty miss with eligible columns fails loudly rather
               // than committing a blind entry.
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(target, conf))
+              val r = LocalIo.openParquet(target, conf)
               val rc = try r.getRecordCount finally r.close()
               require(rc == 0L || statsByPath.isEmpty,
                 s"stats scan missed non-empty new file $target ($rc rows)")
@@ -1222,8 +1219,7 @@ object IcebergWrite {
     require(fs.rename(part, delPath), s"rename to $delPath failed")
     fs.delete(tmp, true)
     val delRows = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(delPath, conf))
+      val r = LocalIo.openParquet(delPath, conf)
       try r.getRecordCount finally r.close()
     }
 

@@ -16,6 +16,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * own commit semantics.
   */
 private[graft] object LocalIo {
+  /** Opens a parquet file's reader with its read options taken from
+    * `conf`. `ParquetFileReader.open(InputFile)` builds them from a fresh
+    * `Configuration`, which parses the Hadoop default resources again on
+    * its first lookup: 1.3-1.6 ms a call, against 0.04-0.08 ms to copy a
+    * loaded conf (Hadoop 3.4, parquet 1.16).
+    */
+  def openParquet(path: Path, conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
   def create(fs: FileSystem, path: Path, overwrite: Boolean): java.io.OutputStream =
     if (fs.getUri.getScheme == "file") {
       import java.nio.file.{Files, Paths, StandardOpenOption => O}

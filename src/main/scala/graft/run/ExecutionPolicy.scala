@@ -6,18 +6,18 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.SQLConf
 import scala.util.Try
 
-/** Execution settings for one pipeline's session, chosen from the bytes its
-  * inputs plan to read once its sources are registered and before any stage
-  * is planned.
+/** Which side of the size limit one pipeline runs on, chosen from the bytes
+  * its inputs plan to read once its sources are registered and before any
+  * stage is planned. The side sets its session's execution settings and
+  * whether it caches the stages it reuses.
   */
 object ExecutionPolicy {
 
-  /** The settings to put on the session of a pipeline whose sources are
-    * registered on it. Small inputs run with adaptive execution off and one
-    * shuffle partition: each shuffle then runs inside the job that consumes
-    * it, with no job of its own and no re-planning in between, and the
-    * post-shuffle work runs in one task. Everything else, inputs of unknown
-    * size included, keeps the session's settings (an empty map).
+  /** Whether a pipeline whose sources are registered on `session` runs on
+    * the small side. Its session then takes [[smallConfs]], and a stage it
+    * reuses stays lazy when it is deterministic (see [[Runner]]).
+    * Everything else, inputs of unknown size included, keeps the session's
+    * settings and persists reused stages.
     *
     * Small means at most `spark.sql.adaptive.coalescePartitions.minPartitionSize`
     * (1 MiB by default) per core of the SparkContext: the bytes below which
@@ -29,13 +29,19 @@ object ExecutionPolicy {
     * post-shuffle task leaves the other cores idle. Other shapes and core
     * counts are not measured.
     */
-  def confs(session: SparkSession, pipeline: Aqueduct): Map[String, String] = {
+  def small(session: SparkSession, pipeline: Aqueduct): Boolean = {
     val limit = session.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE) *
       session.sparkContext.defaultParallelism
-    if (plannedInputBytes(session, pipeline).exists(_ <= limit))
-      Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "1")
-    else Map.empty
+    plannedInputBytes(session, pipeline).exists(_ <= limit)
   }
+
+  /** The small side's settings: adaptive execution off and one shuffle
+    * partition. Each shuffle then runs inside the job that consumes it,
+    * with no job of its own and no re-planning in between, and the
+    * post-shuffle work runs in one task.
+    */
+  val smallConfs: Map[String, String] =
+    Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "1")
 
   /** The bytes a registered pipeline plans to read, found without a Spark
     * job: each source view's analyzed size estimate (file listings, Delta

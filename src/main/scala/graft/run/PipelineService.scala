@@ -26,15 +26,26 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
   import PipelineService.Submission
 
   private val queue = new java.util.concurrent.LinkedBlockingDeque[Submission](maxQueue)
-  @volatile private var current: Option[Submission] = None
+  // Every submission, by id, from `submit` until it finishes or is
+  // cancelled while queued. `cancel` finds it here, so the moment between
+  // the worker's take off `queue` and its run hides it from no cancel.
+  private val live = new java.util.concurrent.ConcurrentHashMap[String, Submission]()
   @volatile private var shutdown = false
+
+  /** Test seam: runs on the worker right after it takes a submission (by
+    * id) off the queue and before the submission runs.
+    */
+  @volatile private[run] var afterTakeHook: String => Unit = _ => ()
 
   def submit(pipeline: Aqueduct, tracker: ProgressTracker = new LoggingTracker): Handle = {
     if (shutdown) throw new IllegalStateException("PipelineService is closed")
     val id = s"graft-${java.util.UUID.randomUUID()}"
     val sub = Submission(id, pipeline, tracker, Promise())
-    if (!queue.offerLast(sub))
+    live.put(id, sub)
+    if (!queue.offerLast(sub)) {
+      live.remove(id)
       throw new IllegalStateException(s"Pipeline queue full (max $maxQueue)")
+    }
     new Handle(id, sub.promise.future)
   }
 
@@ -46,27 +57,21 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
     * job run — and the flag stops steps that run no Spark job). Either way
     * the handle fails with a CancellationException.
     */
-  def cancel(id: String): Boolean = {
-    val it = queue.iterator()
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.id == id) {
-        it.remove()
+  def cancel(id: String): Boolean = Option(live.get(id)) match {
+    case None => false
+    case Some(s) =>
+      s.cancelled.set(true)
+      if (queue.remove(s)) { // still queued: the worker never sees it
+        live.remove(id)
         s.promise.failure(new java.util.concurrent.CancellationException(s"cancelled: $id"))
-        return true
-      }
-    }
-    current match {
-      case Some(s) if s.id == id =>
-        s.cancelled.set(true)
-        cancelledGroups.add(s.id)
+      } else { // taken by the worker, running or about to
+        cancelledGroups.add(id)
         killLateJobs()
         // group ids are per-submission UUIDs: cancelling the group's future
         // jobs never touches a later pipeline
-        spark.sparkContext.cancelJobGroupAndFutureJobs(s.id)
-        true
-      case _ => false
-    }
+        spark.sparkContext.cancelJobGroupAndFutureJobs(id)
+      }
+      true
   }
 
   // Group ids of cancelled RUNNING submissions. `cancelJobGroupAndFutureJobs`
@@ -91,14 +96,15 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
   }
 
   private def positionOf(id: String): Int = {
-    if (current.exists(_.id == id)) return 0
+    val s = live.get(id)
+    if (s == null) return -1
     var pos = 1
     val it = queue.iterator()
     while (it.hasNext) {
       if (it.next().id == id) return pos
       pos += 1
     }
-    -1
+    if (s.cancelled.get) -1 else 0 // off the queue: cancelled, or taken by the worker
   }
 
   private val worker = new Thread("graft-pipeline-service") {
@@ -106,16 +112,19 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
       while (!shutdown) {
         val sub = queue.pollFirst(100, java.util.concurrent.TimeUnit.MILLISECONDS)
         if (sub != null) {
-          current = Some(sub)
-          try {
+          // the handle completes after the cleanup, so a finished handle
+          // never reads as running
+          val outcome = try {
+            afterTakeHook(sub.id)
+            if (sub.cancelled.get)
+              throw new java.util.concurrent.CancellationException(s"cancelled: ${sub.id}")
             // group id scopes cancellation to this pipeline's Spark jobs
             spark.sparkContext.setJobGroup(sub.id, s"pipeline ${sub.id}", interruptOnCancel = true)
-            val out = Runner.run(spark, sub.pipeline, sub.tracker,
-              shouldAbort = () => sub.cancelled.get)
-            sub.promise.success(out)
+            scala.util.Success(Runner.run(spark, sub.pipeline, sub.tracker,
+              shouldAbort = () => sub.cancelled.get))
           } catch {
             case e: Throwable =>
-              sub.promise.tryFailure(
+              scala.util.Failure(
                 if (!sub.cancelled.get || e.isInstanceOf[java.util.concurrent.CancellationException]) e
                 else {
                   val c = new java.util.concurrent.CancellationException(s"cancelled: ${sub.id}")
@@ -124,9 +133,10 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
                 })
           } finally {
             spark.sparkContext.clearJobGroup()
+            live.remove(sub.id)
             cancelledGroups.remove(sub.id)
-            current = None
           }
+          sub.promise.tryComplete(outcome)
         }
       }
     }
@@ -146,6 +156,7 @@ final class PipelineService(spark: SparkSession, maxQueue: Int = 16) {
     }
     var s = queue.pollFirst()
     while (s != null) {
+      live.remove(s.id)
       s.promise.tryFailure(
         new java.util.concurrent.CancellationException(s"service closed: ${s.id}"))
       s = queue.pollFirst()

@@ -32,12 +32,12 @@ import scala.concurrent.duration.Duration
   *   - '''Settings from input size.''' Once the sources are registered,
   *     [[ExecutionPolicy]] sizes the planned input from the analyzed plans
   *     and the Delta log, without a job. Inputs of at most the minimum
-  *     coalesced partition size per core (4 MiB on 4 cores) run with
-  *     adaptive execution off and one shuffle partition; the rest, and
-  *     inputs of unknown size, keep the session's settings. The settings
-  *     cover the work done inside `run`: stages, debug outputs and every
-  *     destination write but `in_memory`. What the caller gets back (the
-  *     returned frame, the final stage's view, the `in_memory`
+  *     coalesced partition size per core (4 MiB on 4 cores), the small
+  *     side, run with adaptive execution off and one shuffle partition;
+  *     the rest, and inputs of unknown size, keep the session's settings.
+  *     The settings cover the work done inside `run`: stages, debug outputs
+  *     and every destination write but `in_memory`. What the caller gets
+  *     back (the returned frame, the final stage's view, the `in_memory`
   *     destination) is planned and run later under the caller's settings.
   *   - '''No collect-to-driver.''' The reference materializes every stage
   *     into driver memory (`collect_partitioned` → MemTable,
@@ -48,6 +48,11 @@ import scala.concurrent.duration.Duration
   *     pushdown through the stage boundary. A stage with ≥2 consumers (or
   *     `explain_analyze`) is persisted and eagerly computed so concurrent
   *     consumers share one evaluation instead of recomputing the subtree.
+  *     On the small side a deterministic stage with ≥2 consumers stays lazy
+  *     too: each consumer recomputes it, fused and pruned, which at that
+  *     size costs less than the extra job and the columnar cache build. A
+  *     nondeterministic stage is persisted on either side, so that all its
+  *     consumers see the same rows.
   *   - '''TTL eviction''' (reference lib.rs:223-274): after each group, any
   *     stage with no remaining consumer is unpersisted, bounding
   *     executor-memory footprint on long pipelines (the cache manager is
@@ -137,9 +142,8 @@ object Runner {
         tracker.onProgress(ProgressEvent.SourceRegistered(src.name))
       }
     })
-    ExecutionPolicy.confs(session, pipeline).foreach {
-      case (k, v) => session.conf.set(k, v)
-    }
+    val small = ExecutionPolicy.small(session, pipeline)
+    if (small) ExecutionPolicy.smallConfs.foreach { case (k, v) => session.conf.set(k, v) }
 
     // -- stage groups
     val allStages = pipeline.stages.flatten
@@ -153,8 +157,9 @@ object Runner {
           val s0 = System.nanoTime()
           try {
             val df = session.sql(stageSql(stage.name))
-            val consumers = consumerCount(pipeline, stage, lastStage)
-            if (consumers >= 2 || stage.explainAnalyze) {
+            val shared = consumerCount(pipeline, stage, lastStage) >= 2 &&
+              !(small && df.queryExecution.analyzed.deterministic)
+            if (shared || stage.explainAnalyze) {
               df.persist()
               df.count() // materialize now so concurrent consumers share it
               persisted.put(stage.name, df)

@@ -928,8 +928,7 @@ object DeltaLog {
     }
 
     def parseParquet(p: Path): Unit = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      val r = graft.destinations.LocalIo.openParquet(p, conf)
       try {
         val schema = r.getFooter.getFileMetaData.getSchema
         var pages = r.readNextRowGroup()

@@ -350,8 +350,7 @@ object IcebergRead {
       : (Map[Long, String], Int) = {
     val hit = footerIdsCache.get(file)
     if (hit != null) return hit
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf))
+    val r = graft.destinations.LocalIo.openParquet(new Path(file), conf)
     val msg = try r.getFooter.getFileMetaData.getSchema finally r.close()
     val idToFile: Map[Long, String] = msg.getFields.asScala.flatMap(t =>
       Option(t.getId).map(id => id.intValue().toLong -> t.getName)).toMap

@@ -108,6 +108,29 @@ class PipelineServiceSpec extends SparkSpec {
     } finally { cancelled.countDown(); svc.close() }
   }
 
+  test("a cancel landing between the worker's take and the run still cancels it") {
+    val svc = new PipelineService(spark)
+    val taken = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    // hold the worker right after it took the submission off the queue
+    svc.afterTakeHook = _ => {
+      taken.countDown()
+      release.await(60, java.util.concurrent.TimeUnit.SECONDS): Unit
+    }
+    try {
+      val tracker = new CollectingTracker
+      val h = svc.submit(pipelineOf("svc_window", "SELECT 4 AS x"), tracker)
+      assert(taken.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(h.queuePosition == 0)
+      assert(svc.cancel(h.id))
+      release.countDown()
+      assertThrows[java.util.concurrent.CancellationException](
+        Await.result(h.result, 60.seconds))
+      assert(tracker.events.isEmpty) // it never started
+      assert(!spark.catalog.tableExists("svc_window"))
+    } finally { release.countDown(); svc.close() }
+  }
+
   test("close() promptly fails queued submissions instead of hanging callers") {
     val svc = new PipelineService(spark)
     val slow = pipelineOf("svc_close_slow",

@@ -6,6 +6,42 @@ import org.apache.spark.sql.Row
 
 class RunnerSpec extends SparkSpec {
 
+  /** Runs `body` and counts the Spark jobs it started. */
+  private def countJobs[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** A tracker that counts the RDDs persisted beyond those persisted when
+    * it was made: when the second stage group starts, and on demand.
+    */
+  private final class CacheProbe extends ProgressTracker {
+    private val sc = spark.sparkContext
+    private val before = sc.getPersistentRDDs.size
+    val inner = new CollectingTracker
+    @volatile var cachedAtGroup1: Int = -1
+    def cachedNow: Int = sc.getPersistentRDDs.size - before
+    override def onProgress(e: ProgressEvent): Unit = {
+      e match {
+        case ProgressEvent.StageStarted(_, 1) => cachedAtGroup1 = cachedNow
+        case _ => ()
+      }
+      inner.onProgress(e)
+    }
+    override def onOutput(stage: String, t: OutputType, body: String): Unit =
+      inner.onOutput(stage, t, body)
+  }
+
   test("e2e: CSV source → SQL stage → in-memory destination (reference integration.rs:13-52)") {
     val dir = tmpDir("runner-mem")
     val csv = writeFixtureCsv(dir)
@@ -330,18 +366,7 @@ class RunnerSpec extends SparkSpec {
       stages = Seq(Seq(Stage("nj_joined",
         "SELECT a.id, a.k, b.v, c.part FROM nj_a a JOIN nj_b b ON a.id = b.id " +
           "JOIN nj_c c ON a.id = c.id"))))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Runner.run(spark, aq)
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 0)
+    assert(countJobs(Runner.run(spark, aq))._2 == 0)
     assert(spark.table("nj_joined").schema.fieldNames.toSeq == Seq("id", "k", "v", "part"))
   }
 
@@ -423,12 +448,16 @@ class RunnerSpec extends SparkSpec {
         InMemorySource("caller_owned"),
         FileSource("f_src", ParquetFormat(), Location(dir.resolve("in.parquet").toString))),
       stages = Seq(
-        // two consumers → s1 gets persisted before the failure downstream
-        Seq(Stage("s1", "SELECT id, name FROM f_src")),
+        // two consumers of a nondeterministic stage → s1 gets persisted
+        // before the failure downstream, on either side of the size limit
+        Seq(Stage("s1", "SELECT id, name, rand() AS r FROM f_src")),
         Seq(Stage("s2a", "SELECT count(*) AS n FROM s1"),
             Stage("s2b", "SELECT CAST(name AS BIGINT) + nosuchcol AS boom FROM s1"))))
-    assertThrows[Runner.PipelineError](Runner.run(spark, aq, new CollectingTracker))
+    val probe = new CacheProbe
+    assertThrows[Runner.PipelineError](Runner.run(spark, aq, probe))
+    assert(probe.cachedAtGroup1 == 1)
     // pipeline-owned views and caches are gone; caller's view is untouched
+    assert(probe.cachedNow == 0)
     Seq("f_src", "s1", "s2a").foreach(v => assert(!spark.catalog.tableExists(v), v))
     assert(spark.catalog.tableExists("caller_owned"))
     spark.catalog.dropTempView("caller_owned")
@@ -611,19 +640,9 @@ class RunnerSpec extends SparkSpec {
       sources.foreach(graft.sources.Sources.register(session, _))
       val aq = Aqueduct(sources = sources, stages = Seq(Seq(Stage("s", "SELECT 1"))),
         destination = dest)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet(): Unit
-      }
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val b = ExecutionPolicy.plannedInputBytes(session, aq)
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-        assert(jobs.get == 0)
-        b
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (b, jobs) = countJobs(ExecutionPolicy.plannedInputBytes(session, aq))
+      assert(jobs == 0)
+      b
     }
     assert(bytes(None) == Some(BigInt(fileBytes)))
     // an upsert reads the table; an append does not
@@ -637,19 +656,94 @@ class RunnerSpec extends SparkSpec {
         "id", org.apache.spark.sql.types.LongType)))).createOrReplaceTempView("pol_rdd")
     try {
       assert(bytes(None, Seq(src, InMemorySource("pol_rdd"))).isEmpty)
-      // the settings: the small side up to the minimum partition size per
-      // core, the session's own (none) above it or when the size is unknown
-      val small = Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "1")
+      // the side: small up to the minimum partition size per core, large
+      // above it or when the size is unknown
       val cores = spark.sparkContext.defaultParallelism
-      def confs(minPartition: Long, sources: Seq[Source] = Seq(src)): Map[String, String] = {
+      def small(minPartition: Long, sources: Seq[Source] = Seq(src)): Boolean = {
         val session = GraftShims.cloneSession(spark,
           Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> minPartition.toString))
         sources.foreach(graft.sources.Sources.register(session, _))
-        ExecutionPolicy.confs(session, Aqueduct(sources = sources, stages = Seq(Seq(Stage("s", "SELECT 1")))))
+        ExecutionPolicy.small(session, Aqueduct(sources = sources, stages = Seq(Seq(Stage("s", "SELECT 1")))))
       }
-      assert(confs((fileBytes + cores - 1) / cores) == small)
-      assert(confs((fileBytes - 1) / cores) == Map.empty)
-      assert(confs(1L << 40, Seq(src, InMemorySource("pol_rdd"))) == Map.empty)
+      assert(small((fileBytes + cores - 1) / cores))
+      assert(!small((fileBytes - 1) / cores))
+      assert(!small(1L << 40, Seq(src, InMemorySource("pol_rdd"))))
     } finally spark.catalog.dropTempView("pol_rdd")
+  }
+
+  /** A pipeline whose stage `<p>_mid` (over `source`, columns id and k) has
+    * two consumers in the next group, writing parquet to `out`.
+    */
+  private def reusePipeline(p: String, source: Source, out: java.nio.file.Path) = Aqueduct(
+    sources = Seq(source),
+    stages = Seq(
+      Seq(Stage(s"${p}_mid", s"SELECT id, k FROM ${source.name} WHERE id % 2 = 0")),
+      Seq(Stage(s"${p}_low", s"SELECT * FROM ${p}_mid WHERE k < 2"),
+          Stage(s"${p}_high", s"SELECT * FROM ${p}_mid WHERE k >= 2")),
+      Seq(Stage(s"${p}_out", s"SELECT * FROM ${p}_low UNION ALL SELECT * FROM ${p}_high"))),
+    destination = Some(FileDestination(s"${p}_out", Location(out.toString),
+      ParquetDestFormat(Map.empty), singleFile = false)))
+
+  /** 200 rows (id, k = id % 4) in parquet under `dir`, as a source `name`. */
+  private def writeIdK(dir: java.nio.file.Path, name: String): Source = {
+    spark.range(0, 200, 1, 2).selectExpr("id", "id % 4 AS k").write.parquet(dir.resolve("in").toString)
+    FileSource(name, ParquetFormat(), Location(dir.resolve("in").toString))
+  }
+
+  test("small side: a deterministic stage with two consumers is recomputed by each, not cached") {
+    val dir = tmpDir("runner-reuse")
+    val src = writeIdK(dir, "ru_src")
+    // the small side's settings, on a caller whose limit puts the pipeline
+    // on the large side: the persisted stage is the one difference
+    val large = org.apache.spark.sql.GraftShims.cloneSession(spark, ExecutionPolicy.smallConfs +
+      ("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"))
+    def run(caller: org.apache.spark.sql.SparkSession, out: String): (Int, Int, Set[Row]) = {
+      val probe = new CacheProbe
+      val jobs = countJobs(Runner.run(caller, reusePipeline("ru", src, dir.resolve(out)), probe))._2
+      (jobs, probe.cachedAtGroup1, spark.read.parquet(dir.resolve(out).toString).collect().toSet)
+    }
+    val (lazyJobs, lazyCached, lazyRows) = run(spark, "lazy")
+    val (persistedJobs, persistedCached, persistedRows) = run(large, "persisted")
+    assert(lazyCached == 0)
+    assert(persistedCached == 1)
+    assert(persistedJobs == lazyJobs + 1, s"lazy $lazyJobs, persisted $persistedJobs")
+    assert(lazyRows.size == 100 && lazyRows == persistedRows)
+  }
+
+  test("small side: a nondeterministic stage with two consumers stays cached, one value per row") {
+    val dir = tmpDir("runner-rand")
+    val src = writeIdK(dir, "rn_src")
+    val aq = Aqueduct(
+      sources = Seq(src),
+      stages = Seq(
+        Seq(Stage("rn_mid", s"SELECT id, rand() AS r FROM ${src.name}")),
+        Seq(Stage("rn_a", "SELECT id, r FROM rn_mid ORDER BY id", show = Some(0)),
+            Stage("rn_b", "SELECT id, r FROM rn_mid WHERE id >= 0 ORDER BY id", show = Some(0))),
+        Seq(Stage("rn_out", "SELECT count(*) AS n FROM rn_a JOIN rn_b USING (id)"))))
+    val probe = new CacheProbe
+    Runner.run(spark, aq, probe)
+    try {
+      assert(probe.cachedAtGroup1 == 1)
+      assert(probe.cachedNow == 0)
+      val shown = probe.inner.outputs.filter(_._2 == OutputType.Show)
+      assert(shown.map(_._1).toSet == Set("rn_a", "rn_b"))
+      assert(shown.map(_._3).distinct.size == 1, shown.mkString("\n"))
+    } finally spark.catalog.dropTempView("rn_out")
+  }
+
+  test("unknown input size: a reused deterministic stage is still cached") {
+    import org.apache.spark.sql.types._
+    val dir = tmpDir("runner-reuse-rdd")
+    spark.createDataFrame(
+      spark.sparkContext.parallelize((0L until 200L).map(i => Row(i, i % 4)), 2),
+      StructType(Seq(StructField("id", LongType), StructField("k", LongType))))
+      .createOrReplaceTempView("ru_rdd")
+    try {
+      val probe = new CacheProbe
+      Runner.run(spark, reusePipeline("rr", InMemorySource("ru_rdd"), dir.resolve("out")), probe)
+      assert(probe.cachedAtGroup1 == 1)
+      assert(probe.cachedNow == 0)
+      assert(spark.read.parquet(dir.resolve("out").toString).count() == 100)
+    } finally spark.catalog.dropTempView("ru_rdd")
   }
 }

@@ -284,20 +284,25 @@ class ServerSpec extends SparkSpec {
     (b0 & 0x0f, buf)
   }
 
-  /** Read Protocol messages off text frames until `requestId` terminates. */
-  private def wsDrain(in: java.io.InputStream, requestId: String): Seq[AnyRef] = {
-    val seen = Seq.newBuilder[AnyRef]
-    var done = false
+  /** Read Protocol messages off text frames until `requestId` terminates,
+    * unless one of the messages `read` earlier already ended it: the
+    * result is `read` followed by every message read here.
+    */
+  private def wsDrain(in: java.io.InputStream, requestId: String,
+      read: Seq[AnyRef] = Nil): Seq[AnyRef] = {
+    def terminal(m: AnyRef): Boolean = m match {
+      case Protocol.ExecutionSucceeded(id) => id == requestId
+      case Protocol.ExecutionError(id, _) => id == requestId
+      case _ => false
+    }
+    val seen = Seq.newBuilder[AnyRef] ++= read
+    var done = read.exists(terminal)
     while (!done) {
       val (op, payload) = wsRead(in)
       if (op == WebSocket.OpText) {
         val m = Protocol.read(new String(payload, "UTF-8"))
         seen += m
-        m match {
-          case Protocol.ExecutionSucceeded(id) if id == requestId => done = true
-          case Protocol.ExecutionError(id, _) if id == requestId => done = true
-          case _ => ()
-        }
+        done = terminal(m)
       }
     }
     seen.result()
@@ -370,7 +375,9 @@ class ServerSpec extends SparkSpec {
         val msgs = preCancel.result() ++ wsDrain(in, "ws-b")
         val terminal = msgs.collect { case Protocol.ExecutionError("ws-b", m) => m }
         assert(terminal.nonEmpty && terminal.head.contains("cancelled"), msgs.mkString("\n"))
-        val rest = wsDrain(in, "ws-slow")
+        // ws-slow may have ended before ws-b's terminal message: look at
+        // what was read already before reading on
+        val rest = wsDrain(in, "ws-slow", msgs)
         assert(rest.exists { case Protocol.ExecutionSucceeded("ws-slow") => true; case _ => false })
       } finally sock.close()
     } finally server.close()
