@@ -2,7 +2,7 @@ package graft.destinations
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.sources.DeltaLog
@@ -2079,7 +2079,7 @@ object DeltaWrite {
       a.partitionValues.toSeq.sortBy(_._1).map { case (k, v) => k -> Option(v) },
       a.size, a.modificationTime, None, a.deletionVector,
       a.baseRowId, a.defaultRowCommitVersion))
-    val statsMap = computeStatsDispatch(spark, table, adds0, dataSchema)
+    val statsMap = computeStats(spark, table, adds0, dataSchema)
     val adds = adds0.map(a => a.copy(stats = statsMap.get(a.relPath)))
     commit(spark, table, snap.version + 1, "COMPUTE STATS",
       crc = CrcPlan.Unchanged,
@@ -3474,7 +3474,7 @@ object DeltaWrite {
     * `__HIVE_DEFAULT_PARTITION__` (Spark's null marker) becomes a JSON null
     * per the Delta spec.
     */
-  private def hivePartitionValues(segments: Seq[String]): Seq[(String, Option[String])] =
+  private[destinations] def hivePartitionValues(segments: Seq[String]): Seq[(String, Option[String])] =
     segments.map { seg =>
       val eq = seg.indexOf('=')
       require(eq > 0, s"unexpected non-hive partition dir: $seg")
@@ -3486,7 +3486,10 @@ object DeltaWrite {
   /** Write `df` as parquet under the table root (hive `col=value/` layout,
     * partition columns dropped from the file data per the Delta spec) and
     * return the add-action descriptors. Move-dont-copy publication:
-    * temp-dir write, one rename per part file.
+    * temp-dir write, one rename per part file. Each file's stats come from
+    * the write task that wrote it ([[FileStatsTracker]]); `statsExclude`
+    * keeps internal columns (materialized row ids) out of the stats
+    * object — they are not table data and must never prune.
     */
   private def writeDataFiles(
       spark: SparkSession,
@@ -3498,9 +3501,12 @@ object DeltaWrite {
       statsExclude: Set[String] = Set.empty): Seq[AddDescriptor] = {
     val f = fs(spark, table)
     val tmp = new Path(table, s"_tmp-${java.util.UUID.randomUUID()}")
-    val writer = df.write.mode("overwrite")
-    (if (partitionColumns.nonEmpty) writer.partitionBy(partitionColumns: _*) else writer)
-      .parquet(tmp.toString)
+    val dataSchema = StructType(df.schema.fields.filterNot(fd => partitionColumns.contains(fd.name)))
+    val statCols = if (!withStats) Nil else dataSchema.fields.toSeq
+      .filter(fd => statsEligible(fd.dataType) && !statsExclude(fd.name)).map(_.name)
+    val tracker = new FileStatsTracker(dataSchema, statCols, partitionColumns.size)
+    GraftShims.writeParquet(df, tmp.toString, partitionColumns, Seq(tracker))
+    val fileStats = tracker.rows
 
     val base = if (subdir.isEmpty) table else new Path(table, subdir)
     val adds = Seq.newBuilder[AddDescriptor]
@@ -3522,45 +3528,33 @@ object DeltaWrite {
           val b = qtmp.toString; val d = f.makeQualified(s.getPath.getParent).toString
           if (d == b) "" else d.substring(b.length).dropWhile(_ == '/')
         }
-        val destDir = if (relDir.isEmpty) base else new Path(base, relDir)
-        f.mkdirs(destDir)
-        val unique = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
-        val dest = new Path(destDir, unique)
-        if (!f.rename(s.getPath, dest))
-          throw new IllegalStateException(s"Failed to move ${s.getPath} to $dest")
-        val st = f.getFileStatus(dest)
-        val rel0 = if (relDir.isEmpty) unique else s"$relDir/$unique"
-        val rel = if (subdir.isEmpty) rel0 else s"$subdir/$rel0"
-        val pv = if (relDir.isEmpty) Nil else hivePartitionValues(relDir.split('/').toSeq)
-        adds += AddDescriptor(rel, pv, st.getLen, st.getModificationTime)
+        // every file the writer produced passed through the tracker: a
+        // file without stats is a path-mapping bug and fails loudly rather
+        // than committing a blind add
+        val row = fileStats.getOrElse(if (relDir.isEmpty) name else s"$relDir/$name",
+          throw new IllegalStateException(s"no write stats for new file ${s.getPath}"))
+        // an EMPTY file (Spark emits a schema-only part file when a tiny
+        // batch repartitions wider than its row count) is log noise: every
+        // future scan would plan it and no stat would ever prune it. CDC
+        // files (no stats) are published as written.
+        if (!withStats || row.getLong(0) > 0L) {
+          val destDir = if (relDir.isEmpty) base else new Path(base, relDir)
+          f.mkdirs(destDir)
+          val unique = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
+          val dest = new Path(destDir, unique)
+          if (!f.rename(s.getPath, dest))
+            throw new IllegalStateException(s"Failed to move ${s.getPath} to $dest")
+          val st = f.getFileStatus(dest)
+          val rel0 = if (relDir.isEmpty) unique else s"$relDir/$unique"
+          val rel = if (subdir.isEmpty) rel0 else s"$subdir/$rel0"
+          val pv = if (relDir.isEmpty) Nil else hivePartitionValues(relDir.split('/').toSeq)
+          adds += AddDescriptor(rel, pv, st.getLen, st.getModificationTime,
+            stats = if (withStats) Some(statsJsonOf(row, 0, statCols)) else None)
+        }
       }
     }
     f.delete(tmp, true)
-    val raw = adds.result()
-    if (!withStats) return raw // cdc files carry no stats (nothing prunes them)
-    // one columnar scan of the new files attaches per-file pruning stats;
-    // statsExclude keeps internal columns (materialized row ids) out of
-    // the stats object — they are not table data and must never prune
-    val dataSchema = StructType(df.schema.fields.filterNot(fd =>
-      partitionColumns.contains(fd.name) || statsExclude(fd.name)))
-    val statsMap = computeStatsDispatch(spark, table, raw, dataSchema)
-    val (statless, good) =
-      raw.map(a => a.copy(stats = statsMap.get(a.relPath))).partition(_.stats.isEmpty)
-    // a file the stats scan never saw is either EMPTY (Spark can emit a
-    // schema-only part file when a tiny batch repartitions wider than its
-    // row count) or evidence of a path-mapping bug. Empty files are log
-    // noise — every future scan would plan them and no stat would ever
-    // prune them — so verify via one footer read and drop them outright;
-    // a non-empty miss fails loudly rather than committing a blind add.
-    statless.foreach { a =>
-      val p = new Path(base, a.relPath.stripPrefix(if (subdir.isEmpty) "" else s"$subdir/"))
-      val r = LocalIo.openParquet(f.makeQualified(p), spark.sessionState.newHadoopConf())
-      val n = try r.getRecordCount finally r.close()
-      if (n != 0L) throw new IllegalStateException(
-        s"stats scan missed non-empty new file ${a.relPath} ($n rows)")
-      f.delete(p, false)
-    }
-    good
+    adds.result()
   }
 
   private[destinations] final case class AddDescriptor(
@@ -3606,11 +3600,11 @@ object DeltaWrite {
 
   private val StatsStringPrefix = 32
 
-  /** One distributed scan over the just-written files → per-file
+  /** One distributed scan over existing files → per-file
     * `{"numRecords":…,"minValues":{…},"maxValues":{…},"nullCount":{…}}`
-    * stats JSON, keyed by table-relative path. Long strings truncate: min
-    * to a prefix (safe — only widens the interval), max to a prefix plus
-    * U+FFFF (delta-spark's tie-breaker, keeping it an upper bound).
+    * stats JSON, keyed by table-relative path: what [[collectStats]]
+    * backfills, and the reference the write path's [[FileStatsTracker]]
+    * is pinned byte-equal to. Empty files get no entry.
     */
   private[destinations] def computeStats(
       spark: SparkSession,
@@ -3641,24 +3635,18 @@ object DeltaWrite {
         catch { case _: Exception => new Path(r.getString(0)).toString }
       absToRel.get(abs).orElse(
         absToRel.find { case (k, _) => new Path(k).toString == abs }.map(_._2)
-      ).map { rel =>
-        rel -> statsJsonOf(r.getLong(r.fieldIndex("_n")), cols,
-          c => r.get(r.fieldIndex(s"_min_$c")),
-          c => r.get(r.fieldIndex(s"_max_$c")),
-          c => r.getLong(r.fieldIndex(s"_null_$c")))
-      }
+      ).map(rel => rel -> statsJsonOf(r, 1, cols))
     }.toMap
   }
 
-  /** Stats-JSON serializer shared by the scan path ([[computeStats]]) and
-    * the footer path ([[footerStats]]) — ONE definition, so the
-    * small-commit dispatch can never change what lands in the log.
+  /** The stats JSON of one file from its aggregate row: the record count
+    * at `first`, then min, max and null count of each of `cols` — shared
+    * by the write tasks' [[FileStatsTracker]] rows and the [[computeStats]]
+    * scan, so the two cannot serialize differently.
     */
-  private def statsJsonOf(
-      numRecords: Long, cols: Seq[String],
-      minOf: String => Any, maxOf: String => Any, nullOf: String => Long): String = {
+  private def statsJsonOf(r: org.apache.spark.sql.Row, first: Int, cols: Seq[String]): String = {
     val node = mapper.createObjectNode()
-    node.put("numRecords", numRecords)
+    node.put("numRecords", r.getLong(first))
     val minV = node.putObject("minValues")
     val maxV = node.putObject("maxValues")
     val nullC = node.putObject("nullCount")
@@ -3685,184 +3673,14 @@ object DeltaWrite {
           catch { case _: NumberFormatException => () }
         case other => o.put(c, other.toString)
       }
-    cols.foreach { c =>
-      put(minV, c, minOf(c), upper = false)
-      put(maxV, c, maxOf(c), upper = true)
-      nullC.put(c, nullOf(c))
+    cols.zipWithIndex.foreach { case (c, i) =>
+      val at = first + 1 + 3 * i
+      put(minV, c, r.get(at), upper = false)
+      put(maxV, c, r.get(at + 1), upper = true)
+      nullC.put(c, r.getLong(at + 2))
     }
     mapper.writeValueAsString(node)
   }
-
-  /** Small-commit dispatch between the footer path and the distributed
-    * scan — the Iceberg commit path's `statsScanMinFiles` shape. A 1-2
-    * file commit's footers read in driver-milliseconds (pooled beyond
-    * that), while the scan is a fixed ~0.3s Spark job per commit — a
-    * real tax on multi-commit lifecycles and per-micro-batch streaming
-    * sinks. A LARGE commit (thousands of files at a 100 TB append) must
-    * NOT serialize thousands of footer round-trips through the driver —
-    * there the one distributed scan wins. DeltaFooterStatsSpec pins the
-    * two paths byte-equal; any file/column the footer path cannot decode
-    * EXACTLY like the scan (INT96 timestamps, missing chunk statistics,
-    * unknown null counts) falls back to the scan for the whole commit.
-    */
-  private def computeStatsDispatch(
-      spark: SparkSession,
-      table: Path,
-      adds: Seq[AddDescriptor],
-      dataSchema: StructType): Map[String, String] = {
-    val gate = spark.conf.getOption("graft.delta.statsScanMinFiles")
-      .map(_.toInt).getOrElse(64)
-    if (adds.nonEmpty && adds.size < gate)
-      footerStats(spark, table, adds, dataSchema)
-        .getOrElse(computeStats(spark, table, adds, dataSchema))
-    else computeStats(spark, table, adds, dataSchema)
-  }
-
-  /** Per-file stats from parquet FOOTERS — the driver-side twin of
-    * [[computeStats]] for small commits. Returns None (caller falls back
-    * to the scan) unless every file and column decodes into exactly the
-    * values the scan would have produced:
-    *   - timestamp/ntz columns bail out entirely (Spark writes INT96,
-    *     whose footer statistics are deprecated garbage);
-    *   - every column chunk must carry statistics with a known null
-    *     count and the expected physical type;
-    *   - row-group min/max merge under parquet's own comparator for the
-    *     physical type (for strings that is unsigned byte order — the
-    *     same order Spark's UTF8String aggregate min/max uses);
-    *   - float/double NaN maxima fall out identically in both paths (no
-    *     JSON-number form — omitted by the shared serializer); a
-    *     float/double chunk with no min/max but non-null values (a
-    *     NaN-suppressing writer) bails out.
-    * Empty files (numRecords 0) get NO entry, mirroring the scan (whose
-    * groupBy never sees them) — the caller's empty-file handling drops
-    * them either way.
-    */
-  private[destinations] def footerStats(
-      spark: SparkSession,
-      table: Path,
-      adds: Seq[AddDescriptor],
-      dataSchema: StructType): Option[Map[String, String]] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val cols = dataSchema.fields.filter(f => statsEligible(f.dataType)).toSeq
-    if (cols.exists(f => f.dataType == TimestampType || f.dataType == TimestampNTZType))
-      return None
-    val conf = spark.sessionState.newHadoopConf()
-    val f = fs(spark, table)
-    def fileStats(a: AddDescriptor): Option[Option[(String, String)]] = {
-      // outer None = undecodable (whole commit falls back); inner None =
-      // empty file (no stats entry, like the scan)
-      val p = f.makeQualified(new Path(table, a.relPath))
-      val r = LocalIo.openParquet(p, conf)
-      try {
-        val n = r.getRecordCount
-        if (n == 0L) return Some(None)
-        val blocks = r.getFooter.getBlocks.asScala.toSeq
-        val mins = scala.collection.mutable.Map.empty[String, Any]
-        val maxs = scala.collection.mutable.Map.empty[String, Any]
-        val nulls = scala.collection.mutable.Map.empty[String, Long]
-        cols.foreach { field =>
-          val expectedPhys = field.dataType match {
-            case ByteType | ShortType | IntegerType | DateType => PrimitiveTypeName.INT32
-            case LongType => PrimitiveTypeName.INT64
-            case FloatType => PrimitiveTypeName.FLOAT
-            case DoubleType => PrimitiveTypeName.DOUBLE
-            case BooleanType => PrimitiveTypeName.BOOLEAN
-            case StringType => PrimitiveTypeName.BINARY
-            case d: DecimalType => null // any of INT32/INT64/BINARY/FLBA
-            case _ => return None
-          }
-          val chunks = blocks.flatMap(_.getColumns.asScala.filter(c =>
-            c.getPath.size() == 1 && c.getPath.toDotString == field.name))
-          if (chunks.isEmpty) return None
-          if (expectedPhys != null &&
-              chunks.exists(_.getPrimitiveType.getPrimitiveTypeName != expectedPhys))
-            return None
-          val sts = chunks.map(_.getStatistics)
-          if (sts.exists(s => s == null || s.isEmpty || !s.isNumNullsSet))
-            return None
-          val nc = sts.map(_.getNumNulls).sum
-          val withVals = chunks.zip(sts).filter(_._2.hasNonNullValue)
-          if (withVals.isEmpty) {
-            // all-null column IF the null count covers every row; a
-            // NaN-suppressing float writer (values but no bounds) must
-            // fall back — the scan would emit a min the footer cannot
-            if (nc != n) return None
-            nulls(field.name) = nc
-          } else {
-            val cmp = withVals.head._1.getPrimitiveType.comparator()
-              .asInstanceOf[java.util.Comparator[Any]]
-            val lo = withVals.map(_._2.genericGetMin)
-              .reduceLeft((a, b) => if (cmp.compare(a, b) <= 0) a else b)
-            val hi = withVals.map(_._2.genericGetMax)
-              .reduceLeft((a, b) => if (cmp.compare(a, b) >= 0) a else b)
-            def jvm(v: Any): Option[Any] = (field.dataType, v) match {
-              case (ByteType | ShortType | IntegerType, i: java.lang.Integer) => Some(i)
-              case (DateType, i: java.lang.Integer) =>
-                // pre-Gregorian-cutover dates: the scan serializes
-                // java.sql.Date.toString (hybrid Julian/Gregorian) while
-                // this path would serialize proleptic LocalDate — the
-                // strings diverge below 1582-10-15, so refuse and let the
-                // whole commit fall back to the scan (ADVICE r18)
-                if (i.longValue() >= gregorianCutoverEpochDay)
-                  Some(java.time.LocalDate.ofEpochDay(i.longValue()))
-                else None
-              case (LongType, l: java.lang.Long) => Some(l)
-              case (FloatType, x: java.lang.Float) => Some(x)
-              case (DoubleType, x: java.lang.Double) => Some(x)
-              case (BooleanType, b: java.lang.Boolean) => Some(b)
-              case (StringType, b: org.apache.parquet.io.api.Binary) =>
-                Some(b.toStringUsingUTF8)
-              case (d: DecimalType, i: java.lang.Integer) =>
-                Some(java.math.BigDecimal.valueOf(i.longValue(), d.scale))
-              case (d: DecimalType, l: java.lang.Long) =>
-                Some(java.math.BigDecimal.valueOf(l.longValue(), d.scale))
-              case (d: DecimalType, b: org.apache.parquet.io.api.Binary) =>
-                Some(new java.math.BigDecimal(
-                  new java.math.BigInteger(b.getBytes), d.scale))
-              case _ => None
-            }
-            (jvm(lo), jvm(hi)) match {
-              case (Some(l), Some(h)) =>
-                mins(field.name) = l; maxs(field.name) = h; nulls(field.name) = nc
-              case _ => return None
-            }
-          }
-        }
-        Some(Some(a.relPath -> statsJsonOf(n, cols.map(_.name),
-          c => mins.getOrElse(c, null), c => maxs.getOrElse(c, null),
-          c => nulls(c))))
-      } finally r.close()
-    }
-    // catch-all on the documented "any surprise refuses" contract (ADVICE
-    // r18): an unexpected decode exception — corrupt footer metadata, a
-    // zero-length FLBA decimal bound feeding BigInteger, an I/O hiccup —
-    // must demote THIS commit to the scan path, not fail it
-    def fileStatsSafe(a: AddDescriptor): Option[Option[(String, String)]] =
-      try fileStats(a)
-      catch { case scala.util.control.NonFatal(_) => None }
-    val results: Seq[Option[Option[(String, String)]]] =
-      if (adds.size <= 2) adds.map(fileStatsSafe)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, adds.size))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.traverse(adds) { a =>
-            scala.concurrent.Future(fileStatsSafe(a))
-          }, scala.concurrent.duration.Duration.Inf)
-        finally pool.shutdown()
-      }
-    if (results.exists(_.isEmpty)) None
-    else Some(results.flatMap(_.get).toMap)
-  }
-
-  /** 1582-10-15 as an epoch day — below it the hybrid and proleptic
-    * calendars render different date strings. */
-  private val gregorianCutoverEpochDay: Long =
-    java.time.LocalDate.of(1582, 10, 15).toEpochDay
 
   // --------------------------------------------------------------- commits
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, regexp_replace}
 import org.apache.spark.sql.types._
 
-import graft.sources.IcebergRead
+import graft.sources.{IcebergRead, IcebergTransforms}
 
 import scala.jdk.CollectionConverters._
 
@@ -36,11 +36,11 @@ import scala.jdk.CollectionConverters._
   * Scale: the commit is metadata-bounded (one manifest for the new files,
   * one manifest-list rewrite linear in MANIFEST count, not file count);
   * the data write is an ordinary distributed parquet write partitioned by
-  * the spec's columns. Record counts AND per-file column stats come from
-  * ONE distributed scan over the new files (r17,
-  * [[IcebergWrite.computeIcebergStats]]), and the staged→data renames run
-  * on a bounded pool — per-commit driver work is O(1) Spark jobs plus the
-  * manifest write, regardless of file count.
+  * the spec's columns. Record counts AND per-file column bounds are
+  * collected by the write tasks as they write each file
+  * ([[FileStatsTracker]]), and the staged→data renames run on a bounded
+  * pool — a commit runs one Spark job, the write, plus the manifest write,
+  * regardless of file count.
   */
 object IcebergWrite {
 
@@ -291,127 +291,85 @@ object IcebergWrite {
       materializeLineage = v3)
   }
 
-  /** Per-column min/max/null-count for the manifest entry's
+  /** Per-column min/max/null-count for a manifest entry's
     * `lower_bounds`/`upper_bounds`/`null_value_counts` maps (the Iceberg
-    * analog of Delta's stats skipping), keyed by FIELD ID and
-    * single-value-serialized (spec Appendix D). Top-level primitives
-    * only; float/double are EXCLUDED (NaN poisons bound ordering — the
-    * spec's nan_value_counts dance is not worth the risk); string bounds
-    * truncate to 16 code points (lower as a prefix, upper with the last
-    * code point incremented so it stays a valid upper bound). Reads the
-    * footer ALREADY OPEN for the record count — zero extra I/O.
-    *
-    * r17: the commit path now derives stats from ONE distributed scan
-    * ([[computeIcebergStats]]); this footer-based twin is kept as the
-    * reference implementation — IcebergWriteSpec pins the two paths
-    * equal on a mixed-null fixture.
-    */
-  private[graft] def columnStats(
-      r: org.apache.parquet.hadoop.ParquetFileReader,
-      logical: StructType)
-      : Map[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)] = {
-    import graft.sources.IcebergTransforms
-    val blocks = r.getFooter.getBlocks.asScala
-    val out = Map.newBuilder[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)]
-    logical.fields.foreach { f =>
-      val t = IcebergRead.clean(f.dataType)
-      val ok = t match {
-        case IntegerType | LongType | DateType | TimestampType |
-             TimestampNTZType | StringType => true
-        case _ => false
-      }
-      if (ok) {
-        // trust stats ONLY when the physical encoding is the expected one
-        // (INT96 timestamps carry deprecated garbage stats) and the
-        // decoded JVM type matches the logical column exactly
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-        val expectedPhys = t match {
-          case IntegerType | DateType => PrimitiveTypeName.INT32
-          case StringType => PrimitiveTypeName.BINARY
-          case _ => PrimitiveTypeName.INT64
-        }
-        val expectJvm: Any => Boolean = t match {
-          case IntegerType | DateType => _.isInstanceOf[Int]
-          case StringType => _.isInstanceOf[String]
-          case _ => _.isInstanceOf[Long]
-        }
-        val chunks = blocks.flatMap(_.getColumns.asScala.filter(c =>
-          c.getPath.size() == 1 && c.getPath.toDotString == f.name &&
-            c.getPrimitiveType.getPrimitiveTypeName == expectedPhys))
-        val sts = chunks.map(_.getStatistics)
-        if (chunks.nonEmpty && sts.forall(s =>
-            s != null && !s.isEmpty && s.isNumNullsSet)) {
-          val nulls = sts.map(_.getNumNulls).sum
-          val withVals = sts.filter(_.hasNonNullValue)
-          // normalized comparison domain (Int / Long / String)
-          def norm(v: Any): Any = v match {
-            case i: java.lang.Integer => i.intValue()
-            case l: java.lang.Long => l.longValue()
-            case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
-            case other => other
-          }
-          val mins = withVals.map(s => norm(s.genericGetMin))
-          val maxs = withVals.map(s => norm(s.genericGetMax))
-          val usable = (mins ++ maxs).forall(expectJvm)
-          if (withVals.isEmpty) {
-            // ALL-NULL column: no bounds, but the null count alone lets
-            // readers drop the file under IS NOT NULL / comparisons
-            out += IcebergRead.fieldId(f).toInt -> ((None, None, nulls))
-          } else if (usable) {
-            val lo = mins.reduceLeft((a, b) =>
-              if (IcebergTransforms.cmp(a, b) <= 0) a else b)
-            val hi = maxs.reduceLeft((a, b) =>
-              if (IcebergTransforms.cmp(a, b) >= 0) a else b)
-            val loSer = lo match {
-              case s: String =>
-                Some(IcebergTransforms.boundBytes(
-                  IcebergTransforms.truncateString(s, 16)))
-              case other => Some(IcebergTransforms.boundBytes(other))
-            }
-            val hiSer = hi match {
-              case s: String => upperBoundString(s, 16)
-                .map(IcebergTransforms.boundBytes)
-              case other => Some(IcebergTransforms.boundBytes(other))
-            }
-            out += IcebergRead.fieldId(f).toInt -> ((loSer, hiSer, nulls))
-          }
-        }
-      }
-    }
-    out.result()
-  }
+    * analog of Delta's stats skipping), keyed by FIELD ID. */
+  private[graft] type ColumnBounds = Map[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)]
 
-  /** ONE distributed columnar scan over freshly committed files →
-    * per-file (record count, field-id-keyed Iceberg column stats). This
-    * makes the commit path's driver work O(1) Spark jobs regardless of
-    * file count — r16 opened each parquet footer serially on the driver,
-    * which at a 100 TB-scale append (thousands of files) serializes
-    * thousands of round-trips through one thread. Eligibility and
-    * serialization match the footer path ([[columnStats]]): top-level
-    * int/long/date/timestamp[_ntz]/string only, float/double excluded
-    * (NaN poisons bound ordering), string bounds truncated to 16 code
-    * points (upper via [[upperBoundString]]). `skip` names the identity-
-    * partition source columns, which hive layout drops from the files —
-    * their per-file values live in the manifest partition tuple instead.
-    * Returns Map.empty when no column is eligible (callers fall back to
-    * footer record counts).
+  /** The columns that get bounds: top-level int/long/date/timestamp[_ntz]/
+    * string only, float/double excluded (NaN poisons bound ordering — the
+    * spec's nan_value_counts dance is not worth the risk). `skip` names the
+    * identity-partition source columns, which hive layout drops from the
+    * files — their per-file values live in the manifest partition tuple.
     */
-  private[graft] def computeIcebergStats(
-      spark: SparkSession,
-      paths: Seq[String],
-      logical: StructType,
-      skip: Set[String])
-      : Map[String, (Long, Map[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)])] = {
-    import graft.sources.IcebergTransforms
-    import org.apache.spark.sql.functions.{count, lit, max => smax, min => smin, sum}
-    if (paths.isEmpty) return Map.empty
-    val eligible = logical.fields.filter { f =>
+  private def boundColumns(logical: StructType, skip: Set[String]): Seq[StructField] =
+    logical.fields.toSeq.filter { f =>
       !skip.contains(f.name) && (IcebergRead.clean(f.dataType) match {
         case IntegerType | LongType | DateType | TimestampType |
              TimestampNTZType | StringType => true
         case _ => false
       })
-    }.toSeq
+    }
+
+  /** The bounds of one file from its aggregate row — min, max and null
+    * count of each of `cols` from `first` on — single-value-serialized
+    * (spec Appendix D). String bounds truncate to 16 code points (lower as
+    * a prefix, upper via [[upperBoundString]]). Shared by the write tasks'
+    * [[FileStatsTracker]] rows and the [[computeIcebergStats]] scan, so the
+    * two cannot serialize differently.
+    */
+  private def boundsOf(r: org.apache.spark.sql.Row, first: Int, cols: Seq[StructField]): ColumnBounds =
+    cols.zipWithIndex.map { case (f, i) =>
+      val at = first + 3 * i
+      val nulls = r.getLong(at + 2)
+      val fid = IcebergRead.fieldId(f).toInt
+      // collect()-JVM value → the pruning domain (Int / Long micros /
+      // Int days / String)
+      def norm(v: Any): Any = v match {
+        case x: java.lang.Integer => x.intValue()
+        case x: java.lang.Long => x.longValue()
+        case s: String => s
+        case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
+        case d: java.time.LocalDate => d.toEpochDay.toInt
+        case t: java.sql.Timestamp =>
+          val inst = t.toInstant
+          inst.getEpochSecond * 1000000L + inst.getNano / 1000L
+        case t: java.time.Instant =>
+          t.getEpochSecond * 1000000L + t.getNano / 1000L
+        case l: java.time.LocalDateTime =>
+          l.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
+            l.getNano / 1000L
+        case other => other
+      }
+      if (r.isNullAt(at)) fid -> ((None, None, nulls)) // all-null column
+      else {
+        val loSer = norm(r.get(at)) match {
+          case s: String => Some(IcebergTransforms.boundBytes(
+            IcebergTransforms.truncateString(s, 16)))
+          case other => Some(IcebergTransforms.boundBytes(other))
+        }
+        val hiSer = norm(r.get(at + 1)) match {
+          case s: String => upperBoundString(s, 16).map(IcebergTransforms.boundBytes)
+          case other => Some(IcebergTransforms.boundBytes(other))
+        }
+        fid -> ((loSer, hiSer, nulls))
+      }
+    }.toMap
+
+  /** ONE distributed columnar scan over existing files → per-file
+    * (record count, [[ColumnBounds]]): the reference the write path's
+    * [[FileStatsTracker]] is pinned equal to. Columns as [[boundColumns]];
+    * empty files get no entry. Returns Map.empty when no column is
+    * eligible.
+    */
+  private[graft] def computeIcebergStats(
+      spark: SparkSession,
+      paths: Seq[String],
+      logical: StructType,
+      skip: Set[String]): Map[String, (Long, ColumnBounds)] = {
+    import org.apache.spark.sql.functions.{count, lit, max => smax, min => smin, sum}
+    if (paths.isEmpty) return Map.empty
+    val eligible = boundColumns(logical, skip)
     if (eligible.isEmpty) return Map.empty
     val scanSchema = StructType(eligible.map(f =>
       StructField(f.name, IcebergRead.clean(f.dataType))))
@@ -431,48 +389,7 @@ object IcebergWrite {
       val abs =
         try new Path(new java.net.URI(r.getString(0))).toString
         catch { case _: Exception => new Path(r.getString(0)).toString }
-      wanted.get(abs).map { orig =>
-        val stats = Map.newBuilder[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)]
-        eligible.zipWithIndex.foreach { case (f, i) =>
-          val nulls = r.getLong(r.fieldIndex(s"_null_$i"))
-          val mn = r.get(r.fieldIndex(s"_min_$i"))
-          val mx = r.get(r.fieldIndex(s"_max_$i"))
-          val fid = IcebergRead.fieldId(f).toInt
-          if (mn == null) stats += fid -> ((None, None, nulls)) // all-null column
-          else {
-            // collect()-JVM value → the pruning domain the footer path
-            // used (Int / Long micros / Int days / String)
-            def norm(v: Any): Any = v match {
-              case x: java.lang.Integer => x.intValue()
-              case x: java.lang.Long => x.longValue()
-              case s: String => s
-              case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-              case d: java.time.LocalDate => d.toEpochDay.toInt
-              case t: java.sql.Timestamp =>
-                val inst = t.toInstant
-                inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-              case t: java.time.Instant =>
-                t.getEpochSecond * 1000000L + t.getNano / 1000L
-              case l: java.time.LocalDateTime =>
-                l.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-                  l.getNano / 1000L
-              case other => other
-            }
-            val lo = norm(mn); val hi = norm(mx)
-            val loSer = lo match {
-              case s: String => Some(IcebergTransforms.boundBytes(
-                IcebergTransforms.truncateString(s, 16)))
-              case other => Some(IcebergTransforms.boundBytes(other))
-            }
-            val hiSer = hi match {
-              case s: String => upperBoundString(s, 16).map(IcebergTransforms.boundBytes)
-              case other => Some(IcebergTransforms.boundBytes(other))
-            }
-            stats += fid -> ((loSer, hiSer, nulls))
-          }
-        }
-        orig -> ((r.getLong(r.fieldIndex("_n")), stats.result()))
-      }
+      wanted.get(abs).map(orig => orig -> ((r.getLong(1), boundsOf(r, 2, eligible))))
     }.toMap
   }
 
@@ -701,37 +618,39 @@ object IcebergWrite {
           .orElse(currentSnapshotId(md))
       val tmp = new Path(qualified, s"_tmp-append-${java.util.UUID.randomUUID()}")
       // Iceberg REQUIRES timestamps as int64 micros (spec "Parquet" map);
-      // Spark's default INT96 is non-conformant for foreign readers AND
-      // poisons footer stats (deprecated INT96 stats decode as garbage)
-      val writer = withMicrosTimestamps(spark, withParts).write.mode("overwrite")
-      (if (specFields.nonEmpty) writer.partitionBy(specFields.map(_._1): _*) else writer)
-        .parquet(tmp.toString)
+      // Spark's default INT96 is non-conformant for foreign readers
+      val written = withMicrosTimestamps(spark, withParts)
+      val partNames = specFields.map(_._1)
+      val identitySources: Set[String] = specFields.collect {
+        case (_, graft.sources.IcebergTransforms.Identity, src, _, _) => src }.toSet
+      // per-file record counts and bounds come from the write tasks
+      val boundCols = boundColumns(logical, identitySources)
+      val tracker = new FileStatsTracker(
+        StructType(written.schema.fields.filterNot(f => partNames.contains(f.name))),
+        boundCols.map(_.name), partNames.size)
+      GraftShims.writeParquet(written, tmp.toString, partNames, Seq(tracker))
+      val fileStats = tracker.rows
 
-      // collect written part files (+ their hive partition values), move
-      // them under data/ with fresh unique names — renames run on a BOUNDED
-      // POOL (r17: thousands of object-store renames must not serialize
-      // through one thread), and per-file column stats come from ONE
-      // distributed columnar scan (r17, mirroring DeltaWrite.computeStats —
-      // r16 opened every parquet footer serially on the driver, O(#files)
-      // round-trips per commit)
+      // collect written part files (+ their hive partition values, through
+      // the one hive segment parser), move them under data/ with fresh
+      // unique names — renames run on a BOUNDED POOL (r17: thousands of
+      // object-store renames must not serialize through one thread)
       val dataDir = new Path(qualified, "data")
       fs.mkdirs(dataDir)
-      val staged = Seq.newBuilder[(Path, Seq[(String, Option[String])], Long)]
-      def walk(dir: Path, pv: Seq[(String, Option[String])]): Unit =
+      val staged = Seq.newBuilder[(Path, Seq[(String, Option[String])], Long, String)]
+      def walk(dir: Path, pv: Seq[(String, Option[String])], rel: String): Unit =
         fs.listStatus(dir).foreach { st =>
           val name = st.getPath.getName
+          val key = if (rel.isEmpty) name else s"$rel/$name"
           if (st.isDirectory && name.contains("=")) {
-            val Array(k, v) = name.split("=", 2)
-            val dec = java.net.URLDecoder.decode(v, "UTF-8")
-            walk(st.getPath, pv :+ (k -> (if (dec == "__HIVE_DEFAULT_PARTITION__") None
-                                          else Some(dec))))
+            walk(st.getPath, pv ++ DeltaWrite.hivePartitionValues(Seq(name)), key)
           } else if (name.startsWith("part-") && name.endsWith(".parquet")) {
-            staged += ((st.getPath, pv, st.getLen))
+            staged += ((st.getPath, pv, st.getLen, key))
           }
         }
-      walk(tmp, Nil)
+      walk(tmp, Nil, "")
       val stagedFiles = staged.result()
-      val renamed: Seq[(Path, Seq[(String, Option[String])], Long)] =
+      val renamed: Seq[(Path, Seq[(String, Option[String])], Long, String)] =
         if (stagedFiles.isEmpty) Nil
         else {
           val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -739,79 +658,27 @@ object IcebergWrite {
           implicit val ec: scala.concurrent.ExecutionContext =
             scala.concurrent.ExecutionContext.fromExecutor(pool)
           try scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(stagedFiles.map { case (src, pv, len) =>
+            scala.concurrent.Future.sequence(stagedFiles.map { case (src, pv, len, key) =>
               scala.concurrent.Future {
                 val target = new Path(dataDir, s"${java.util.UUID.randomUUID()}.parquet")
                 require(fs.rename(src, target), s"rename to $target failed")
-                (target, pv, len)
+                (target, pv, len, key)
               }
             }),
             scala.concurrent.duration.Duration.Inf)
           finally pool.shutdown()
         }
       fs.delete(tmp, true)
-      val identitySources: Set[String] = specFields.collect {
-        case (_, graft.sources.IcebergTransforms.Identity, src, _, _) => src }.toSet
-      // Stats dispatch by staged-file count (the DV read path's size-gate
-      // shape): a SMALL commit's footers read in driver-milliseconds, and
-      // launching a Spark job (scan + groupBy + collect) for 1-2 files is
-      // a fixed ~0.3-0.5s tax per commit — felt hardest by per-micro-batch
-      // streaming sinks. A LARGE commit (thousands of files at 100 TB
-      // appends) must NOT serialize thousands of footer round-trips through
-      // the driver — there the one distributed scan wins. Both paths are
-      // spec-pinned equal in IcebergWriteSpec, so this is pure dispatch.
-      // 64 (r18, was 17): with the footer reads issued from the SAME bounded
-      // pool the renames use, the driver-side cost of N footers is
-      // ceil(N/16) round-trip latencies, not N — so the fixed ~0.3-0.5s
-      // Spark-job tax of the distributed scan only pays for itself on
-      // commits large enough that shipping per-file work to executors wins
-      val statsScanMinFiles = spark.conf
-        .getOption("graft.iceberg.statsScanMinFiles").map(_.toInt).getOrElse(64)
-      val statsByPath: Map[String, (Long, Map[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)])] =
-        if (renamed.size < statsScanMinFiles) {
-          val statsLogical =
-            StructType(logical.fields.filterNot(f => identitySources(f.name)))
-          def footer(target: Path) = {
-            val r = LocalIo.openParquet(target, conf)
-            val (rc, stats) =
-              try (r.getRecordCount, columnStats(r, statsLogical))
-              finally r.close()
-            target.toString -> ((rc, stats))
-          }
-          if (renamed.size <= 2) renamed.map(t => footer(t._1)).toMap
-          else {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(16, renamed.size))
-            implicit val ec: scala.concurrent.ExecutionContext =
-              scala.concurrent.ExecutionContext.fromExecutor(pool)
-            try scala.concurrent.Await.result(
-              scala.concurrent.Future.traverse(renamed) { case (target, _, _) =>
-                scala.concurrent.Future(footer(target))
-              },
-              scala.concurrent.duration.Duration.Inf).toMap
-            finally pool.shutdown()
-          }
-        } else computeIcebergStats(
-          spark, renamed.map(_._1.toString), logical, identitySources)
-      val files: Seq[(Path, Seq[(String, Option[String])], Long, Long,
-          Map[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)])] =
-        renamed.map { case (target, pv, len) =>
-          statsByPath.get(target.toString) match {
-            case Some((rc, stats)) => (target, pv, rc, len, stats)
-            case None =>
-              // not seen by the scan: an EMPTY part file (a tiny batch
-              // repartitioned wider than its row count) — or, when the
-              // table has no stats-eligible column at all, the scan was
-              // skipped entirely. One footer read resolves the count; a
-              // non-empty miss with eligible columns fails loudly rather
-              // than committing a blind entry.
-              val r = LocalIo.openParquet(target, conf)
-              val rc = try r.getRecordCount finally r.close()
-              require(rc == 0L || statsByPath.isEmpty,
-                s"stats scan missed non-empty new file $target ($rc rows)")
-              (target, pv, rc, len,
-                Map.empty[Int, (Option[Array[Byte]], Option[Array[Byte]], Long)])
-          }
+      val files: Seq[(Path, Seq[(String, Option[String])], Long, Long, ColumnBounds)] =
+        renamed.map { case (target, pv, len, key) =>
+          // every file the writer produced passed through the tracker: a
+          // file without stats fails loudly rather than committing a blind
+          // entry. An EMPTY file (a tiny batch repartitioned wider than its
+          // row count) is listed with no bounds.
+          val r = fileStats.getOrElse(key,
+            throw new IllegalStateException(s"no write stats for new file $target ($key)"))
+          val rc = r.getLong(0)
+          (target, pv, rc, len, if (rc == 0L) Map.empty: ColumnBounds else boundsOf(r, 1, boundCols))
         }
       val rows = files.map(_._3).sum
 

@@ -73,10 +73,16 @@ object JsonUdfs {
     java.util.Collections.newSetFromMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
   def registerOnce(spark: SparkSession): Unit =
-    if (registeredSessions.add(spark)) register(spark)
+    if (registeredSessions.add(spark)) registerAll(spark)
 
-  /** Register the whole pack on a session (idempotent). */
+  /** Register the whole pack on a session (idempotent); a later
+    * [[registerOnce]] on that session does nothing. */
   def register(spark: SparkSession): Unit = {
+    registeredSessions.add(spark)
+    registerAll(spark)
+  }
+
+  private def registerAll(spark: SparkSession): Unit = {
     spark.udf.register("unnest_json_array", (s: String) => unnestJsonArray(s))
     // json_get: the `->` operator's function form (SqlRewrite maps X->'k'
     // here); keeps the JSON form of the extracted node, like the reference

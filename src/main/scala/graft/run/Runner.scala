@@ -4,6 +4,8 @@ import graft.config._
 import graft.destinations.Destinations
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
@@ -86,7 +88,7 @@ object Runner {
     // caller, every clone inherits them
     graft.functions.JsonUdfs.registerOnce(spark)
     graft.functions.HeavyHitters.registerOnce(spark)
-    val stageSql = validate(spark, pipeline)
+    val validated = validate(spark, pipeline)
     tracker.onProgress(ProgressEvent.Started)
     // the pipeline's own session: its views and execution settings die with
     // it and never reach the caller or a concurrent pipeline
@@ -156,8 +158,11 @@ object Runner {
           tracker.onProgress(ProgressEvent.StageStarted(stage.name, gi))
           val s0 = System.nanoTime()
           try {
-            val df = session.sql(stageSql(stage.name))
-            val shared = consumerCount(pipeline, stage, lastStage) >= 2 &&
+            val df = session.sql(validated(stage.name).sql)
+            val toDestination = lastStage.exists(_.name == stage.name) && pipeline.destination.nonEmpty
+            val consumers = readerGroups(pipeline, validated, stage.name).size +
+              (if (toDestination) 1 else 0)
+            val shared = consumers >= 2 &&
               !(small && df.queryExecution.analyzed.deterministic)
             if (shared || stage.explainAnalyze) {
               df.persist()
@@ -179,7 +184,8 @@ object Runner {
       // TTL eviction: unpersist every stage so far whose last consumer group
       // is <= gi (never the final stage — it feeds the destination).
       pipeline.stages.take(gi + 1).flatten.foreach { s =>
-        if (!lastStage.exists(_.name == s.name) && lastConsumerGroup(pipeline, s.name) <= gi)
+        if (!lastStage.exists(_.name == s.name) &&
+            readerGroups(pipeline, validated, s.name).forall(_ <= gi))
           persisted.remove(s.name).foreach(_.unpersist())
       }
     }
@@ -214,12 +220,18 @@ object Runner {
 
   // ------------------------------------------------------------ validation
 
+  /** A stage query that passed validation: the text the run executes (the
+    * JSON operators rewritten) and the lower-cased single-part names of the
+    * relations its parsed plan reads — sources and earlier stages — except
+    * the query's own CTEs.
+    */
+  final case class ValidatedStage(sql: String, reads: Set[String])
+
   /** Load-time checks (reference templating.rs:286-330): every stage query
     * must parse as a pure SELECT; names must be unique.
-    * @return each stage's SQL with the JSON operators rewritten, by stage
-    *   name: the text that passed the check, for the run to execute
+    * @return each stage's validated query, by stage name
     */
-  def validate(spark: SparkSession, pipeline: Aqueduct): Map[String, String] = {
+  def validate(spark: SparkSession, pipeline: Aqueduct): Map[String, ValidatedStage] = {
     // an in_memory destination registers a view under ITS name at the end of
     // the run — a collision with a source/stage must fail at load time, not
     // after the whole pipeline has executed
@@ -232,42 +244,36 @@ object Runner {
       throw PipelineError("A destination requires at least one stage")
     pipeline.stages.flatten.map { s =>
       val sql = SqlRewrite.jsonOperators(s.query)
-      SqlGuard.validate(spark, s.name, sql)
-      s.name -> sql
+      s.name -> ValidatedStage(sql, relationsRead(SqlGuard.validate(spark, s.name, sql)))
     }.toMap
   }
 
   // -------------------------------------------------------------- liveness
 
-  private def refPattern(name: String) =
-    java.util.regex.Pattern.compile(s"\\b${java.util.regex.Pattern.quote(name)}\\b",
-      java.util.regex.Pattern.CASE_INSENSITIVE)
+  private def lower(name: String) = name.toLowerCase(java.util.Locale.ROOT)
 
-  /** Number of downstream consumers of a stage: later stage queries that
-    * reference it, plus the destination if this is the final stage.
+  /** Single-part relation names `plan` reads, subqueries and CTE bodies
+    * included, minus the names its CTEs define. Names only in a literal,
+    * an alias or a comment are not relations, so they are not read.
     */
-  private def consumerCount(pipeline: Aqueduct, stage: Stage, lastStage: Option[Stage]): Int = {
-    val later = laterQueries(pipeline, stage.name)
-    val p = refPattern(stage.name)
-    val refs = later.count(q => p.matcher(q).find())
-    refs + (if (lastStage.exists(_.name == stage.name) && pipeline.destination.nonEmpty) 1 else 0)
+  private def relationsRead(plan: LogicalPlan): Set[String] = {
+    val ctes = plan.collectWithSubqueries { case w: UnresolvedWith => w.cteRelations.map(_._1) }
+    plan.collectWithSubqueries {
+      case r: UnresolvedRelation if r.multipartIdentifier.size == 1 =>
+        Set(lower(r.multipartIdentifier.head))
+      case w: UnresolvedWith => w.cteRelations.flatMap(c => relationsRead(c._2)).toSet
+    }.flatten.toSet -- ctes.flatten.map(lower)
   }
 
-  /** Index of the last group whose queries reference `name` (its own group if
-    * nothing ever references it again — evict immediately).
+  /** The group index of each later stage query that reads `name`, one
+    * entry per query: its consumers besides the destination.
     */
-  private def lastConsumerGroup(pipeline: Aqueduct, name: String): Int = {
-    val p = refPattern(name)
+  private def readerGroups(
+      pipeline: Aqueduct, validated: Map[String, ValidatedStage], name: String): Seq[Int] = {
     val own = pipeline.stages.indexWhere(_.exists(_.name == name))
-    val referencing = pipeline.stages.zipWithIndex.collect {
-      case (g, gi) if gi > own && g.exists(st => p.matcher(st.query).find()) => gi
+    pipeline.stages.zipWithIndex.drop(own + 1).flatMap { case (g, gi) =>
+      g.filter(st => validated(st.name).reads(lower(name))).map(_ => gi)
     }
-    if (referencing.isEmpty) own else referencing.max
-  }
-
-  private def laterQueries(pipeline: Aqueduct, name: String): Seq[String] = {
-    val own = pipeline.stages.indexWhere(_.exists(_.name == name))
-    pipeline.stages.drop(own + 1).flatten.map(_.query)
   }
 
   // ----------------------------------------------------------- debug output

@@ -72,6 +72,60 @@ object GraftShims {
   def ofRows(spark: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
 
+  /** Write `df` as parquet files under `path`, in hive `col=value/`
+    * directories for `partitionColumns`, through Spark's file writer
+    * (`FileFormatWriter`, the writer `df.write.parquet` ends in) as one SQL
+    * execution. `trackers` see every file and row in the task that writes
+    * them, beside Spark's own output metrics; delta-spark's
+    * `TransactionalWrite.writeFiles` is the model. The write runs under
+    * `df`'s session, so that session's parquet settings apply.
+    *
+    * The plan has the shape `df.write` plans (Spark's `V1Writes`): empty
+    * strings of partition columns become null, the rows are sorted by the
+    * partition columns, and a `WriteFilesExec` on top runs the write tasks.
+    * Without that node the writer's job closure, which carries the Hadoop
+    * configuration, would be serialized once more to check it.
+    */
+  def writeParquet(
+      df: DataFrame,
+      path: String,
+      partitionColumns: Seq[String],
+      trackers: Seq[execution.datasources.WriteJobStatsTracker]): Unit = {
+    import execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter, WriteFilesExec}
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    def isPartition(name: String) = partitionColumns.exists(resolver(_, name))
+    val input =
+      if (partitionColumns.isEmpty) df
+      else df.select(df.schema.fields.toIndexedSeq.map { f =>
+        val c = functions.col(s"`${f.name.replace("`", "``")}`")
+        if (isPartition(f.name) && f.dataType == types.StringType)
+          column(catalyst.expressions.Empty2Null(expression(c))).as(f.name, f.metadata)
+        else c
+      }: _*).sortWithinPartitions(df.schema.fieldNames.toIndexedSeq.filter(isPartition)
+        .map(n => functions.col(s"`${n.replace("`", "``")}`")): _*)
+    val ds = input.asInstanceOf[classic.Dataset[Row]]
+    val spark = ds.sparkSession
+    val qe = ds.queryExecution
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val out = new org.apache.hadoop.fs.Path(path)
+    val qualified = out.getFileSystem(hadoopConf).makeQualified(out).toString
+    execution.SQLExecution.withNewExecutionId(qe, Some("parquet write")) {
+      val plan = qe.executedPlan
+      val parts = partitionColumns.map(c => plan.output.find(a => resolver(a.name, c))
+        .getOrElse(throw new IllegalArgumentException(s"partition column $c not in $path's data")))
+      val format = new execution.datasources.parquet.ParquetFileFormat
+      val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+        spark.sessionState.conf.fileCommitProtocolClass,
+        java.util.UUID.randomUUID().toString, qualified)
+      val basic = new BasicWriteJobStatsTracker(
+        new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+        BasicWriteJobStatsTracker.metrics)
+      FileFormatWriter.write(spark, WriteFilesExec(plan, format, parts, None, Map.empty, Map.empty),
+        format, committer, FileFormatWriter.OutputSpec(qualified, Map.empty, plan.output),
+        hadoopConf, parts, None, basic +: trackers, Map.empty)
+    }
+  }
+
   /** `spark.sql.files.maxPartitionBytes` as a Long (the typed SQLConf
     * accessor is sql-package-private).
     */

@@ -5,6 +5,8 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.sources.IcebergRead
 
+import org.apache.avro.generic.GenericRecord
+
 import scala.jdk.CollectionConverters._
 
 /** Native Iceberg v2 destination ([[IcebergWrite]]): create + multi-append
@@ -411,23 +413,61 @@ class IcebergWriteSpec extends SparkSpec {
     assert(ub2.codePointAt(15) == 0xE000)
   }
 
-  // r17 (VERDICT item 1): the commit path derives per-file stats from ONE
-  // distributed scan instead of driver-serial footer reads. Pin the two
-  // implementations equal on a mixed-null fixture: nulls in eligible
-  // columns, an all-null column, >16-code-point strings with an astral
-  // char (truncation + upper-bound increment), a timestamp column, and an
-  // ineligible double column.
-  test("r17: distributed stats scan equals the footer reference per file") {
+  private def metadataOf(t: String) = {
+    val metaDir = new org.apache.hadoop.fs.Path(t, "metadata")
+    IcebergRead.currentMetadata(
+      metaDir.getFileSystem(spark.sessionState.newHadoopConf()), metaDir)
+  }
+
+  /** The table's current schema with its field ids. */
+  private def logicalOf(t: String): StructType = {
+    val md = metadataOf(t)
+    IcebergRead.parseType(IcebergRead.schemaNodeById(md, IcebergRead.currentSchemaIdOf(md)))
+      .asInstanceOf[StructType]
+  }
+
+  /** Every live data entry's (record count, bounds) from the current
+    * snapshot's manifests, by file path. */
+  private def manifestStats(t: String)
+      : Map[String, (Long, Map[Int, (Option[Seq[Byte]], Option[Seq[Byte]], Long)])] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val md = metadataOf(t)
+    val snapId = md.get("current-snapshot-id").asLong()
+    val list = md.get("snapshots").elements().asScala
+      .find(_.get("snapshot-id").asLong() == snapId).get.get("manifest-list").asText()
+    def kv(df: GenericRecord, name: String): Map[Int, AnyRef] =
+      Option(df.get(name)).map(_.asInstanceOf[java.util.Collection[GenericRecord]]
+        .asScala.map(r => r.get("key").asInstanceOf[Int] -> r.get("value")).toMap)
+        .getOrElse(Map.empty)
+    def bytes(v: AnyRef): Seq[Byte] = {
+      val bb = v.asInstanceOf[java.nio.ByteBuffer].duplicate()
+      val a = new Array[Byte](bb.remaining()); bb.get(a); a.toSeq
+    }
+    IcebergRead.avroRecords(conf, new org.apache.hadoop.fs.Path(list)).flatMap { m =>
+      IcebergRead.avroRecords(conf, new org.apache.hadoop.fs.Path(m.get("manifest_path").toString))
+    }.map { e =>
+      val df = e.get("data_file").asInstanceOf[GenericRecord]
+      val (lo, hi) = (kv(df, "lower_bounds"), kv(df, "upper_bounds"))
+      val nulls = kv(df, "null_value_counts")
+      df.get("file_path").toString -> ((df.get("record_count").asInstanceOf[Long],
+        nulls.map { case (fid, n) =>
+          fid -> ((lo.get(fid).map(bytes), hi.get(fid).map(bytes), n.asInstanceOf[Long]))
+        }))
+    }.toMap
+  }
+
+  // The commit path takes per-file bounds from the write tasks; the
+  // distributed scan is the reference. Pin the two equal on a mixed-null
+  // fixture: nulls in eligible columns, an all-null column,
+  // >16-code-point strings with an astral char (truncation + upper-bound
+  // increment), a timestamp column, and an ineligible double column.
+  test("write-task bounds equal the distributed stats scan per file") {
     val dir = tmpDir("icew-statscan")
-    def fid(n: Long) = new MetadataBuilder().putLong("iceberg.id", n).build()
     val logical = StructType(Seq(
-      StructField("i", IntegerType, nullable = true, fid(1)),
-      StructField("l", LongType, nullable = true, fid(2)),
-      StructField("s", StringType, nullable = true, fid(3)),
-      StructField("d", DateType, nullable = true, fid(4)),
-      StructField("ts", TimestampType, nullable = true, fid(5)),
-      StructField("nul", StringType, nullable = true, fid(6)),
-      StructField("f", DoubleType, nullable = true, fid(7))))
+      StructField("i", IntegerType), StructField("l", LongType),
+      StructField("s", StringType), StructField("d", DateType),
+      StructField("ts", TimestampType), StructField("nul", StringType),
+      StructField("f", DoubleType)))
     val data = (0 until 50).map { k =>
       Row(
         if (k % 7 == 0) null else Integer.valueOf(k - 25),
@@ -440,42 +480,53 @@ class IcebergWriteSpec extends SparkSpec {
         java.lang.Double.valueOf(k * 0.5))
     }
     val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 3), logical)
-    val out = dir.resolve("files").toString
-    val prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try df.write.parquet(out)
-    finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(out)).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .map(fs.makeQualified)
-    assert(parts.length >= 2, "fixture must span multiple files")
-    val dist = IcebergWrite.computeIcebergStats(
-      spark, parts.map(_.toString).toSeq, logical, Set.empty)
-    assert(dist.keySet == parts.map(_.toString).toSet)
-    parts.foreach { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      val (rc, ref) =
-        try (r.getRecordCount, IcebergWrite.columnStats(r, logical))
-        finally r.close()
-      val (n, got) = dist(p.toString)
-      assert(n == rc, s"record count of $p")
-      assert(got.keySet == ref.keySet, s"stats column set of $p")
-      ref.foreach { case (k, (lo, hi, nc)) =>
-        val (glo, ghi, gnc) = got(k)
-        assert(gnc == nc, s"null count fid=$k of $p")
-        assert(glo.map(_.toSeq) == lo.map(_.toSeq), s"lower bound fid=$k of $p")
-        assert(ghi.map(_.toSeq) == hi.map(_.toSeq), s"upper bound fid=$k of $p")
+    def check(t: String, skip: Set[String]): Map[String, (Long, Map[Int, (Option[Seq[Byte]], Option[Seq[Byte]], Long)])] = {
+      val tracked = manifestStats(t)
+      assert(tracked.size >= 2, "fixture must span multiple files")
+      val scanned = IcebergWrite.computeIcebergStats(
+        spark, tracked.keys.toSeq, logicalOf(t), skip)
+      assert(scanned.keySet == tracked.keySet)
+      tracked.foreach { case (p, (rc, bounds)) =>
+        val (n, ref) = scanned(p)
+        assert(rc == n, s"record count of $p")
+        assert(bounds == ref.map { case (fid, (lo, hi, nc)) =>
+          fid -> ((lo.map(_.toSeq), hi.map(_.toSeq), nc)) }, s"bounds of $p")
       }
+      tracked
+    }
+    val plain = dir.resolve("plain").toString
+    IcebergWrite.create(spark, plain, logical)
+    IcebergWrite.append(spark, plain, df)
+    // the double column gets no bounds; the all-null one a null count only
+    val fid = logicalOf(plain).fields.map(f => f.name -> IcebergRead.fieldId(f).toInt).toMap
+    check(plain, Set.empty).values.foreach { case (_, b) =>
+      assert(b.keySet == Set("i", "l", "s", "d", "ts", "nul").map(fid) && b(fid("nul"))._1.isEmpty)
     }
     // identity-partition sources are excluded (hive layout drops them)
-    val noSkip = IcebergWrite.computeIcebergStats(
-      spark, parts.map(_.toString).toSeq, logical, Set("i", "s"))
-    noSkip.values.foreach { case (_, stats) =>
-      assert(!stats.contains(1) && !stats.contains(3) && stats.contains(2))
+    val parted = dir.resolve("parted").toString
+    IcebergWrite.create(spark, parted, logical, partitionBy = Seq("i"))
+    IcebergWrite.append(spark, parted, df)
+    check(parted, Set("i")).values.foreach { case (_, b) =>
+      assert(!b.contains(fid("i")) && b.contains(fid("l")))
     }
+    val noSkip = IcebergWrite.computeIcebergStats(spark, manifestStats(plain).keys.toSeq,
+      logicalOf(plain), Set("i", "s"))
+    noSkip.values.foreach { case (_, stats) =>
+      assert(!stats.contains(fid("i")) && !stats.contains(fid("s")) && stats.contains(fid("l")))
+    }
+  }
+
+  test("identity partition values with '+', '%' and spaces read back exactly") {
+    import spark.implicits._
+    val t = tmpDir("icew-plus").resolve("t").toString
+    IcebergWrite.create(spark, t, schema, partitionBy = Seq("p"))
+    val values = Seq("a+b", "x%y", "p q")
+    IcebergWrite.append(spark, t,
+      values.zipWithIndex.map { case (p, i) => (i.toLong, s"v$i", p) }.toDF("id", "v", "p"))
+    val back = IcebergRead.read(spark, t).collect().map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(back == values.zipWithIndex.map { case (p, i) => i.toLong -> p }.toMap)
+    assert(IcebergRead.files(spark, t).collect().map(_.getMap[String, String](3)("p")).toSet ==
+      values.toSet)
   }
 
   test("many-partition reads consolidate: one scan + broadcast injection, not a union per tuple") {

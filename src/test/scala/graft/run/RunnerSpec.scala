@@ -746,4 +746,30 @@ class RunnerSpec extends SparkSpec {
       assert(spark.read.parquet(dir.resolve("out").toString).count() == 100)
     } finally spark.catalog.dropTempView("ru_rdd")
   }
+
+  test("unknown input size: a stage named only in a later literal or alias is not cached") {
+    import org.apache.spark.sql.types._
+    val dir = tmpDir("runner-literal")
+    spark.createDataFrame(
+      spark.sparkContext.parallelize((0L until 200L).map(i => Row(i, i % 4)), 2),
+      StructType(Seq(StructField("id", LongType), StructField("k", LongType))))
+      .createOrReplaceTempView("rl_src")
+    try {
+      val aq = Aqueduct(
+        sources = Seq(InMemorySource("rl_src")),
+        stages = Seq(
+          Seq(Stage("rl_mid", "SELECT id, k FROM rl_src WHERE id % 2 = 0")),
+          // rl_mid's one reader is rl_a: rl_b names it in a string literal
+          // and a column alias only
+          Seq(Stage("rl_a", "SELECT id, k FROM rl_mid WHERE k < 2"),
+            Stage("rl_b", "SELECT id, k, 'rl_mid' AS tag, id AS rl_mid FROM rl_src WHERE k = 3")),
+          Seq(Stage("rl_out", "SELECT id, k FROM rl_a UNION ALL SELECT id, k FROM rl_b"))),
+        destination = Some(FileDestination("rl_out", Location(dir.resolve("out").toString),
+          ParquetDestFormat(Map.empty), singleFile = false)))
+      val probe = new CacheProbe
+      Runner.run(spark, aq, probe)
+      assert(probe.cachedAtGroup1 == 0)
+      assert(spark.read.parquet(dir.resolve("out").toString).count() == 100)
+    } finally spark.catalog.dropTempView("rl_src")
+  }
 }
