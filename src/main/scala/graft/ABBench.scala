@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{GraftShims, SparkSession}
+
 /** Measurement tooling (optimization rounds, guide §1): alternate two conf
   * sets over the same queries INSIDE ONE JVM and report per-query medians,
   * so JIT/GC/session noise that dominates short fresh-JVM subset benches
@@ -7,40 +9,36 @@ package graft
   * main, never run by the driver.
   *
   * Usage: ABBench <sfDir> <ignored> <namePatterns>
-  *   env AB_CONF_A / AB_CONF_B: comma-separated k=v session confs
+  *   env AB_CONF_A / AB_CONF_B: comma-separated k=v confs, each set on
+  *     its own clone of the session
   *   env AB_ITERS: alternations per side (default 3)
   */
 object ABBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    def confOf(env: String): Seq[(String, String)] =
+    def confOf(env: String): Map[String, String] =
       sys.env.getOrElse(env, "").split(',').map(_.trim).filter(_.contains("="))
-        .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }.toSeq
-    val confA = confOf("AB_CONF_A")
-    val confB = confOf("AB_CONF_B")
+        .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }.toMap
     val iters = sys.env.getOrElse("AB_ITERS", "3").toInt
     val selected = Measure.select(Some(if (args.length > 2) args(2) else args(1)))
     val spark = Sessions.local()
 
-    def withConf[A](cs: Seq[(String, String)])(body: => A): A = {
-      val prev = cs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      cs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally prev.foreach { case (k, p) =>
-        p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
-    def runOnce(name: String, fn: Measure.Query): Double = {
-      val t = Measure.timed(Measure.materialize(spark, sfDir, fn))
+    // one clone per conf set: the confs never touch the base session
+    val sessionA = GraftShims.cloneSession(spark, confOf("AB_CONF_A"))
+    val sessionB = GraftShims.cloneSession(spark, confOf("AB_CONF_B"))
+    def runOnce(session: SparkSession, name: String, fn: Measure.Query): Double = {
+      val t = Measure.timed(Measure.materialize(session, sfDir, fn))
       t.value.foreach(err => throw new IllegalStateException(s"$name failed: $err"))
       t.wallSec
     }
     // warm-up under each conf so first-run codegen/scan costs hit neither side
-    withConf(confA)(Measure.warmUp(spark, sfDir, selected))
-    withConf(confB)(Measure.warmUp(spark, sfDir, selected))
+    Measure.warmUp(sessionA, sfDir, selected)
+    Measure.warmUp(sessionB, sfDir, selected)
     val results = selected.map { case (name, fn) =>
       val as = Seq.newBuilder[Double]; val bs = Seq.newBuilder[Double]
       (1 to iters).foreach { _ =>
-        as += withConf(confA)(runOnce(name, fn))
-        bs += withConf(confB)(runOnce(name, fn))
+        as += runOnce(sessionA, name, fn)
+        bs += runOnce(sessionB, name, fn)
       }
       def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
       (name, med(as.result()), med(bs.result()))

@@ -579,7 +579,7 @@ private[graft] object DeltaQueries {
     // and the accumulated change rows must hash-match the same
     // from-first-principles oracle as the batch CDF read (q111): a
     // duplicated, dropped, or split commit all mismatch.
-    "q150_delta_cdf_stream" -> ((s, dir) => withStreamGate(s, dir, Seq("orders"), exprOnly = false) {
+    "q150_delta_cdf_stream" -> ((s, dir) => withStreamGate(s, dir, Seq("orders"), exprOnly = false) { s =>
       import graft.destinations.DeltaWrite
       val root = tmp("graft-q150")
       val tbl = root.resolve("src").toString
@@ -751,7 +751,7 @@ private[graft] object DeltaQueries {
     // as `insert` rows AT the snapshot version, then tails changes from
     // the durable offset across a restart. A reader that starts empty, or
     // re-reads the snapshot on restart, changes rows or the batch count.
-    "q155_cdf_stream_snapshot" -> ((s, dir) => withStreamGate(s, dir, Seq("orders"), exprOnly = false) {
+    "q155_cdf_stream_snapshot" -> ((s, dir) => withStreamGate(s, dir, Seq("orders"), exprOnly = false) { s =>
       import graft.destinations.DeltaWrite
       val root = tmp("graft-q155")
       val tbl = root.resolve("src").toString
@@ -1612,7 +1612,7 @@ private[graft] object DeltaQueries {
     // Pinned: snapshot count 2 (atomicity — two batches, two snapshots,
     // none from the replay) and replay_ok; the post-replay state itself
     // is the hashed frame, replayed from raw orders in DuckDB.
-    "q177_iceberg_merge_stream" -> ((s, dir) => withStreamGate(s, dir, Seq("orders"), exprOnly = false) {
+    "q177_iceberg_merge_stream" -> ((s, dir) => withStreamGate(s, dir, Seq("orders"), exprOnly = false) { s =>
       import graft.destinations.IcebergWrite
       import graft.sources.IcebergRead
       val root = tmp("graft-q177")

@@ -4,7 +4,7 @@ import graft.config._
 import graft.functions.Text
 import graft.ops.{Ann, Dedup, Multimodal}
 import graft.run.{CollectingTracker, Runner}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.immutable.ListMap
@@ -91,107 +91,61 @@ private[graft] object QueryHelpers {
     }
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered.
-    * A streaming micro-batch pays fixed per-partition state-store overhead
-    * (checkpoint, commit, provider maintenance) for every stateful operator
-    * in every trigger; at gate scale the state is KBs, so 8 partitions beat
-    * the session's 32 by ~4× on pure overhead. The setting snaps back for
-    * everything after the gate. */
-  def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    // per-gate default, overridable for measurement / other deployments
-    // (spark.graft.stream.statePartitions) — state-store fixed cost per
-    // trigger is linear in this, state size per partition inverse in it
-    val eff = s.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.toInt).getOrElse(n)
-    s.conf.set(key, eff.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  /** Streaming-gate wrapper that derives its knobs from INPUT SIZE instead
-    * of a constant (r19; guide §2 — make partitioning scale-adaptive; AQE
-    * cannot do it for stateful streaming, where it is disabled):
+  /** Runs a streaming gate's `body` on its own clone of `s`, with settings
+    * derived from the gate's INPUT SIZE (AQE, which would adapt them, is off
+    * for stateful streaming). The clone's settings, views (the memory sinks' among them)
+    * and streams die with the gate; the body's frame comes back re-bound to
+    * `s`, so it plans and runs under the caller's settings.
     *
     *   - **state partitions** = `ceil(inputBytes / 32 MiB)`, clamped to
-    *     [1, session shuffle partitions]. Every stateful operator pays a
+    *     [1, caller's shuffle partitions]: every stateful operator pays a
     *     fixed per-partition state-store cost (provider open, delta file
-    *     write, commit) in EVERY trigger; at gate scale (KB-MB state) one
-    *     partition carries the state and the 8-partition constant paid 8×
-    *     the fixed cost for nothing, while at 100 TB the same rule yields
-    *     thousands of partitions. Explicit override:
-    *     `spark.graft.stream.statePartitions`; bytes-per-partition knob:
-    *     `spark.graft.stream.bytesPerStatePartition`.
-    *   - **codegen routing**: IncrementalExecution re-plans every trigger
-    *     and the watermark literal changes the generated source, so every
-    *     micro-batch Janino-compiles its stages afresh (~30 compiles per
-    *     gate run). Below `spark.graft.stream.codegenMinInputBytes`
-    *     (default 64 MiB) the compile time exceeds the cost of simply
-    *     interpreting the rows, so the gate runs with whole-stage codegen
-    *     off and `NO_CODEGEN` expression evaluation — identical semantics
-    *     (interpreted evaluation is codegen's reference), measured −20% on
-    *     the stream-stream join gates. Above the threshold codegen stays
-    *     on: real per-batch volume amortizes compilation.
-    *   - **checkpoint checksum files off** (r19): every gate checkpoints
-    *     into an EPHEMERAL local tmp dir that dies with the query, and
-    *     Spark 4.1's checksummed checkpoint manager doubles every WAL op
-    *     (offset log, commit log, state-store delta: temp file + rename,
-    *     TWICE) to detect storage corruption that cannot matter for a
-    *     same-process, same-disk temp file. Profiled: the checksum
-    *     manager's create/rename threads carry ~25% of the per-trigger
-    *     driver wall on the join gates; measured −9% across the streaming
-    *     block. Durable production checkpoints (object stores) should keep
-    *     Spark's default — set `spark.graft.stream.checkpointFileChecksum`
-    *     (default false here) to true to restore it.
+    *     write, commit) in EVERY trigger; at gate scale one partition
+    *     carries the state, at 100 TB the rule yields thousands.
+    *   - **codegen routing**: every trigger re-plans, and the watermark
+    *     literal changes the generated source, so each micro-batch
+    *     Janino-compiles afresh (~30 compiles per gate run). Below 64 MiB
+    *     of input that costs more than interpreting the rows, so `exprOnly`
+    *     gates (joins, windows, dedup predicates) run with whole-stage
+    *     codegen off and `NO_CODEGEN` evaluation, identical semantics,
+    *     measured −20% on the stream-stream joins. Typed Dataset lambdas
+    *     (codegen-bound encoder serde) and foreachBatch write jobs keep it.
+    *   - **checkpoint checksum files off** (r19): gates checkpoint into an
+    *     EPHEMERAL local tmp dir, where Spark 4.1's checksummed manager
+    *     only doubles every WAL op (temp file + rename, twice) to detect a
+    *     corruption that cannot matter; measured −9% on the block.
+    *   - **NIO checkpoint manager** (r19): local checkpoint and state-store
+    *     files skip Hadoop's forking local-FS shims; other schemes delegate
+    *     to Spark's default. A caller-set
+    *     `spark.sql.streaming.checkpointFileManagerClass` wins.
     *
-    * The reroutes are data-size dispatches with the large side identical
-    * to the always-on configuration; results are oracle-checked either way.
+    * Results are oracle-checked either way.
     */
-  def withStreamGate[A](s: SparkSession, dir: String,
+  def withStreamGate(s: SparkSession, dir: String,
       tables: Seq[String] = Seq("events"),
-      exprOnly: Boolean = true)(body: => A): A = {
+      exprOnly: Boolean = true)(body: SparkSession => DataFrame): DataFrame = {
     val inputBytes = tables.map { t =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
       try p.getFileSystem(s.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
       catch { case scala.util.control.NonFatal(_) => 0L }
     }.sum
-    val perPart = s.conf.getOption("spark.graft.stream.bytesPerStatePartition")
-      .map(_.toLong).getOrElse(32L << 20)
-    val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val derived = math.max(1L,
-      math.min(sessionParts.toLong, (inputBytes + perPart - 1) / perPart)).toInt
-    val cgMin = s.conf.getOption("spark.graft.stream.codegenMinInputBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    // codegen routing only pays off when the per-batch work is EXPRESSION
-    // level (joins, windows, dedup predicates): measured −15–20% on the
-    // stream-stream join gates. Gates whose per-trigger work is typed
-    // Dataset lambdas (encoder serde is codegen-bound even at small row
-    // counts) or real foreachBatch write jobs keep codegen: exprOnly=false.
-    val interpret = exprOnly && inputBytes < cgMin
-    val ckOn = s.conf.getOption("spark.graft.stream.checkpointFileChecksum")
-      .exists(_.toBoolean)
-    // NIO checkpoint manager (r19): local checkpoint WAL + state-store
-    // files skip Hadoop's forking local-FS shims; non-local schemes
-    // delegate to Spark's default inside the manager itself. Override:
-    // spark.sql.streaming.checkpointFileManagerClass (set = respected).
+    val parts = math.min(s.conf.get("spark.sql.shuffle.partitions").toLong,
+      (inputBytes + bytesPerStatePartition - 1) / bytesPerStatePartition).max(1L)
     val cfmKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val cfm =
-      if (s.conf.getOption(cfmKey).isDefined) Nil
-      else Seq(cfmKey -> classOf[graft.streaming.NioCheckpointFileManager].getName)
-    val cgKeys = (if (interpret)
-      Seq("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    else Nil) ++ cfm ++
-      (if (ckOn) Nil
-      else Seq("spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false"))
-    val cgPrev = cgKeys.map { case (k, _) => k -> s.conf.getOption(k) }
-    cgKeys.foreach { case (k, v) => s.conf.set(k, v) }
-    try withStatePartitions(s, derived)(body) finally {
-      cgPrev.foreach { case (k, p) =>
-        p.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-    }
+    val settings = Map(
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+      cfmKey -> s.conf.getOption(cfmKey)
+        .getOrElse(classOf[graft.streaming.NioCheckpointFileManager].getName)) ++
+      (if (exprOnly && inputBytes < codegenMinInputBytes)
+        Map("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      else Map.empty)
+    GraftShims.ofRows(s, body(GraftShims.cloneSession(s, settings)))
   }
+  private val bytesPerStatePartition = 32L << 20
+  private val codegenMinInputBytes = 64L << 20
 
   /** Write `df` as replay micro-batch file `index` under `dir` (one parquet
     * file, mtime strictly increasing in `index` so the file source's

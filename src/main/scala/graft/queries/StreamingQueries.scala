@@ -31,7 +31,7 @@ private[graft] object StreamingQueries {
     // Watermarked stream-stream join, gated: clicks and purchases replay as
     // 2 in-order micro-batch files per side; every purchase within 30
     // minutes after a click by the same user must pair exactly once.
-    "q119_stream_join" -> ((s, dir) => withStreamGate(s, dir) {
+    "q119_stream_join" -> ((s, dir) => withStreamGate(s, dir) { s =>
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val clicks = ev.filter(col("event_type") === "click")
@@ -65,7 +65,7 @@ private[graft] object StreamingQueries {
     // FULL JOIN exactly. Same sentinel machinery as q121; null join
     // columns surface on whichever side missed, and the oracle pins the
     // cross-engine null sort order explicitly.
-    "q133_stream_full_outer" -> ((s, dir) => withStreamGate(s, dir) {
+    "q133_stream_full_outer" -> ((s, dir) => withStreamGate(s, dir) { s =>
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val clicks = ev.filter(col("event_type") === "click")
@@ -108,7 +108,7 @@ private[graft] object StreamingQueries {
     // user ids, two rounds because state eviction lags the watermark by a
     // batch) flush every pending outer row, so the final table must equal
     // the batch LEFT JOIN exactly.
-    "q121_stream_outer_join" -> ((s, dir) => withStreamGate(s, dir) {
+    "q121_stream_outer_join" -> ((s, dir) => withStreamGate(s, dir) { s =>
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val clicks = ev.filter(col("event_type") === "click")
@@ -153,7 +153,7 @@ private[graft] object StreamingQueries {
     // 1-day tumbling aggregate exactly. (Counts only — double value sums
     // are order-sensitive across engines, and the batch window-sum path is
     // already decimal-gated by q43.)
-    "q122_stream_window" -> ((s, dir) => withStreamGate(s, dir) {
+    "q122_stream_window" -> ((s, dir) => withStreamGate(s, dir) { s =>
       val ev = t(s, dir, "events").select(col("ts"), col("event_type"), col("value"))
       def sentinel(plusDays: Int) = ev.agg(max(col("ts")).as("m"))
         .select((col("m") + expr(s"INTERVAL $plusDays DAYS")).as("ts"),
@@ -180,7 +180,7 @@ private[graft] object StreamingQueries {
     // replay (the horizon spans the history), so the distinct key set must
     // equal batch SELECT DISTINCT. Keys only — which physical row survives
     // a same-batch tie is legitimately engine-internal.
-    "q123_stream_dedup" -> ((s, dir) => withStreamGate(s, dir) {
+    "q123_stream_dedup" -> ((s, dir) => withStreamGate(s, dir) { s =>
       val ev = t(s, dir, "events").select(col("ts"), col("user_id"), col("event_type"))
       val replay = cachedReplay(s"q123-$dir") { rd =>
         writeReplay(ev, "ts", rd.resolve("e"), n = 2)
@@ -202,7 +202,7 @@ private[graft] object StreamingQueries {
     // COUNT(*) iff every event incremented state exactly once — no drops,
     // no double-counts across micro-batches. (Double value totals are
     // arrival-order-sensitive, so the count carries the gate.)
-    "q124_stream_running_totals" -> ((s, dir) => withStreamGate(s, dir, exprOnly = false) {
+    "q124_stream_running_totals" -> ((s, dir) => withStreamGate(s, dir, exprOnly = false) { s =>
       import s.implicits._
       val ev = t(s, dir, "events")
         .select(col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -227,7 +227,7 @@ private[graft] object StreamingQueries {
     // dimension; stateless, so the final table must equal the batch LEFT
     // JOIN row for row. The dim drops every third customer so both the
     // matched and the null-extended paths carry rows.
-    "q137_stream_static_join" -> ((s, dir) => withStreamGate(s, dir, exprOnly = false) {
+    "q137_stream_static_join" -> ((s, dir) => withStreamGate(s, dir, exprOnly = false) { s =>
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val dim = s.read.parquet(s"$dir/customer.parquet")
@@ -258,7 +258,7 @@ private[graft] object StreamingQueries {
     // the generated span grows past a month. Every key must be admitted
     // exactly twice; a dedup that never expires state (or evicts too
     // early) shifts the count.
-    "q138_stream_dedup_expiry" -> ((s, dir) => withStreamGate(s, dir) {
+    "q138_stream_dedup_expiry" -> ((s, dir) => withStreamGate(s, dir) { s =>
       val ev = t(s, dir, "events").select(col("ts"), col("user_id"), col("event_type"))
       def sentinel(uid: Long, plusDays: Int) = ev.agg(max(col("ts")).as("m"))
         .select((col("m") + expr(s"INTERVAL $plusDays DAYS")).as("ts"),
@@ -290,7 +290,7 @@ private[graft] object StreamingQueries {
     // columns never exposed. The batch oracle is EXISTS over the same
     // time bound — an extra emission per extra match (inner-join leak) or
     // a dropped converting click hash-mismatches.
-    "q143_stream_semi_join" -> ((s, dir) => withStreamGate(s, dir) {
+    "q143_stream_semi_join" -> ((s, dir) => withStreamGate(s, dir) { s =>
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val clicks = ev.filter(col("event_type") === "click")
@@ -321,7 +321,7 @@ private[graft] object StreamingQueries {
     // the new file (a re-read duplicates event_ids, a gap drops them —
     // either hash-mismatches the batch oracle). Exactly-once across two
     // separate query lifetimes is the whole point of the gate.
-    "q142_stream_availablenow" -> ((s, dir) => withStreamGate(s, dir, exprOnly = false) {
+    "q142_stream_availablenow" -> ((s, dir) => withStreamGate(s, dir, exprOnly = false) { s =>
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val root = tmp("graft-q142")
@@ -349,7 +349,7 @@ private[graft] object StreamingQueries {
     // new commit's 2 files (2 batches). Re-reads duplicate o_orderkeys,
     // gaps drop them, a leaked compaction re-delivers everything — all
     // hash-mismatch; the pinned batch counts prove the admission control.
-    "q146_delta_tail" -> ((s, dir) => withStreamGate(s, dir, Seq("orders"), exprOnly = false) {
+    "q146_delta_tail" -> ((s, dir) => withStreamGate(s, dir, Seq("orders"), exprOnly = false) { s =>
       import graft.destinations.DeltaWrite
       val orders = s.read.parquet(s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -380,7 +380,7 @@ private[graft] object StreamingQueries {
     // Streaming gap sessionization, gated: the full event stream replays in
     // order; 30-minute-gap sessions close exactly once, each user's final
     // session stays open (NoTimeout) and is excluded by the oracle too.
-    "q120_stream_sessionize" -> ((s, dir) => withStreamGate(s, dir, exprOnly = false) {
+    "q120_stream_sessionize" -> ((s, dir) => withStreamGate(s, dir, exprOnly = false) { s =>
       import s.implicits._
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts"),

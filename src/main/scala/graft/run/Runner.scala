@@ -56,9 +56,11 @@ import scala.concurrent.duration.Duration
   *     nondeterministic stage is persisted on either side, so that all its
   *     consumers see the same rows.
   *   - '''TTL eviction''' (reference lib.rs:223-274): after each group, any
-  *     stage with no remaining consumer is unpersisted, bounding
-  *     executor-memory footprint on long pipelines (the cache manager is
-  *     shared with the caller; the views go with the clone).
+  *     stage that no job still to run reads is unpersisted (a lazy consumer
+  *     reads inside its own consumers or the write), and after the write
+  *     every stage still cached, bounding executor-memory footprint on
+  *     long pipelines (the cache manager is shared with the caller; the
+  *     views go with the clone).
   */
 object Runner {
 
@@ -150,6 +152,7 @@ object Runner {
     // -- stage groups
     val allStages = pipeline.stages.flatten
     val lastStage = allStages.lastOption
+    def toWrite(name: String) = lastStage.exists(_.name == name) && pipeline.destination.nonEmpty
 
     pipeline.stages.zipWithIndex.foreach { case (group, gi) =>
       abortCheck()
@@ -159,9 +162,8 @@ object Runner {
           val s0 = System.nanoTime()
           try {
             val df = session.sql(validated(stage.name).sql)
-            val toDestination = lastStage.exists(_.name == stage.name) && pipeline.destination.nonEmpty
-            val consumers = readerGroups(pipeline, validated, stage.name).size +
-              (if (toDestination) 1 else 0)
+            val consumers = readers(pipeline, validated, stage.name).size +
+              (if (toWrite(stage.name)) 1 else 0)
             val shared = consumers >= 2 &&
               !(small && df.queryExecution.analyzed.deterministic)
             if (shared || stage.explainAnalyze) {
@@ -181,11 +183,14 @@ object Runner {
         }
       })
 
-      // TTL eviction: unpersist every stage so far whose last consumer group
-      // is <= gi (never the final stage — it feeds the destination).
+      // TTL eviction: unpersist every stage so far that no job still to run
+      // reads (never the final stage). A reader that was not persisted runs
+      // inside its own readers, or inside the write if it is the last stage.
+      def live(name: String): Boolean = toWrite(name) ||
+        readers(pipeline, validated, name).exists { case (r, rg) =>
+          rg > gi || (!persisted.contains(r) && live(r)) }
       pipeline.stages.take(gi + 1).flatten.foreach { s =>
-        if (!lastStage.exists(_.name == s.name) &&
-            readerGroups(pipeline, validated, s.name).forall(_ <= gi))
+        if (!lastStage.exists(_.name == s.name) && !live(s.name))
           persisted.remove(s.name).foreach(_.unpersist())
       }
     }
@@ -202,7 +207,8 @@ object Runner {
         }
         tracker.onProgress(ProgressEvent.DestinationCompleted(dest.name))
         // reference deregisters the last stage after the write (lib.rs:177-204)
-        lastStage.foreach(s => persisted.remove(s.name).foreach(_.unpersist()))
+        persisted.values.foreach(_.unpersist())
+        persisted.clear()
       case None => // the last stage stays queryable on the caller
         lastStage.zip(out).foreach { case (s, df) => df.createOrReplaceTempView(s.name) }
     }
@@ -265,14 +271,14 @@ object Runner {
     }.flatten.toSet -- ctes.flatten.map(lower)
   }
 
-  /** The group index of each later stage query that reads `name`, one
-    * entry per query: its consumers besides the destination.
+  /** Each later stage that reads `name`, with its group index: its
+    * consumers besides the destination.
     */
-  private def readerGroups(
-      pipeline: Aqueduct, validated: Map[String, ValidatedStage], name: String): Seq[Int] = {
+  private def readers(pipeline: Aqueduct, validated: Map[String, ValidatedStage],
+      name: String): Seq[(String, Int)] = {
     val own = pipeline.stages.indexWhere(_.exists(_.name == name))
     pipeline.stages.zipWithIndex.drop(own + 1).flatMap { case (g, gi) =>
-      g.filter(st => validated(st.name).reads(lower(name))).map(_ => gi)
+      g.filter(st => validated(st.name).reads(lower(name))).map(_.name -> gi)
     }
   }
 

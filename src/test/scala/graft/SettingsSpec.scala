@@ -28,6 +28,6 @@ class SettingsSpec extends AnyFunSuite {
       .findFirstMatchIn(l).map(_.group(1))).toSet
     assert(inCode == listed,
       s"read but not listed: ${inCode -- listed}; listed but not read: ${listed -- inCode}")
-    assert(inCode.size == 8, inCode.toSeq.sorted.mkString(", "))
+    assert(inCode.size == 4, inCode.toSeq.sorted.mkString(", "))
   }
 }

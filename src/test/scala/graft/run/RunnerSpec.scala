@@ -22,18 +22,29 @@ class RunnerSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** Bytes read so far through Hadoop's local file system, in this JVM. */
+  private def localBytesRead(): Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+  }
+
   /** A tracker that counts the RDDs persisted beyond those persisted when
-    * it was made: when the second stage group starts, and on demand.
+    * it was made: when the second stage group starts, and on demand. It
+    * also notes the local bytes read when the second group starts.
     */
   private final class CacheProbe extends ProgressTracker {
     private val sc = spark.sparkContext
     private val before = sc.getPersistentRDDs.size
     val inner = new CollectingTracker
     @volatile var cachedAtGroup1: Int = -1
+    @volatile var bytesReadAtGroup1: Long = -1
     def cachedNow: Int = sc.getPersistentRDDs.size - before
     override def onProgress(e: ProgressEvent): Unit = {
       e match {
-        case ProgressEvent.StageStarted(_, 1) => cachedAtGroup1 = cachedNow
+        case ProgressEvent.StageStarted(_, 1) =>
+          cachedAtGroup1 = cachedNow
+          bytesReadAtGroup1 = localBytesRead()
         case _ => ()
       }
       inner.onProgress(e)
@@ -708,6 +719,40 @@ class RunnerSpec extends SparkSpec {
     assert(persistedCached == 1)
     assert(persistedJobs == lazyJobs + 1, s"lazy $lazyJobs, persisted $persistedJobs")
     assert(lazyRows.size == 100 && lazyRows == persistedRows)
+  }
+
+  test("large side: a cached stage whose readers are all lazy lives until the write reads it") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    val dir = tmpDir("runner-lazy-readers")
+    val src = writeIdK(dir, "lz_src")
+    val large = org.apache.spark.sql.GraftShims.cloneSession(spark,
+      Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"))
+    // the pipeline's clone inherits the listener, so it sees the write
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    large.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    // lz_mid is read by lz_low and lz_high, which stay lazy and run only
+    // inside the write of lz_out
+    val probe = new CacheProbe
+    Runner.run(large, reusePipeline("lz", src, dir.resolve("out")), probe)
+    val sourceBytes = localBytesRead() - probe.bytesReadAtGroup1
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val writes = plans.toArray(Array.empty[SparkPlan]).toSeq
+      .filter(p => helper.find(p)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+    assert(writes.size == 1, writes.mkString("\n"))
+    assert(helper.find(writes.head)(_.isInstanceOf[InMemoryTableScanExec]).nonEmpty,
+      writes.head.toString)
+    assert(probe.cachedAtGroup1 == 1)
+    assert(sourceBytes == 0, s"$sourceBytes source bytes read after lz_mid's count()")
+    assert(probe.cachedNow == 0)
+    assert(spark.read.parquet(dir.resolve("out").toString).count() == 100)
   }
 
   test("small side: a nondeterministic stage with two consumers stays cached, one value per row") {

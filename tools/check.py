@@ -2,7 +2,12 @@
 """Local replica of the driver's correctness gate: read each
 outDir/<name>/ parquet (Spark result), run outDir/oracle_sql.json in DuckDB
 over the sfDir parquet tables, compare row-by-row with exact equality
-(reporting near-misses separately so fp issues are visible)."""
+(reporting near-misses separately so fp issues are visible).
+
+Usage: check.py [sfDir] [outDir] [filter]
+filter: comma-separated name substrings (graft.Measure.patterns' rule);
+only the oracle entries it matches are checked, so a subset Verify run
+can be checked. A filter that matches no entry exits non-zero."""
 import sys, json, glob, math
 import duckdb
 
@@ -15,6 +20,11 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
+if len(sys.argv) > 3:
+    pats = [p.strip() for p in sys.argv[3].split(",") if p.strip()]
+    oracle = {n: q for n, q in oracle.items() if any(p in n for p in pats)}
+    if not oracle:
+        sys.exit(f"filter '{sys.argv[3]}' matches no oracle entry")
 ok = bad = 0
 for name, sql in sorted(oracle.items()):
     files = glob.glob(f"{out}/{name}/*.parquet")
