@@ -93,9 +93,11 @@ private[graft] object QueryHelpers {
 
   /** Runs a streaming gate's `body` on its own clone of `s`, with settings
     * derived from the gate's INPUT SIZE (AQE, which would adapt them, is off
-    * for stateful streaming). The clone's settings, views (the memory sinks' among them)
-    * and streams die with the gate; the body's frame comes back re-bound to
-    * `s`, so it plans and runs under the caller's settings.
+    * for stateful streaming). The clone's settings, views (the memory
+    * sinks' among them) and streams die with the gate, and its streaming
+    * listener bus leaves the context's (`GraftShims.releaseStreams`); the
+    * body's frame comes back re-bound to `s`, so it plans and runs under
+    * the caller's settings.
     *
     *   - **state partitions** = `ceil(inputBytes / 32 MiB)`, clamped to
     *     [1, caller's shuffle partitions]: every stateful operator pays a
@@ -142,7 +144,8 @@ private[graft] object QueryHelpers {
         Map("spark.sql.codegen.wholeStage" -> "false",
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
       else Map.empty)
-    GraftShims.ofRows(s, body(GraftShims.cloneSession(s, settings)))
+    val gate = GraftShims.cloneSession(s, settings)
+    try GraftShims.ofRows(s, body(gate)) finally GraftShims.releaseStreams(gate)
   }
   private val bytesPerStatePartition = 32L << 20
   private val codegenMinInputBytes = 64L << 20

@@ -152,7 +152,10 @@ object Runner {
     // -- stage groups
     val allStages = pipeline.stages.flatten
     val lastStage = allStages.lastOption
-    def toWrite(name: String) = lastStage.exists(_.name == name) && pipeline.destination.nonEmpty
+    // an in-memory destination only registers a lazy cache: no job of the
+    // run reads the last stage there
+    def toWrite(name: String) = lastStage.exists(_.name == name) &&
+      pipeline.destination.exists(!_.isInstanceOf[InMemoryDestination])
 
     pipeline.stages.zipWithIndex.foreach { case (group, gi) =>
       abortCheck()
@@ -162,9 +165,7 @@ object Runner {
           val s0 = System.nanoTime()
           try {
             val df = session.sql(validated(stage.name).sql)
-            val consumers = readers(pipeline, validated, stage.name).size +
-              (if (toWrite(stage.name)) 1 else 0)
-            val shared = consumers >= 2 &&
+            val shared = readers(pipeline, validated, stage.name).size >= 2 &&
               !(small && df.queryExecution.analyzed.deterministic)
             if (shared || stage.explainAnalyze) {
               df.persist()

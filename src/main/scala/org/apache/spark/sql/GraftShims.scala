@@ -65,6 +65,29 @@ object GraftShims {
     clone
   }
 
+  /** Takes `spark`'s streaming listener bus off the SparkContext's listener
+    * bus. A session's stream manager adds that bus when the session first
+    * runs a stream, and Spark never removes it, so every short-lived clone
+    * that ran a stream would leave one behind, fed every event, for the
+    * life of the context. Does nothing while a stream of the session is
+    * still active.
+    */
+  def releaseStreams(spark: SparkSession): Unit = {
+    def field(owner: Class[_], name: String, of: AnyRef) = {
+      val f = owner.getDeclaredField(name)
+      f.setAccessible(true)
+      f.get(of)
+    }
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    // the manager is a lazy val: null until the session first used it
+    Option(field(classOf[internal.SessionState], "streamingQueryManager", state)
+      .asInstanceOf[classic.StreamingQueryManager]).filter(_.active.isEmpty).foreach { m =>
+      spark.sparkContext.listenerBus.removeListener(
+        field(m.getClass, "listenerBus", m)
+          .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+    }
+  }
+
   /** `df`'s analyzed plan as a frame of `spark`: planned and run under
     * `spark`'s confs from then on (the `classic.Dataset.ofRows` the
     * public API hides).

@@ -78,4 +78,21 @@ class StreamGateSpec extends SparkSpec {
     val views = caller.catalog.listTables().collect().map(_.name)
     assert(!views.exists(_.startsWith("q119_sink_")), views.mkString(", "))
   }
+
+  test("a gate leaves no streaming listener bus on the context") {
+    val bus = classOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus]
+    def buses = org.apache.spark.ListenerBusDrain.count(spark.sparkContext, bus)
+    val in = tmpDir("stream-gate-bus").resolve("in").toString
+    spark.range(10).write.parquet(in)
+    val schema = spark.read.parquet(in).schema
+    val caller = GraftShims.cloneSession(spark)
+    val before = buses
+    // a stateless stream: only the gate's session gets a stream manager
+    val out = QueryHelpers.withStreamGate(caller, noTables) { g =>
+      graft.streaming.Streams.runToMemory(g.readStream.schema(schema).parquet(in),
+        "gate_bus_sink", org.apache.spark.sql.streaming.OutputMode.Append())
+    }
+    assert(out.count() == 10)
+    assert(buses == before)
+  }
 }

@@ -30,8 +30,9 @@ class RunnerSpec extends SparkSpec {
   }
 
   /** A tracker that counts the RDDs persisted beyond those persisted when
-    * it was made: when the second stage group starts, and on demand. It
-    * also notes the local bytes read when the second group starts.
+    * it was made: when the second stage group starts, when the destination
+    * write completes, and on demand. It also notes the local bytes read
+    * when the second group starts.
     */
   private final class CacheProbe extends ProgressTracker {
     private val sc = spark.sparkContext
@@ -39,12 +40,14 @@ class RunnerSpec extends SparkSpec {
     val inner = new CollectingTracker
     @volatile var cachedAtGroup1: Int = -1
     @volatile var bytesReadAtGroup1: Long = -1
+    @volatile var cachedAtWrite: Int = -1
     def cachedNow: Int = sc.getPersistentRDDs.size - before
     override def onProgress(e: ProgressEvent): Unit = {
       e match {
         case ProgressEvent.StageStarted(_, 1) =>
           cachedAtGroup1 = cachedNow
           bytesReadAtGroup1 = localBytesRead()
+        case ProgressEvent.DestinationCompleted(_) => cachedAtWrite = cachedNow
         case _ => ()
       }
       inner.onProgress(e)
@@ -685,15 +688,18 @@ class RunnerSpec extends SparkSpec {
   /** A pipeline whose stage `<p>_mid` (over `source`, columns id and k) has
     * two consumers in the next group, writing parquet to `out`.
     */
-  private def reusePipeline(p: String, source: Source, out: java.nio.file.Path) = Aqueduct(
+  private def reusePipeline(p: String, source: Source, out: java.nio.file.Path): Aqueduct =
+    reusePipeline(p, source, FileDestination(s"${p}_out", Location(out.toString),
+      ParquetDestFormat(Map.empty), singleFile = false))
+
+  private def reusePipeline(p: String, source: Source, dest: Destination): Aqueduct = Aqueduct(
     sources = Seq(source),
     stages = Seq(
       Seq(Stage(s"${p}_mid", s"SELECT id, k FROM ${source.name} WHERE id % 2 = 0")),
       Seq(Stage(s"${p}_low", s"SELECT * FROM ${p}_mid WHERE k < 2"),
           Stage(s"${p}_high", s"SELECT * FROM ${p}_mid WHERE k >= 2")),
       Seq(Stage(s"${p}_out", s"SELECT * FROM ${p}_low UNION ALL SELECT * FROM ${p}_high"))),
-    destination = Some(FileDestination(s"${p}_out", Location(out.toString),
-      ParquetDestFormat(Map.empty), singleFile = false)))
+    destination = Some(dest))
 
   /** 200 rows (id, k = id % 4) in parquet under `dir`, as a source `name`. */
   private def writeIdK(dir: java.nio.file.Path, name: String): Source = {
@@ -753,6 +759,23 @@ class RunnerSpec extends SparkSpec {
     assert(sourceBytes == 0, s"$sourceBytes source bytes read after lz_mid's count()")
     assert(probe.cachedNow == 0)
     assert(spark.read.parquet(dir.resolve("out").toString).count() == 100)
+  }
+
+  test("large side: an in-memory destination does not keep a lazy reader's cache alive") {
+    val dir = tmpDir("runner-lazy-mem")
+    val src = writeIdK(dir, "lm_src")
+    val large = org.apache.spark.sql.GraftShims.cloneSession(spark,
+      Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"))
+    // the destination only registers a lazy cache, read after the run, so
+    // lm_mid's cache has no reader left once the last group is planned
+    val probe = new CacheProbe
+    val out = Runner.run(large, reusePipeline("lm", src, InMemoryDestination("lm_result")), probe)
+    assert(probe.cachedAtGroup1 == 1)
+    assert(probe.cachedAtWrite == 0)
+    assert(large.table("lm_result").count() == 100)
+    assert(out.get.count() == 100)
+    large.catalog.uncacheTable("lm_result")
+    large.catalog.dropTempView("lm_result")
   }
 
   test("small side: a nondeterministic stage with two consumers stays cached, one value per row") {
